@@ -14,6 +14,7 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
+    ext.injectPlannerStrategy(_ => graft.plans.TransitiveClosureStrategy)
     ext.injectFunction((FunctionIdentifier("graft_simhash64"),
       new ExpressionInfo("graft.functions.SimHash64Expr", "graft_simhash64"),
       exprs => SimHash64Expr(exprs.head)))

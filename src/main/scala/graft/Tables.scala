@@ -72,12 +72,15 @@ object Tables {
   /** Upper bound on `df`'s row count from parquet FOOTERS — read
     * driver-side, launching ZERO Spark jobs (r11, VERDICT r10 #7).
     *
-    * `inputFiles` lists the scan's files without executing the plan;
-    * footer row counts are exact per file, so the sum equals the row
-    * count of the underlying scan and UPPER-BOUNDS the frame's own
-    * count when the plan filters rows. That direction is the safe one
-    * for every caller: size-adaptive branch probes (ScaleNtile,
-    * Dedup's pair generators) only need "small enough for the dense
+    * Sums the footer row counts of every file-scan LEAF of the
+    * analyzed plan — a table read twice (a self-union, such as the
+    * registry's reference edges) counts twice. Footer counts are exact
+    * per file, so the sum equals the row count of a single unfiltered
+    * scan and UPPER-BOUNDS the frame's own count when the plan only
+    * filters, projects and unions (joins that multiply rows are not
+    * bounded by it). That direction is the safe one for every caller:
+    * size-adaptive branch probes (ScaleNtile, Dedup's pair generators,
+    * the registry closure gate) only need "small enough for the dense
     * branch", and an over-estimate can only send them to the
     * scale-safe branch early, never to an unsafe one late.
     *
@@ -90,12 +93,14 @@ object Tables {
     * times) from re-reading footers.
     */
   def footerRowBound(df: DataFrame): Option[Long] = {
-    val files = df.inputFiles
-    if (files.isEmpty) return None
+    val leaves = df.queryExecution.analyzed.collect {
+      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation => lr.relation
+    }.collect { case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation => fs }
+    if (leaves.isEmpty) return None
     val conf = df.sparkSession.sessionState.newHadoopConf()
     try {
       var total = 0L
-      for (f <- files) {
+      for (leaf <- leaves; f <- leaf.location.inputFiles) {
         val cached = footerCache.get(f)
         val n: Long = if (cached != null) cached.longValue() else {
           val in = org.apache.parquet.hadoop.util.HadoopInputFile
@@ -242,13 +247,15 @@ object Tables {
   }
 
   /** Scopes AQE's coalescing knob for driver-paced iteration loops
-    * (pointer-doubling closures, connected-components rounds): the
+    * (connected-components rounds, and the registry closure's
+    * semi-naive loop above its broadcast gate): the
     * session-level `parallelismFirst=true` is right for MB-scale
     * document-scan shuffles (see Bench.scala) but multiplies the
     * fixed per-round task-dispatch cost of KB-scale iteration frames
     * by keeping every tiny shuffle at full width. Measured r7 (sf0.1,
-    * warm): the registry closure family 3.4–4.3s with the session
-    * conf vs 2.5–3.0s with size-driven coalescing. At cluster scale
+    * warm): the registry closure family, then a loop at every scale,
+    * 3.4–4.3s with the session conf vs 2.5–3.0s with size-driven
+    * coalescing. At cluster scale
     * flipping it off inside the loop is also right: iteration state
     * is metadata-sized next to the corpus, and size-based coalescing
     * still widens genuinely large rounds.
@@ -259,9 +266,11 @@ object Tables {
   /** `staticPlans = true` additionally turns AQE OFF and pins a small
     * static shuffle width for the scope — for loops whose join
     * strategies are already decided by count-gated broadcast hints
-    * (the registry closures): AQE's stage-by-stage re-optimization
+    * (the registry closure's above-gate loop,
+    * `Registry.closureLoop`): AQE's stage-by-stage re-optimization
     * added driver latency to every tiny per-round query (measured
-    * ~45 → ~29 jobs on reg_refs_closure) while its runtime statistics
+    * ~45 → ~29 jobs on reg_refs_closure when it ran as this loop)
+    * while its runtime statistics
     * cannot beat the loop's own EXACT convergence counts — see
     * [[iterWidth]], which those loops call per round. Loops that rely
     * on AQE's runtime join re-selection (ccStar's alternations, whose
@@ -296,7 +305,8 @@ object Tables {
     * built — comfortably inside driver/executor memory, far above
     * every test scale, and a graph above it falls back to the former
     * AQE/shuffle form per side, per round. Shared by the registry
-    * closure loops and the CC cores (r12; the registry-local constant
+    * closure (the edge bound under which it runs as one broadcast-BFS
+    * operator) and the CC cores (r12; the registry-local constant
     * since r11).
     */
   private[graft] val BcastRows = 2000000L

@@ -120,7 +120,7 @@ object Pipeline {
       // LAZY checkpoint: the witness aggregate materializes (and pins)
       // the round's partitions in the SAME job — one job per round,
       // not two, with lineage still truncated for the next plan
-      // (the r7 closure-loop discipline, see Registry.closurePairs).
+      // (the r7 closure-loop discipline, see Registry.closureLoop).
       val next = edges
         .join(bc(labels.select(col("id").as("dst"), col("label").as("nl"))), "dst")
         .select(col("src").as("id"), col("nl").as("label"))

@@ -670,7 +670,7 @@ object Registry {
     * schema-reference graphs, registry.go:1039 references). Shared by
     * the closure and GC operators below.
     */
-  private def refEdges(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def refEdges(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir).select(col("doc_id"))
     docs.filter(col("doc_id") >= 1)
       .select(col("doc_id").as("child"),
@@ -680,124 +680,156 @@ object Registry {
           floor(col("doc_id") / 3).cast("bigint").as("parent")))
   }
 
-  /** All (doc, transitive ancestor) pairs by SEMI-NAIVE frontier
-    * expansion: each round joins only the newly-discovered pairs
-    * against the direct edge list, so per-round join work is
-    * |frontier| · avg-outdegree and the whole run touches
-    * O(|closure|) join rows. The r6–r10 form was pointer doubling
-    * (closure ∘ closure, O(log depth) rounds) — measured at sf10 it
-    * is the wrong trade on hub-heavy DAGs: the self-join intermediate
-    * is Σ_mid descendants(mid)·ancestors(mid) ≈ N·log³N (small-id hub
-    * nodes have ~N/id descendants), ~5.7e9 rows at 500k docs vs
-    * semi-naive's ~18M, and the closure family burned ~1,900
-    * task-seconds per query there (35–58× the sf1 cost at 10× data).
-    * Depth-many rounds (19 at sf10, ~25 at 100 TB) of KB-to-MB-scale
-    * jobs cost far less than the hub blowup — [[Tables.withIterConf]]
-    * coalesces the tiny round shuffles.
-    *
-    * Per round: frontier ⋈ edges (one hash shuffle on mid), an
-    * anti-join against closure-so-far to keep only new pairs (the
-    * BFS dedup that also terminates cycles), and one union append.
-    * The frontier count is the convergence witness (empty frontier =
-    * fixpoint). localCheckpoint per round keeps the plan flat and the
-    * superseded round's blocks are freed as soon as the new round is
-    * materialized (GraftShim.freeCheckpoint).
-    */
-  private def closurePairs(s: SparkSession, dir: String): DataFrame =
-    closurePairsOf(s, refEdges(s, dir))
-
-  /** [[closurePairs]] generalized to any (child, parent) edge set —
-    * semi-naive BFS converges on cyclic graphs too (the pair set is
-    * finite and the anti-join empties the frontier once every
-    * reachable pair is known; a cycle just makes nodes
-    * self-reachable), which is what [[refCycles]] relies on.
-    */
-  private def closurePairsOf(s: SparkSession, edges: DataFrame): DataFrame = Tables.withIterConf(s, staticPlans = true) {
-    // Widen BEFORE the first materialization (r12, ADVICE r11): the
-    // staticPlans scope pins shuffle.partitions=8, which is right for
-    // the KB-scale round frames but would serialize the edge distinct
-    // and the step self-joins below on a large graph. The parquet
-    // footer row bound of the edge scan (zero jobs) is an upper bound
-    // on |edges| up to the ~1.2x/5 union fan-in, so 2x it is a safe
-    // pre-loop width; each round's iterWidth then re-tightens from
-    // the exact convergence counts.
-    Tables.footerRowBound(edges).foreach(n => Tables.iterWidth(s, 2 * n))
-    val e = edges
-      .select(col("child").as("doc_id"), col("parent").as("anc"))
-      .distinct().transform(Tables.iterCheckpoint)
-    // STRIDE-4 step relation (r12; stride-2 in r11): one self-join
-    // widens the step set to "reachable in 1-2 edges", squaring THAT
-    // widens it to "reachable in 1-4 edges" — the BFS then needs
-    // ⌈depth/4⌉ rounds instead of depth, and the loop's cost here is
-    // the per-round FIXED cost (driver-paced jobs over KB-MB frames;
-    // measured ~0.3s/round at sf0.1), not bytes. Each squaring costs
-    // about one round and composition preserves reachability exactly
-    // (any path decomposes into stride-≤4 steps). Step-set growth is
-    // out-degree-bounded (≤ Σ_{h≤4} outdeg^h distinct values, far
-    // fewer after value dedup on the /2-/3 DAG — measured ~2x edges).
-    val step2 = e.unionAll(
-      e.select(col("doc_id"), col("anc").as("mid"))
-        .join(e.select(col("doc_id").as("mid"), col("anc")), "mid")
-        .select(col("doc_id"), col("anc")))
-      .distinct().transform(Tables.iterCheckpoint)
-    val step = step2.unionAll(
-      step2.select(col("doc_id"), col("anc").as("mid"))
-        .join(step2.select(col("doc_id").as("mid"), col("anc")), "mid")
-        .select(col("doc_id"), col("anc")))
-      .distinct().transform(Tables.iterCheckpoint)
-    // Closure-so-far stays a UNION VIEW of the per-round frontier
-    // checkpoints — each pair is checkpoint-written exactly once, in
-    // the round that discovered it. Re-materializing the unioned
-    // closure every round (the first semi-naive cut) rewrote the
-    // whole O(|closure|) set per round — Σ rounds·|closure| rows of
-    // pure checkpoint IO that this form never pays.
-    val rounds = scala.collection.mutable.ListBuffer(step)
-    var frontier = step
-    var frontierCount = frontier.count() // materializes e → step2 → step
-    // e and step2 exist only to build step — their checkpoint blocks
-    // are provably never read again once the count above has
-    // materialized step.
-    org.apache.spark.sql.graftshim.GraftShim.freeCheckpoint(e)
-    org.apache.spark.sql.graftshim.GraftShim.freeCheckpoint(step2)
-    // Adaptive broadcasts (r11): the loop's convergence counts give
-    // the driver EXACT row counts for both join inputs at no extra
-    // cost, so each round broadcasts the step relation and the
-    // closure-so-far anti-join side while they fit ([[BcastRows]]) —
-    // the hop and the anti-filter then run in the frontier's own
-    // partitions and the round's only exchange is the distinct. A
-    // graph too big to broadcast (100 TB reference graphs) falls back
-    // to exactly the former shuffle form, per side, per round.
-    val stepBcast = frontierCount <= BcastRows
-    var closureCount = frontierCount
-    while (frontierCount > 0) {
-      Tables.iterWidth(s, closureCount)
-      // stride-2 extension of the NEW pairs only, against the step
-      // relation. No pre-join distinct: the anti-join passes
-      // duplicates through and the post-join distinct rides the
-      // join's (doc_id, anc) hash partitioning — one wide shuffle per
-      // round, not two.
-      val stepSide = step.select(col("doc_id").as("mid"), col("anc"))
-      val hop = frontier.select(col("doc_id"), col("anc").as("mid"))
-        .join(if (stepBcast) broadcast(stepSide) else stepSide, "mid")
-        .select(col("doc_id"), col("anc"))
-      val closure = rounds.reduce(_ unionAll _)
-      val fresh = hop
-        .join(if (closureCount <= BcastRows) broadcast(closure) else closure,
-          Seq("doc_id", "anc"), "left_anti")
-        .distinct().transform(Tables.iterCheckpoint)
-      frontierCount = fresh.count() // materializes fresh; old frontier's last read
-      frontier = fresh
-      closureCount += frontierCount
-      if (frontierCount > 0) rounds += fresh
-    }
-    rounds.reduce(_ unionAll _)
-  }
-
-  /** Row bound under which the closure loops broadcast a join side
-    * (sf10's ~18M-pair closure correctly falls back to the shuffle
-    * form) — the shared loop constant, see [[Tables.BcastRows]].
+  /** Row bound under which the closure runs as one broadcast-BFS
+    * operator, and under which the above-gate loop broadcasts a join
+    * side — the shared loop constant, see [[Tables.BcastRows]].
     */
   private val BcastRows = Tables.BcastRows
+
+  private val closureLog = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** The (doc_id, transitive ancestor `anc`[, min hop count `d`])
+    * pairs of every document of `docs` over the (child, parent)
+    * `edges` — the one closure entry of [[refsClosure]], [[depDepth]],
+    * [[gcCandidates]] and [[refCycles]]. The branch is chosen by the
+    * edges' parquet footer bound, read at zero jobs
+    * ([[Tables.footerRowBound]]):
+    *  - bound ≤ [[Tables.BcastRows]]: [[graft.plans.TransitiveClosure]],
+    *    a broadcast-BFS Catalyst operator. Construction launches no
+    *    job; execution is one broadcast job for the edges and one
+    *    stage over `docs`. Its explain string shows the bound, the
+    *    threshold and the branch.
+    *  - otherwise (or with no footer bound): [[closureLoop]], the
+    *    semi-naive loop of per-round jobs, restricted to `docs` by a
+    *    null-safe semi join. One INFO line records the same three
+    *    values.
+    * Both branches converge on cyclic graphs (the BFS visited set and
+    * the loop's anti-join stop at the finite pair set) and give a
+    * source its own id as an ancestor only through a cycle.
+    */
+  private[graft] def closure(docs: DataFrame, edges: DataFrame, withDepth: Boolean): DataFrame = {
+    val sources = docs.select(col("doc_id"))
+    val e = edges.select(col("child"), col("parent"))
+    val bound = Tables.footerRowBound(e)
+    bound.filter(_ <= BcastRows) match {
+      case Some(n) => graft.plans.TransitiveClosure.of(sources, e, withDepth, n, BcastRows)
+      case None =>
+        closureLog.info(s"closure edgeBound=${bound.getOrElse("unknown")} " +
+          s"threshold=$BcastRows branch=semi-naive-loop")
+        closureLoop(e, withDepth)
+          .join(sources.select(col("doc_id").as("src")), col("doc_id") <=> col("src"), "left_semi")
+    }
+  }
+
+  /** [[closure]]'s above-gate branch: the (doc_id, anc[, d]) pairs of
+    * every child of `edges` by SEMI-NAIVE frontier expansion carrying
+    * the min hop count d. Each round joins only the newly-discovered
+    * pairs against a step relation, so per-round join work is
+    * |frontier| · avg-outdegree and the whole run touches O(|closure|)
+    * join rows. Pointer doubling (closure ∘ closure, O(log depth)
+    * rounds; r6–r10) is the wrong trade on hub-heavy DAGs: its
+    * self-join intermediate is Σ_mid descendants(mid)·ancestors(mid)
+    * ≈ N·log³N (small-id hubs have ~N/id descendants), ~5.7e9 rows at
+    * 500k docs against semi-naive's ~18M. [[Tables.withIterConf]]
+    * coalesces the tiny round shuffles.
+    *
+    * NULLs follow the recursive-CTE oracle: equi-joins on the mid node
+    * never expand a NULL parent nor reach a NULL child, and the dedup
+    * anti-joins are null-safe, so a NULL-bearing pair is kept once.
+    *
+    * Per round: frontier ⋈ step (d' = d_frontier + d_step), an
+    * anti-join against closure-so-far to keep only new pairs (the BFS
+    * dedup that also terminates cycles) and a min-d rollup per fresh
+    * pair. The frontier count is the convergence witness (empty
+    * frontier = fixpoint). localCheckpoint per round keeps the plan
+    * flat, and the superseded build frames' blocks are freed as soon
+    * as the step relation is materialized (GraftShim.freeCheckpoint).
+    */
+  private[graft] def closureLoop(edges: DataFrame, withDepth: Boolean): DataFrame = {
+    val s = edges.sparkSession
+    // pairs of `l` not in `r`, NULLs matching NULLs
+    def newPairs(l: DataFrame, r: DataFrame): DataFrame =
+      l.join(r.select(col("doc_id").as("r_doc"), col("anc").as("r_anc")),
+        col("doc_id") <=> col("r_doc") && col("anc") <=> col("r_anc"), "left_anti")
+    val pairs = Tables.withIterConf(s, staticPlans = true) {
+      // Widen BEFORE the first materialization (r12, ADVICE r11): the
+      // staticPlans scope pins shuffle.partitions=8, which is right for
+      // the KB-scale round frames but would serialize the edge distinct
+      // and the step self-joins below on a large graph. The footer row
+      // bound of the edge scans (zero jobs) upper-bounds |edges|; each
+      // round's iterWidth then re-tightens from the exact counts.
+      Tables.footerRowBound(edges).foreach(n => Tables.iterWidth(s, n))
+      val e = edges
+        .select(col("child").as("doc_id"), col("parent").as("anc"))
+        .distinct().transform(Tables.iterCheckpoint)
+      // STRIDE-4 step relation carrying its EXACT min distance (r12):
+      // direct edges at d=1, two-hop pairs WITHOUT a direct edge at d=2
+      // (the anti-join makes d exact within the ≤2 window); squaring
+      // step2 then yields every pair at min distance ≤4 with exact d —
+      // a composition's d1+d2 is a real path length (≥ the true min
+      // m), and splitting a shortest path of length m ≤ 4 into halves
+      // of lengths a, b ≤ 2 gives step2 entries with d1 ≤ a, d2 ≤ b, so
+      // d1+d2 ≤ m and the min-per-pair is exactly m. The BFS then needs
+      // ⌈depth/4⌉ rounds instead of depth, and the loop's cost is the
+      // per-round FIXED cost (a round of jobs each), not bytes. Exactness
+      // of the loop: a shortest path of length L has a prefix of
+      // length L-4 whose min-dist is exactly L-4 (else a shorter path
+      // would exist), that prefix is in the previous frontier with
+      // exact d by induction, and the 4-step suffix is in the step
+      // relation at its exact ≤4 distance — so min over a round's
+      // candidates is the true min distance, and the per-round
+      // anti-join still discards longer rediscoveries of earlier pairs.
+      val twoHop = newPairs(e.select(col("doc_id"), col("anc").as("mid"))
+        .join(e.select(col("doc_id").as("mid"), col("anc")), "mid")
+        .select(col("doc_id"), col("anc")), e)
+        .distinct()
+      val step2 = e.select(col("doc_id"), col("anc"), lit(1L).as("d"))
+        .unionAll(twoHop.select(col("doc_id"), col("anc"), lit(2L).as("d")))
+        .transform(Tables.iterCheckpoint)
+      val step = step2.unionAll(
+        step2.select(col("doc_id"), col("anc").as("mid"), col("d").as("df"))
+          .join(step2.select(col("doc_id").as("mid"), col("anc"), col("d").as("ds")), "mid")
+          .select(col("doc_id"), col("anc"), (col("df") + col("ds")).as("d")))
+        .groupBy(col("doc_id"), col("anc")).agg(min(col("d")).as("d"))
+        .transform(Tables.iterCheckpoint)
+      // Closure-so-far stays a UNION VIEW of the per-round frontier
+      // checkpoints — each pair is checkpoint-written exactly once, in
+      // the round that discovered it.
+      val rounds = scala.collection.mutable.ListBuffer(step)
+      var frontier = step
+      var frontierCount = frontier.count() // materializes e → step2 → step
+      // e and step2 exist only to build step — their checkpoint blocks
+      // are provably never read again once the count above has
+      // materialized step.
+      org.apache.spark.sql.graftshim.GraftShim.freeCheckpoint(e)
+      org.apache.spark.sql.graftshim.GraftShim.freeCheckpoint(step2)
+      // Adaptive broadcasts (r11): the convergence counts are EXACT and
+      // known before each round is planned, so each round broadcasts
+      // the step relation and the closure-so-far anti-join side while
+      // they fit ([[BcastRows]]); a side too big to broadcast keeps the
+      // shuffle form, per side, per round.
+      val stepBcast = frontierCount <= BcastRows
+      var closureCount = frontierCount
+      while (frontierCount > 0) {
+        Tables.iterWidth(s, closureCount)
+        val stepSide = step.select(col("doc_id").as("mid"), col("anc"), col("d").as("ds"))
+        val hop = frontier
+          .select(col("doc_id"), col("anc").as("mid"), col("d").as("df"))
+          .join(if (stepBcast) broadcast(stepSide) else stepSide, "mid")
+          .select(col("doc_id"), col("anc"), (col("df") + col("ds")).as("d"))
+        val closure = rounds.reduce(_ unionAll _).select(col("doc_id"), col("anc"))
+        val fresh = newPairs(hop, if (closureCount <= BcastRows) broadcast(closure) else closure)
+          .groupBy(col("doc_id"), col("anc")).agg(min(col("d")).as("d"))
+          .transform(Tables.iterCheckpoint)
+        frontierCount = fresh.count()
+        frontier = fresh
+        closureCount += frontierCount
+        if (frontierCount > 0) rounds += fresh
+      }
+      rounds.reduce(_ unionAll _)
+    }
+    if (withDepth) pairs else pairs.select(col("doc_id"), col("anc"))
+  }
 
   /** Transitive reference closure per document (the resolution set a
     * registry materializes to answer "what does this schema pull in"
@@ -808,106 +840,24 @@ object Registry {
     */
   def refsClosure(s: SparkSession, dir: String): DataFrame =
     Tables.documents(s, dir).select(col("doc_id"))
-      .join(closurePairs(s, dir), Seq("doc_id"), "left")
+      .join(closure(Tables.documents(s, dir), refEdges(s, dir), withDepth = false),
+        Seq("doc_id"), "left")
       .groupBy(col("doc_id"))
       .agg(count(col("anc")).as("n_ancestors"), max(col("anc")).as("max_anc"))
       .orderBy(col("doc_id"))
 
-  /** Dependency graph WITH hop depth (buildDependencyTree,
-    * tools_validation.go:295 walks references to maxDepth): the
-    * semi-naive closure carrying min-hop distance as the BFS layer
-    * number. Init: direct edges at d=1; round r extends only the
-    * frontier one edge, and a pair first discovered in round r has
-    * EXACT min-distance r (unit-weight BFS invariant; the anti-join
-    * against closure-so-far discards longer rediscoveries). The
-    * empty frontier is the convergence witness. Replaces the r6–r10
-    * min-plus matrix squaring for the same hub-blowup reason as
-    * [[closurePairsOf]] — squaring composes every (path≤2^r, path≤2^r)
-    * pair through hub mids, and min-plus cannot even dedup the
-    * intermediate before the groupBy. Same flat-lineage and
-    * freed-superseded-round discipline.
-    */
-  private def closureDepths(s: SparkSession, dir: String): DataFrame = Tables.withIterConf(s, staticPlans = true) {
-    // pre-loop width from the edge scan's footer bound — see
-    // [[closurePairsOf]] (r12, ADVICE r11)
-    val edges0 = refEdges(s, dir)
-    Tables.footerRowBound(edges0).foreach(n => Tables.iterWidth(s, 2 * n))
-    val e = edges0
-      .select(col("child").as("doc_id"), col("parent").as("anc"))
-      .distinct().transform(Tables.iterCheckpoint)
-    // STRIDE-4 step relation carrying its EXACT min distance (r12;
-    // stride-2 in r11): direct edges at d=1, two-hop pairs WITHOUT a
-    // direct edge at d=2 (the anti-join makes d exact within the ≤2
-    // window); squaring step2 then yields every pair at min distance
-    // ≤4 with exact d — a composition's d1+d2 is a real path length
-    // (≥ the true min m), and splitting a shortest path of length
-    // m ≤ 4 into halves of lengths a, b ≤ 2 gives step2 entries with
-    // d1 ≤ a, d2 ≤ b (step2 d's are exact global minima ≤ 2), so
-    // d1+d2 ≤ m and the min-per-pair is exactly m. Same ⌈depth/4⌉
-    // round count win as [[closurePairsOf]]; because a round now
-    // spans four BFS layers, d rides the loop joins (d' = d_frontier
-    // + d_step, min per fresh pair) instead of being stamped from the
-    // round index. Exactness of the loop: a shortest path of length L
-    // has a prefix of length L-4 whose min-dist is exactly L-4 (else
-    // a shorter a→c path would exist), that prefix is in the previous
-    // frontier with exact d by induction, and the 4-step suffix is in
-    // the step relation at its exact ≤4 distance — so min over a
-    // round's candidates is the true min distance, and the per-round
-    // anti-join still discards longer rediscoveries of earlier pairs.
-    val twoHop = e.select(col("doc_id"), col("anc").as("mid"))
-      .join(e.select(col("doc_id").as("mid"), col("anc")), "mid")
-      .select(col("doc_id"), col("anc"))
-      .join(e, Seq("doc_id", "anc"), "left_anti")
-      .distinct()
-    val step2 = e.select(col("doc_id"), col("anc"), lit(1L).as("d"))
-      .unionAll(twoHop.select(col("doc_id"), col("anc"), lit(2L).as("d")))
-      .transform(Tables.iterCheckpoint)
-    val step = step2.unionAll(
-      step2.select(col("doc_id"), col("anc").as("mid"), col("d").as("df"))
-        .join(step2.select(col("doc_id").as("mid"), col("anc"), col("d").as("ds")), "mid")
-        .select(col("doc_id"), col("anc"), (col("df") + col("ds")).as("d")))
-      .groupBy(col("doc_id"), col("anc")).agg(min(col("d")).as("d"))
-      .transform(Tables.iterCheckpoint)
-    val rounds = scala.collection.mutable.ListBuffer(step)
-    var frontier = step
-    var frontierCount = frontier.count() // materializes e → step2 → step
-    org.apache.spark.sql.graftshim.GraftShim.freeCheckpoint(e)
-    org.apache.spark.sql.graftshim.GraftShim.freeCheckpoint(step2)
-    // same adaptive broadcasts as [[closurePairsOf]] — counts are
-    // exact and driver-known from the convergence probes
-    val stepBcast = frontierCount <= BcastRows
-    var closureCount = frontierCount
-    while (frontierCount > 0) {
-      Tables.iterWidth(s, closureCount)
-      val stepSide = step.select(col("doc_id").as("mid"), col("anc"), col("d").as("ds"))
-      val hop = frontier
-        .select(col("doc_id"), col("anc").as("mid"), col("d").as("df"))
-        .join(if (stepBcast) broadcast(stepSide) else stepSide, "mid")
-        .select(col("doc_id"), col("anc"), (col("df") + col("ds")).as("d"))
-      val closure = rounds.reduce(_ unionAll _).select(col("doc_id"), col("anc"))
-      val fresh = hop
-        .join(if (closureCount <= BcastRows) broadcast(closure) else closure,
-          Seq("doc_id", "anc"), "left_anti")
-        .groupBy(col("doc_id"), col("anc")).agg(min(col("d")).as("d"))
-        .transform(Tables.iterCheckpoint)
-      frontierCount = fresh.count()
-      frontier = fresh
-      closureCount += frontierCount
-      if (frontierCount > 0) rounds += fresh
-    }
-    rounds.reduce(_ unionAll _)
-  }
-
-  /** Per-document dependency-tree report (tools_validation.go:295):
-    * ancestor count, tree depth (max min-hop distance), and how many
-    * ancestors sit within maxDepth=2 — the truncation the reference
-    * applies when rendering the tree. Docs without references report
-    * 0/0/0 via the left join. Oracle: recursive CTE carrying depth,
-    * min() per (doc, anc) — parity proves the min-plus squaring.
+  /** Per-document dependency-tree report (buildDependencyTree,
+    * tools_validation.go:295 walks references to maxDepth): ancestor
+    * count, tree depth (max min-hop distance), and how many ancestors
+    * sit within maxDepth=2 — the truncation the reference applies when
+    * rendering the tree. The min-hop distance is the BFS layer of
+    * [[closure]]. Docs without references report 0/0/0 via the left
+    * join. Oracle: recursive CTE carrying depth, min() per (doc, anc).
     */
   def depDepth(s: SparkSession, dir: String): DataFrame =
     Tables.documents(s, dir).select(col("doc_id"))
-      .join(closureDepths(s, dir), Seq("doc_id"), "left")
+      .join(closure(Tables.documents(s, dir), refEdges(s, dir), withDepth = true),
+        Seq("doc_id"), "left")
       .groupBy(col("doc_id"))
       .agg(count(col("anc")).as("n_ancestors"),
         coalesce(max(col("d")), lit(0L)).as("depth"),
@@ -924,13 +874,11 @@ object Registry {
     * every strongly-connected component of size ≥ 1 that contains a
     * cycle: (cycle_id = min member, member, component size).
     *
-    * Scale: reachability via the shared pointer-doubling core
-    * ([[closurePairsOf]] — O(log diameter) rounds, converges on
-    * cyclic graphs since the pair set is finite); SCC membership is
-    * one self-join of the closure with its transpose (mutual reach),
-    * then a min-label rollup. Reference graphs are metadata-sized
-    * next to the corpus, and ancestor sets are log-bounded, so the
-    * closure frame stays small at any corpus scale.
+    * Scale: reachability via [[closure]] — the broadcast-BFS
+    * operator, with the semi-naive loop above the gate; both converge
+    * on cyclic graphs, and a node is its own ancestor exactly when it
+    * lies on a cycle. SCC membership is one self-join of the closure
+    * with its transpose (mutual reach), then a min-label rollup.
     */
   def refCycles(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir).select(col("doc_id"))
@@ -942,16 +890,15 @@ object Registry {
       .join(docs.select(col("doc_id").as("child")), Seq("child"), "left_semi")
       .join(docs.select(col("doc_id").as("parent")), Seq("parent"), "left_semi")
       .select(col("child"), col("parent"))
-    val closure = closurePairsOf(s, refEdges(s, dir).union(ring))
-    val mutual = closure
-      .join(closure.select(col("anc").as("doc_id"), col("doc_id").as("anc")),
+    val reach = closure(docs, refEdges(s, dir).union(ring), withDepth = false)
+    val mutual = reach
+      .join(reach.select(col("anc").as("doc_id"), col("doc_id").as("anc")),
         Seq("doc_id", "anc"))
     val scc = mutual.groupBy(col("doc_id")).agg(min(col("anc")).as("cycle_id"))
     // component size via a window over cycle_id, not a groupBy+join:
-    // scc is not checkpointed, so the join's build side re-ran the
-    // whole mutual-reach join + rollup a second time (r12, guide §2.4
-    // duplicated subtrees — stage profile showed the closure
-    // checkpoints scanned twice over). One exchange, identical rows.
+    // the join's build side would re-run the whole mutual-reach join
+    // + rollup a second time (r12, guide §2.4 duplicated subtrees).
+    // One exchange, identical rows.
     scc.withColumn("n_members", count(lit(1)).over(
         Window.partitionBy(col("cycle_id"))))
       .select(col("cycle_id"), col("doc_id"), col("n_members"))
@@ -1038,16 +985,15 @@ object Registry {
     * 7 tombstones) is permanently deletable iff NO live schema
     * transitively depends on it — the reference refuses deletion
     * while referenced (registry.go:591 / ErrReferencedBy); cascades
-    * of deleted-only dependents are collectable. One semi join
-    * restricts the closure to live dependents, one partial-agg count
-    * per ancestor, broadcast-joined back to the tombstone set.
+    * of deleted-only dependents are collectable. The closure runs
+    * from the live documents only (its BFS sources), then one
+    * partial-agg count per ancestor, joined back to the tombstone set.
     */
   def gcCandidates(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir).select(col("doc_id"))
     val live = docs.filter(col("doc_id") % 7 =!= 0)
     val deleted = docs.filter(col("doc_id") % 7 === 0)
-    val depCounts = closurePairs(s, dir)
-      .join(live, Seq("doc_id"), "left_semi")
+    val depCounts = closure(live, refEdges(s, dir), withDepth = false)
       .groupBy(col("anc")).agg(count(lit(1)).as("dep_n"))
     deleted.join(depCounts, col("doc_id") === col("anc"), "left")
       .select(col("doc_id"),

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, BindRefe
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution}
 import org.apache.spark.sql.catalyst.util.TypeUtils
-import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
 
 /** AS-OF join as a first-class Catalyst operator — the whole-operator
   * extension tier (custom LogicalPlan + Strategy + SparkPlan wired
@@ -60,24 +60,12 @@ case class AsOfJoin(
 /** Planner rule: AsOfJoin → AsOfJoinExec. Injected via
   * [[graft.GraftExtensions]] (injectPlannerStrategy).
   */
-object AsOfJoinStrategy extends SparkStrategy {
+object AsOfJoinStrategy extends GraftStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case AsOfJoin(l, r, lk, rk, lt, rt, tb) =>
       AsOfJoinExec(planLater(l), planLater(r), lk, rk, lt, rt, tb) :: Nil
     case _ => Nil
   }
-
-  /** The ONE fallback registration path (shared by operators and
-    * tests) for sessions built without
-    * `spark.sql.extensions=graft.GraftExtensions` — the documented
-    * entry point, which injects this strategy at session build time.
-    * Checks the planner's effective strategy list (covers both the
-    * extension injection and a prior fallback), so it is idempotent
-    * and the two paths cannot drift.
-    */
-  def ensureRegistered(s: org.apache.spark.sql.SparkSession): Unit =
-    if (!s.sessionState.planner.strategies.contains(AsOfJoinStrategy))
-      s.experimental.extraStrategies = AsOfJoinStrategy +: s.experimental.extraStrategies
 }
 
 case class AsOfJoinExec(

@@ -7,11 +7,15 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
   * gated consumer, or a dry-run driver does — must launch ZERO Spark
   * jobs, so plan inspection never triggers cluster work. The
   * exceptions are the driver-paced ITERATIVE operators, whose result
-  * plan is definitionally data-dependent (fixpoint closures,
-  * connected-components rounds, power iteration, k-means, BPE merge
-  * rounds): those run their loop at construction and are allow-listed
-  * here BY NAME so any new operator that accidentally grows an eager
-  * probe/checkpoint fails this spec loudly.
+  * plan is definitionally data-dependent (connected-components rounds,
+  * power iteration, k-means, BPE merge rounds): those run their loop
+  * at construction and are allow-listed here BY NAME so any new
+  * operator that accidentally grows an eager probe/checkpoint fails
+  * this spec loudly. The registry reference closures are not on the
+  * list: they run as one broadcast-BFS operator
+  * (graft.plans.TransitiveClosure), whose rounds happen at execution,
+  * and their semi-naive loop is only the fallback above the edge-count
+  * gate.
   */
 class ConstructionJobsSpec extends SparkSpec {
 
@@ -20,15 +24,12 @@ class ConstructionJobsSpec extends SparkSpec {
     * stages is decided by the data. Everything else must be lazy.
     */
   private val iterative = Set(
-    // registry graph fixpoints (pointer-doubling / closure loops)
-    "reg_refs_closure", "reg_dep_depth", "reg_gc_candidates",
-    "reg_ref_cycles", "reg_pagerank", "reg_change_advice",
     // connected-components loops and their consumers
     "dedup_clusters", "dedup_cluster_stats", "dedup_survivors",
     "dedup_semantic_clusters", "dedup_semantic_rate", "corpus_funnel",
     // iterative ANN / embedding loops
     "ann_nn_descent", "ann_graph_recall", "ann_nn_graph",
-    "emb_centroids", "emb_assign", "emb_pca_power",
+    "emb_assign", "emb_pca_power",
     // BPE merge rounds are sequential by definition
     "tok_merge_apply"
   )
