@@ -31,7 +31,10 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     operators.Analytics.q1PricingSummary(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Each
+    * returns an unordered relation: order is part of a result only
+    * under a limit (top-k), parity compares sorted multisets of rows,
+    * and a caller who wants order sorts at the edge (SURVEY.md §5). */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     groups.map(_._1).reduce(_ ++ _)
 

@@ -144,6 +144,11 @@ object Tables {
     * [[spreadIfNarrow]]: a table big enough to report many
     * byte-splits has many row groups in practice. None when the
     * frame has no file-backed scan.
+    *
+    * V1-only contract: only `LogicalRelation`s over a
+    * `HadoopFsRelation` (every `spark.read.parquet` read here) count.
+    * A DataSource-V2 file scan contributes nothing, so a frame read
+    * only through V2 gets None and [[spreadIfNarrow]] leaves it as is.
     */
   def scanSplitBound(df: DataFrame): Option[Long] = {
     val maxSplit = df.sparkSession.sessionState.conf.filesMaxPartitionBytes.max(1L)

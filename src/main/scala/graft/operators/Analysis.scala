@@ -27,7 +27,6 @@ object Analysis {
         round(lit(1.0) - levenshtein(lower(query), lower(col("p_name"))).cast("double") /
           greatest(length(query), length(col("p_name"))), 4))
       .filter(col("score") >= 0.5)
-      .orderBy(col("score").desc, col("p_partkey"))
   }
 
   /** NormalizeFieldName (analysis/fields.go:245): any-case →
@@ -40,7 +39,6 @@ object Analysis {
         lower(regexp_replace(
           regexp_replace(col("p_name"), "([a-z0-9])([A-Z])", "$1_$2"),
           "[-. ]", "_")).as("norm_name"))
-      .orderBy(col("p_partkey"))
 
   /** ExtractFields (analysis/fields.go:28) over JSON payloads:
     * pull `$.k` out of the props document and aggregate per type —
@@ -54,7 +52,6 @@ object Analysis {
       .agg(round(avg(col("k")), 4).as("avg_k"),
         max(col("k")).as("max_k"),
         count(lit(1)).as("n"))
-      .orderBy(col("event_type"))
 
   /** ScoreSchemaQuality (analysis/quality.go:25): four 25-point
     * categories + A–F grade, re-expressed over document tokens.
@@ -87,7 +84,6 @@ object Analysis {
           .when(col("overall") >= 70, "C")
           .when(col("overall") >= 60, "D")
           .otherwise("F"))
-      .orderBy(col("doc_id"))
   }
 
   /** Nested field-path flattening (fields.go:51 walkAvroSchema /
@@ -117,7 +113,6 @@ object Analysis {
       .select(col("f.path").as("path"), col("f.jtype").as("jtype"))
       .groupBy(col("path"), col("jtype"))
       .agg(count(lit(1)).as("n"))
-      .orderBy(col("path"), col("jtype"))
   }
 
   /** Protobuf text-payload field extraction (fields.go:222
@@ -158,7 +153,6 @@ object Analysis {
       .select(col("f.0").as("modifier"), col("f.1").as("ftype"), col("f.2").as("fname"))
       .groupBy(col("modifier"), col("ftype"), (col("modifier") === "required").as("required"))
       .agg(count(lit(1)).as("n_fields"), countDistinct(col("fname")).as("n_names"))
-      .orderBy(col("modifier"), col("ftype"))
   }
 
   /** MatchFuzzy against a candidate set with naming variants
@@ -215,7 +209,6 @@ object Analysis {
       // rationals (1 - k/m, m <= 12) where round() half-up on the shortest
       // decimal string diverges from DuckDB's binary rounding.
       .agg((floor(max(col("s")) * 10000 + 0.5) / 10000.0).as("best_score"))
-      .orderBy(col("query"), col("best_score").desc, col("p_name"))
   }
 
   /** Quality TREND over the registration history — ScoreSchemaQuality
@@ -251,7 +244,6 @@ object Analysis {
           .otherwise(0L)).as("n_regressions"),
         min(when(col("prev").isNotNull, col("score") - col("prev"))).as("worst_delta"),
         max_by(col("score"), struct(col("ts"), col("event_id"))).as("last_score"))
-      .orderBy(col("subject"))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

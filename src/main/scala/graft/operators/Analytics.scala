@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * Scale notes: fact-side shuffles happen only on join/group keys;
   * every dimension join is an explicit `broadcast()`; top-k queries
   * use orderBy+limit which Catalyst plans as TakeOrderedAndProject
-  * (no global sort).
+  * (no global sort); every other result is an unordered relation.
   */
 object Analytics {
 
@@ -32,7 +32,6 @@ object Analytics {
         round(avg(col("l_extendedprice")), 4).as("avg_price"),
         round(avg(col("l_discount")), 4).as("avg_disc"),
         count(lit(1)).as("count_order"))
-      .orderBy(col("l_returnflag"), col("l_linestatus"))
 
   /** Join + agg + bounded top-k (TPC-H Q3 shape). The orderBy+limit
     * is a TakeOrderedAndProject: each partition keeps 10 rows, the
@@ -68,7 +67,6 @@ object Analytics {
       .join(dims, col("o_custkey") === col("c_custkey"))
       .groupBy(col("n_name"))
       .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 4).as("revenue"))
-      .orderBy(col("revenue").desc)
   }
 
   /** Conditional aggregation over a join (market-share shape). */
@@ -82,7 +80,6 @@ object Analytics {
         round(sum(when(col("o_orderpriority") === "1-URGENT", col("o_totalprice")).otherwise(lit(0.0))), 4).as("urgent_rev"),
         round(sum(col("o_totalprice")), 4).as("total_rev"),
         count(lit(1)).as("n_orders"))
-      .orderBy(col("n_name"))
   }
 
   /** Partitioned window top-N: 3 most expensive orders per customer.
@@ -97,7 +94,6 @@ object Analytics {
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= 3)
       .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"), col("rnk"))
-      .orderBy(col("o_custkey"), col("rnk"))
   }
 
   /** Hierarchical ROLLUP region→nation of customer account balances. */
@@ -107,7 +103,6 @@ object Analytics {
       .join(broadcast(Tables.region(s, dir)), col("n_regionkey") === col("r_regionkey"))
       .rollup(col("r_name"), col("n_name"))
       .agg(round(sum(col("c_acctbal")), 4).as("sum_bal"), count(lit(1)).as("n_cust"))
-      .orderBy(col("r_name").asc_nulls_first, col("n_name").asc_nulls_first)
 
   /** Exact distinct count per group (events): distinct users per
     * event type. Spark plans this as a two-phase expand+agg — no
@@ -117,7 +112,6 @@ object Analytics {
     Tables.events(s, dir)
       .groupBy(col("event_type"))
       .agg(countDistinct(col("user_id")).as("n_users"), count(lit(1)).as("n_events"))
-      .orderBy(col("event_type"))
 
   /** Anti-join: customers with no URGENT order (TPC-H Q22 shape).
     * Left-anti is a build-side hash lookup — no row explosion,
@@ -128,7 +122,6 @@ object Analytics {
       .join(Tables.orders(s, dir).filter(col("o_orderpriority") === "1-URGENT"),
         col("c_custkey") === col("o_custkey"), "left_anti")
       .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
-      .orderBy(col("c_custkey"))
 
   /** Semi-join: suppliers that ship any top-price line (TPC-H Q20
     * shape) — existence check without duplication.
@@ -138,7 +131,6 @@ object Analytics {
       .join(Tables.lineitem(s, dir).filter(col("l_extendedprice") > 104500),
         col("s_suppkey") === col("l_suppkey"), "left_semi")
       .select(col("s_suppkey"), col("s_name"))
-      .orderBy(col("s_suppkey"))
 
   /** Correlated-subquery shape (TPC-H Q2): parts at their minimum
     * retail price within type — decorrelated as groupBy + join back,
@@ -152,7 +144,6 @@ object Analytics {
       .join(broadcast(minByType),
         col("p_type") === col("mt_type") && col("p_retailprice") === col("min_price"))
       .select(col("p_partkey"), col("p_type"), col("p_retailprice"))
-      .orderBy(col("p_partkey"))
   }
 
   /** TPC-H Q4 shape: order counts by priority where any lineitem
@@ -174,7 +165,6 @@ object Analytics {
         "left_semi")
       .groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("order_count"))
-      .orderBy(col("o_orderpriority"))
   }
 
   /** TPC-H Q7 shape: bilateral volume between two customer nations. */
@@ -187,7 +177,6 @@ object Analytics {
       .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
       .groupBy(col("cust_nation"), year(col("o_orderdate")).as("o_year"))
       .agg(round(sum(col("o_totalprice")), 4).as("volume"), count(lit(1)).as("n_orders"))
-      .orderBy(col("cust_nation"), col("o_year"))
   }
 
   /** TPC-H Q14 shape: promo revenue share — two conditional sums in
@@ -211,7 +200,6 @@ object Analytics {
     Tables.orders(s, dir)
       .join(big, col("o_orderkey") === col("l_orderkey"))
       .select(col("o_orderkey"), col("o_totalprice"), col("o_orderdate"), col("total_qty"))
-      .orderBy(col("o_orderkey"))
   }
 
   /** Sliding-window time series: 7-order moving average of order
@@ -225,7 +213,6 @@ object Analytics {
     Tables.orders(s, dir)
       .withColumn("ma7", round(avg(col("o_totalprice")).over(w), 4))
       .select(col("o_custkey"), col("o_orderkey"), col("o_orderdate"), col("ma7"))
-      .orderBy(col("o_custkey"), col("o_orderdate"), col("o_orderkey"))
   }
 
   /** Running totals: cumulative revenue per customer over time. */
@@ -237,7 +224,6 @@ object Analytics {
     Tables.orders(s, dir)
       .withColumn("cum_rev", round(sum(col("o_totalprice")).over(w), 4))
       .select(col("o_custkey"), col("o_orderkey"), col("cum_rev"))
-      .orderBy(col("o_custkey"), col("o_orderkey"))
   }
 
   /** Pivot: daily event counts reshaped to one column per event
@@ -249,7 +235,6 @@ object Analytics {
       .pivot("event_type", Seq("click", "error", "purchase", "signup", "view"))
       .count()
       .na.fill(0L)
-      .orderBy(col("day"))
 
   /** GROUPING SETS: region totals, nation totals, and grand total in
     * one pass (the general form rollup/cube specialize).
@@ -260,7 +245,6 @@ object Analytics {
       .join(broadcast(Tables.region(s, dir)), col("n_regionkey") === col("r_regionkey"))
       .groupingSets(Seq(Seq(col("r_name")), Seq(col("n_name")), Seq()), col("r_name"), col("n_name"))
       .agg(count(lit(1)).as("n_cust"))
-      .orderBy(col("r_name").asc_nulls_first, col("n_name").asc_nulls_first)
 
   /** Set operations: BUILDING-segment customers EXCEPT those with an
     * URGENT order, INTERSECTed against positive balances.
@@ -273,7 +257,7 @@ object Analytics {
       .select(col("o_custkey").as("c_custkey")).distinct()
     val positive = Tables.customer(s, dir)
       .filter(col("c_acctbal") > 0).select(col("c_custkey"))
-    building.except(urgent).intersect(positive).orderBy(col("c_custkey"))
+    building.except(urgent).intersect(positive)
   }
 
   /** Returned-item revenue ranking (TPC-H Q10 shape): which customers
@@ -323,7 +307,6 @@ object Analytics {
         col("c_custkey") === col("o_custkey"), "left_outer")
       .groupBy(col("c_custkey")).agg(count(col("o_orderkey")).as("c_count"))
       .groupBy(col("c_count")).agg(count(lit(1)).as("custdist"))
-      .orderBy(col("custdist").desc, col("c_count").desc)
 
   /** Discounted revenue under disjunctive brand/size/quantity terms
     * (TPC-H Q19 shape) — the optimizer test: Catalyst must derive the
@@ -360,7 +343,6 @@ object Analytics {
       .join(broadcast(maxRev), col("total_revenue") === col("max_revenue"))
       .join(broadcast(Tables.supplier(s, dir)), col("supplier_no") === col("s_suppkey"))
       .select(col("s_suppkey"), col("s_name"), col("total_revenue"))
-      .orderBy(col("s_suppkey"))
   }
 
   /** Small-quantity-order revenue (TPC-H Q17 shape): the classic
@@ -402,7 +384,6 @@ object Analytics {
       .join(urgent, col("c_custkey") === col("o_custkey"), "left_anti")
       .groupBy(col("c_nationkey"))
       .agg(count(lit(1)).as("numcust"), round(sum(col("c_acctbal")), 4).as("totacctbal"))
-      .orderBy(col("c_nationkey"))
   }
 
   /** Important-part identification (TPC-H Q11 shape): per-part value
@@ -420,7 +401,6 @@ object Analytics {
     pv.join(broadcast(thr))
       .filter(col("value_raw") > col("thr"))
       .select(col("l_partkey"), round(col("value_raw"), 4).as("part_value"))
-      .orderBy(col("part_value").desc, col("l_partkey"))
   }
 
   /** Supplier-count distribution (TPC-H Q16 shape): distinct-count
@@ -442,7 +422,6 @@ object Analytics {
       .join(broadcast(excluded), col("l_suppkey") === col("s_suppkey"), "left_anti")
       .groupBy(col("p_brand"), col("p_type"), col("p_size"))
       .agg(countDistinct(col("l_suppkey")).as("supplier_cnt"))
-      .orderBy(col("supplier_cnt").desc, col("p_brand"), col("p_type"), col("p_size"))
   }
 
   /** Excess-inventory suppliers (TPC-H Q20 shape): nested semi-join
@@ -465,7 +444,6 @@ object Analytics {
     Tables.supplier(s, dir)
       .join(excess, col("s_suppkey") === col("l_suppkey"), "left_semi")
       .select(col("s_suppkey"), col("s_name"))
-      .orderBy(col("s_suppkey"))
   }
 
   /** Product-line profit by nation and year (TPC-H Q9 shape): the
@@ -487,7 +465,6 @@ object Analytics {
       .groupBy(col("n_name"), year(col("o_orderdate")).as("o_year"))
       .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount")) -
         lit(0.1) * col("p_retailprice") * col("l_quantity")), 4).as("profit"))
-      .orderBy(col("n_name"), col("o_year"))
   }
 
   /** National market share (TPC-H Q8 shape): one nation's share of a
@@ -522,7 +499,6 @@ object Analytics {
       .agg(round(
         sum(when(col("s_nation") === "NATION_5", vol).otherwise(lit(0.0))) / sum(vol),
         4).as("mkt_share"))
-      .orderBy(col("o_year"))
   }
 
   /** Shipment priority classes (TPC-H Q12 shape): fact join +
@@ -539,7 +515,6 @@ object Analytics {
       .groupBy(col("l_returnflag").as("ship_class"))
       .agg(sum(when(isHigh, 1L).otherwise(0L)).as("high_line_count"),
         sum(when(isHigh, 0L).otherwise(1L)).as("low_line_count"))
-      .orderBy(col("ship_class"))
   }
 
   /** Suppliers-who-kept-waiting (TPC-H Q21 shape). The reference
@@ -602,7 +577,6 @@ object Analytics {
       .agg(count(lit(1)).as("n_cust"),
         round(min(col("c_acctbal")), 4).as("lo_bal"),
         round(max(col("c_acctbal")), 4).as("hi_bal"))
-      .orderBy(col("c_nationkey"), col("quartile"))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -26,7 +26,6 @@ object Audit {
     Tables.events(s, dir)
       .groupBy(to_date(col("ts")).as("day"), col("event_type"))
       .agg(count(lit(1)).as("n_events"))
-      .orderBy(col("day"), col("event_type"))
 
   /** CEF severity classification (audit_format.go:102 cefSeverity):
     * failures → 8, mutating ops → 5, reads → 3. `error` events play
@@ -41,7 +40,6 @@ object Audit {
       .groupBy(col("severity"))
       .agg(count(lit(1)).as("n_events"),
         round(sum(col("value")), 4).as("total_value"))
-      .orderBy(col("severity"))
 
   /** CEF event rendering (audit_format.go FormatCEF): the audit
     * export format — `CEF:0|vendor|product|version|signature|name|
@@ -64,7 +62,6 @@ object Audit {
           col("severity").cast("string"), lit("|suser="), col("user_id").cast("string"),
           lit(" outcome="),
           when(col("severity") === 8, "failure").otherwise("success")).as("cef"))
-      .orderBy(col("event_id"))
 
   /** Log2-bucketed latency histogram (metrics.go keeps per-endpoint
     * latency histograms; exponential buckets are the standard SLO
@@ -88,7 +85,6 @@ object Audit {
       .select(col("bucket"), pow(lit(2), col("bucket")).cast("bigint").as("lo_ms"),
         col("n_events"),
         (floor(col("n_events") / col("tot") * 10000 + 0.5) / lit(10000.0)).as("share"))
-      .orderBy(col("bucket"))
   }
 
   /** Top-k principals by activity (audit.go principal tracking).
@@ -119,7 +115,6 @@ object Audit {
     daily.withColumn("rank", row_number().over(w))
       .where(col("rank") <= 3)
       .select(col("day"), col("rank"), col("user_id"), col("n_events"))
-      .orderBy(col("day"), col("rank"))
   }
 
   /** Failure ratio per principal (metrics.go auth failure counters):
@@ -130,7 +125,6 @@ object Audit {
       .groupBy(col("user_id"))
       .agg(expr("floor(sum(CASE WHEN event_type = 'error' THEN 1.0 ELSE 0.0 END) / count(1) * 10000 + 0.5) / cast(10000 AS double)").as("failure_ratio"),
         count(lit(1)).as("n_events"))
-      .orderBy(col("user_id"))
 
   /** Session reconstruction: a new session starts after a >30min gap
     * (audit trail analysis).
@@ -181,7 +175,6 @@ object Audit {
       .groupBy(col("user_id"))
       .agg((sum(col("n_starts")) - sum(col("merged"))).as("n_sessions"),
         sum(col("n_events")).as("n_events"))
-      .orderBy(col("user_id"))
   }
 
   /** The pre-r10 span-wide formulation (one per-user window over the
@@ -198,7 +191,6 @@ object Audit {
       .withColumn("session_id", sum(col("new_session")).over(byUser))
       .groupBy(col("user_id"))
       .agg(max(col("session_id")).as("n_sessions"), count(lit(1)).as("n_events"))
-      .orderBy(col("user_id"))
   }
 
   /** Latency percentiles per event type (metrics.go request-duration
@@ -211,7 +203,6 @@ object Audit {
         round(expr("percentile(value, 0.5)"), 4).as("p50"),
         round(expr("percentile(value, 0.95)"), 4).as("p95"),
         round(expr("percentile(value, 0.99)"), 4).as("p99"))
-      .orderBy(col("event_type"))
 
   /** The 100 TB form of [[latencyPctile]]: `approx_percentile`
     * (t-digest-style mergeable sketch, map-side combinable) at the
@@ -227,7 +218,6 @@ object Audit {
         expr("approx_percentile(value, 0.5, 10000)").as("p50"),
         expr("approx_percentile(value, 0.95, 10000)").as("p95"),
         expr("approx_percentile(value, 0.99, 10000)").as("p99"))
-      .orderBy(col("event_type"))
 
   /** Per-minute event rate (metrics.go rate counters): tumbling
     * 1-minute buckets per type.
@@ -236,7 +226,6 @@ object Audit {
     Tables.events(s, dir)
       .groupBy(date_trunc("minute", col("ts")).as("minute"), col("event_type"))
       .agg(count(lit(1)).as("n_events"))
-      .orderBy(col("minute"), col("event_type"))
 
   /** Burst alerting over the per-minute rate stream — the alert rule
     * the reference's Prometheus counters exist to feed (rate vs its
@@ -265,7 +254,6 @@ object Audit {
       .select(col("event_type"), col("minute"), col("n_events"),
         round(col("t_sum") / 10.0, 4).as("trailing_avg"),
         round(col("n_events") * 10.0 / col("t_sum"), 4).as("ratio"))
-      .orderBy(col("event_type"), col("minute"))
   }
 
   /** Skew-safe two-phase aggregation: pre-aggregate on a salted key
@@ -341,7 +329,6 @@ object Audit {
     normalizedRequests(s, dir)
       .groupBy(col("endpoint"))
       .agg(count(lit(1)).as("n_requests"))
-      .orderBy(col("endpoint"))
 
   /** Confluent @PerformanceMetric endpoint mapping (metrics.go:636
     * confluentEndpoint): (HTTP method, normalized path) → Confluent's
@@ -377,7 +364,6 @@ object Audit {
       .withColumn("confluent_endpoint", ep)
       .groupBy(col("confluent_endpoint"))
       .agg(count(lit(1)).as("n_requests"))
-      .orderBy(col("confluent_endpoint"))
   }
 
   /** Metric-stream outlier detection (the alerting query behind the
@@ -401,7 +387,6 @@ object Audit {
       .agg(count(lit(1)).as("n_events"),
         sum(when(col("z") > 3.0, 1L).otherwise(0L)).as("n_outliers"),
         round(max(col("z")), 4).as("max_abs_z"))
-      .orderBy(col("event_type"))
   }
 
   /** Conversion funnel over the audit stream, with first-event stage
@@ -435,7 +420,6 @@ object Audit {
     */
   def rateHopping(s: SparkSession, dir: String): DataFrame =
     graft.streaming.EventStream.hoppingCounts(Tables.events(s, dir))
-      .orderBy(col("win_start"), col("event_type"))
 
   /** Retention cohorts over the audit stream: users grouped by their
     * first-activity week, counted in each subsequent active week —
@@ -453,7 +437,6 @@ object Audit {
       .groupBy(col("cohort"),
         (datediff(col("wk"), col("cohort")) / 7).cast("bigint").as("week_n"))
       .agg(count(lit(1)).as("n_users"))
-      .orderBy(col("cohort"), col("week_n"))
   }
 
   /** Registry growth curve: registrations per week with a running
@@ -472,7 +455,6 @@ object Audit {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     weekly
       .withColumn("cumulative", sum(col("n_registrations")).over(w))
-      .orderBy(col("week"))
   }
 
   /** Prometheus exposition-format catalog (tools_metrics.go:120-:220
@@ -605,7 +587,6 @@ object Audit {
       .agg(count(lit(1)).as("n_samples"),
         countDistinct(col("series")).as("n_series"),
         sum(col("val")).as("total"))
-      .orderBy(col("category"), col("name"))
   }
 
   /** The fixed-section metrics summary card (handleGetMetricsSummary,
@@ -682,7 +663,6 @@ object Audit {
       .withColumn("status", lit("ok"))
       .select(outCols: _*)
     named.union(fams)
-      .orderBy(col("sec_order"), col("item_order"), col("series"))
   }
 
   /** Apdex satisfaction score per endpoint class (the Apdex standard:
@@ -703,7 +683,6 @@ object Audit {
       .withColumn("apdex",
         floor((col("n_satisfied") + col("n_tolerating") / lit(2.0))
           / col("n_requests") * 10000 + 0.5) / lit(10000.0))
-      .orderBy(col("event_type"))
 
   /** Weekly utilization heatmap — request volume and mean duration
     * per (day-of-week, hour-of-day) cell, the capacity-planning view
@@ -718,7 +697,6 @@ object Audit {
         hour(col("ts")).cast("bigint").as("hod"))
       .agg(count(lit(1)).as("n_events"),
         (floor(avg(col("value")) * 10000 + 0.5) / lit(10000.0)).as("mean_value"))
-      .orderBy(col("dow"), col("hod"))
 
   /** Multi-window SLO error-budget burn rate (the SRE alerting
     * standard): per 1-hour window, the error rate against an 80%
@@ -756,7 +734,6 @@ object Audit {
         (floor(col("err_1h") * 5 / col("tot_1h").cast("double") * 10000 + 0.5) / 10000.0).as("burn_1h"),
         (floor(col("err_6h") * 5 / col("tot_6h").cast("double") * 10000 + 0.5) / 10000.0).as("burn_6h"),
         (col("err_1h") * 25 > col("tot_1h") * 6 && col("err_6h") * 25 > col("tot_6h") * 6).as("alert"))
-      .orderBy(col("hour_start_s"))
   }
 
   /** query_metric (mcp/tools_metrics.go:194): a substring probe over
@@ -782,7 +759,6 @@ object Audit {
       .join(patterns, col("line").contains(col("pattern")))
       .groupBy(col("pattern"), col("line"))
       .agg(count(lit(1)).as("n_lines"))
-      .orderBy(col("pattern"), col("line"))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -255,7 +255,6 @@ object Compat {
       val r = SchemaCompat.check(mode, newSchema, history)
       (id, desc, mode.name, r.isCompatible, r.messages.length.toLong)
     }.toDF("case_id", "description", "mode", "compatible", "n_messages")
-      .orderBy("case_id")
   }
 
   /** Data-driven compatibility checking over the whole corpus
@@ -549,7 +548,6 @@ object Compat {
       .agg(count(lit(1)).as("n_fields"),
         sum(when(violation, 1).otherwise(0)).as("n_violations"))
       .withColumn("compatible", col("n_violations") === 0)
-      .orderBy(col("subject"), col("version"))
   }
 
   /** explain_compatibility_failure + suggest_compatible_change
@@ -599,7 +597,6 @@ object Compat {
           .when(col("violation") === "required_reads_nullable",
             "Keep the field nullable or add a default before tightening it.")
           .otherwise("Only add new enum symbols; do not remove or rename existing ones."))
-      .orderBy(col("subject"), col("version"), col("fname"), col("violation"))
 
   /** Enum-vocabulary drift timeline — the descriptive history view
     * next to the compat verdicts: for every enum field transition
@@ -627,7 +624,6 @@ object Compat {
         size(array_except(split(wf("fsyms"), ","), split(r("fsyms"), ","))).as("n_removed"),
         size(array_intersect(split(r("fsyms"), ","), split(wf("fsyms"), ","))).as("n_kept"))
       .where(col("n_added") > 0 || col("n_removed") > 0)
-      .orderBy(col("subject"), col("version"), col("fname"))
   }
 
   /** Violation-class frequency card — "which compatibility rules
@@ -659,7 +655,6 @@ object Compat {
       .select(col("violation"), col("n_field_hits"), col("n_transitions"), col("n_subjects"),
         (floor(col("n_field_hits") / col("n_total").cast("double") * 10000 + 0.5) / lit(10000.0))
           .as("share"))
-      .orderBy(col("violation"))
   }
 
   /** FORWARD mode over the corpus (modes.go: old readers must cope
@@ -700,7 +695,6 @@ object Compat {
       .agg(count(lit(1)).as("n_reader_fields"),
         sum(when(violation, 1L).otherwise(0L)).as("n_violations"))
       .withColumn("forward_ok", col("n_violations") === 0)
-      .orderBy(col("subject"), col("version"))
   }
 
   /** BACKWARD_TRANSITIVE over the corpus (modes.go; checker.go:39
@@ -1157,7 +1151,6 @@ object Compat {
                 when(col("transitive"), col("ft_ok")).otherwise(col("f_ok")))))
       .select(col("subject"), col("version"), col("mode"),
         col("req_backward"), col("req_forward"), col("transitive"), col("allowed"))
-      .orderBy(col("subject"), col("version"))
   }
 
   /** check_compatibility_multi (tools_comparison.go:70
@@ -1232,7 +1225,6 @@ object Compat {
       .select(coalesce(col("subject"), lit(-1)).as("subject"),
         col("n_violations"), col("n_incompatible"),
         (col("n_incompatible") === 0).as("compatible"))
-      .orderBy(col("subject"))
   }
 
   /** The union dimension's focused face: every consecutive-version
@@ -1256,7 +1248,6 @@ object Compat {
         when(r("funion").isNotNull, "union").otherwise("scalar")).as("transition"),
       (wf("fmask").bitwiseAND(acceptsMaskOf(r("fmask"))) === wf("fmask"))
         .as("union_ok"))
-      .orderBy(col("subject"), col("version"))
   }
 
   // -------------------------------------------------------------------
@@ -1362,7 +1353,6 @@ object Compat {
       .agg(count(lit(1)).as("n_paths"),
         sum(when(violation, 1L).otherwise(0L)).as("n_violations"))
       .withColumn("nested_ok", col("n_violations") === 0)
-      .orderBy(col("subject"), col("version"))
   }
 
   /** Named-type NAME scan over the corpus: each version carries three
@@ -1400,7 +1390,6 @@ object Compat {
           b((k % 27 < 14) =!= (wk % 27 < 14))).as("n_name_break"),
         b(recRenamed && rescued).as("n_rescued"))
       .withColumn("named_ok", col("n_name_break") === 0)
-      .orderBy(col("subject"), col("version"))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -67,7 +67,6 @@ object Dedup {
     hashed.join(canon, "content_hash")
       .withColumn("is_canonical", col("doc_id") === col("canonical_id"))
       .select(col("doc_id"), col("content_hash"), col("canonical_id"), col("is_canonical"))
-      .orderBy(col("doc_id"))
   }
 
   /** Word-3-gram shingles + 16-permutation MinHash signature, all
@@ -129,7 +128,6 @@ object Dedup {
   def minhashLsh(s: SparkSession, dir: String): DataFrame =
     minhashPairs(s, dir)
       .selectExpr("doc_a", "doc_b", "round(est_jaccard, 4) AS est_jaccard")
-      .orderBy(col("doc_a"), col("doc_b"))
 
   /** 64-bit SimHash as four 16-bit chunks (c0..c3) via the native
     * codegen expression [[graft.functions.SimHash64Expr]] — a tight
@@ -166,7 +164,6 @@ object Dedup {
         """cast(bit_count(cast(a0 ^ b0 AS bigint)) + bit_count(cast(a1 ^ b1 AS bigint)) +
           |bit_count(cast(a2 ^ b2 AS bigint)) + bit_count(cast(a3 ^ b3 AS bigint)) AS bigint) AS hamming""".stripMargin)
       .where("hamming <= 3")
-      .orderBy(col("doc_a"), col("doc_b"))
   }
 
   /** Exact n-gram Jaccard verification over (lang, length-bucket)
@@ -299,7 +296,6 @@ object Dedup {
     // Catalyst cannot hoist the expensive expression into a join.
     val truth = Tables.filterBarrier(scored, col("jaccard") >= JaccardThreshold)
       .selectExpr("doc_a", "doc_b", "floor(jaccard * 10000 + 0.5) / cast(10000 AS double) AS jaccard")
-      .orderBy(col("doc_a"), col("doc_b"))
     // On the scale path, pin the (tiny) pair list so two-consumer
     // callers (the recall cards read truth twice) run the candidate
     // pipeline once; below the threshold the lazy frame is cheap to
@@ -338,7 +334,6 @@ object Dedup {
       .selectExpr("doc_a", "doc_b", "graft_jaccard(sha, shb) AS jaccard")
     Tables.filterBarrier(scored, col("jaccard") >= JaccardThreshold)
       .selectExpr("doc_a", "doc_b", "floor(jaccard * 10000 + 0.5) / cast(10000 AS double) AS jaccard")
-      .orderBy(col("doc_a"), col("doc_b"))
   }
 
   /** Embedding-cosine near-dup pairs, blocked by label (the cluster
@@ -360,7 +355,6 @@ object Dedup {
         "graft_cosine(a.e, b.e) AS cos")
     Tables.filterBarrier(scored, col("cos") > 0.35)
       .selectExpr("vec_a", "vec_b", "round(cos, 4) AS cos")
-      .orderBy(col("vec_a"), col("vec_b"))
   }
 
   /** SRP-bucketed embedding near-dup pairs — the label-free 100 TB
@@ -400,7 +394,6 @@ object Dedup {
       .selectExpr("vec_a", "vec_b", "n_tables", "graft_cosine(ea, eb) AS cos")
     Tables.filterBarrier(scored, col("cos") > 0.35)
       .selectExpr("vec_a", "vec_b", "n_tables", "round(cos, 4) AS cos")
-      .orderBy(col("vec_a"), col("vec_b"))
   }
 
   /** Recall measurement of the LSH scale path against exact blocked
@@ -485,7 +478,6 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"), col("n_shared"),
         (floor(col("n_shared") / col("k_min").cast("double") * 10000 + 0.5) / lit(10000.0))
           .as("containment_est"))
-      .orderBy(col("doc_a"), col("doc_b"))
   }
 
   /** Integer power by textual repeated squaring — the same arithmetic
@@ -542,7 +534,6 @@ object Dedup {
         "n_true")
       .select(col("bands"), col("rows_per_band"), col("s_threshold"),
         col("n_true"), col("exp_recall"))
-      .orderBy(col("rows_per_band"))
   }
 
   /** Deterministic document sample for the recall/tuning evaluation
@@ -654,7 +645,6 @@ object Dedup {
         "smod", "n_docs", "n_true")
       .select(col("bands"), col("rows_per_band"), col("s_threshold"),
         col("smod"), col("n_docs"), col("n_true"), col("exp_recall"))
-      .orderBy(col("rows_per_band"))
   }
 
   /** Cross-document repeated-substring detection — the substring-level
@@ -719,7 +709,6 @@ object Dedup {
         max(col("run_words")).as("max_run_words"),
         sum(col("run_words") - lit(7)).as("n_shared_grams"))
       .filter(col("max_run_words") >= 16)
-      .orderBy(col("doc_a"), col("doc_b"))
   }
 
   /** URL canonicalization dedup — the frontier/manifest dedup a crawl
@@ -776,7 +765,6 @@ object Dedup {
       .groupBy(col("canon_url"))
       .agg(count(lit(1)).as("n_urls"), min(col("doc_id")).as("survivor_doc_id"))
       .filter(col("n_urls") >= 2)
-      .orderBy(col("canon_url"))
 
   /** Asymmetric containment dedup: over the SAME MinHash-LSH
     * candidate pairs as [[ngramJaccard]], score
@@ -814,7 +802,6 @@ object Dedup {
       .selectExpr("doc_a", "doc_b", "cast(n_common AS bigint) AS n_common",
         "floor(n_common / cast(least(n_a, n_b) AS double) * 10000 + 0.5) / cast(10000 AS double) AS containment",
         "floor(n_common / cast(n_a + n_b - n_common AS double) * 10000 + 0.5) / cast(10000 AS double) AS jaccard")
-      .orderBy(col("doc_a"), col("doc_b"))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -323,7 +323,6 @@ object FormatCompat {
       .withColumn("proto_ok", col("n_violations") + col("n_msg_removed") +
         col("n_svc_removed") + col("n_method_removed") +
         col("n_method_changed") === 0)
-      .orderBy(col("subject"), col("version"))
   }
 
   // -------------------------------------------------------------------
@@ -828,7 +827,6 @@ object FormatCompat {
           col("v_unique") + col("v_const") + col("v_dsch") + col("v_itemsb") +
           col("v_ap") + col("v_propcount") + col("v_not"))
       .withColumn("json_ok", col("n_violations") === 0)
-      .orderBy(col("subject"), col("version"))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

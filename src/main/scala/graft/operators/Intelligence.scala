@@ -67,7 +67,6 @@ object Intelligence {
       .filter(col("sub_a") < col("sub_b"))
       .select(col("sub_a"), col("sub_b"), col("n").as("n_shared"),
         lit(1.0).as("jaccard"))
-      .orderBy(col("sub_a"), col("sub_b"))
   }
 
   /** The accounting face of [[similarSchemas]]' identity-class cap
@@ -100,7 +99,6 @@ object Intelligence {
         countDistinct(col("ftype")).as("n_types"),
         (countDistinct(col("ftype")) > 1).as("type_conflict"),
         (countDistinct(col("fnull")) > 1).as("null_conflict"))
-      .orderBy(col("fname"))
 
   /** GetSchemaComplexity (tools_intelligence.go:419): per-subject
     * weighted complexity over the latest version — field count +
@@ -117,7 +115,6 @@ object Intelligence {
       .select(col("subject"), col("n_fields"), col("n_required"), col("n_types"),
         (floor((col("n_fields") + lit(0.5) * col("n_types") + lit(0.25) * col("n_required")) * 100 + 0.5)
           / lit(100.0)).as("complexity"))
-      .orderBy(col("subject"))
 
   /** DiffSchemas / computeFieldDiffs (tools_comparison.go:123,152):
     * added/removed/type-changed/nullability-changed field counts for
@@ -153,7 +150,6 @@ object Intelligence {
           r(i)("ftype") =!= wf(i)("ftype")).as("n_type_changed"),
         cnt(i => r(i)("present") && wf(i)("present") && sameName(i) &&
           r(i)("fnull") =!= wf(i)("fnull")).as("n_null_changed"))
-      .orderBy(col("subject"), col("version"))
   }
 
   /** PlanMigrationPath (tools_intelligence.go:729): can a consumer
@@ -171,7 +167,6 @@ object Intelligence {
         sum(when(!col("compatible"), 1).otherwise(0)).as("n_breaking"),
         min(when(!col("compatible"), col("version"))).as("first_breaking"),
         (sum(when(!col("compatible"), 1).otherwise(0)) === 0).as("safe_direct"))
-      .orderBy(col("subject"))
 
   /** FindSchemasByField (tools_intelligence.go:87): which subjects'
     * latest schemas carry a given field (here: the PII-ish `email`),
@@ -182,7 +177,6 @@ object Intelligence {
     latestFields(s, dir)
       .filter(col("fname") === "email")
       .select(col("subject"), col("ftype"), col("fnull"))
-      .orderBy(col("subject"))
 
   /** FindSchemasByType (tools_intelligence.go:177): the sibling of
     * [[findByField]] — which subjects' latest schemas carry a field
@@ -194,7 +188,6 @@ object Intelligence {
     latestFields(s, dir)
       .filter(col("ftype") === "bigint")
       .select(col("subject"), col("fname"), col("fnull"))
-      .orderBy(col("subject"), col("fname"))
 
   /** SuggestSchemaEvolution (tools_intelligence.go:590-728,
     * suggestAddField :622 / suggestDeprecateField :658 /
@@ -245,7 +238,6 @@ object Intelligence {
       .select(col("subject"), lit("add_enum_default").as("rule"), col("fname"))
     val s4 = removed.select(col("subject"), lit("deprecate_before_remove").as("rule"), col("fname"))
     s1.unionByName(s2).unionByName(s3).unionByName(s4)
-      .orderBy(col("subject"), col("rule"), col("fname"))
   }
 
   /** DetectSchemaPatterns (tools_intelligence.go:485): the corpus-
@@ -274,7 +266,6 @@ object Intelligence {
         """stack(4, 'n_subjects', n_subjects, 'total_versions', total_versions,
           |  'multi_version_subjects', multi_version_subjects,
           |  'ubiquitous_fields', ubiquitous_fields) AS (metric, value)""".stripMargin)
-      .orderBy(col("metric"))
   }
 
   /** GetLatestSchema's REAL semantics under soft-delete (registry.go
@@ -290,7 +281,6 @@ object Intelligence {
       .agg(max(when(col("k") % 5 =!= 0, col("version"))).as("latest_active"),
         sum(when(col("k") % 5 === 0, 1).otherwise(0)).as("n_deleted"),
         count(lit(1)).as("n_versions"))
-      .orderBy(col("subject"))
 
   /** compare_subjects (tools_comparison.go:206
     * handleCompareSubjects): latest-vs-latest field comparison of two
@@ -306,8 +296,8 @@ object Intelligence {
     * hands each row its neighbor's array, and every diff tally is a
     * row-local array HOF — intersect/except for membership,
     * exists-probe for type drift. The global lead window runs over
-    * SUBJECTS (the dimension, like reg_subject_list's sorted
-    * distinct), never the version stream — the documented tiny-series
+    * SUBJECTS (the dimension, like reg_subject_list's distinct
+    * listing), never the version stream — the documented tiny-series
     * exception.
     */
   def compareSubjects(s: SparkSession, dir: String): DataFrame = {
@@ -332,7 +322,6 @@ object Intelligence {
         size(filter(col("flds"), x => exists(col("flds_b"),
           y => y("fname") === x("fname") && y("ftype") =!= x("ftype"))))
           .cast("long").as("n_modified"))
-      .orderBy(col("subject_a"))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -384,7 +373,6 @@ object Intelligence {
       .select(col("f1"), col("f2"), col("n_both"), col("df1"), col("df2"),
         (floor(col("n_both") * col("n_subjects") / (col("df1") * col("df2")).cast("double") * 10000 + 0.5)
           / lit(10000.0)).as("lift"))
-      .orderBy(col("f1"), col("f2"))
   }
 
   private val latestCte: String =

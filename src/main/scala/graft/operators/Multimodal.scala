@@ -71,7 +71,6 @@ object Multimodal {
         "cast(64 + (n_bytes * 7) % 512 AS int) AS height",
         s"IF(n_bytes = 0, cast(0 AS double), $byteTerms / least(16, n_bytes) / cast(255 AS double)) AS mean_luma")
       .withColumn("mean_luma", round(col("mean_luma"), 4))
-      .orderBy(col("doc_id"))
   }
 
   /** The `mapPartitions`-with-explicit-`Encoder` batch-iteration demo
@@ -93,7 +92,6 @@ object Multimodal {
     }(RowEncoder.encoderFor(metaSchema))
     extracted
       .withColumn("mean_luma", round(col("mean_luma"), 4))
-      .orderBy(col("doc_id"))
   }
 
   /** Frame sampling over a video-like binary payload: the payload is
@@ -126,7 +124,6 @@ object Multimodal {
                |  cast(0 as double), (a, x) -> a + x) / length(fs) / cast(255 as double) * 10000 + 0.5)
                |  / cast(10000 as double)""".stripMargin)
           .as("luma"))
-      .orderBy(col("doc_id"), col("frame_id"))
 
   /** Scene-cut detection over the decoded frame stream — shot
     * segmentation, the step before per-scene keyframe extraction and
@@ -173,7 +170,6 @@ object Multimodal {
         count(lit(1)).as("n_frames"),
         (floor(sum(col("isum")) / sum(col("flen")).cast("double") / lit(255.0) * 10000 + 0.5) / lit(10000.0))
           .as("mean_luma"))
-      .orderBy(col("doc_id"), col("scene_id"))
   }
 
   /** Content-addressed media-block dedup — the blob-store question
@@ -231,7 +227,6 @@ object Multimodal {
       .join(totals.selectExpr("doc_id AS doc_b", "n_blocks AS nb"), "doc_b")
       .selectExpr("doc_a", "doc_b", "n_shared_blocks",
         "floor(n_shared_blocks / cast(least(na, nb) AS double) * 10000 + 0.5) / cast(10000 AS double) AS containment")
-      .orderBy(col("doc_a"), col("doc_b"))
   }
 
   /** Audio-style windowed feature extraction: overlapping analysis
@@ -262,7 +257,6 @@ object Multimodal {
           .as("rms_avg"),
         expr("floor(array_max(energies) * 10000 + 0.5) / cast(10000 as double)")
           .as("rms_max"))
-      .orderBy(col("doc_id"))
 
   /** Magic-byte content-type sniffing — the first gate of a
     * multimodal ingest pipeline: route each binary payload by its
@@ -309,7 +303,6 @@ object Multimodal {
       .withColumn("share",
         expr("floor(n_docs / cast(n_corpus AS double) * 10000 + 0.5) / cast(10000 AS double)"))
       .drop("n_corpus")
-      .orderBy(col("mime"))
   }
 
   /** Inference micro-batch planning over the media corpus — the
@@ -351,7 +344,6 @@ object Multimodal {
       .agg(count(lit(1)).as("n_items"),
         sum(col("n_bytes")).as("total_bytes"),
         max(col("n_bytes")).as("max_item_bytes"))
-      .orderBy(col("mime"), col("batch_id"))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

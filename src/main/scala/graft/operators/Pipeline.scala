@@ -80,7 +80,6 @@ object Pipeline {
       .withColumn("n_docs", count(lit(1)).over(
         Window.partitionBy(col("cluster_id"))))
       .select(col("cluster_id"), col("doc_id"), col("n_docs"))
-      .orderBy(col("cluster_id"), col("doc_id"))
   }
 
   /** Min-label propagation CC core: every node takes the min of its
@@ -302,7 +301,6 @@ object Pipeline {
       .groupBy(col("source"), col("lang"))
       .agg(count(lit(1)).as("n_total"), sum(col("kept")).as("n_sampled"))
       .withColumn("rate", expr("floor(n_sampled / cast(n_total AS double) * 10000 + 0.5) / cast(10000 AS double)"))
-      .orderBy(col("source"), col("lang"))
 
   /** Deterministic train/valid/test holdout split — the partition
     * every training corpus is cut into before anything else touches
@@ -333,7 +331,6 @@ object Pipeline {
       .withColumn("doc_share",
         expr("floor(n_docs / cast(n_corpus AS double) * 10000 + 0.5) / cast(10000 AS double)"))
       .drop("n_corpus")
-      .orderBy(col("split"), col("source"))
   }
 
   /** Concat-then-chunk sequence packing (GPT-style pretraining): per
@@ -352,7 +349,6 @@ object Pipeline {
       .withColumn("chunk_id", expr("(sum(tok) OVER (PARTITION BY source ORDER BY doc_id ROWS UNBOUNDED PRECEDING) - tok) div 2048"))
       .groupBy(col("source"), col("chunk_id"))
       .agg(count(lit(1)).as("n_docs"), sum(col("tok")).as("n_tokens"))
-      .orderBy(col("source"), col("chunk_id"))
 
   /** Fixed-size chunking WITH OVERLAP — the RAG/embedding corpus-prep
     * step (every retrieval corpus splits documents into ~C-token
@@ -390,7 +386,6 @@ object Pipeline {
         sum(when(col("end_tok") - col("start_tok") < c, 1L).otherwise(0L)).as("n_tail_chunks"),
         (sum(col("end_tok") - col("start_tok")) -
           sum(when(col("start_tok") === 0, col("n_tok")).otherwise(0L))).as("overlap_tokens"))
-      .orderBy(col("source"))
   }
 
   /** Corpus boilerplate detection (the C4-style "drop spans that
@@ -414,7 +409,6 @@ object Pipeline {
       .groupBy(col("ngram"))
       .agg(count(lit(1)).as("df"))
       .where(col("df") >= 3)
-      .orderBy(col("df").desc, col("ngram"))
 
   /** Per-label embedding centroids, one row per (label, dimension) —
     * the k-means/IVF training step ([[Similarity]]'s IVF quantizer
@@ -431,7 +425,6 @@ object Pipeline {
       // + 0.0 normalizes IEEE -0.0 → +0.0 (a centroid rounding to
       // zero from below otherwise hash-mismatches the oracle's -0.0)
       .agg((round(avg(col("v")), 4) + lit(0.0)).as("centroid"))
-      .orderBy(col("label"), col("dim"))
 
   /** Test-set decontamination: flag corpus documents sharing any word
     * 8-gram with the held-out eval slice (doc_id % 7 == 0 stands in
@@ -463,7 +456,6 @@ object Pipeline {
       // small-denominator rational where engine rounding diverges
       .withColumn("rate",
         floor(col("n_shared") / col("n_grams").cast("double") * 10000 + 0.5) / 10000.0)
-      .orderBy(col("doc_id"))
   }
 
   /** Unigram log-probability quality scoring (the CCNet-style "score
@@ -490,7 +482,6 @@ object Pipeline {
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_tokens"),
         (floor(avg(col("lp")) * 10000 + 0.5) / lit(10000.0)).as("avg_logp"))
-      .orderBy(col("doc_id"))
   }
 
   /** Interpolated bigram language-model scoring — the model-based
@@ -533,7 +524,6 @@ object Pipeline {
       .groupBy(col("doc_id"))
       .agg(sum(col("k")).as("n_bigrams"),
         (floor(sum(col("k") * col("lp")) / sum(col("k")) * 10000 + 0.5) / lit(10000.0)).as("avg_logp"))
-      .orderBy(col("doc_id"))
   }
 
   /** Weighted reservoir sampling (Efraimidis–Spirakis A-ES): every
@@ -559,7 +549,6 @@ object Pipeline {
       .where(col("rnk") <= 10)
       .selectExpr("source", "rnk", "doc_id", "n_tokens",
         "floor(key * 1000000 + 0.5) / cast(1000000 AS double) AS priority")
-      .orderBy(col("source"), col("rnk"))
   }
 
   /** Temperature-based language mixing (multilingual pretraining's
@@ -582,7 +571,6 @@ object Pipeline {
       .select(col("lang"), col("n_docs"), col("n_tokens"),
         (floor(col("raw") / col("tot_raw") * 1e6 + 0.5) / 1e6).as("weight"),
         floor(col("raw") / col("tot_raw") * 10000 + 0.5).cast("bigint").as("n_target"))
-      .orderBy(col("lang"))
   }
 
   /** Distribution-drift card between corpus slices — the delivery QA
@@ -619,7 +607,6 @@ object Pipeline {
           / col("exp_docs") * 10000 + 0.5) / lit(10000.0)))
       .select(col("source"), col("bucket"), col("obs"), col("bucket_total"),
         col("source_total"), col("exp_docs"), col("chi2_part"))
-      .orderBy(col("source"), col("bucket"))
   }
 
   /** Duplicate-cluster size distribution — the dedup impact report
@@ -644,7 +631,6 @@ object Pipeline {
       .groupBy(col("size"))
       .agg(count(lit(1)).as("n_clusters"))
       .withColumn("n_docs", col("size") * col("n_clusters"))
-      .orderBy(col("size"))
   }
 
   /** The composed Gopher quality gate (Rae et al. 2021 §A1.1) — not
@@ -720,7 +706,6 @@ object Pipeline {
       .groupBy(col("rule"))
       .agg(count(lit(1)).as("n_checked"), sum(col("fail")).as("n_fail"))
       .withColumn("n_pass", col("n_checked") - col("n_fail"))
-      .orderBy(col("rule"))
   }
 
   /** CCNet-style perplexity bucketing (Wenzek et al. 2020): rank each
@@ -758,7 +743,6 @@ object Pipeline {
       .selectExpr("lang", "bucket_id",
         "CASE bucket_id WHEN 1 THEN 'head' WHEN 2 THEN 'middle' ELSE 'tail' END AS bucket",
         "n_docs", "total_tokens", "lo_logp", "hi_logp", "mean_logp")
-      .orderBy(col("lang"), col("bucket_id"))
   }
 
   /** End-to-end corpus selection funnel — the composition a pipeline
@@ -790,7 +774,6 @@ object Pipeline {
       .selectExpr(
         """stack(5, 's0_total', n_total, 's1_lang_en', n1, 's2_length', n2,
           |  's3_dedup', n3, 's4_sample', n4) AS (stage, n_docs)""".stripMargin)
-      .orderBy(col("stage"))
   }
 
   /** Corpus data card: per-(source, lang) document counts, char
@@ -808,7 +791,6 @@ object Pipeline {
         round(avg(col("n_chars")), 4).as("avg_chars"),
         round(expr("percentile(n_chars, 0.5)"), 4).as("p50_chars"),
         round(expr("percentile(n_chars, 0.95)"), 4).as("p95_chars"))
-      .orderBy(col("source"), col("lang"))
 
   /** The 100 TB form of [[corpusStats]]: `approx_percentile` at the
     * same strata, for corpora whose (source, lang) groups grow
@@ -823,7 +805,6 @@ object Pipeline {
         round(avg(col("n_chars")), 4).as("avg_chars"),
         expr("approx_percentile(n_chars, 0.5, 10000)").as("p50_chars"),
         expr("approx_percentile(n_chars, 0.95, 10000)").as("p95_chars"))
-      .orderBy(col("source"), col("lang"))
 
   /** Duplicate-survivor selection — the decision step after
     * clustering: per near-dup cluster keep exactly one document,
@@ -843,7 +824,6 @@ object Pipeline {
       .agg(min(when(col("rk") === 1, col("doc_id"))).as("survivor_doc_id"),
         min(when(col("rk") === 1, col("source"))).as("survivor_source"),
         (count(lit(1)) - lit(1)).as("n_dropped"))
-      .orderBy(col("cluster_id"))
   }
 
   /** Token-balanced output-shard planning: assign documents (in
@@ -878,7 +858,6 @@ object Pipeline {
         floor((col("offset") + col("incum") - col("tok")) / budget).cast("bigint"))
       .groupBy(col("shard_id"))
       .agg(count(lit(1)).as("n_docs"), sum(col("tok")).as("n_tokens"))
-      .orderBy(col("shard_id"))
   }
 
   /** k-means assignment step (the E-step that follows
@@ -907,7 +886,6 @@ object Pipeline {
       .filter(col("rn") === 1)
       .groupBy(col("label"), col("c_label").as("assigned"))
       .agg(count(lit(1)).as("n_vecs"))
-      .orderBy(col("label"), col("assigned"))
   }
 
   /** Data-mixture planning — the reconciliation step between corpus
@@ -951,7 +929,6 @@ object Pipeline {
       .select(col("source"), col("avail_tokens"), col("target_share"),
         col("target_tokens"), col("sample_rate"), col("n_epochs"),
         col("shortfall_single_epoch"))
-      .orderBy(col("source"))
   }
 
   /** One BPE merge-scan iteration (Sennrich et al. 2016 shape — the
@@ -1033,7 +1010,6 @@ object Pipeline {
         countDistinct(when(col("in_vocab").isNull, col("w"))).as("n_oov_types"))
       .selectExpr("source", "n_tokens", "n_oov",
         "round(n_oov / cast(n_tokens AS double), 4) AS oov_rate", "n_oov_types")
-      .orderBy(col("source"))
   }
 
   /** Semantic duplicate clusters: connected components over the
@@ -1070,7 +1046,6 @@ object Pipeline {
       .withColumn("n_vecs", count(lit(1)).over(
         Window.partitionBy(col("cluster_id"))))
       .select(col("cluster_id"), col("vec_id"), col("n_vecs"))
-      .orderBy(col("cluster_id"), col("vec_id"))
   }
 
   /** Per-source semantic-duplication rate: the fraction of each
@@ -1098,7 +1073,6 @@ object Pipeline {
         coalesce(sum(col("is_dup")), lit(0L)).as("n_sem_dups"))
       .selectExpr("source", "n_vecs", "n_sem_dups",
         "floor(n_sem_dups / cast(n_vecs AS double) * 10000 + 0.5) / cast(10000 AS double) AS dup_rate")
-      .orderBy(col("source"))
   }
 
   /** Token-mass concentration per source (Gini coefficient): ranks
@@ -1129,7 +1103,6 @@ object Pipeline {
       .selectExpr("source", "n_docs", "total_tokens",
         """floor((2.0 * rank_mass / (n_docs * cast(total_tokens AS double))
           |  - (n_docs + 1) / cast(n_docs AS double)) * 10000 + 0.5) / cast(10000 AS double) AS gini""".stripMargin)
-      .orderBy(col("source"))
   }
 
   /** Cross-source n-gram overlap matrix: for every source pair that
@@ -1169,7 +1142,6 @@ object Pipeline {
       .selectExpr("source_a", "source_b", "n_common", "n_a", "n_b",
         "floor(n_common / cast(least(n_a, n_b) AS double) * 10000 + 0.5) / cast(10000 AS double) AS containment",
         "floor(n_common / cast(n_a + n_b - n_common AS double) * 10000 + 0.5) / cast(10000 AS double) AS jaccard")
-      .orderBy(col("source_a"), col("source_b"))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -25,13 +25,13 @@ import org.apache.spark.sql.functions._
 object Registry {
 
   /** ListSubjects (reference internal/registry/registry.go:505):
-    * sorted distinct listing.
+    * distinct listing; the reference's sort is the caller's, at the
+    * edge (SURVEY §5).
     */
   def subjectList(s: SparkSession, dir: String): DataFrame =
     Tables.events(s, dir)
       .select(col("event_type").as("subject"))
       .distinct()
-      .orderBy(col("subject"))
 
   /** count_versions (mcp/tools_validation.go:471): the handler
     * returns `len(GetVersions(subject))` for one subject; the card
@@ -42,7 +42,6 @@ object Registry {
     Tables.events(s, dir)
       .groupBy(col("user_id").as("subject"))
       .agg(count(lit(1)).as("n_versions"))
-      .orderBy(col("subject"))
 
   /** count_subjects (mcp/tools_validation.go:488):
     * `len(ListSubjects)` — one global card row. count(DISTINCT) is a
@@ -64,7 +63,6 @@ object Registry {
       .filter(col("rn") === 1)
       .select(col("user_id"), col("event_id").as("latest_event_id"),
         col("ts").as("latest_ts"), col("event_type").as("latest_type"))
-      .orderBy(col("user_id"))
   }
 
   /** GetVersions (registry.go:538): dense version numbering per
@@ -76,7 +74,6 @@ object Registry {
     Tables.events(s, dir)
       .withColumn("version", row_number().over(w))
       .select(col("user_id"), col("event_id"), col("version"))
-      .orderBy(col("user_id"), col("version"))
   }
 
   /** SchemaCountsByType (registry.go:521): groupBy counts over the
@@ -87,7 +84,6 @@ object Registry {
       .groupBy(col("lang").as("schema_type"))
       .agg(count(lit(1)).as("n_schemas"),
         sum(col("n_chars")).as("total_bytes"))
-      .orderBy(col("schema_type"))
 
   /** GetMode / config fallback (registry.go:892): per-subject
     * override resolved against a global default via left join +
@@ -103,7 +99,6 @@ object Registry {
       .join(broadcast(overrides), col("c_nationkey") === col("ov_nationkey"), "left")
       .select(col("c_custkey"),
         coalesce(col("override_mode"), lit("BACKWARD")).as("effective_mode"))
-      .orderBy(col("c_custkey"))
   }
 
   /** ResolveAlias (registry_helpers.go:28 via GetSubjectConfigFull):
@@ -125,7 +120,6 @@ object Registry {
           concat(lit("sub_"), col("subject_id") + 3))
           .otherwise(concat(lit("sub_"), col("subject_id"))).as("resolved"),
         (col("subject_id") % 3 === 0).as("aliased"))
-      .orderBy(col("subject"))
 
   /** LookupSchema by content (registry.go:553): canonical id per
     * content hash — md5 groupBy, min id wins (first registration).
@@ -217,8 +211,6 @@ object Registry {
       .agg(count(lit(1)).as("n_texts"),
         countDistinct(col("fp")).as("n_fps"),
         min(col("fp")).as("fp"))
-      .orderBy(col("namespace"), col("rec_name"),
-        col("is_primitive"), col("with_default"))
   }
 
   /** JSON Schema canonical fingerprint (internal/schema/jsonschema/
@@ -286,7 +278,6 @@ object Registry {
       .agg(count(lit(1)).as("n_texts"),
         countDistinct(col("fp")).as("n_fps"),
         min(col("fp")).as("fp"))
-      .orderBy(col("bool_root"), col("title"), col("has_b"), col("minv"), col("has_mult"))
   }
 
   def lookupByHash(s: SparkSession, dir: String): DataFrame =
@@ -295,7 +286,6 @@ object Registry {
         col("doc_id"))
       .groupBy(col("content_hash"))
       .agg(min(col("doc_id")).as("canonical_id"), count(lit(1)).as("n_copies"))
-      .orderBy(col("canonical_id"))
 
   /** Broadcastable Bloom existence filter over the registered content
     * hashes ([[lookupByHash]]'s key space) — the pre-filter a
@@ -355,7 +345,6 @@ object Registry {
       .crossJoin(broadcast(fill))
       .selectExpr("kind", "n_probes", "n_hits", "n_bits_set",
         "floor(n_hits / cast(n_probes AS double) * 10000 + 0.5) / cast(10000 AS double) AS hit_rate")
-      .orderBy(col("kind"))
   }
 
   /** GetReferencedBy (registry.go:1039): reverse reference counts —
@@ -366,7 +355,6 @@ object Registry {
       .groupBy(col("l_orderkey").as("o_orderkey"))
       .agg(count(lit(1)).as("n_refs"))
       .filter(col("n_refs") >= 5)
-      .orderBy(col("o_orderkey"))
 
   /** Soft-delete semantics (registry.go:591 DeleteSubject soft vs
     * permanent): per-group counts with and without "deleted" rows;
@@ -377,7 +365,6 @@ object Registry {
       .groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("n_total"),
         sum(when(col("o_orderstatus") =!= "F", 1).otherwise(0)).as("n_active"))
-      .orderBy(col("o_orderpriority"))
 
   /** RegisterSchema idempotency (registry.go:63 — re-registering an
     * identical payload returns the original record): first event per
@@ -390,7 +377,6 @@ object Registry {
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .select(col("user_id"), col("event_type"), col("event_id").as("first_event_id"))
-      .orderBy(col("user_id"), col("event_type"))
   }
 
   /** Context-qualified subject resolution (context.go:47
@@ -422,7 +408,6 @@ object Registry {
           .otherwise(".").as("resolved_context"),
         when(col("is_q"), expr("substring(rest, idx + 1)"))
           .otherwise(col("qualified")).as("resolved_subject"))
-      .orderBy(col("doc_id"))
 
   /** Rule-set validation (rules/validator.go:51 ValidateRuleSet,
     * :74 validateRule): name required, kind ∈ {CONDITION, TRANSFORM},
@@ -478,7 +463,6 @@ object Registry {
           .otherwise("valid"))
       .groupBy(col("category"), col("error_class"))
       .agg(count(lit(1)).as("n_rules"))
-      .orderBy(col("category"), col("error_class"))
   }
 
   /** Exporter subject/schema-type filters (exporter.go:274
@@ -505,7 +489,6 @@ object Registry {
         (size(col("schema_types")) === 0 || array_contains(col("schema_types"), col("schema_type"))))
       .groupBy(col("exporter"))
       .agg(count(lit(1)).as("n_exported"))
-      .orderBy(col("exporter"))
   }
 
   /** The composed filtered listing (handleListSchemas,
@@ -552,7 +535,6 @@ object Registry {
       .filter(col("rn") > col("off") && col("rn") <= col("off") + col("lim"))
       .select(col("req_id"), col("rn"), col("schema_id"), col("subject"),
         col("version"), col("deleted"))
-      .orderBy(col("req_id"), col("rn"))
   }
 
   /** GetMaxSchemaID (tools_schema.go:329 / memory/store.go — the
@@ -565,14 +547,12 @@ object Registry {
     Tables.documents(s, dir)
       .groupBy(col("source").as("context"))
       .agg(max(col("doc_id")).as("max_id"), count(lit(1)).as("n_allocated"))
-      .orderBy(col("context"))
 
   /** ListContexts (registry.go:1141): sorted distinct namespaces. */
   def contexts(s: SparkSession, dir: String): DataFrame =
     Tables.documents(s, dir)
       .select(col("source").as("context"))
       .distinct()
-      .orderBy(col("context"))
 
   /** ValidateSchema (registry.go:1053): payload validity check —
     * each props document must parse as JSON and carry the required
@@ -585,7 +565,6 @@ object Registry {
         get_json_object(col("props"), "$.k").isNotNull.as("is_valid"))
       .groupBy(col("is_valid"))
       .agg(count(lit(1)).as("n"))
-      .orderBy(col("is_valid"))
 
   /** FormatSchema / export (registry.go:453, exporter.go): render
     * records to a canonical JSON changelog line — the exporter's
@@ -598,7 +577,6 @@ object Registry {
         concat(lit("{\"id\":"), col("event_id"),
           lit(",\"type\":\""), col("event_type"),
           lit("\",\"user\":"), col("user_id"), lit("}")).as("json_line"))
-      .orderBy(col("event_id"))
 
   /** validate_subject_name (tools_validation.go:118,
     * subjectNamePatterns :126): every subject-name candidate checked
@@ -624,7 +602,6 @@ object Registry {
       names.select(col("subject_name"), lit(strat).as("strategy"),
         col("subject_name").rlike(pattern).as("is_valid"))
     }.reduce(_ unionByName _)
-      .orderBy(col("subject_name"), col("strategy"))
   }
 
   /** get_registry_statistics (tools_validation.go:413): the reference
@@ -647,19 +624,23 @@ object Registry {
     // the row the row_number window picked), and one 1-row aggregate
     // over it yields all five metrics; NULL k still lands in the
     // PROTOBUF bucket via the null-condition otherwise, as before.
+    // Oracle NULL/empty semantics: total_subjects is count(DISTINCT
+    // subject), so the NULL-subject group is not a subject, while the
+    // type buckets (PARTITION BY subject) still count it; on an empty
+    // stream every metric is 0, not a NULL sum.
+    def total(c: Column) = coalesce(sum(c), lit(0L))
     ev.groupBy(col("subject"))
       .agg(count(lit(1)).as("nv"),
         expr("max_by(k, struct(ts, event_id))").as("lk"))
-      .agg(count(lit(1)).as("total_subjects"),
-        sum(col("nv")).as("total_versions"),
-        sum(when(col("lk") % 3 === 0, 1L).otherwise(0L)).as("avro"),
-        sum(when(col("lk") % 3 === 1, 1L).otherwise(0L)).as("json"),
-        sum(when(col("lk") % 3 === 0 || col("lk") % 3 === 1, 0L).otherwise(1L)).as("protobuf"))
+      .agg(count(col("subject")).as("total_subjects"),
+        total(col("nv")).as("total_versions"),
+        total(when(col("lk") % 3 === 0, 1L).otherwise(0L)).as("avro"),
+        total(when(col("lk") % 3 === 1, 1L).otherwise(0L)).as("json"),
+        total(when(col("lk") % 3 === 0 || col("lk") % 3 === 1, 0L).otherwise(1L)).as("protobuf"))
       .selectExpr(
         """stack(5, 'total_subjects', total_subjects, 'total_versions', total_versions,
           |  'type_avro', avro, 'type_json', json,
           |  'type_protobuf', protobuf) AS (metric, value)""".stripMargin)
-      .orderBy(col("metric"))
   }
 
   /** Reference edges of the schema-dependency DAG, synthesized
@@ -844,7 +825,6 @@ object Registry {
         Seq("doc_id"), "left")
       .groupBy(col("doc_id"))
       .agg(count(col("anc")).as("n_ancestors"), max(col("anc")).as("max_anc"))
-      .orderBy(col("doc_id"))
 
   /** Per-document dependency-tree report (buildDependencyTree,
     * tools_validation.go:295 walks references to maxDepth): ancestor
@@ -862,7 +842,6 @@ object Registry {
       .agg(count(col("anc")).as("n_ancestors"),
         coalesce(max(col("d")), lit(0L)).as("depth"),
         coalesce(sum(when(col("d") <= 2, 1L).otherwise(0L)), lit(0L)).as("n_within_2"))
-      .orderBy(col("doc_id"))
 
   /** Cyclic-reference detector — the pathology the reference's
     * resolver defends against with its seen-map (resolveReferences,
@@ -902,7 +881,6 @@ object Registry {
     scc.withColumn("n_members", count(lit(1)).over(
         Window.partitionBy(col("cycle_id"))))
       .select(col("cycle_id"), col("doc_id"), col("n_members"))
-      .orderBy(col("cycle_id"), col("doc_id"))
   }
 
   /** Id-space gap audit: the maximal runs of missing ids in the live
@@ -978,7 +956,6 @@ object Registry {
     hits.withColumn("rk", row_number().over(w))
       .filter(col("rk") <= 20)
       .select(col("query_id"), col("doc_id"), col("n_hit"))
-      .orderBy(col("query_id"), col("n_hit").desc, col("doc_id"))
   }
 
   /** Garbage-collection candidates: a soft-deleted schema (doc_id %
@@ -999,7 +976,6 @@ object Registry {
       .select(col("doc_id"),
         coalesce(col("dep_n"), lit(0L)).as("n_live_dependents"),
         (coalesce(col("dep_n"), lit(0L)) === 0).as("gc_ok"))
-      .orderBy(col("doc_id"))
   }
 
   /** Schema importance over the reference graph — PageRank with 3
@@ -1035,7 +1011,6 @@ object Registry {
     r.crossJoin(nRow)
       .select(col("doc_id"),
         round(col("pr") * col("n") * lit(64000), 0).cast("bigint").as("pr_units"))
-      .orderBy(col("doc_id"))
   }
 
   /** Metadata-filtered latest-version lookup (tools_metadata.go:269
@@ -1059,7 +1034,6 @@ object Registry {
       .groupBy(col("user_id").as("subject"))
       .agg(max(col("version")).as("latest_matching"),
         expr("max_by(event_id, version)").as("event_id"))
-      .orderBy(col("subject"))
   }
 
   /** Catalog health report — the data-quality constraint scan a
@@ -1099,7 +1073,6 @@ object Registry {
         ev.filter(get_json_object(col("props"), "$.k").isNull)))
       .unionByName(report("docs_nchars_consistent", docs,
         docs.filter(col("n_chars") =!= length(col("text")))))
-      .orderBy(col("check_name"))
   }
 
   /** Subject-alias + version-spec resolution (registry_helpers.go:28
@@ -1132,7 +1105,6 @@ object Registry {
       .groupBy(col("resolved_subject"), col("version_spec"),
         col("parsed_version"), col("is_valid"))
       .agg(count(lit(1)).as("n_refs"))
-      .orderBy(col("resolved_subject"), col("version_spec"))
   }
 
   /** match_subjects (tools_comparison.go:334 handleMatchSubjects):
@@ -1162,7 +1134,6 @@ object Registry {
       .filter(col("v.matched"))
       .groupBy(col("v.mode").as("mode"), col("v.pattern").as("pattern"))
       .agg(count(lit(1)).as("n_matches"), min(col("p_name")).as("first_match"))
-      .orderBy(col("mode"), col("pattern"))
   }
 
   /** CheckModeForWrite (registry_helpers.go:14, surfaced by
@@ -1189,7 +1160,6 @@ object Registry {
         !col("effective_mode").isin("READONLY", "READONLY_OVERRIDE"))
       .withColumn("blocking_mode",
         when(!col("writable"), col("effective_mode")).otherwise(lit("")))
-      .orderBy(col("subject_key"))
   }
 
   /** suggest_compatible_change (tools_comparison.go:259 +
@@ -1241,7 +1211,6 @@ object Registry {
       .agg(count(lit(1)).as("n_subjects"))
       .withColumn("n_advice", nAdvice.cast("int"))
       .withColumn("first_advice", firstAdvice)
-      .orderBy(col("level"), col("change_type"))
   }
 
   /** GetSubjectsBySchemaID / GetVersionsBySchemaID
@@ -1263,7 +1232,6 @@ object Registry {
         count(lit(1)).as("n_versions"),
         countDistinct(col("source")).as("n_subjects"),
         concat_ws(",", sort_array(collect_set(col("source")))).as("subjects"))
-      .orderBy(col("canonical_id"))
 
   /** Context-name normalization + validation + round-trip
     * (context.go:97 NormalizeContextName — ":.:" and "" map to the
@@ -1312,7 +1280,6 @@ object Registry {
       .withColumn("formatted", formatted)
       .withColumn("round_trip_ok",
         parsedCtx === col("normalized") && parsedSubj === "doc")
-      .orderBy(col("raw"))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

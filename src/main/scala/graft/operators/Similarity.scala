@@ -92,7 +92,6 @@ object Similarity {
       .withColumn("rnk", row_number().over(w))
       .where(col("rnk") <= K)
       .selectExpr("probe_id", "vec_id", "round(cos, 4) AS cos", "rnk")
-      .orderBy(col("probe_id"), col("rnk"))
   }
 
   /** Multi-table SRP-LSH bucketed ANN: 2 hash tables of
@@ -128,7 +127,6 @@ object Similarity {
       .withColumn("rnk", row_number().over(w))
       .where(col("rnk") <= K)
       .selectExpr("probe_id", "vec_id", "round(cos, 4) AS cos", "rnk")
-      .orderBy(col("probe_id"), col("rnk"))
   }
 
   /** Approximate k-NN GRAPH build: top-3 same-bucket neighbors for
@@ -236,7 +234,6 @@ object Similarity {
   def nnGraph(s: SparkSession, dir: String): DataFrame =
     nnGraphEdges(s, dir)
       .selectExpr("src", "dst", "round(cos, 4) AS cos", "rnk")
-      .orderBy(col("src"), col("rnk"))
 
   /** One NN-descent refinement round (Dong et al., WWW'11) over the
     * adaptive SRP k-NN graph: the candidate set for each node is its
@@ -262,6 +259,11 @@ object Similarity {
   /** The descent round over an ALREADY-BUILT round-0 edge list, so a
     * caller holding the graph (graphRecall) refines it without
     * rebuilding the whole bucket-join + window stage a second time.
+    *
+    * @param round0 (src, dst) edges with AT MOST 3 per src — the
+    *   top-3 window of [[nnGraphEdges]]. The two-hop broadcast gate
+    *   bounds the symmetrized set by 6·N from this precondition alone;
+    *   a denser graph would pass the gate yet broadcast beyond it.
     */
   private def nnDescentFrom(round0: DataFrame, s: SparkSession, dir: String): DataFrame = {
     // symmetric expansion is a row-local explode, NOT a self-union —
@@ -299,7 +301,6 @@ object Similarity {
   def nnDescent(s: SparkSession, dir: String): DataFrame =
     nnDescentEdges(s, dir)
       .selectExpr("src", "dst", "round(cos, 4) AS cos", "rnk")
-      .orderBy(col("src"), col("rnk"))
 
   /** Recall@3 of the graph path against exact truth — the card that
     * licenses [[nnGraph]]/[[nnDescent]] at scale the way
@@ -337,7 +338,6 @@ object Similarity {
     val g0 = nnGraphEdges(s, dir).select("src", "dst").localCheckpoint(false)
     card("graph", g0)
       .unionAll(card("descent", nnDescentFrom(g0, s, dir)))
-      .orderBy(col("stage"))
   }
 
   /** Stride between IVF centroid seeds: every [[IvfListOcc]]-th
@@ -429,7 +429,6 @@ object Similarity {
       .withColumn("rnk", row_number().over(wTop))
       .where(col("rnk") <= K)
       .selectExpr("probe_id", "vec_id", "round(cos, 4) AS cos", "rnk")
-      .orderBy(col("probe_id"), col("rnk"))
   }
 
   /** Brute-force top-k via the mergeable heap aggregate
@@ -445,7 +444,6 @@ object Similarity {
       .selectExpr("probe_id", "posexplode(top) AS (pos, t)")
       .selectExpr("probe_id", "t.id AS vec_id", "round(t.score, 4) AS cos",
         "cast(pos + 1 AS int) AS rnk")
-      .orderBy(col("probe_id"), col("rnk"))
 
   /** Int8 scalar quantization of the embedding corpus — the memory-
     * side of ANN at scale (4× smaller vectors before indexing). Pass
@@ -469,7 +467,6 @@ object Similarity {
       .agg((floor(avg(abs(col("lo") + col("qv") * col("scale") - col("v"))) * 1e6 + 0.5) / 1e6).as("mae"))
       .select(col("dim"), round(col("lo"), 4).as("lo"), round(col("hi"), 4).as("hi"),
         (floor(col("scale") * 1e6 + 0.5) / 1e6).as("scale"), col("mae"))
-      .orderBy(col("dim"))
   }
 
   /** Embedding-space outlier QA — the data-quality report a training
@@ -509,7 +506,6 @@ object Similarity {
         sum(when(col("z") > 2.0, 1L).otherwise(0L)).as("n_outliers"),
         (round(max(col("z")), 4) + lit(0.0)).as("max_z"),
         round(avg(col("dist2")), 4).as("mean_dist2"))
-      .orderBy(col("label"))
   }
 
   /** Hard-negative mining for contrastive training: for each probe,
@@ -535,7 +531,6 @@ object Similarity {
       .where(col("rnk") <= K)
       .selectExpr("probe_id", "probe_label", "vec_id", "neg_label",
         "round(cos, 4) AS cos", "rnk")
-      .orderBy(col("probe_id"), col("rnk"))
   }
 
   /** ANN quality gate: recall@k of the LSH-bucketed path against the
@@ -555,7 +550,6 @@ object Similarity {
       .agg(count(col("hit")).as("n_hits"))
       .selectExpr("probe_id", "n_hits",
         s"round(n_hits / cast($K AS double), 4) AS recall")
-      .orderBy(col("probe_id"))
   }
 
   /** Cosine-threshold range search: every corpus vector with
@@ -585,7 +579,6 @@ object Similarity {
       .selectExpr("probe_id", "n_matches",
         "round(sg / (n_matches * cast(10000 AS double)), 4) AS avg_cos",
         "round(mg / cast(10000 AS double), 4) AS max_cos")
-      .orderBy(col("probe_id"))
   }
 
   /** Embedding-dimension correlation QA: Pearson r for every
@@ -662,7 +655,6 @@ object Similarity {
         "round(sqrt(min2) / cast(10000 AS double), 4) AS min_norm",
         "round(sqrt(max2) / cast(10000 AS double), 4) AS max_norm",
         "round(s2 / (n_vecs * cast(1e8 AS double)), 4) AS mean_norm2")
-      .orderBy(col("label"))
 
   /** Product-quantization ANN with asymmetric-distance (ADC) scoring —
     * the memory-bound half of the IVF-PQ design every billion-vector
@@ -727,7 +719,6 @@ object Similarity {
       .agg(sum(coalesce(col("hit"), lit(0))).as("n_hit"))
       .selectExpr("probe_id", "cast(n_hit AS bigint) AS n_hit",
         "floor(n_hit / cast(5 AS double) * 10000 + 0.5) / cast(10000 AS double) AS recall5")
-      .orderBy(col("probe_id"))
   }
 
   /** One matrix-free power-iteration step toward the corpus's top
@@ -776,7 +767,6 @@ object Similarity {
           |  cast(0 AS double), (acc, x) -> acc + x)""".stripMargin))
       .select(col("dim"), col("s").as("sum_q"), col("v1"),
         (floor(col("v1") / sqrt(col("nsq")) * 10000 + 0.5) / lit(10000.0)).as("loading"))
-      .orderBy(col("dim"))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -16,13 +16,11 @@ object Streaming {
 
   def windowCounts(s: SparkSession, dir: String): DataFrame =
     EventStream.windowedCounts(Tables.events(s, dir))
-      .orderBy(col("hour"), col("event_type"))
 
   def dedupCounts(s: SparkSession, dir: String): DataFrame =
     EventStream.dedupedPerMinute(Tables.events(s, dir))
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_keys"))
-      .orderBy(col("event_type"))
 
   /** Batch face of the flatMapGroupsWithState sessionizer: one
     * shuffle on user_id, then a per-group linear pass. In batch mode
@@ -40,14 +38,12 @@ object Streaming {
       .as[EventStream.Evt]
     EventStream.sessionizeStateful(evts, flushRemaining = true).toDF()
       .withColumn("n_events", col("n_events").cast("bigint"))
-      .orderBy(col("user_id"), col("session_start"))
   }
 
   def enrichCounts(s: SparkSession, dir: String): DataFrame =
     EventStream.enriched(Tables.events(s, dir), Tables.customer(s, dir))
       .groupBy(col("segment"), col("event_type"))
       .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 4).as("total_value"))
-      .orderBy(col("segment"), col("event_type"))
 
   /** Batch face of the incremental RegisterSchema gate: the
     * flatMapGroupsWithState compat checker over the full registration
@@ -64,7 +60,6 @@ object Streaming {
         get_json_object(col("props"), "$.k").cast("bigint").as("k"))
       .as[EventStream.RegEvt]
     EventStream.compatStateful(regs).toDF()
-      .orderBy(col("subject"), col("version"))
   }
 
   /** Batch face of the mapGroupsWithState latest-per-key upsert view:
@@ -81,7 +76,6 @@ object Streaming {
     EventStream.latestStateful(evts).toDF()
       .select(col("user_id"), col("last_ts"), col("last_type"), col("last_value"),
         col("n_events"), round(col("total_raw"), 4).as("total_value"))
-      .orderBy(col("user_id"))
   }
 
   /** Batch face of the stream-stream interval join (click→purchase
@@ -98,7 +92,6 @@ object Streaming {
     EventStream.attributionJoin(
       ev.where(col("event_type") === "click"),
       ev.where(col("event_type") === "purchase"))
-      .orderBy(col("click_id"), col("purchase_id"))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -42,7 +42,6 @@ object Temporal {
       .filter(col("is_probe") === 1)
       .select(col("event_id").as("purchase_id"), col("user_id"),
         col("ts").as("purchase_ts"), col("last_signup_ts"), col("last_signup_id"))
-      .orderBy(col("purchase_id"))
   }
 
   /** Range join: (click, purchase) pairs of the same user where the
@@ -68,7 +67,6 @@ object Temporal {
         col("buy_ts").cast("long") - col("click_ts").cast("long") <= winSec)
       .select(col("user_id"), col("click_id"), col("buy_id"),
         (col("buy_ts").cast("long") - col("click_ts").cast("long")).as("delta_s"))
-      .orderBy(col("user_id"), col("click_id"), col("buy_id"))
   }
 
   /** The same AS-OF semantics as [[asofJoin]], planned through the
@@ -100,7 +98,6 @@ object Temporal {
       .select(col("p_id").as("purchase_id"), col("p_user").as("user_id"),
         col("p_ts").as("purchase_ts"), col("s_ts").as("last_signup_ts"),
         col("s_id").as("last_signup_id"))
-      .orderBy(col("purchase_id"))
   }
 
   /** Time-series downsampling to OHLC bars — the metrics-compaction
@@ -132,7 +129,6 @@ object Temporal {
         min(col("value")).as("low"),
         max(when(col("rd") === 1, col("value"))).as("close"),
         (floor(avg(col("value")) * 10000 + 0.5) / lit(10000.0)).as("mean_value"))
-      .orderBy(col("event_type"), col("hour"))
   }
 
   /** Regular-grid resampling with forward fill — the TSDB gap-filling
@@ -179,7 +175,6 @@ object Temporal {
         coalesce(col("n_obs"), lit(0L)).as("n_obs"),
         col("n_obs").isNotNull.as("is_observed"),
         col("value_filled"))
-      .orderBy(col("event_type"), col("minute"))
   }
 
   /** Linear gap interpolation on the minute grid — the sibling of
@@ -238,7 +233,6 @@ object Temporal {
           WHEN vn IS NULL THEN vp
           ELSE vp + (vn - vp) * (timestampdiff(MINUTE, tp, minute) / cast(timestampdiff(MINUTE, tp, tn) AS double))
         END) * 10000 + 0.5) / cast(10000 AS double)""").as("value_interp"))
-      .orderBy(col("event_type"), col("minute"))
   }
 
   /** The long-span production form of [[resampleFfill]] (r8 — the
@@ -296,7 +290,6 @@ object Temporal {
         coalesce(col("n_obs"), lit(0L)).as("n_obs"),
         col("n_obs").isNotNull.as("is_observed"),
         col("value_filled"))
-      .orderBy(col("event_type"), col("minute"))
   }
 
   /** The long-span production form of [[interpolate]] (r8): both
@@ -358,7 +351,6 @@ object Temporal {
           WHEN vn IS NULL THEN vp
           ELSE vp + (vn - vp) * (timestampdiff(MINUTE, tp, minute) / cast(timestampdiff(MINUTE, tp, tn) AS double))
         END) * 10000 + 0.5) / cast(10000 AS double)""").as("value_interp"))
-      .orderBy(col("event_type"), col("minute"))
   }
 
   /** Exact half-life weights 2⁻ᵏ as decimal literals, inlined into
@@ -413,7 +405,6 @@ object Temporal {
       .agg((floor(avg(col("value")) * 10000 + 0.5) / lit(10000.0)).as("v_obs"))
       .selectExpr("event_type", "minute", "v_obs",
         s"floor(($num) / ($den) * 10000 + 0.5) / cast(10000 AS double) AS ewma")
-      .orderBy(col("event_type"), col("minute"))
   }
 
   /** Robust anomaly detection per metric series: flag minute bars
@@ -455,7 +446,6 @@ object Temporal {
         (floor(col("med") * 10000 + 0.5) / 10000.0).as("med"),
         (floor(col("dev") * 10000 + 0.5) / 10000.0).as("dev"),
         (floor(col("mad") * 10000 + 0.5) / 10000.0).as("mad"))
-      .orderBy(col("event_type"), col("minute"))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -37,7 +37,6 @@ object TextAnalysis {
       .withColumn("mx", expr(maxExpr))
       .selectExpr("doc_id", "lang AS labeled_lang", s"$caseExpr AS predicted_lang", "mx AS score")
       .withColumn("agrees", col("labeled_lang") === col("predicted_lang"))
-      .orderBy(col("doc_id"))
   }
 
   /** Classifier evaluation at corpus scale: the language-ID
@@ -51,7 +50,6 @@ object TextAnalysis {
     langId(s, dir)
       .groupBy(col("labeled_lang"), col("predicted_lang"))
       .agg(count(lit(1)).as("n_docs"))
-      .orderBy(col("labeled_lang"), col("predicted_lang"))
 
   /** Quality scoring: token stats, stopword/duplication ratios and a
     * composite [0,1] quality signal (documents with heavy repetition
@@ -75,7 +73,6 @@ object TextAnalysis {
         "floor(dr_raw * 10000 + 0.5) / cast(10000 AS double) AS dup_ratio",
         """floor((CASE WHEN n_tokens < 5 THEN 0.1 ELSE 1.0 END *
           |      (1.0 - dr_raw) * (1.0 - least(swr_raw * 2, cast(0.5 AS double)))) * 10000 + 0.5) / cast(10000 AS double) AS quality""".stripMargin)
-      .orderBy(col("doc_id"))
 
   /** Token counting: whitespace tokens and a BPE-ish subword count
     * (alpha runs, digit runs, and isolated symbols).
@@ -86,7 +83,6 @@ object TextAnalysis {
         "size(split(text, ' ')) AS n_ws_tokens",
         """size(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9 ]', 0)) AS n_bpe_tokens""",
         "length(text) AS n_chars_measured")
-      .orderBy(col("doc_id"))
 
   /** Winnowing-style fingerprint: md5 over the 4 lexicographically
     * smallest word-4-gram hashes — stable under small edits, the
@@ -103,7 +99,6 @@ object TextAnalysis {
       .selectExpr("doc_id",
         "md5(concat_ws('', slice(h, 1, 4))) AS fingerprint",
         "size(h) AS n_shingles")
-      .orderBy(col("doc_id"))
 
   /** Blocklist-term redaction — the PII-scrubbing shape (emails,
     * phone numbers, ids) with a term blocklist standing in for PII
@@ -120,7 +115,6 @@ object TextAnalysis {
       .select(col("doc_id"),
         size(regexp_extract_all(col("text"), lit(pat), lit(0))).cast("bigint").as("n_hits"),
         md5(regexp_replace(col("text"), pat, "[MASK]")).as("redacted_md5"))
-      .orderBy(col("doc_id"))
   }
 
   /** Per-document unigram Shannon entropy — the Gopher-style "low
@@ -139,7 +133,6 @@ object TextAnalysis {
       .select(col("doc_id"), col("n_tokens"), col("n_distinct"),
         (floor((log(col("n_tokens")) - col("clc") / col("n_tokens")) * 10000 + 0.5) / lit(10000.0))
           .as("entropy"))
-      .orderBy(col("doc_id"))
 
   /** Gopher-style repetition signals (Rae et al. 2021 §A1.1): the
     * most-frequent word's count and the most-frequent bigram's count
@@ -193,7 +186,6 @@ object TextAnalysis {
         "size(gs) AS n_bigrams",
         "gtop.runs AS n_distinct_bigrams",
         "gtop.best AS top_bigram_count")
-      .orderBy(col("doc_id"))
 
   /** Duplicate-3-gram coverage (the other half of Gopher's repetition
     * battery, Rae et al. 2021 §A1.1 — the "fraction of characters in
@@ -248,7 +240,6 @@ object TextAnalysis {
         coalesce(col("n_dup_grams"), lit(0L)).as("n_dup_grams"),
         coalesce(col("n_dup_occurrences"), lit(0L)).as("n_dup_occurrences"),
         coalesce(col("n_words_covered"), lit(0L)).as("n_words_covered"))
-      .orderBy(col("doc_id"))
   }
 
   /** Per-document character-class profile — the C4-style page
@@ -269,7 +260,6 @@ object TextAnalysis {
         "size(regexp_extract_all(text, '[.,;:!?]', 0)) AS n_punct")
       .selectExpr("doc_id", "n_chars_total", "n_alpha", "n_digit", "n_space", "n_punct",
         "n_chars_total - n_alpha - n_digit - n_space - n_punct AS n_other")
-      .orderBy(col("doc_id"))
 
   /** Tokenizer fertility per corpus stratum — chars-per-token and
     * subwords-per-word for the BPE-ish tokenization of [[tokens]],
@@ -292,7 +282,6 @@ object TextAnalysis {
         floor(col("n_chars") / col("n_tokens").cast("double") * 10000 + 0.5) / lit(10000.0))
       .withColumn("tokens_per_word",
         floor(col("n_tokens") / col("n_words").cast("double") * 10000 + 0.5) / lit(10000.0))
-      .orderBy(col("source"), col("lang"))
 
   /** Per-document TF-IDF keywords — the retrieval/data-card shape
     * ("what is this document about"): term frequency per (doc, word),
@@ -328,7 +317,6 @@ object TextAnalysis {
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= 3)
       .select(col("doc_id"), col("rank"), col("word"), col("tf"), col("df"), col("score"))
-      .orderBy(col("doc_id"), col("rank"))
   }
 
   /** Zipf rank-frequency fit per source: word frequencies ranked
@@ -362,7 +350,6 @@ object TextAnalysis {
         sum(col("freq")).as("n_tokens"),
         (floor(expr("regr_slope(ln(freq), ln(rank))") * 10000 + 0.5) / 10000.0).as("zipf_slope"),
         (floor(expr("regr_intercept(ln(freq), ln(rank))") * 10000 + 0.5) / 10000.0).as("zipf_intercept"))
-      .orderBy(col("source"))
   }
 
   /** N-gram novelty curve: for each document (in doc_id ingest
@@ -395,7 +382,6 @@ object TextAnalysis {
         count(lit(1)).as("n_grams"),
         sum(when(col("first_doc") === col("doc_id"), 1L).otherwise(0L)).as("n_novel"))
       .withColumn("novelty", floor(col("n_novel") / col("n_grams").cast("double") * 10000 + 0.5) / 10000.0)
-      .orderBy(col("doc_id"))
   }
 
   /** Flesch–Kincaid readability grade per document — the classic
@@ -409,9 +395,10 @@ object TextAnalysis {
     * grade-school cut points.
     *
     * Scale: entirely row-local with the scan (three regexp/split
-    * passes per document, integer outputs); the only ordering is the
-    * output sort. The grade formula runs on integers in identical
-    * textual order in both engines, so the 4dp floor agrees exactly.
+    * passes per document, integer outputs); its only exchange is the
+    * [[Tables.spread]] fan-out. The grade formula runs on integers in
+    * identical textual order in both engines, so the 4dp floor agrees
+    * exactly.
     */
   def readability(s: SparkSession, dir: String): DataFrame =
     Tables.spread(Tables.documents(s, dir))
@@ -431,7 +418,6 @@ object TextAnalysis {
         """CASE WHEN fk_grade < 8 THEN 'accessible'
           |     WHEN fk_grade < 12 THEN 'standard'
           |     ELSE 'advanced' END AS band""".stripMargin)
-      .orderBy(col("doc_id"))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "text_readability" -> readability,

@@ -109,8 +109,17 @@ class AnalyticsSpec extends SparkSpec {
   test("q11 keeps only parts above 1.7x the average part value") {
     val rows = Analytics.q11ValueParts(spark, sfDir).collect()
     assert(rows.nonEmpty)
-    val vals = rows.map(_.getAs[Double]("part_value"))
-    assert(vals.sameElements(vals.sorted(Ordering[Double].reverse)))
+    // brute-force the HAVING on the driver: every part above 1.7 x the
+    // average part value, each with its rounded value
+    val pv = Tables.lineitem(spark, sfDir)
+      .select("l_partkey", "l_extendedprice", "l_discount").collect()
+      .groupBy(_.getLong(0))
+      .view.mapValues(_.map(r => r.getDouble(1) * (1 - r.getDouble(2))).sum).toMap
+    val thr = 1.7 * pv.values.sum / pv.size
+    val got = rows.map(r => r.getAs[Long]("l_partkey") -> r.getAs[Double]("part_value")).toMap
+    assert(got.size == rows.length, "one row per part")
+    assert(got.keySet == pv.collect { case (k, v) if v > thr => k }.toSet)
+    got.foreach { case (k, v) => assert(math.abs(v - pv(k)) < 1e-3, s"part $k: $v vs ${pv(k)}") }
   }
 
   test("q16 excludes negative-balance suppliers from the distinct counts") {

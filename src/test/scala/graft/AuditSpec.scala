@@ -96,6 +96,7 @@ class AuditSpec extends SparkSpec {
       .collect().map(r => (r.getDate(0), r.getString(1), r.getLong(2)))
     val full = Audit.countsDaily(spark, sfDir)
       .collect().map(r => (r.getDate(0), r.getString(1), r.getLong(2)))
+      .sortBy(r => (r._1.toLocalDate.toEpochDay, r._2))
     assert(merged.sameElements(full))
   }
 
@@ -123,6 +124,7 @@ class AuditSpec extends SparkSpec {
 
   test("growth: cumulative is monotone and ends at the corpus total") {
     val rows = Audit.growth(spark, sfDir).collect()
+      .sortBy(_.getAs[java.sql.Date]("week").toLocalDate.toEpochDay)
     assert(rows.nonEmpty)
     val cums = rows.map(_.getAs[Long]("cumulative"))
     assert(cums.zip(cums.tail).forall { case (a, b) => b >= a })
@@ -233,8 +235,14 @@ class AuditSpec extends SparkSpec {
     val reg = rows.filter(_.getAs[String]("metric") == "kafka_schema_registry_registered_count")
     assert(reg.length == 1 && reg.head.getAs[String]("status") == "ok" &&
       reg.head.getAs[Long]("value") == catalog("kafka_schema_registry_registered_count"))
-    // sections appear in the handler's order
-    assert(rows.map(_.getAs[Long]("sec_order")).toSeq == rows.map(_.getAs[Long]("sec_order")).sorted.toSeq)
+    // sec_order carries the handler's section order: read in that
+    // order, the sections appear as the handler writes them
+    val sections = Seq("wire_counters", "schema_counts_by_type", "request", "schema",
+      "compatibility", "storage", "cache", "auth", "rate_limit", "mcp", "per_principal")
+    val bySec = rows.groupBy(_.getAs[Long]("sec_order"))
+      .view.mapValues(_.map(_.getAs[String]("section")).distinct.toSeq).toMap
+    assert(bySec.values.forall(_.length == 1), "one section per sec_order")
+    assert(bySec.toSeq.sortBy(_._1).map(_._2.head) == sections.filter(bySec.values.flatten.toSet))
   }
 
   test("apdex: class counts partition the requests and score matches recomputation") {

@@ -117,7 +117,7 @@ class DedupSpec extends SparkSpec {
     val dir = "/root/testdata/sf0.1"
     def rows() = Dedup.ngramJaccardBlocked(spark, dir).collect()
       .map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"), r.getAs[Double]("jaccard")))
-      .toSeq
+      .toSeq.sorted
     val blocked = rows()
     spark.conf.set("graft.jaccard.prefixMinDocs", "1")
     val prefixed = try rows() finally spark.conf.unset("graft.jaccard.prefixMinDocs")

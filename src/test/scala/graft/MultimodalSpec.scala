@@ -24,8 +24,8 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("decode is deterministic across runs") {
-    val a = Multimodal.metaExtract(spark, sfDir).collect()
-    val b = Multimodal.metaExtract(spark, sfDir).collect()
+    val a = Multimodal.metaExtract(spark, sfDir).collect().map(_.toString).sorted
+    val b = Multimodal.metaExtract(spark, sfDir).collect().map(_.toString).sorted
     assert(a.toSeq == b.toSeq)
   }
 
@@ -217,7 +217,7 @@ class MultimodalSpec extends SparkSpec {
   test("meta_extract: row-local codegen decode is bit-identical to the batch demo, no object boundary") {
     val prod = Multimodal.metaExtract(spark, sfDir)
     def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toSeq.map(String.valueOf)).toSeq
+      df.collect().map(_.toSeq.map(String.valueOf)).toSeq.sortBy(_.mkString(","))
     val prodRows = rows(prod)
     // post-execution (AQE-final) plan: no mapPartitions object
     // boundary, decode projection inside a codegen span

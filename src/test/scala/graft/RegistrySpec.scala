@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 class RegistrySpec extends SparkSpec {
 
   test("subject list is sorted distinct event types") {
-    val subjects = Registry.subjectList(spark, sfDir).collect().map(_.getString(0))
-    assert(subjects.sameElements(subjects.sorted))
+    val subjects = Registry.subjectList(spark, sfDir).collect().map(_.getString(0)).sorted
+    val eventTypes = Tables.events(spark, sfDir).select("event_type").collect().map(_.getString(0))
+    assert(subjects.sameElements(eventTypes.distinct.sorted))
     assert(subjects.toSet.size == subjects.length)
   }
 
@@ -119,6 +120,37 @@ class RegistrySpec extends SparkSpec {
       "every subject's latest version has exactly one schema type")
   }
 
+  test("registry statistics follow the oracle on a NULL subject and on an empty stream") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("event_id", LongType), StructField("ts", TimestampType),
+      StructField("user_id", LongType), StructField("event_type", StringType),
+      StructField("value", DoubleType), StructField("props", StringType)))
+    val t1 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
+    val t2 = java.sql.Timestamp.valueOf("2024-01-02 00:00:00")
+    def ev(id: Long, ts: java.sql.Timestamp, user: java.lang.Long, k: Int) =
+      Row(id, ts, user, "register", 1.0, s"""{"k": $k}""")
+    def stats(rows: Seq[Row]): Map[String, Long] = {
+      val dir = java.nio.file.Files.createTempDirectory("graft-stats").toString
+      spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+        .write.parquet(s"$dir/events.parquet")
+      Registry.statistics(spark, dir).collect()
+        .map(r => r.getAs[String]("metric") -> r.getAs[Long]("value")).toMap
+    }
+    // subject 1: latest k=4 (JSON); subject 2: k=5 (PROTOBUF); the
+    // NULL subject: latest k=6 (AVRO). count(DISTINCT subject) skips
+    // NULL; PARTITION BY subject keeps it as one group.
+    val withNull = stats(Seq(
+      ev(1, t1, 1L, 3), ev(2, t2, 1L, 4), ev(3, t1, 2L, 5),
+      ev(4, t1, null, 7), ev(5, t2, null, 6)))
+    assert(withNull == Map("total_subjects" -> 2L, "total_versions" -> 5L,
+      "type_avro" -> 1L, "type_json" -> 1L, "type_protobuf" -> 1L))
+    val empty = stats(Seq.empty)
+    assert(empty == Map("total_subjects" -> 0L, "total_versions" -> 0L,
+      "type_avro" -> 0L, "type_json" -> 0L, "type_protobuf" -> 0L))
+  }
+
   test("gc candidates: only tombstoned docs appear; live-depended docs retained") {
     val rows = Registry.gcCandidates(spark, sfDir).collect()
     assert(rows.nonEmpty)
@@ -174,7 +206,8 @@ class RegistrySpec extends SparkSpec {
     val rows = Registry.metaLatest(spark, sfDir).collect()
     assert(rows.nonEmpty)
     // cross-check one subject against a brute-force recomputation
-    val subject = rows.head.getLong(0)
+    val first = rows.minBy(_.getLong(0))
+    val subject = first.getLong(0)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     val brute = Tables.events(spark, sfDir)
@@ -182,7 +215,7 @@ class RegistrySpec extends SparkSpec {
       .filter(col("user_id") === subject &&
         get_json_object(col("props"), "$.k").cast("bigint") % 3 === 0)
       .agg(max(col("version"))).head().getInt(0)
-    assert(rows.head.getAs[Int]("latest_matching") == brute)
+    assert(first.getAs[Int]("latest_matching") == brute)
   }
 
   test("match subjects: counts agree with direct filters, first_match matches its pattern") {

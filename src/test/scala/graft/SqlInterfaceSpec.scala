@@ -20,6 +20,7 @@ class SqlInterfaceSpec extends SparkSpec {
       """SELECT event_type, count(DISTINCT user_id) AS n_users, count(*) AS n_events
         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin).collect()
     val dfRows = operators.Analytics.distinctUsers(spark, sfDir).collect()
+      .sortBy(_.getAs[String]("event_type"))
     assert(sqlRows.toSeq == dfRows.toSeq)
   }
 

@@ -55,8 +55,8 @@ class TemporalSpec extends SparkSpec {
     assert(plan.contains("AsOfJoin"), "custom operator missing from physical plan")
     assert(!plan.contains("SortMergeJoin") && !plan.contains("Window"),
       "custom path must not fall back to join/window")
-    val viaWindow = Temporal.asofJoin(spark, sfDir).collect().map(_.toSeq)
-    val viaCustom = custom.collect().map(_.toSeq)
+    val viaWindow = Temporal.asofJoin(spark, sfDir).collect().map(_.toSeq).sortBy(_.mkString(","))
+    val viaCustom = custom.collect().map(_.toSeq).sortBy(_.mkString(","))
     assert(viaCustom.length == viaWindow.length)
     assert(viaCustom.zip(viaWindow).forall { case (a, b) => a == b })
   }

@@ -6,8 +6,10 @@ import org.apache.spark.sql.functions._
 class TopKAggSpec extends SparkSpec {
 
   test("heap aggregate equals the window formulation row for row") {
-    val agg = operators.Similarity.bruteTopKAgg(spark, sfDir).collect().toSeq
-    val win = operators.Similarity.bruteTopK(spark, sfDir).collect().toSeq
+    def byRank(rows: Array[org.apache.spark.sql.Row]) =
+      rows.toSeq.sortBy(r => (r.getAs[Long]("probe_id"), r.getAs[Int]("rnk")))
+    val agg = byRank(operators.Similarity.bruteTopKAgg(spark, sfDir).collect())
+    val win = byRank(operators.Similarity.bruteTopK(spark, sfDir).collect())
     assert(agg == win)
   }
 
