@@ -61,25 +61,12 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.defaultCpus
     val calRef = sys.env.get("SPARK_GRAFT_CAL_REF").flatMap(_.toDoubleOption)
       .getOrElse(CalQuietSec)
     val requeueMax = sys.env.get("SPARK_GRAFT_REQUEUE_MAX").flatMap(_.toIntOption)
       .getOrElse(120)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Small-shuffle parallelism: AQE's size-driven coalescing
-      // otherwise folds MB-scale shuffles into ONE post-shuffle task
-      // and serializes the whole mid-query on a 32-core box (measured
-      // 5-10x on the window-heavy scans). At cluster scale these are
-      // no-ops: partitions are far above the floor.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
     // Absorb session/codegen/parquet-footer warmup so the first
     // measured query isn't charged for it.
     spark.read.parquet(s"$sfDir/lineitem.parquet").count()
@@ -96,7 +83,7 @@ object Bench {
     // codegen cost so every measured probe is steady-state.
     def calProbe(): Double = {
       val t0 = System.nanoTime()
-      spark.range(0, CalRows, 1, cpus.toInt)
+      spark.range(0, CalRows, 1, cpus)
         .selectExpr("xxhash64(id) AS h", "id % 997 AS k")
         .groupBy("k").agg(org.apache.spark.sql.functions.expr("bit_xor(h)"))
         .queryExecution.toRdd.count()
@@ -119,40 +106,28 @@ object Bench {
     // host swing ±30% between identical-code runs (BENCH_VARIANCE.md);
     // summed executorRunTime/CpuTime across a query's tasks is immune
     // to scheduler stalls and is the honest cross-round comparator.
-    val taskRunMs = new java.util.concurrent.atomic.AtomicLong(0)
-    val taskCpuNs = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) {
-          taskRunMs.addAndGet(m.executorRunTime)
-          taskCpuNs.addAndGet(m.executorCpuTime)
-        }
-      }
-    })
+    val metrics = new StageMetrics(spark)
 
     case class Run(wall: Double, plan: String, task: Double, cpu: Double)
     // Returns wall seconds, the post-execution plan string (with AQE
     // the final plan — real joins picked, codegen stages marked
     // "*(n)" — only exists on the QueryExecution AFTER
     // materialization), and the query's summed task run/cpu seconds.
-    def run(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Either[String, Run] = {
-      org.apache.spark.sql.graftshim.GraftShim.flushListeners(spark)
-      val (r0, c0) = (taskRunMs.get(), taskCpuNs.get())
-      val t0 = System.nanoTime()
+    def run(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Either[String, Run] =
       // toRdd materializes every output column — count() would let
       // Catalyst prune expensive projections and under-report.
       try {
-        val qe = fn(spark, sfDir).queryExecution
-        qe.toRdd.count()
-        val secs = (System.nanoTime() - t0) / 1e9
-        org.apache.spark.sql.graftshim.GraftShim.flushListeners(spark)
-        Right(Run(secs, qe.executedPlan.toString,
-          (taskRunMs.get() - r0) / 1e3, (taskCpuNs.get() - c0) / 1e9))
+        val (qe, secs) = metrics.record {
+          val t0 = System.nanoTime()
+          val qe = fn(spark, sfDir).queryExecution
+          qe.toRdd.count()
+          (qe, (System.nanoTime() - t0) / 1e9)
+        }
+        val t = metrics.total
+        Right(Run(secs, qe.executedPlan.toString, t.runMs / 1e3, t.cpuNs / 1e9))
       } catch {
         case e: Throwable => Left(e.getClass.getSimpleName + ": " + String.valueOf(e.getMessage).take(200))
       }
-    }
 
     case class Res(name: String, cold: Either[String, Double],
                    median: Either[String, Double], plan: String,

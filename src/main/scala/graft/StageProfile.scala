@@ -1,19 +1,16 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
-
-import scala.collection.concurrent.TrieMap
-
 /** Per-stage breakdown of where a query's wall time goes (guide §1:
   * measure first, map stages back to operators). For each named query:
-  * runs it [[iters]] times with Bench's materialization (toRdd.count)
-  * and, for the LAST run, prints one line per stage — task count,
-  * summed task run/cpu seconds, stage wall (submission→completion),
-  * shuffle read/write bytes — plus the job count. Sequential stage
-  * walls that sum to the query wall reveal round-serialized loops;
-  * 1-task stages with large cpu reveal a serialized scan; task counts
-  * far above work reveal dispatch-floor overhead. Usage:
+  * runs it [[iters]] times with Bench's materialization (toRdd.count),
+  * prints every run's wall and, for the LAST run, one line per stage —
+  * task count, summed task run/cpu seconds, stage wall
+  * (submission→completion), shuffle read/write bytes — plus the job
+  * count. Sequential stage walls that sum to the query wall reveal
+  * round-serialized loops; 1-task stages with large cpu reveal a
+  * serialized scan; task counts far above work reveal dispatch-floor
+  * overhead. Paired-conf experiments: SPARK_GRAFT_CONF="k=v;k=v"
+  * overrides runtime SQL confs after the session is built. Usage:
   *   runMain graft.StageProfile <sfDir> <iters> <query> [query ...]
   */
 object StageProfile {
@@ -21,72 +18,31 @@ object StageProfile {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val iters = args.lift(1).map(_.toInt).getOrElse(3)
     val names = args.drop(2).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("="))
       .foreach { kv => val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v) })
     spark.read.parquet(s"$sfDir/lineitem.parquet").count()
-
-    case class St(var nTasks: Int = 0, var runMs: Long = 0, var cpuNs: Long = 0,
-                  var srBytes: Long = 0, var swBytes: Long = 0,
-                  var wallMs: Long = 0, var name: String = "")
-    val stages = TrieMap.empty[Int, St]
-    var jobs = 0
-    var recording = false
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (recording) jobs += 1
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = if (recording) {
-        val st = stages.getOrElseUpdate(t.stageId, St())
-        val m = t.taskMetrics
-        if (m != null) {
-          st.nTasks += 1
-          st.runMs += m.executorRunTime
-          st.cpuNs += m.executorCpuTime
-          st.srBytes += m.shuffleReadMetrics.totalBytesRead
-          st.swBytes += m.shuffleWriteMetrics.bytesWritten
-        }
-      }
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = if (recording) {
-        val i = sc.stageInfo
-        val st = stages.getOrElseUpdate(i.stageId, St())
-        st.wallMs = (for {s <- i.submissionTime; c <- i.completionTime} yield c - s).getOrElse(-1L)
-        st.name = i.name.takeWhile(_ != '\n').take(60)
-      }
-    })
+    val metrics = new StageMetrics(spark)
 
     names.foreach { n =>
       val fn = SparkEntry.queries(n)
-      val walls = (1 to iters).map { i =>
-        org.apache.spark.sql.graftshim.GraftShim.flushListeners(spark)
-        if (i == iters) { stages.clear(); jobs = 0; recording = true }
+      def once(): Double = {
         val t0 = System.nanoTime()
         fn(spark, sfDir).queryExecution.toRdd.count()
-        val s = (System.nanoTime() - t0) / 1e9
-        if (i == iters) {
-          org.apache.spark.sql.graftshim.GraftShim.flushListeners(spark)
-          recording = false
-        }
+        (System.nanoTime() - t0) / 1e9
+      }
+      val walls = (1 to iters).map { i =>
+        val s = if (i == iters) metrics.record(once()) else once()
         spark.catalog.clearCache()
         s
       }
-      println(f"==== $n walls=${walls.map(w => f"$w%.3f").mkString(" ")} jobs=$jobs stages=${stages.size}")
-      val rows = stages.toSeq.sortBy(_._1)
+      val rows = metrics.stages.toSeq.sortBy(_._1)
+      println(f"==== $n walls=${walls.map(w => f"$w%.3f").mkString(" ")} jobs=${metrics.jobs} stages=${rows.size}")
       rows.foreach { case (id, s) =>
-        println(f"  stage $id%4d tasks=${s.nTasks}%4d wall=${s.wallMs / 1e3}%7.3f task=${s.runMs / 1e3}%8.3f cpu=${s.cpuNs / 1e9}%8.3f sr=${s.srBytes}%10d sw=${s.swBytes}%10d  ${s.name}")
+        println(f"  stage $id%4d tasks=${s.tasks}%4d wall=${s.wallMs / 1e3}%7.3f task=${s.runMs / 1e3}%8.3f cpu=${s.cpuNs / 1e9}%8.3f sr=${s.srBytes}%10d sw=${s.swBytes}%10d  ${s.name}")
       }
-      val totTasks = rows.map(_._2.nTasks).sum
-      val totRun = rows.map(_._2.runMs).sum / 1e3
-      val totCpu = rows.map(_._2.cpuNs).sum / 1e9
-      println(f"  TOTAL tasks=$totTasks run=$totRun%.3f cpu=$totCpu%.3f")
+      val t = metrics.total
+      println(f"  TOTAL tasks=${t.tasks} run=${t.runMs / 1e3}%.3f cpu=${t.cpuNs / 1e9}%.3f")
     }
     spark.stop()
   }

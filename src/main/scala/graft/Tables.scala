@@ -123,9 +123,9 @@ object Tables {
     * scan is a single task no matter how wide the cluster — a cheap
     * round-robin repartition restores parallelism. On datasets with
     * many splits (any real 100 TB table) the input already
-    * parallelizes and callers can drop this. Parallelism follows
-    * `graft.spread.partitions` if set, else the session's shuffle
-    * partition count — no magic constant on a cluster.
+    * parallelizes and callers can drop this. Parallelism is the
+    * session's shuffle partition count — no magic constant on a
+    * cluster.
     */
   def spread(df: DataFrame): DataFrame = df.repartition(spreadWidth(df))
 
@@ -210,16 +210,8 @@ object Tables {
   def spreadBy(df: DataFrame, cols: org.apache.spark.sql.Column*): DataFrame =
     df.repartition(spreadWidth(df), cols: _*)
 
-  private def spreadWidth(df: DataFrame): Int = {
-    val s = df.sparkSession
-    s.conf.getOption("graft.spread.partitions")
-      .map { v =>
-        val parsed = v.toIntOption.filter(_ > 0)
-        require(parsed.nonEmpty, s"graft.spread.partitions must be a positive int, got '$v'")
-        parsed.get
-      }
-      .getOrElse(s.sessionState.conf.numShufflePartitions)
-  }
+  private def spreadWidth(df: DataFrame): Int =
+    df.sparkSession.sessionState.conf.numShufflePartitions
 
   /** Multi-consumer pin (r11, VERDICT r10 #7): a LAZY localCheckpoint
     * planned with AQE OFF, so constructing the pin launches ZERO jobs.
@@ -234,7 +226,7 @@ object Tables {
     * (where the session's parallelismFirst config keeps full width
     * regardless), and it is read many times — runtime re-planning of
     * its single materialization buys nothing. Driver-paced LOOPS keep
-    * plain localCheckpoint: their per-round frames want
+    * [[lazyCheckpoint]] without the flip: their per-round frames want
     * [[withIterConf]]'s AQE coalescing, and their witness action runs
     * the round's jobs immediately anyway.
     *
@@ -247,15 +239,46 @@ object Tables {
     val key = "spark.sql.adaptive.enabled"
     val prev = s.conf.get(key, "true")
     s.conf.set(key, "false")
-    try df.localCheckpoint(eager = false)
+    try lazyCheckpoint(df)
     finally s.conf.set(key, prev)
   }
+
+  /** `df.localCheckpoint(eager = false)` at `level` (Spark's default
+    * when None) that keeps the SQL metrics of `df`'s plan registered
+    * for as long as the checkpoint's RDD lives. Two jobs that first
+    * read the same lazy checkpoint (two consumers' concurrent stages,
+    * or two broadcasts of it) both compute it from its lineage; the
+    * first to finish truncates that lineage, the source plan and its
+    * metrics become unreachable, and the other job's tasks then report
+    * metrics the driver has garbage-collected ("Failed to update
+    * accumulator" ERROR lines). Only the metric objects are held, not
+    * the plan: a loop's round plans (and their broadcasts) still free
+    * as soon as the lineage is cut.
+    */
+  def lazyCheckpoint(df: DataFrame,
+      level: Option[org.apache.spark.storage.StorageLevel] = None): DataFrame = {
+    val cp = level.fold(df.localCheckpoint(false))(df.localCheckpoint(false, _))
+    val metrics = PlanWalk.collectWithSubqueries(df.queryExecution.executedPlan) {
+      case p => p.metrics.values
+    }.flatten
+    cp.queryExecution.logical.foreach {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => checkpointMetrics.put(lr.rdd, metrics)
+      case _ => ()
+    }
+    cp
+  }
+
+  private object PlanWalk extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+  // checkpoint RDD -> its source plan's metrics; weak keys, so an
+  // entry goes when its RDD does
+  private val checkpointMetrics = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[AnyRef, Seq[AnyRef]]())
 
   /** Scopes AQE's coalescing knob for driver-paced iteration loops
     * (connected-components rounds, and the registry closure's
     * semi-naive loop above its broadcast gate): the
     * session-level `parallelismFirst=true` is right for MB-scale
-    * document-scan shuffles (see Bench.scala) but multiplies the
+    * document-scan shuffles (see GraftSession) but multiplies the
     * fixed per-round task-dispatch cost of KB-scale iteration frames
     * by keeping every tiny shuffle at full width. Measured r7 (sf0.1,
     * warm): the registry closure family, then a loop at every scale,
@@ -264,11 +287,8 @@ object Tables {
     * flipping it off inside the loop is also right: iteration state
     * is metadata-sized next to the corpus, and size-based coalescing
     * still widens genuinely large rounds.
-    */
-  def withIterConf[T](s: SparkSession)(body: => T): T =
-    withIterConf(s, staticPlans = false)(body)
-
-  /** `staticPlans = true` additionally turns AQE OFF and pins a small
+    *
+    * `staticPlans = true` additionally turns AQE OFF and pins a small
     * static shuffle width for the scope — for loops whose join
     * strategies are already decided by count-gated broadcast hints
     * (the registry closure's above-gate loop,
@@ -343,8 +363,7 @@ object Tables {
     * round's shuffle.
     */
   def iterCheckpoint(df: DataFrame): DataFrame =
-    df.localCheckpoint(false,
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    lazyCheckpoint(df, Some(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
 
   /** A Filter that must stay EXACTLY where it is written. Catalyst
     * freely pushes deterministic predicates below joins and even into

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,22 +9,7 @@ object Verify {
     // iteration aid; the driver always runs the full set).
     val keep: String => Boolean =
       if (args.length > 2) args(2).split(",").toSet else (_: String) => true
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Small-shuffle parallelism: AQE's size-driven coalescing
-      // otherwise folds MB-scale shuffles into ONE post-shuffle task
-      // and serializes the whole mid-query on a 32-core box (measured
-      // 5-10x on the window-heavy scans). At cluster scale these are
-      // no-ops: partitions are far above the floor.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).write.mode("overwrite")

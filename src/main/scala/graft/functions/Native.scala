@@ -360,18 +360,24 @@ object Native {
     }
   }
 
+  /** Every native SQL function as (name, implementing class, builder):
+    * the one table [[register]] and [[graft.GraftExtensions]] iterate. */
+  val functions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("graft_simhash64", classOf[SimHash64Expr], e => SimHash64Expr(e.head)),
+    ("graft_minhash16", classOf[MinHash16Expr], e => MinHash16Expr(e.head)),
+    ("graft_jaccard", classOf[JaccardExpr], e => JaccardExpr(e(0), e(1))),
+    ("graft_cosine", classOf[CosineExpr], e => CosineExpr(e(0), e(1))),
+    ("graft_json_paths", classOf[JsonPathsExpr], e => JsonPathsExpr(e.head)),
+    ("graft_avro_pcf", classOf[AvroPcfExpr], e => AvroPcfExpr(e.head)),
+    ("graft_json_canon", classOf[JsonCanonExpr], e => JsonCanonExpr(e.head)),
+    ("graft_topk", classOf[TopKAgg], e => TopKAgg(e(0), e(1), e(2))))
+
   /** Register the functions on a session (idempotent). */
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
-    registry.createOrReplaceTempFunction("graft_simhash64", exprs => SimHash64Expr(exprs.head), "built-in")
-    registry.createOrReplaceTempFunction("graft_minhash16", exprs => MinHash16Expr(exprs.head), "built-in")
-    registry.createOrReplaceTempFunction("graft_jaccard", exprs => JaccardExpr(exprs(0), exprs(1)), "built-in")
-    registry.createOrReplaceTempFunction("graft_cosine", exprs => CosineExpr(exprs(0), exprs(1)), "built-in")
-    registry.createOrReplaceTempFunction("graft_json_paths", exprs => JsonPathsExpr(exprs.head), "built-in")
-    registry.createOrReplaceTempFunction("graft_avro_pcf", exprs => AvroPcfExpr(exprs.head), "built-in")
-    registry.createOrReplaceTempFunction("graft_json_canon", exprs => JsonCanonExpr(exprs.head), "built-in")
-    registry.createOrReplaceTempFunction("graft_topk",
-      exprs => TopKAgg(exprs(0), exprs(1), exprs(2)), "built-in")
+    functions.foreach { case (name, _, build) =>
+      registry.createOrReplaceTempFunction(name, build, "built-in")
+    }
   }
 }
 

@@ -65,12 +65,10 @@ object Pipeline {
     // The count doubles as the CC core's broadcast/static-plan gate
     // (r12) — exact and already paid for.
     val nEdges = edges.count()
-    // graft.clusters.algo = label (default) | star: same fixpoint,
-    // different round complexity — diameter-many rounds vs O(log n).
-    val (labels, _) =
-      if (s.conf.get("graft.clusters.algo", "label") == "star")
-        ccStar(edges, edgeRowsHint = Some(nEdges))
-      else ccLabelProp(edges, edgeRowsHint = Some(nEdges))
+    // label propagation, not ccStar: the LSH pair graph is cliques of
+    // near-copies with tiny diameters, where it runs 14 jobs against
+    // the star core's 21 at sf0.1.
+    val (labels, _) = ccLabelProp(edges, edgeRowsHint = Some(nEdges))
     edges.unpersist()
     // size via a window over the cluster key, not a groupBy+join whose
     // build side re-ran the whole member subplan a second time (r12,
@@ -137,7 +135,7 @@ object Pipeline {
     }
     if (curSum != prevSum)
       ccLog.warn(s"ccLabelProp exited at maxIter=$maxIter WITHOUT converging - " +
-        "labels are not a fixpoint; raise maxIter or use graft.clusters.algo=star")
+        "labels are not a fixpoint; raise maxIter, or use ccStar for high-diameter graphs")
     (labels, iter)
     }
   }
@@ -219,17 +217,17 @@ object Pipeline {
     val e0 = edges.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst"))
     val sym0 = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
-    val seed1 = sym0.groupBy(col("src")).agg(min(col("dst")).as("mn"))
-      .select(col("src").as("id"), least(col("mn"), col("src")).as("slabel"))
-      .localCheckpoint(false)
+    // The two relabel joins below broadcast the lazy seed checkpoint
+    // as two concurrent jobs (see Tables.lazyCheckpoint).
+    val seed1 = Tables.lazyCheckpoint(sym0.groupBy(col("src")).agg(min(col("dst")).as("mn"))
+      .select(col("src").as("id"), least(col("mn"), col("src")).as("slabel")))
     // Two pointer jumps on the seed forest (slabel ∘ slabel): each is
     // ONE node-sized self-join and squares the hop horizon — the seed
     // map stays "u → some member of u's component" (closed under
     // composition), which is the only property contraction needs.
     val seed = (1 to 2).foldLeft(seed1) { (sd, _) =>
-      sd.join(bc(sd.select(col("id").as("slabel"), col("slabel").as("l2"))), Seq("slabel"))
-        .select(col("id"), col("l2").as("slabel"))
-        .localCheckpoint(false)
+      Tables.lazyCheckpoint(sd.join(bc(sd.select(col("id").as("slabel"), col("slabel").as("l2"))), Seq("slabel"))
+        .select(col("id"), col("l2").as("slabel")))
     }
     var e = sym0
       .join(bc(seed.select(col("id").as("src"), col("slabel").as("ls"))), "src")

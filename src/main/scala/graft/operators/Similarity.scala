@@ -320,7 +320,7 @@ object Similarity {
   def graphRecall(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("probe_id")).orderBy(col("cos").desc, col("vec_id"))
     val truth = scored(s, dir).withColumn("rnk", row_number().over(w))
-      .where(col("rnk") <= 3).select(col("probe_id"), col("vec_id")).localCheckpoint(false)
+      .where(col("rnk") <= 3).select(col("probe_id"), col("vec_id")).transform(Tables.lazyCheckpoint(_))
     def card(stage: String, edges: DataFrame): DataFrame = {
       val pe = edges.where(col("src") < 10)
         .select(col("src").as("probe_id"), col("dst").as("vec_id"))
@@ -335,7 +335,7 @@ object Similarity {
     // the descent round read it, and before r9 each card rebuilt the
     // full adaptive-SRP bucket join from scratch (the graph stage ran
     // twice and its cached corpus frames stayed pinned).
-    val g0 = nnGraphEdges(s, dir).select("src", "dst").localCheckpoint(false)
+    val g0 = Tables.lazyCheckpoint(nnGraphEdges(s, dir).select("src", "dst"))
     card("graph", g0)
       .unionAll(card("descent", nnDescentFrom(g0, s, dir)))
   }

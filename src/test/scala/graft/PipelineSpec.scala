@@ -46,14 +46,37 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("star variant reproduces the label-prop clusters on the real LSH pair graph") {
-    val base = Pipeline.dedupClusters(spark, sfDir).collect()
-      .map(r => (r.getAs[Long]("cluster_id"), r.getAs[Long]("doc_id"), r.getAs[Long]("n_docs"))).toSet
-    spark.conf.set("graft.clusters.algo", "star")
+    val pairs = Dedup.minhashLsh(spark, sfDir)
+    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
+      .cache()
+    val n = Some(edges.count())
+    def clusters(labels: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+      labels.collect().map(r => (r.getAs[Long]("label"), r.getAs[Long]("id"))).toSet
     try {
-      val star = Pipeline.dedupClusters(spark, sfDir).collect()
-        .map(r => (r.getAs[Long]("cluster_id"), r.getAs[Long]("doc_id"), r.getAs[Long]("n_docs"))).toSet
+      val base = clusters(Pipeline.ccLabelProp(edges, edgeRowsHint = n)._1)
+      assert(base.nonEmpty)
+      val star = clusters(Pipeline.ccStar(edges, edgeRowsHint = n)._1)
       assert(star == base, "the two CC algorithms must reach the same fixpoint")
-    } finally spark.conf.unset("graft.clusters.algo")
+    } finally edges.unpersist()
+  }
+
+  test("a lazy checkpoint keeps its source plan's SQL metrics alive after its lineage is cut") {
+    // built in a method, so no local keeps the source frame reachable
+    def cut(): (org.apache.spark.sql.DataFrame, Seq[java.lang.ref.WeakReference[AnyRef]]) = {
+      val src = spark.range(0, 1000, 1, 4).groupBy((col("id") % 7).as("k")).count()
+      val cp = Tables.pin(src)
+      (cp, src.queryExecution.executedPlan.collect { case p => p.metrics.values }.flatten
+        .map(new java.lang.ref.WeakReference[AnyRef](_)))
+    }
+    val (cp, metrics) = cut()
+    assert(metrics.nonEmpty)
+    // materializes the checkpoint, which truncates its lineage
+    assert(cp.count() == 7)
+    System.gc()
+    assert(metrics.forall(_.get != null),
+      "a job still computing the checkpoint from its lineage would report collected metrics")
+    assert(cp.count() == 7)
   }
 
   test("stratified sample keeps rate-consistent counts per stratum") {

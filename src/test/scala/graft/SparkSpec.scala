@@ -11,18 +11,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // Delta against GraftSession: temp warehouse; no extension, so specs hit the ensureRegistered fallback.
+  lazy val session: SparkSession = GraftSession.local(4, Map(
+    "spark.sql.warehouse.dir" -> java.nio.file.Files.createTempDirectory("graft-wh").toString,
+    "spark.sql.extensions" -> ""))
 }
