@@ -43,12 +43,19 @@ object Compat {
     // type bits make the size rule fall out of the mask algebra with
     // no extra code. The model's name is constant, so the :280 name
     // rule has no data to fire on (cited, not modeled).
-    "fixed8" -> 256, "fixed16" -> 512)
+    "fixed8" -> 256, "fixed16" -> 512,
+    // `ref`'s type name when no branch list applies (a NULL k falls
+    // through every residue): the oracle's [[sqlBranches]] reads it as
+    // a scalar type named 'union' that only itself accepts.
+    "union" -> 1024)
 
   /** OR of every type bit — the complement space for the transitive
     * scans' cannot-decode accounting.
     */
   private val allTypeBits: Int = typeBits.map(_._2).reduce(_ | _)
+
+  /** Width of a branch mask in bits. */
+  private val typeWidth: Int = typeBits.size
 
   /** Scala-side twins of the mask algebra, for candidate schemas
     * whose branch sets are compile-time constants.
@@ -257,36 +264,93 @@ object Compat {
     }.toDF("case_id", "description", "mode", "compatible", "n_messages")
   }
 
-  /** Data-driven compatibility checking over the whole corpus
-    * (checker.go:39 Check iterates a subject's version history;
-    * avro/checker.go:102 record rule, :304 promotions): every
-    * registration (events row) is a schema version for its subject
-    * (user_id), version N is BACKWARD-checked against version N-1,
-    * and the record rule is evaluated RELATIONALLY — reader fields
-    * left-join writer fields on (subject, version, field) and each
-    * row tests the three violation conditions (missing+required,
-    * non-promotable type change, required-reads-nullable). No UDF:
-    * the checker itself is the join + conditional aggregation.
-    *
-    * The per-version field set derives deterministically from the
-    * payload (`k`), so both engines reconstruct identical histories:
-    * `id` bigint required; `name` string, nullability flips with k;
-    * `email` string optional, present iff k%3=0; `score` int/bigint
-    * by k%4 (exercising the int→bigint promotion in one direction
-    * and the narrowing violation in the other).
-    *
-    * Scale shape: ONE shuffle (the subject window). Each version
-    * carries its field set as an array column; the writer (previous
-    * version) arrives via lag() over the same window, and the
-    * reader↔writer field match is a row-local higher-order `filter`
-    * over a ≤4-element array — no self-join, no second scan, no
-    * (subject, version, fname) shuffle. History lookup as a window
-    * function instead of a join is the shape that survives 100 TB:
-    * version chains are contiguous in their subject partition.
+  /** Every struct member of the field model. */
+  private[graft] val allMembers: Seq[String] = Seq(
+    "fname", "ftype", "fnull", "fdefault", "fsyms", "funion", "fmask",
+    "falias", "present")
+
+  /** The members the latest-version intelligence tools read. */
+  private[graft] val latestMembers: Seq[String] = Seq(
+    "fname", "ftype", "fnull", "fdefault", "fsyms", "present")
+
+  /** The version order of a subject's registrations: (ts, event_id).
+    * Every window over it shares one sort, that of the row_number
+    * window that defines `version`.
     */
+  private val versionOrder =
+    Window.partitionBy(col("subject")).orderBy(col("ts"), col("event_id"))
+
+  /** The slot model: each slot's members as expressions over `k`, in
+    * `flds_all` order. [[fieldArrays]] builds the structs from it; the
+    * packed profile ([[ppSlot]]) reads the expressions directly, so
+    * Catalyst folds each slot's constant members away instead of
+    * reading them back out of a struct.
+    */
+  private val slotModel: Seq[Map[String, Column]] = {
+    val nullStr = lit(null).cast("string")
+    // fmask: the field's branch-set bitmask ([[typeBits]]), baked in
+    // as an integer when-chain at model-build time — every residue's
+    // branch set is statically known, so the scans' type algebra
+    // never touches an array or a string at probe time. `present` is
+    // never NULL: a NULL k leaves a conditional field ABSENT, as the
+    // oracle's `WHERE k % 3 = 0` drops it, so every scan sees absence.
+    def f(name: String, ftype: Column, fnull: Column, present: Column,
+          fmask: Column, fdefault: Column = nullStr, fsyms: Column = nullStr,
+          funion: Column = nullStr, fname: Column = null,
+          falias: Column = nullStr): Map[String, Column] =
+      Map("fname" -> Option(fname).getOrElse(lit(name)),
+        "ftype" -> ftype, "fnull" -> fnull, "fdefault" -> fdefault,
+        "fsyms" -> fsyms, "funion" -> funion, "fmask" -> fmask,
+        "falias" -> falias, "present" -> coalesce(present, lit(false)))
+    Seq(
+      f("id", lit("bigint"), lit(false), lit(true), lit(2)),
+      f("name", lit("string"), col("k") % lit(2) === 0, lit(true), lit(16)),
+      f("email", lit("string"), lit(true), col("k") % lit(3) === 0, lit(16)),
+      f("score", when(col("k") % lit(4) < 2, "int").otherwise("bigint"), lit(false), lit(true),
+        when(col("k") % lit(4) < 2, 1).otherwise(2)),
+      f("status", lit("enum"), lit(false), col("k") % lit(3) < 2, lit(64),
+        when(col("k") % lit(5) < 3, "A"),
+        when(col("k") % lit(2) === 0, "A,B").otherwise("A,B,C")),
+      f("ratio",
+        when(col("k") % lit(9) < 2, "int").when(col("k") % lit(9) < 4, "bigint")
+          .when(col("k") % lit(9) < 6, "float").otherwise("double"),
+        lit(true), lit(true),
+        when(col("k") % lit(9) < 2, 1).when(col("k") % lit(9) < 4, 2)
+          .when(col("k") % lit(9) < 6, 4).otherwise(8)),
+      f("payload", when(col("k") % lit(13) < 7, "string").otherwise("bytes"),
+        lit(true), lit(true),
+        when(col("k") % lit(13) < 7, 16).otherwise(32)),
+      f("ref",
+        when(col("k") % lit(6) === 0, "int")
+          .when(col("k") % lit(6) === 1, "string").otherwise("union"),
+        lit(true), lit(true),
+        when(col("k") % lit(6) === 0, 1).when(col("k") % lit(6) === 1, 16)
+          .when(col("k") % lit(6) === 2, 146).when(col("k") % lit(6) === 3, 18)
+          .when(col("k") % lit(6) === 4 || col("k") % lit(6) === 5, 144)
+          .otherwise(1024),
+        nullStr, nullStr,
+        when(col("k") % lit(6) === 4 || col("k") % lit(6) === 5, "null,string")
+          .when(col("k") % lit(6) === 2, "bigint,null,string")
+          .when(col("k") % lit(6) === 3, "bigint,string")),
+      f("token", when(col("k") % lit(23) < 12, "fixed8").otherwise("fixed16"),
+        lit(true), lit(true),
+        when(col("k") % lit(23) < 12, 256).otherwise(512)),
+      // the ALIAS slot (avro/checker.go:112-:125): its NAME flips
+      // nick↔nickname with k, and it sometimes declares the other
+      // name as an alias — a rename is rescued iff either side
+      // does. Required and defaultless so an unrescued rename hits
+      // the missing-reader-field rule. Type constant: alias
+      // matching and type resolution stay orthogonal in the model.
+      f("nick", lit("string"), lit(false), lit(true), lit(16),
+        fname = when(col("k") % lit(29) < 15, "nick").otherwise("nickname"),
+        falias = when(col("k") % lit(31) < 16,
+          when(col("k") % lit(29) < 15, "nickname").otherwise("nick")))
+    )
+  }
+
   /** Shared synthetic schema-version field model: every events row is
     * a registration for its subject (user_id); the field set derives
-    * deterministically from the payload `k` (see [[compatScan]]).
+    * deterministically from the payload `k`.
     * Output: (subject, version, flds array, w_flds = previous
     * version's array via lag — NULL for version 1). ONE shuffle (the
     * subject window); everything downstream of it is row-local.
@@ -312,37 +376,18 @@ object Compat {
     * its breaking reverse, union widening/narrowing, and
     * promotion-into-a-union-branch (int writer vs bigint branch) all
     * fire both ways in real data.
-    */
-  private[graft] val allMembers: Seq[String] = Seq(
-    "fname", "ftype", "fnull", "fdefault", "fsyms", "funion", "fmask",
-    "falias", "present")
-
-  private[graft] def fieldArrays(s: SparkSession, dir: String): DataFrame =
-    fieldArrays(s, dir, allMembers, withLag = true)
-
-  /** `slim = true` builds the SAME field model but projects only the
-    * struct members the latest-version intelligence consumers read
-    * (fname/ftype/fnull/fdefault/fsyms/present) and skips the lag
-    * window entirely — no w_all/w_flds.
-    */
-  private[graft] def fieldArrays(s: SparkSession, dir: String, slim: Boolean): DataFrame =
-    if (slim)
-      fieldArrays(s, dir,
-        Seq("fname", "ftype", "fnull", "fdefault", "fsyms", "present"),
-        withLag = false)
-    else fieldArrays(s, dir)
-
-  /** Member-pruned model build: only the listed struct members are
+    *
+    * Member-pruned build: only the listed struct members are
     * constructed, and the lag window (w_all/w_flds) is built only
     * when asked for. Catalyst prunes unused TOP-LEVEL columns, but
     * members of an array-of-struct built behind a higher-order
     * filter + explode are constructed whether read or not, so the
     * pruning has to happen at model build. `present` is always
-    * included (the set views filter on it). The positional scans use
-    * the full model — their test-mask algebra reads every member.
+    * included (the set views filter on it).
     */
   private[graft] def fieldArrays(s: SparkSession, dir: String,
-                                 members: Seq[String], withLag: Boolean): DataFrame = {
+                                 members: Seq[String] = allMembers,
+                                 withLag: Boolean = true): DataFrame = {
     val keep = members.toSet + "present"
     // spreadByIfNarrow on the window key: on the driver's single-row-
     // group events file the JSON parse serialized on the one scan task
@@ -357,68 +402,10 @@ object Compat {
       col("subject"))
       .select(col("subject"), col("ts"), col("event_id"),
         get_json_object(col("props"), "$.k").cast("bigint").as("k"))
-    val w = Window.partitionBy(col("subject")).orderBy(col("ts"), col("event_id"))
-    val nullStr = lit(null).cast("string")
-    // fmask: the field's branch-set bitmask ([[typeBits]]), baked in
-    // as an integer when-chain at model-build time — every residue's
-    // branch set is statically known, so the scans' type algebra
-    // never touches an array or a string at probe time.
-    def f(name: String, ftype: Column, fnull: Column, present: Column,
-          fmask: Column, fdefault: Column = nullStr, fsyms: Column = nullStr,
-          funion: Column = nullStr, fname: Column = null,
-          falias: Column = nullStr): Column = {
-      val all: Seq[(String, Column)] = Seq(
-        "fname" -> Option(fname).getOrElse(lit(name)),
-        "ftype" -> ftype, "fnull" -> fnull, "fdefault" -> fdefault,
-        "fsyms" -> fsyms, "funion" -> funion, "fmask" -> fmask,
-        "falias" -> falias, "present" -> present)
-      struct(all.collect { case (n, c) if keep(n) => c.as(n) }: _*)
-    }
     val base = ev
-      .withColumn("version", row_number().over(w))
-      .withColumn("flds_all", array(
-        f("id", lit("bigint"), lit(false), lit(true), lit(2)),
-        f("name", lit("string"), col("k") % lit(2) === 0, lit(true), lit(16)),
-        f("email", lit("string"), lit(true), col("k") % lit(3) === 0, lit(16)),
-        f("score", when(col("k") % lit(4) < 2, "int").otherwise("bigint"), lit(false), lit(true),
-          when(col("k") % lit(4) < 2, 1).otherwise(2)),
-        f("status", lit("enum"), lit(false), col("k") % lit(3) < 2, lit(64),
-          when(col("k") % lit(5) < 3, "A"),
-          when(col("k") % lit(2) === 0, "A,B").otherwise("A,B,C")),
-        f("ratio",
-          when(col("k") % lit(9) < 2, "int").when(col("k") % lit(9) < 4, "bigint")
-            .when(col("k") % lit(9) < 6, "float").otherwise("double"),
-          lit(true), lit(true),
-          when(col("k") % lit(9) < 2, 1).when(col("k") % lit(9) < 4, 2)
-            .when(col("k") % lit(9) < 6, 4).otherwise(8)),
-        f("payload", when(col("k") % lit(13) < 7, "string").otherwise("bytes"),
-          lit(true), lit(true),
-          when(col("k") % lit(13) < 7, 16).otherwise(32)),
-        f("ref",
-          when(col("k") % lit(6) === 0, "int")
-            .when(col("k") % lit(6) === 1, "string").otherwise("union"),
-          lit(true), lit(true),
-          when(col("k") % lit(6) === 0, 1).when(col("k") % lit(6) === 1, 16)
-            .when(col("k") % lit(6) === 2, 146).when(col("k") % lit(6) === 3, 18)
-            .otherwise(144),
-          nullStr, nullStr,
-          when(col("k") % lit(6) === 4 || col("k") % lit(6) === 5, "null,string")
-            .when(col("k") % lit(6) === 2, "bigint,null,string")
-            .when(col("k") % lit(6) === 3, "bigint,string")),
-        f("token", when(col("k") % lit(23) < 12, "fixed8").otherwise("fixed16"),
-          lit(true), lit(true),
-          when(col("k") % lit(23) < 12, 256).otherwise(512)),
-        // the ALIAS slot (avro/checker.go:112-:125): its NAME flips
-        // nick↔nickname with k, and it sometimes declares the other
-        // name as an alias — a rename is rescued iff either side
-        // does. Required and defaultless so an unrescued rename hits
-        // the missing-reader-field rule. Type constant: alias
-        // matching and type resolution stay orthogonal in the model.
-        f("nick", lit("string"), lit(false), lit(true), lit(16),
-          fname = when(col("k") % lit(29) < 15, "nick").otherwise("nickname"),
-          falias = when(col("k") % lit(31) < 16,
-            when(col("k") % lit(29) < 15, "nickname").otherwise("nick")))
-      ))
+      .withColumn("version", row_number().over(versionOrder))
+      .withColumn("flds_all", array(slotModel.map(m =>
+        struct(allMembers.filter(keep).map(n => m(n).as(n)): _*)): _*))
       .withColumn("flds", filter(col("flds_all"), fld => fld("present")))
     // present-only views for consumers that think in field SETS
     // (diffs, latest-version tools); the scans use the positional
@@ -426,17 +413,16 @@ object Compat {
     // filter-by-fname probe is an interpreted HOF.
     if (!withLag) base
     else base
-      .withColumn("w_all", lag(col("flds_all"), 1).over(w))
+      .withColumn("w_all", lag(col("flds_all"), 1).over(versionOrder))
       .withColumn("w_flds", filter(col("w_all"), fld => fld("present")))
   }
 
-  /** Number of slots in the positional field-model array. Must match
-    * the `flds_all` array literal in [[fieldArrays]]; the named
+  /** Number of slots in the positional field-model array. The named
     * constants below pin the slots whose INDEX is load-bearing
     * (anything reading `flds_all(i)` positionally). A spec asserts
     * slot names against these ([[graft.CompatSpec]]).
     */
-  private[graft] val nSlots = 10
+  private[graft] val nSlots = slotModel.size
   private[graft] val refSlot = 7
   private[graft] val nickSlot = 9
 
@@ -489,65 +475,97 @@ object Compat {
       |  SELECT *, CASE WHEN fname IN ('nick', 'nickname') THEN 'nick' ELSE fname END AS fid
       |  FROM fields0)""".stripMargin
 
-  /** Per-reader-field rows for version N vs N-1 with each Avro rule's
-    * individual verdict as a flag column — the shared core of
-    * [[compatScan]] (which aggregates) and [[compatExplain]] (which
-    * emits one diagnosis row per violated rule).
-    *
-    * avro/checker.go rules: (:129) a reader field missing from the
-    * writer breaks ONLY when required AND defaultless — a default
-    * rescues it; (:182) an enum writer symbol unknown to the reader
-    * breaks unless the reader declares an enum default; type
-    * resolution is the branch-mask membership test — the union rules (:224/:247/:263)
-    * and the full promotion matrix (:304) as one branch-set
-    * membership test. `v_type_narrowed` sub-classifies a type break
-    * whose REVERSE direction would resolve (pure narrowing — the
-    * author should have widened); the rest are genuine rewrites.
+  /** Version N's slots paired positionally with version N-1's: one
+    * row per present slot of the `reader` array (`rf`) with the same
+    * slot of the `writer` array (`wf`). Both arrays share the fixed
+    * nSlots-wide layout, so the reader↔writer field match is
+    * element_at by the posexploded index (codegen'd), not a
+    * filter-by-fname HOF probe. BACKWARD reads (flds_all, w_all);
+    * FORWARD swaps the roles: the OLD version's slot reads the current
+    * version's.
     */
-  private def backwardFieldChecks(s: SparkSession, dir: String): DataFrame = {
-    val versioned = fieldArrays(s, dir).filter(col("version") > 1)
-    // Positional pairing: slot i of version N vs slot i of N-1 —
-    // both arrays share the fixed nSlots-wide layout, so the reader↔writer
-    // field match is element_at by the posexploded index (codegen'd),
-    // not a filter-by-fname HOF probe, and each flag is evaluated
-    // once per surviving exploded row, not once per slot per row.
-    val perField = versioned
-      .select(col("subject"), col("version"), col("w_all"),
-        posexplode(col("flds_all")).as(Seq("pos", "fld")))
-      .where(col("fld.present"))
-      .withColumn("wf", element_at(col("w_all"), col("pos") + 1))
-    val r = col("fld")
-    val wf = col("wf")
-    // alias-aware resolution (avro/checker.go:112-:125): the slot
-    // pair matches when the names agree OR either side's alias
-    // covers the other's name (eqNullSafe — a NULL alias is "no
-    // alias", not unknown). For every fixed-name slot this reduces
-    // to plain presence.
-    val wPresent = wf("present") &&
-      (wf("fname") === r("fname") ||
-        r("falias") <=> wf("fname") || wf("falias") <=> r("fname"))
-    val vType = wPresent &&
-      wf("fmask").bitwiseAND(acceptsMaskOf(r("fmask"))) =!= wf("fmask")
-    perField.select(col("subject"), col("version"), col("fld.fname").as("fname"),
-      (!wPresent && !r("fnull") && r("fdefault").isNull).as("v_missing_default"),
-      vType.as("v_type_change"),
-      (vType && r("fmask").bitwiseAND(acceptsMaskOf(wf("fmask"))) === r("fmask"))
-        .as("v_type_narrowed"),
-      (wPresent && !r("fnull") && wf("fnull")).as("v_required_reads_nullable"),
-      (r("ftype") === "enum" && wPresent && wf("ftype") === "enum" &&
+  private def slotPairs(s: SparkSession, dir: String,
+                        reader: String, writer: String): DataFrame =
+    fieldArrays(s, dir).filter(col("version") > 1)
+      .select(col("subject"), col("version"), col(writer),
+        posexplode(col(reader)).as(Seq("pos", "rf")))
+      .where(col("rf.present"))
+      .select(col("subject"), col("version"), col("rf"),
+        element_at(col(writer), col("pos") + 1).as("wf"))
+
+  /** The avro/checker.go rules on one (reader, writer) slot pair, each
+    * as a flag named by its violation class: (:129) a reader field
+    * missing from the writer breaks ONLY when required AND defaultless
+    * — a default rescues it; type resolution is the branch-mask
+    * membership test — the union rules (:224/:247/:263) and the full
+    * promotion matrix (:304) as one test — split into `type_narrowed`
+    * (the REVERSE direction would resolve: pure narrowing, the author
+    * should have widened) and `type_change` (a genuine rewrite); a
+    * required reader breaks on a nullable writer; (:182) an enum writer
+    * symbol unknown to the reader breaks unless the reader declares an
+    * enum default. The promotion direction follows the roles, so
+    * FORWARD is this function with the pair swapped.
+    */
+  private def pairRules(r: Column, w: Column): Seq[(String, Column)] = {
+    // alias-aware resolution (avro/checker.go:112-:125): the slot pair
+    // matches when the names agree OR either side's alias covers the
+    // other's name (eqNullSafe — a NULL alias is "no alias", not
+    // unknown). For every fixed-name slot this reduces to presence.
+    val matched = w("present") &&
+      (w("fname") === r("fname") ||
+        r("falias") <=> w("fname") || w("falias") <=> r("fname"))
+    val typeBreak = matched &&
+      w("fmask").bitwiseAND(acceptsMaskOf(r("fmask"))) =!= w("fmask")
+    val narrowing = r("fmask").bitwiseAND(acceptsMaskOf(w("fmask"))) === r("fmask")
+    Seq(
+      "missing_default" -> (!matched && !r("fnull") && r("fdefault").isNull),
+      "type_narrowed" -> (typeBreak && narrowing),
+      "type_change" -> (typeBreak && !narrowing),
+      "required_reads_nullable" -> (matched && !r("fnull") && w("fnull")),
+      "enum_symbols" -> (r("ftype") === "enum" && matched && w("ftype") === "enum" &&
         r("fdefault").isNull &&
-        size(array_except(split(wf("fsyms"), ","), split(r("fsyms"), ","))) > 0)
-        .as("v_enum_symbols"))
+        size(array_except(split(w("fsyms"), ","), split(r("fsyms"), ","))) > 0))
   }
 
-  def compatScan(s: SparkSession, dir: String): DataFrame = {
-    val violation = col("v_missing_default") || col("v_type_change") ||
-      col("v_required_reads_nullable") || col("v_enum_symbols")
-    backwardFieldChecks(s, dir)
-      .groupBy(col("subject"), col("version"))
-      .agg(count(lit(1)).as("n_fields"),
-        sum(when(violation, 1).otherwise(0)).as("n_violations"))
-      .withColumn("compatible", col("n_violations") === 0)
+  /** One (subject, version) verdict over [[slotPairs]]: the slot count
+    * and how many slots break some rule of [[pairRules]].
+    */
+  private def stepVerdict(pairs: DataFrame, nName: String, okName: String): DataFrame =
+    pairs.groupBy(col("subject"), col("version"))
+      .agg(count(lit(1)).as(nName),
+        sum(when(pairRules(col("rf"), col("wf")).map(_._2).reduce(_ || _), 1L)
+          .otherwise(0L)).as("n_violations"))
+      .withColumn(okName, col("n_violations") === 0)
+
+  /** Data-driven BACKWARD compatibility over the whole corpus
+    * (checker.go:39 Check iterates a subject's version history): every
+    * registration (events row) is a schema version for its subject
+    * (user_id), and version N is checked against version N-1 by
+    * [[pairRules]] over [[slotPairs]]. No UDF and no self-join: the
+    * writer arrives via lag() over the one subject window — the shape
+    * that survives 100 TB, since version chains are contiguous in their
+    * subject partition.
+    */
+  def compatScan(s: SparkSession, dir: String): DataFrame =
+    stepVerdict(slotPairs(s, dir, "flds_all", "w_all"), "n_fields", "compatible")
+
+  /** One (subject, version, fname, violation) row per fired rule —
+    * the classification stated ONCE and shared by [[compatExplain]]
+    * and [[ruleFreq]] (the SQL side shares `explainOracle` the same
+    * way), so a new violation class cannot silently diverge between
+    * the listing and its frequency rollup.
+    */
+  private def violationHits(s: SparkSession, dir: String): DataFrame = {
+    // Flags first, in a codegen'd projection: the `filter` HOF below is
+    // interpreted, and with the rules inlined into it compat_explain
+    // took about twice the task CPU at sf0.1.
+    val rules = pairRules(col("rf"), col("wf"))
+    slotPairs(s, dir, "flds_all", "w_all")
+      .select(Seq(col("subject"), col("version"), col("rf.fname").as("fname")) ++
+        rules.map { case (name, fired) => fired.as(name) }: _*)
+      .select(col("subject"), col("version"), col("fname"),
+        explode(filter(array(rules.map { case (name, _) => when(col(name), name) }: _*),
+          x => x.isNotNull)).as("violation"))
   }
 
   /** explain_compatibility_failure + suggest_compatible_change
@@ -556,27 +574,11 @@ object Compat {
     * version step, one diagnosis row (subject, version, fname,
     * violation class, suggestion) — the corpus-wide face of the
     * reference's per-message explanation loop, re-expressed as a
-    * class → suggestion mapping over [[backwardFieldChecks]]' flag
-    * columns. Entirely row-local past the shared single window
-    * shuffle; a field violating two rules yields two rows, as the
-    * reference yields two messages.
+    * class → suggestion mapping over [[pairRules]]' named flags.
+    * Entirely row-local past the shared single window shuffle; a field
+    * violating two rules yields two rows, as the reference yields two
+    * messages.
     */
-  /** One (subject, version, fname, violation) row per fired rule —
-    * the classification stated ONCE and shared by [[compatExplain]]
-    * and [[ruleFreq]] (the SQL side shares `explainOracle` the same
-    * way), so a new violation class cannot silently diverge between
-    * the listing and its frequency rollup.
-    */
-  private def violationHits(s: SparkSession, dir: String): DataFrame =
-    backwardFieldChecks(s, dir)
-      .select(col("subject"), col("version"), col("fname"),
-        explode(filter(array(
-          when(col("v_missing_default"), "missing_default"),
-          when(col("v_type_narrowed"), "type_narrowed"),
-          when(col("v_type_change") && !col("v_type_narrowed"), "type_change"),
-          when(col("v_required_reads_nullable"), "required_reads_nullable"),
-          when(col("v_enum_symbols"), "enum_symbols")), x => x.isNotNull)).as("violation"))
-
   def compatExplain(s: SparkSession, dir: String): DataFrame =
     // ONE pass over the shared checks (a 4-way union of filtered
     // selects re-ran the window scan per class — 6s vs 1.9s for the
@@ -608,15 +610,9 @@ object Compat {
     * shuffle shape.
     */
   def enumDrift(s: SparkSession, dir: String): DataFrame = {
-    val versioned = fieldArrays(s, dir).filter(col("version") > 1)
-    val perField = versioned
-      .select(col("subject"), col("version"), col("w_all"),
-        posexplode(col("flds_all")).as(Seq("pos", "fld")))
-      .where(col("fld.present"))
-      .withColumn("wf", element_at(col("w_all"), col("pos") + 1))
-    val r = col("fld")
+    val r = col("rf")
     val wf = col("wf")
-    perField
+    slotPairs(s, dir, "flds_all", "w_all")
       .where(r("ftype") === "enum" && wf("present") && wf("ftype") === "enum" &&
         wf("fname") === r("fname"))
       .select(col("subject"), col("version"), r("fname").as("fname"),
@@ -664,319 +660,60 @@ object Compat {
     * writer array. Promotion direction flips accordingly (writer
     * int → reader bigint stays legal).
     */
-  def compatForwardScan(s: SparkSession, dir: String): DataFrame = {
-    val versioned = fieldArrays(s, dir).filter(col("version") > 1)
-    // Roles swapped, same Avro rules and the same positional pairing
-    // as [[backwardFieldChecks]]: the OLD version's slot (reader)
-    // checks the current version's slot (writer). Promotion
-    // direction flips with the roles automatically (the mask
-    // predicate is stated reader-vs-writer).
-    val perField = versioned
-      .select(col("subject"), col("version"), col("flds_all"),
-        posexplode(col("w_all")).as(Seq("pos", "rfld")))
-      .where(col("rfld.present"))
-      .withColumn("wf", element_at(col("flds_all"), col("pos") + 1))
-    val r = col("rfld")
-    val wf = col("wf")
-    // same alias-aware resolution as the backward scan (symmetric)
-    val wPresent = wf("present") &&
-      (wf("fname") === r("fname") ||
-        r("falias") <=> wf("fname") || wf("falias") <=> r("fname"))
-    val violation =
-      (!wPresent && !r("fnull") && r("fdefault").isNull) ||
-        (wPresent &&
-          wf("fmask").bitwiseAND(acceptsMaskOf(r("fmask"))) =!= wf("fmask")) ||
-        (wPresent && !r("fnull") && wf("fnull")) ||
-        (r("ftype") === "enum" && wPresent && wf("ftype") === "enum" &&
-          r("fdefault").isNull &&
-          size(array_except(split(wf("fsyms"), ","), split(r("fsyms"), ","))) > 0)
-    perField
-      .groupBy(col("subject"), col("version"))
-      .agg(count(lit(1)).as("n_reader_fields"),
-        sum(when(violation, 1L).otherwise(0L)).as("n_violations"))
-      .withColumn("forward_ok", col("n_violations") === 0)
-  }
+  def compatForwardScan(s: SparkSession, dir: String): DataFrame =
+    stepVerdict(slotPairs(s, dir, "w_all", "flds_all"), "n_reader_fields", "forward_ok")
 
-  /** BACKWARD_TRANSITIVE over the corpus (modes.go; checker.go:39
-    * iterates ALL earlier versions, not just N-1). The naive
-    * formulation pairs every reader version with every earlier
-    * writer — O(V²) per subject, the shape that dies on long
-    * histories. Re-expressed as O(V) running aggregates per
-    * (subject, field): a reader field is incompatible with SOME
-    * earlier writer iff
-    *   - it is required and was absent from at least one earlier
-    *     version (presence count < version-1), or
-    *   - an earlier occurrence carried a conflicting type (running
-    *     per-type counts; int→bigint stays promotable), or
-    *   - it is required but some earlier writer declared it nullable
-    *     (running nullable count).
-    * One window shuffle total. The oracle states the same semantics
-    * pairwise (readers × earlier versions) — parity proves the
-    * rewrite.
-    */
   // ---------------------------------------------------------------
-  // Shared packed-int plumbing for the transitive scans. The r5 form
-  // posexploded the slot grid (10× the rows) and windowed it by
-  // (subject, pos) with the slot STRUCTS — including four string
-  // columns — riding through a second shuffle+sort; at bench scale
-  // AQE correctly coalesces these small shuffles to one task, so all
-  // of it ran single-threaded (measured: 7.5→15.5s when r5 widened
-  // the structs). Unexploded, the same algebra is [[nSlots]] bit_or
-  // window expressions over ONE subject window on int arrays — a
-  // tenth of the rows, no strings past the scan, no second shuffle,
-  // no final groupBy (each row already IS a (subject, version)).
+  // Packed slot profile, shared by the two transitive scans and
+  // [[compatGate]]: one int per slot carrying everything any verdict
+  // tests: the branch mask, then its promotion-closure accept mask
+  // (precomputed once — acceptsMaskOf references its argument ~6x, so
+  // inlining it per USE site was a major term in the expression
+  // blowup), [[typeWidth]] bits each, then one bit per model fact —
+  // the ten facts fill the int's remaining bits. `fnull` can be
+  // NULL (the `name` slot on a NULL k), so it packs as PAIRED bits
+  // (REQ/NUL) where a NULL sets neither: every clause reads the bit
+  // whose set-state implies the three-valued conjunct was definitely
+  // true. `present` is never NULL ([[fieldArrays]]), so absence is
+  // simply an unset PRES bit.
   //
-  // The rule set itself compiles to a TEST-MASK algebra, evaluated
-  // per slot at model-build time so the windowed stage is three
-  // integer ops per slot (JIT-friendly — giant CASE WHEN towers here
-  // previously blew HotSpot's huge-method limit and ran interpreted):
+  // The transitive rule sets compile to a TEST-MASK algebra over this
+  // profile, evaluated per slot over ONE subject window on int arrays:
   //   hb : the bits this version contributes to the running history
-  //        (branch mask + existence facts; one bit marks ABSENCE,
-  //        which subsumes the former presence-count window), and
+  //        (branch mask + existence [[fact]] bits; one marks ABSENCE), and
   //   tm : the bits of accumulated history that would break THIS
   //        version (reader role for BACKWARD_TRANSITIVE, writer role
   //        for FORWARD_TRANSITIVE).
   // Violation classes live on disjoint bits, so "some earlier
   // version breaks this one under some rule" is exactly
   //   (bit_or(hb) over earlier versions) & tm ≠ 0.
+  // Stated over the slot STRUCTS instead (string compares per member,
+  // ten slots inlined in one projection), the same algebra made a
+  // generated method HotSpot could not compile (C2 "out of nodes
+  // during split") and ran interpreted: 9.6–10.6 task CPU-s per scan
+  // at sf0.1 on 4 cores, against 0.84–0.99 on the packed profile
+  // built from the slot model's expressions ([[slotModel]]). Exploded per
+  // slot it needed a second (subject, pos) shuffle that AQE coalesced
+  // to one task (7.5→15.5 s).
   // ---------------------------------------------------------------
+  private val ppPres = 1 << (2 * typeWidth) // present
+  private val ppReq = ppPres << 1 // fnull definitely false (required)
+  private val ppNul = ppPres << 2 // fnull definitely true (nullable)
+  private val ppDef = ppPres << 3 // fdefault present
+  private val ppEnum = ppPres << 4 // ftype == enum
+  private val ppWide = ppPres << 5 // fsyms == A,B,C
+  private val ppNarrow = ppPres << 6 // fsyms == A,B
+  private val ppNick = ppPres << 7 // fname == nick
+  private val ppNickname = ppPres << 8 // fname == nickname
+  private val ppAlias = ppPres << 9 // falias declared
 
   private def bitIf(c: Column, bit: Int): Column =
     when(c, lit(bit)).otherwise(lit(0))
 
-  /** Bit i set iff slot i is present — bit_count of it is the
-    * version's field count.
-    */
-  private def presentBits: Column =
-    (0 until nSlots).map(i =>
-      bitIf(col("flds_all")(i)("present"), 1 << i)).reduce(_ + _)
-
-  /** BACKWARD_TRANSITIVE over the corpus (modes.go; checker.go:39
-    * iterates ALL earlier versions, not just N-1). The naive
-    * formulation pairs every reader version with every earlier
-    * writer — O(V²) per subject, the shape that dies on long
-    * histories. Re-expressed as O(V) running aggregates per
-    * (subject, slot): a reader field is incompatible with SOME
-    * earlier writer iff
-    *   - it is required/defaultless and was absent from at least one
-    *     earlier version (presence count < version-1), or
-    *   - some earlier occurrence carried a branch outside this
-    *     reader's promotion-closure accept mask (one bit_or of the
-    *     earlier branch masks — "(OR of history) ⊄ accepts"), or
-    *   - it is required but some earlier writer declared it nullable,
-    *     the vocabulary/alias existence bits riding in the SAME
-    *     bit_or (enum: vocabularies are nested, so "earlier writer
-    *     carries a symbol this reader lacks" is "reader narrow,
-    *     history wide"; alias, checker.go:112-:125: the only
-    *     unreachable history under the two-name model is
-    *     "other-named AND alias-less" — one existence bit per name.
-    *     The oracle states both rules pairwise with real subset /
-    *     name semantics — parity proves the specializations).
-    * All [[nSlots]] slots ride ONE subject window as int arrays; the
-    * per-slot history is [[nSlots]] bit_or window expressions over
-    * the same spec (one sort), the verdict a row-local bit test, and
-    * the output needs no groupBy — a row is already one (subject,
-    * version). The oracle states the same semantics pairwise —
-    * parity proves the rewrite.
-    */
-  // hb: this version's contribution to the history mask when it
-  // plays the WRITER role for later readers — branch bits plus the
-  // was-nullable / wide-vocabulary / other-name-alias-less
-  // existence bits; an ABSENT slot contributes only the absence
-  // bit (the old presence-count window restated: "presence count <
-  // version-1" ⟺ "some earlier version lacked the slot").
-  // Object-level (r11) so [[compatGate]] can ride the same algebra in
-  // its fused single-window pass.
-  private def btHb(i: Int): Column = {
-    val f = col("flds_all")(i)
-    when(f("present"),
-      f("fmask")
-        .bitwiseOR(bitIf(f("fnull"), 1024))
-        .bitwiseOR(bitIf(f("fsyms") === "A,B,C", 2048))
-        .bitwiseOR(bitIf(f("fname") === "nick" && f("falias").isNull, 8192))
-        .bitwiseOR(bitIf(f("fname") === "nickname" && f("falias").isNull, 16384)))
-      .otherwise(lit(32768))
-  }
-
-  // tm, READER role: which history bits break this version's slot.
-  //  - some earlier branch outside my promotion closure (the
-  //    complement of my accept mask within the type-bit space);
-  //  - required: an earlier nullable occurrence (1024) — and if
-  //    also defaultless, an earlier absence (32768);
-  //  - defaultless narrow enum: an earlier wide vocabulary (2048);
-  //  - required+defaultless+alias-less: an earlier alias-less
-  //    occurrence of the OTHER name (8192/16384 crossed).
-  private def btTm(i: Int): Column = {
-    val f = col("flds_all")(i)
-    val reqNoDef = !f("fnull") && f("fdefault").isNull
-    when(f("present"),
-      (lit(allTypeBits) - acceptsMaskOf(f("fmask")))
-        .bitwiseOR(bitIf(!f("fnull"), 1024))
-        .bitwiseOR(bitIf(f("ftype") === "enum" && f("fdefault").isNull &&
-          f("fsyms") === "A,B", 2048))
-        .bitwiseOR(bitIf(reqNoDef, 32768))
-        .bitwiseOR(bitIf(f("fname") === "nick" && f("falias").isNull && reqNoDef, 16384))
-        .bitwiseOR(bitIf(f("fname") === "nickname" && f("falias").isNull && reqNoDef, 8192)))
-      .otherwise(lit(0))
-  }
-
-  def compatTransitive(s: SparkSession, dir: String): DataFrame =
-    transitiveVerdict(s, dir, btHb, btTm, "transitive_ok")
-
-  /** Shared verdict frame for the two transitive scans: one subject
-    * window, [[nSlots]] bit_or running aggregates over the hb ints,
-    * then the row-local (hist & tm) ≠ 0 per-slot test summed into
-    * (n_fields, n_bad_fields, ok).
-    */
-  private def transitiveVerdict(s: SparkSession, dir: String,
-                                hb: Int => Column, tm: Int => Column,
-                                okName: String): DataFrame = {
-    val base = fieldArrays(s, dir,
-      Seq("fname", "ftype", "fnull", "fdefault", "fsyms", "fmask",
-        "falias", "present"), withLag = false)
-      .select(col("subject"), col("version"), col("ts"), col("event_id"),
-        presentBits.as("pbits"),
-        array((0 until nSlots).map(hb): _*).as("hb"),
-        array((0 until nSlots).map(tm): _*).as("tm"))
-    // version is strictly increasing and distinct within the subject
-    // partition, so this ROWS frame is identical to
-    // RANGE(unboundedPreceding, -1) — a plain running accumulator.
-    // Ordered by (ts, event_id) — the same total order that DEFINED
-    // version — so the row_number window's sort satisfies this spec
-    // and no second per-partition sort is planned (r11).
-    val w = Window.partitionBy(col("subject")).orderBy(col("ts"), col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val windowed = base
-      .withColumn("hist", array((0 until nSlots).map(i =>
-        coalesce(bit_or(col("hb")(i)).over(w), lit(0))): _*))
-      .filter(col("version") > 1)
-    // No trailing global orderBy: range partitioning SAMPLES its
-    // child by re-executing it, doubling the whole plan's cost for a
-    // cosmetic output order the hash-compared oracle never needs —
-    // and a global sort of a 100 TB verdict report is pure waste.
-    windowed.select(col("subject"), col("version"),
-      bit_count(col("pbits")).cast("long").as("n_fields"),
-      (0 until nSlots).map(i =>
-        when(col("hist")(i).bitwiseAND(col("tm")(i)) =!= 0, 1L).otherwise(0L))
-        .reduce(_ + _).as("n_bad_fields"))
-      .withColumn(okName, col("n_bad_fields") === 0)
-  }
-
-  /** FORWARD_TRANSITIVE over the corpus (modes.go:23 — ALL earlier
-    * versions must be able to read data written by version N). The
-    * pairwise formulation is O(V²) readers×writers; re-expressed as
-    * O(V) running per-(subject, field) aggregates like
-    * [[compatTransitive]], with one twist: the breaking condition can
-    * involve a field ABSENT from the writer version (an earlier
-    * reader requires it, defaultless — avro/checker.go:129 with roles
-    * swapped), so the scan runs over the (version × subject-field-
-    * vocabulary) grid, not just the present fields. The vocabulary is
-    * a subjects-sized rollup joined back on the subject key; the grid
-    * probe into the version's field array is row-local.
-    *
-    * A writer version N breaks some earlier reader iff, per vocab
-    * field:
-    *  - absent from N while some earlier occurrence was required and
-    *    defaultless (the reader still expects it);
-    *  - its type at N conflicts with an earlier occurrence's type
-    *    under forward promotion (reader bigint reads writer int, so
-    *    writer int only breaks string readers; writer bigint breaks
-    *    int and string readers; writer string breaks numeric readers);
-    *  - nullable at N while some earlier reader declared it required;
-    *  - its enum vocabulary at N is wider than an earlier defaultless
-    *    reader's (the old reader meets unknown symbols —
-    *    checker.go:182, roles swapped; vocabularies are nested so
-    *    "wider writer vs narrow defaultless reader" is exact).
-    * The oracle states the same semantics pairwise — parity proves
-    * the rewrite.
-    */
-  // hb, READER role this time (forward: earlier versions READ what
-  // version N writes): bits 0-9 accumulate the type bits this
-  // reader CANNOT decode (the complement of its accept mask —
-  // a later writer breaks iff one of its branches intersects); the
-  // higher bits record the existence facts the writer-side rules
-  // test — a required defaultless reader (1024), a required reader
-  // (2048), a narrow defaultless enum reader (4096), an alias-less
-  // required defaultless reader under either name (8192/16384).
-  // Slots never present for a subject contribute nothing, so no
-  // per-subject vocabulary rollup — and its broadcast join — is
-  // needed at all. Object-level (r11) for [[compatGate]]'s fused pass.
-  private def ftHb(i: Int): Column = {
-    val f = col("flds_all")(i)
-    val reqNoDef = !f("fnull") && f("fdefault").isNull
-    when(f("present"),
-      (lit(allTypeBits) - acceptsMaskOf(f("fmask")))
-        .bitwiseOR(bitIf(reqNoDef, 1024))
-        .bitwiseOR(bitIf(!f("fnull"), 2048))
-        .bitwiseOR(bitIf(f("fsyms") === "A,B" && f("fdefault").isNull, 4096))
-        .bitwiseOR(bitIf(f("fname") === "nick" && f("falias").isNull && reqNoDef, 8192))
-        .bitwiseOR(bitIf(f("fname") === "nickname" && f("falias").isNull && reqNoDef, 16384)))
-      .otherwise(lit(0))
-  }
-
-  // tm, WRITER role: version N's slot breaks some earlier reader
-  // iff its branch bits hit a type some reader can't decode, it
-  // went nullable under a required reader (2048), its vocabulary
-  // widened past a narrow defaultless reader (4096), it is
-  // alias-less under a rename that strands the other name's
-  // required defaultless reader (crossed 8192/16384) — or the slot
-  // is ABSENT from N while some required defaultless reader still
-  // expects it (1024).
-  private def ftTm(i: Int): Column = {
-    val f = col("flds_all")(i)
-    when(f("present"),
-      f("fmask")
-        .bitwiseOR(bitIf(f("fnull"), 2048))
-        .bitwiseOR(bitIf(f("fsyms") === "A,B,C", 4096))
-        .bitwiseOR(bitIf(f("fname") === "nick" && f("falias").isNull, 16384))
-        .bitwiseOR(bitIf(f("fname") === "nickname" && f("falias").isNull, 8192)))
-      .otherwise(lit(1024))
-  }
-
-  def compatFTransitive(s: SparkSession, dir: String): DataFrame = {
-    transitiveVerdict(s, dir, ftHb, ftTm, "ftransitive_ok")
-  }
-
-  /** The RegisterSchema admission gate (registry.go CheckCompatibility
-    * + modes.go): each subject's configured compatibility mode is
-    * resolved (GetConfig fallback — here the mode derives
-    * deterministically from the subject id so all seven modes occur
-    * in the corpus), then the modes.go decision matrix
-    * (RequiresBackward :54, RequiresForward :64, IsTransitive :44,
-    * NONE disabling checks :9) picks which of the four verdict
-    * streams gate version N's registration. Composes
-    * [[compatScan]]/[[compatForwardScan]]/[[compatTransitive]]/
-    * [[compatFTransitive]] on their shared (subject, version) key —
-    * the same composition shape as reg_migration over compat_scan.
-    */
-  // ---------------------------------------------------------------
-  // Packed slot-profile plumbing for the fused [[compatGate]]: one
-  // int per slot carrying everything any of the four verdicts tests.
-  // Bits 0-9 the branch mask, 10-19 its promotion-closure accept mask
-  // (precomputed once — acceptsMaskOf references its argument ~6x, so
-  // inlining it per USE site was a major term in the expression
-  // blowup), then paired presence/requiredness bits where the model
-  // boolean is nullable (a NULL sets NEITHER bit, preserving
-  // three-valued logic — see the equivalence notes in compatGate).
-  // ---------------------------------------------------------------
-  private val ppPres = 1 << 20 // present definitely true
-  private val ppAbs = 1 << 21 // present definitely false
-  private val ppReq = 1 << 22 // fnull definitely false (required)
-  private val ppNul = 1 << 23 // fnull definitely true (nullable)
-  private val ppDef = 1 << 24 // fdefault present
-  private val ppEnum = 1 << 25 // ftype == enum
-  private val ppWide = 1 << 26 // fsyms == A,B,C
-  private val ppNarrow = 1 << 27 // fsyms == A,B
-  private val ppNick = 1 << 28 // fname == nick
-  private val ppNickname = 1 << 29 // fname == nickname
-  private val ppAlias = 1 << 30 // falias declared
-
-  private def ppSlot(i: Int): Column = {
-    val f = col("flds_all")(i)
+  private def ppSlot(f: Map[String, Column]): Column =
     f("fmask")
-      .bitwiseOR(shiftleft(acceptsMaskOf(f("fmask")), 10))
+      .bitwiseOR(shiftleft(acceptsMaskOf(f("fmask")), typeWidth))
       .bitwiseOR(bitIf(f("present"), ppPres))
-      .bitwiseOR(bitIf(!f("present"), ppAbs))
       .bitwiseOR(bitIf(!f("fnull"), ppReq))
       .bitwiseOR(bitIf(f("fnull"), ppNul))
       .bitwiseOR(bitIf(f("fdefault").isNotNull, ppDef))
@@ -986,15 +723,158 @@ object Compat {
       .bitwiseOR(bitIf(f("fname") === "nick", ppNick))
       .bitwiseOR(bitIf(f("fname") === "nickname", ppNickname))
       .bitwiseOR(bitIf(f("falias").isNotNull, ppAlias))
-  }
 
   private def ppBit(p: Column, bit: Int): Column =
     p.bitwiseAND(lit(bit)) =!= 0
 
+  private def ppMask(p: Column): Column = p.bitwiseAND(lit(allTypeBits))
+
+  private def ppAccepts(p: Column): Column =
+    shiftright(p, typeWidth).bitwiseAND(lit(allTypeBits))
+
+  /** The hb/tm existence-fact bits, above the type bits. */
+  private def fact(i: Int): Int = (allTypeBits + 1) << i
+
+  /** (subject, version, ts, event_id, pp): each version's packed slot
+    * profiles, one int per slot.
+    */
+  private def slotProfiles(s: SparkSession, dir: String): DataFrame =
+    fieldArrays(s, dir, Nil, withLag = false)
+      .select(col("subject"), col("version"), col("ts"), col("event_id"),
+        array(slotModel.map(ppSlot): _*).as("pp"))
+
+  /** Per slot, the bit_or of `hb` over every EARLIER version (0 for
+    * version 1). `version` is strictly increasing within the subject,
+    * so this ROWS frame equals RANGE(unboundedPreceding, -1) — a plain
+    * running accumulator.
+    */
+  private def history(hb: Column => Column): Column = {
+    val earlier = versionOrder.rowsBetween(Window.unboundedPreceding, -1)
+    array((0 until nSlots).map(i =>
+      coalesce(bit_or(hb(col("pp")(i))).over(earlier), lit(0))): _*)
+  }
+
+  /** Slot i breaks: its accumulated `hist` meets this version's `tm`. */
+  private def slotBreaks(hist: String, tm: Column => Column)(i: Int): Column =
+    col(hist)(i).bitwiseAND(tm(col("pp")(i))) =!= 0
+
+  /** BACKWARD_TRANSITIVE hb: this version as the WRITER of later
+    * readers — branch bits plus the was-nullable (fact 0), wide-
+    * vocabulary (1) and other-name-alias-less (3/4) existence bits; an
+    * ABSENT slot contributes only the absence bit (5: "some earlier
+    * version lacked the slot").
+    */
+  private def ppBtHb(p: Column): Column =
+    when(ppBit(p, ppPres),
+      ppMask(p)
+        .bitwiseOR(bitIf(ppBit(p, ppNul), fact(0)))
+        .bitwiseOR(bitIf(ppBit(p, ppWide), fact(1)))
+        .bitwiseOR(bitIf(ppBit(p, ppNick) && !ppBit(p, ppAlias), fact(3)))
+        .bitwiseOR(bitIf(ppBit(p, ppNickname) && !ppBit(p, ppAlias), fact(4))))
+      .otherwise(lit(fact(5)))
+
+  /** BACKWARD_TRANSITIVE tm, READER role: which history bits break
+    * this version's slot.
+    *  - some earlier branch outside my promotion closure (the
+    *    complement of my accept mask within the type-bit space);
+    *  - required: an earlier nullable occurrence (fact 0) — and if
+    *    also defaultless, an earlier absence (5);
+    *  - defaultless narrow enum: an earlier wide vocabulary (1) —
+    *    vocabularies are nested, so "an earlier writer carries a
+    *    symbol this reader lacks" is "reader narrow, history wide";
+    *  - required+defaultless+alias-less: an earlier alias-less
+    *    occurrence of the OTHER name (3/4 crossed) — under the
+    *    two-name model the only unreachable history (checker.go:112).
+    */
+  private def ppBtTm(p: Column): Column = {
+    val reqNoDef = ppBit(p, ppReq) && !ppBit(p, ppDef)
+    when(ppBit(p, ppPres),
+      (lit(allTypeBits) - ppAccepts(p))
+        .bitwiseOR(bitIf(ppBit(p, ppReq), fact(0)))
+        .bitwiseOR(bitIf(ppBit(p, ppEnum) && !ppBit(p, ppDef) &&
+          ppBit(p, ppNarrow), fact(1)))
+        .bitwiseOR(bitIf(reqNoDef, fact(5)))
+        .bitwiseOR(bitIf(ppBit(p, ppNick) && !ppBit(p, ppAlias) && reqNoDef, fact(4)))
+        .bitwiseOR(bitIf(ppBit(p, ppNickname) && !ppBit(p, ppAlias) && reqNoDef, fact(3))))
+      .otherwise(lit(0))
+  }
+
+  /** FORWARD_TRANSITIVE hb, READER role (earlier versions READ what
+    * version N writes): the type bits this reader CANNOT decode; then
+    * a required defaultless reader (fact 0), a required reader (1), a
+    * narrow defaultless enum reader (2), an alias-less required
+    * defaultless reader under either name (3/4). Slots never present contribute nothing, so no
+    * per-subject field vocabulary is needed.
+    */
+  private def ppFtHb(p: Column): Column = {
+    val reqNoDef = ppBit(p, ppReq) && !ppBit(p, ppDef)
+    when(ppBit(p, ppPres),
+      (lit(allTypeBits) - ppAccepts(p))
+        .bitwiseOR(bitIf(reqNoDef, fact(0)))
+        .bitwiseOR(bitIf(ppBit(p, ppReq), fact(1)))
+        .bitwiseOR(bitIf(ppBit(p, ppNarrow) && !ppBit(p, ppDef), fact(2)))
+        .bitwiseOR(bitIf(ppBit(p, ppNick) && !ppBit(p, ppAlias) && reqNoDef, fact(3)))
+        .bitwiseOR(bitIf(ppBit(p, ppNickname) && !ppBit(p, ppAlias) && reqNoDef, fact(4))))
+      .otherwise(lit(0))
+  }
+
+  /** FORWARD_TRANSITIVE tm, WRITER role: version N's slot breaks some
+    * earlier reader iff its branch bits hit a type some reader can't
+    * decode, it went nullable under a required reader (fact 1), its
+    * vocabulary widened past a narrow defaultless reader (2), it is
+    * alias-less under a rename that strands the other name's required
+    * defaultless reader (crossed 3/4) — or the slot is ABSENT from N
+    * while some required defaultless reader still expects it (0).
+    */
+  private def ppFtTm(p: Column): Column =
+    when(ppBit(p, ppPres),
+      ppMask(p)
+        .bitwiseOR(bitIf(ppBit(p, ppNul), fact(1)))
+        .bitwiseOR(bitIf(ppBit(p, ppWide), fact(2)))
+        .bitwiseOR(bitIf(ppBit(p, ppNick) && !ppBit(p, ppAlias), fact(4)))
+        .bitwiseOR(bitIf(ppBit(p, ppNickname) && !ppBit(p, ppAlias), fact(3))))
+      .otherwise(lit(fact(0)))
+
+  /** The two transitive scans: the per-slot history over the packed
+    * profile, then the row-local (hist & tm) ≠ 0 test summed into
+    * (n_fields, n_bad_fields, ok). No groupBy — a row is already one
+    * (subject, version). The oracles state the same semantics pairwise
+    * (readers × earlier writers) — parity proves the rewrite.
+    */
+  private def transitiveVerdict(s: SparkSession, dir: String,
+                                hb: Column => Column, tm: Column => Column,
+                                okName: String): DataFrame = {
+    def slotCount(slot: Int => Column): Column =
+      (0 until nSlots).map(i => when(slot(i), 1L).otherwise(0L)).reduce(_ + _)
+    slotProfiles(s, dir)
+      .withColumn("hist", history(hb))
+      .filter(col("version") > 1)
+      .select(col("subject"), col("version"),
+        slotCount(i => ppBit(col("pp")(i), ppPres)).as("n_fields"),
+        slotCount(slotBreaks("hist", tm)).as("n_bad_fields"))
+      .withColumn(okName, col("n_bad_fields") === 0)
+  }
+
+  /** BACKWARD_TRANSITIVE over the corpus (modes.go; checker.go:39
+    * iterates ALL earlier versions, not just N-1). The pairwise
+    * formulation is O(V²) readers×writers per subject, the shape that
+    * dies on long histories; the bit_or history is O(V).
+    */
+  def compatTransitive(s: SparkSession, dir: String): DataFrame =
+    transitiveVerdict(s, dir, ppBtHb, ppBtTm, "transitive_ok")
+
+  /** FORWARD_TRANSITIVE over the corpus (modes.go:23 — ALL earlier
+    * versions must be able to read data written by version N). The
+    * breaking condition can involve a slot ABSENT from the writer
+    * version (an earlier reader requires it, defaultless —
+    * avro/checker.go:129 with roles swapped): [[ppFtTm]]'s absence bit.
+    */
+  def compatFTransitive(s: SparkSession, dir: String): DataFrame =
+    transitiveVerdict(s, dir, ppFtHb, ppFtTm, "ftransitive_ok")
+
   /** One slot's backward violation verdict, reader profile array `rp`
     * vs writer profile array `wp` — the forward check is the same
-    * algebra with the arrays swapped (the original scans state both
-    * directions with one reader-vs-writer rule set too).
+    * algebra with the arrays swapped, as [[pairRules]] is.
     */
   private def ppBackViol(i: Int, rp: Column, wp: Column): Column = {
     val r = rp(i)
@@ -1005,71 +885,32 @@ object Compat {
           ppBit(r, ppAlias) || ppBit(w, ppAlias)
       else lit(true)
     val wPres = ppBit(w, ppPres) && nameMatch
-    val wAbsent = ppBit(w, ppAbs) || (ppBit(w, ppPres) && !nameMatch)
-    val wMask = w.bitwiseAND(lit(1023))
+    val wMask = ppMask(w)
     ppBit(r, ppPres) && (
-      (wAbsent && ppBit(r, ppReq) && !ppBit(r, ppDef)) ||
-        (wPres &&
-          wMask.bitwiseAND(shiftright(r, 10).bitwiseAND(lit(1023))) =!= wMask) ||
+      (!wPres && ppBit(r, ppReq) && !ppBit(r, ppDef)) ||
+        (wPres && wMask.bitwiseAND(ppAccepts(r)) =!= wMask) ||
         (wPres && ppBit(r, ppReq) && ppBit(w, ppNul)) ||
         (ppBit(r, ppEnum) && wPres && ppBit(w, ppEnum) && !ppBit(r, ppDef) &&
           ppBit(w, ppWide) && !ppBit(r, ppWide)))
   }
 
-  /** [[btHb]]/[[btTm]]/[[ftHb]]/[[ftTm]] restated over a packed slot
-    * profile — same bits, same absent-slot `otherwise` values (an
-    * unset ppPres covers both the false and the NULL present cases,
-    * exactly like `when(present, ...)` falling through).
+  /** The RegisterSchema admission gate (registry.go CheckCompatibility
+    * + modes.go): each subject's configured compatibility mode is
+    * resolved (GetConfig fallback — here the mode derives
+    * deterministically from the subject id so all seven modes occur
+    * in the corpus), then the modes.go decision matrix
+    * (RequiresBackward :54, RequiresForward :64, IsTransitive :44,
+    * NONE disabling checks :9) picks which of the four verdicts —
+    * those of [[compatScan]], [[compatForwardScan]],
+    * [[compatTransitive]] and [[compatFTransitive]] — gate version N's
+    * registration. One fused pass computes all four.
     */
-  private def ppBtHb(p: Column): Column =
-    when(ppBit(p, ppPres),
-      p.bitwiseAND(lit(1023))
-        .bitwiseOR(bitIf(ppBit(p, ppNul), 1024))
-        .bitwiseOR(bitIf(ppBit(p, ppWide), 2048))
-        .bitwiseOR(bitIf(ppBit(p, ppNick) && !ppBit(p, ppAlias), 8192))
-        .bitwiseOR(bitIf(ppBit(p, ppNickname) && !ppBit(p, ppAlias), 16384)))
-      .otherwise(lit(32768))
-
-  private def ppBtTm(p: Column): Column = {
-    val reqNoDef = ppBit(p, ppReq) && !ppBit(p, ppDef)
-    when(ppBit(p, ppPres),
-      (lit(allTypeBits) - shiftright(p, 10).bitwiseAND(lit(1023)))
-        .bitwiseOR(bitIf(ppBit(p, ppReq), 1024))
-        .bitwiseOR(bitIf(ppBit(p, ppEnum) && !ppBit(p, ppDef) &&
-          ppBit(p, ppNarrow), 2048))
-        .bitwiseOR(bitIf(reqNoDef, 32768))
-        .bitwiseOR(bitIf(ppBit(p, ppNick) && !ppBit(p, ppAlias) && reqNoDef, 16384))
-        .bitwiseOR(bitIf(ppBit(p, ppNickname) && !ppBit(p, ppAlias) && reqNoDef, 8192)))
-      .otherwise(lit(0))
-  }
-
-  private def ppFtHb(p: Column): Column = {
-    val reqNoDef = ppBit(p, ppReq) && !ppBit(p, ppDef)
-    when(ppBit(p, ppPres),
-      (lit(allTypeBits) - shiftright(p, 10).bitwiseAND(lit(1023)))
-        .bitwiseOR(bitIf(reqNoDef, 1024))
-        .bitwiseOR(bitIf(ppBit(p, ppReq), 2048))
-        .bitwiseOR(bitIf(ppBit(p, ppNarrow) && !ppBit(p, ppDef), 4096))
-        .bitwiseOR(bitIf(ppBit(p, ppNick) && !ppBit(p, ppAlias) && reqNoDef, 8192))
-        .bitwiseOR(bitIf(ppBit(p, ppNickname) && !ppBit(p, ppAlias) && reqNoDef, 16384)))
-      .otherwise(lit(0))
-  }
-
-  private def ppFtTm(p: Column): Column =
-    when(ppBit(p, ppPres),
-      p.bitwiseAND(lit(1023))
-        .bitwiseOR(bitIf(ppBit(p, ppNul), 2048))
-        .bitwiseOR(bitIf(ppBit(p, ppWide), 4096))
-        .bitwiseOR(bitIf(ppBit(p, ppNick) && !ppBit(p, ppAlias), 16384))
-        .bitwiseOR(bitIf(ppBit(p, ppNickname) && !ppBit(p, ppAlias), 8192)))
-      .otherwise(lit(1024))
-
   def compatGate(s: SparkSession, dir: String): DataFrame = {
     val modes = Seq("NONE", "BACKWARD", "FORWARD", "FULL",
       "BACKWARD_TRANSITIVE", "FORWARD_TRANSITIVE", "FULL_TRANSITIVE")
     val modeCol = element_at(
       array(modes.map(lit): _*), (col("subject") % 7 + 1).cast("int"))
-    // FUSED verdict pass (r11): the four streams are row-aligned by
+    // FUSED verdict pass: the four verdicts are row-aligned by
     // construction — every one is a per-(subject, version) verdict
     // over the SAME field model — so composing them as separate scans
     // joined on (subject, version) paid 4 model builds, 4 window
@@ -1079,13 +920,14 @@ object Compat {
     // stated the N-vs-N-1 checks on strings per slot: the merged
     // Project blew HotSpot's huge-method limit and the WHOLE plan ran
     // interpreted (0 codegen spans, cpu 47→447s). This form therefore
-    // extends the transitive scans' packed-int discipline to the
-    // pairwise checks: one profile int per slot, packed ONCE at model
-    // build ([[ppSlot]]), lagged as an int array, and every verdict a
-    // bit test — each stage's generated method stays small.
+    // states the one-step checks on the packed profile too
+    // ([[ppBackViol]]): the profile array is lagged as ints, and every
+    // verdict is a bit test — each stage's generated method stays
+    // small.
     //
-    // Equivalences (parity proves them; the gate's oracle is the four
-    // scan oracles composed pairwise):
+    // Equivalences with the struct-form scans (the gate spec
+    // reconciles every mode; the gate's oracle is the four scan
+    // oracles composed pairwise):
     //  - b_ok/f_ok: "n_violations == 0" over the posexploded present
     //    slots is exactly "no slot fires"; every version carries ≥8
     //    always-present slots, so the aggregated streams had a row
@@ -1097,45 +939,17 @@ object Compat {
     //    covers the other" ⟺ "names equal ∨ either side has an
     //    alias" — nickSlot only; every other slot's name is a per-
     //    slot constant (match always true).
-    //  - null-faithfulness: nullable model booleans (present of
-    //    email/status, fnull of name) pack as PAIRED bits (PRES/ABS,
-    //    REQ/NUL) where a NULL sets neither — every clause reads the
-    //    bit whose set-state implies the original three-valued
-    //    conjunct was definitely true, so a hypothetical null-k row
-    //    yields bit-identical verdicts (k is never null in driver
-    //    data; this keeps the algebra honest anyway).
     val b_ok = !(0 until nSlots).map(i => ppBackViol(i, col("pp"), col("wpp"))).reduce(_ || _)
     val f_ok = !(0 until nSlots).map(i => ppBackViol(i, col("wpp"), col("pp"))).reduce(_ || _)
-    val base = fieldArrays(s, dir,
-      Seq("fname", "ftype", "fnull", "fdefault", "fsyms", "fmask",
-        "falias", "present"), withLag = false)
-      .select(col("subject"), col("version"), col("ts"), col("event_id"),
-        array((0 until nSlots).map(ppSlot): _*).as("pp"))
-    // ordered by (ts, event_id) — the SAME total order that defined
-    // version (row_number over it), so the row_number window's sort
-    // is reused and no second per-partition sort on `version` is
-    // planned (ROWS frames are position-based; position is identical
-    // under either spelling).
-    val wLag = Window.partitionBy(col("subject"))
-      .orderBy(col("ts"), col("event_id"))
-    val w = wLag.rowsBetween(Window.unboundedPreceding, -1)
-    base
-      .withColumn("wpp", lag(col("pp"), 1).over(wLag))
-      .select(col("subject"), col("version"), col("ts"), col("event_id"),
-        col("pp"), col("wpp"),
-        array((0 until nSlots).map(i => ppBtHb(col("pp")(i))): _*).as("bhb"),
-        array((0 until nSlots).map(i => ppFtHb(col("pp")(i))): _*).as("fhb"))
-      .withColumn("bhist", array((0 until nSlots).map(i =>
-        coalesce(bit_or(col("bhb")(i)).over(w), lit(0))): _*))
-      .withColumn("fhist", array((0 until nSlots).map(i =>
-        coalesce(bit_or(col("fhb")(i)).over(w), lit(0))): _*))
+    slotProfiles(s, dir)
+      .withColumn("wpp", lag(col("pp"), 1).over(versionOrder))
+      .withColumn("bhist", history(ppBtHb))
+      .withColumn("fhist", history(ppFtHb))
       .filter(col("version") > 1)
       .withColumn("b_ok", b_ok)
       .withColumn("f_ok", f_ok)
-      .withColumn("bt_ok", !(0 until nSlots).map(i =>
-        col("bhist")(i).bitwiseAND(ppBtTm(col("pp")(i))) =!= 0).reduce(_ || _))
-      .withColumn("ft_ok", !(0 until nSlots).map(i =>
-        col("fhist")(i).bitwiseAND(ppFtTm(col("pp")(i))) =!= 0).reduce(_ || _))
+      .withColumn("bt_ok", !(0 until nSlots).map(slotBreaks("bhist", ppBtTm)).reduce(_ || _))
+      .withColumn("ft_ok", !(0 until nSlots).map(slotBreaks("fhist", ppFtTm)).reduce(_ || _))
       .withColumn("mode", modeCol)
       .withColumn("req_backward",
         col("mode").isin("BACKWARD", "BACKWARD_TRANSITIVE", "FULL", "FULL_TRANSITIVE"))
@@ -1181,7 +995,7 @@ object Compat {
       .filter(col("version") === col("maxv"))
       .select(col("subject"), col("flds"))
     // One candidate reader field vs the writer array: the same four
-    // avro/checker.go rules as [[backwardFieldChecks]], as a scalar —
+    // avro/checker.go rules as [[pairRules]], as a scalar —
     // type resolution via the shared mask algebra (promotion matrix
     // + union branch sets).
     def viol(fname: String, ftype: String, fnull: Boolean,
@@ -1332,7 +1146,7 @@ object Compat {
     * field — the relational re-expression of checkSchemas' recursion
     * (each recursive call IS a path row; array items and map values
     * are the `[]`/`{}` child paths). Same one-window positional
-    * shape as [[backwardFieldChecks]].
+    * shape as [[slotPairs]].
     */
   def nestedScan(s: SparkSession, dir: String): DataFrame = {
     val versioned = pathArrays(s, dir).filter(col("version") > 1)

@@ -424,6 +424,14 @@ object Dedup {
           .as("recall"))
   }
 
+  /** Document-frequency cap of the [[winnow]] and [[substringRuns]]
+    * postings: a gram shared by more docs is boilerplate and is dropped
+    * before pairing. Both DuckDB oracles pin the same value
+    * (`keep AS (... HAVING count(*) <= 50)` in the dedup_winnow and
+    * dedup_substring entries of [[oracleSql]]).
+    */
+  private val postingsDfCap = 50
+
   /** Winnowing-fingerprint near-dup candidates (the MOSS/Schleimer
     * et al. copy-detection shape, and the containment-oriented
     * complement to MinHash's global-Jaccard view): each doc keeps its
@@ -436,13 +444,12 @@ object Dedup {
     * Scale design: the postings table is ≤ 8 rows per doc (never the
     * full gram set); the only pair-generating shuffle is keyed by
     * fingerprint hash (uniform md5); and fingerprints shared by more
-    * than `graft.winnow.dfCap` docs (corpus boilerplate — df² pair
+    * than [[postingsDfCap]] docs (corpus boilerplate — df² pair
     * blowup) are dropped from pairing, the [[Intelligence]] dfCap
     * guard applied to grams. The two joins share one fh-keyed
     * exchange.
     */
   def winnow(s: SparkSession, dir: String): DataFrame = {
-    val dfCap = s.conf.get("graft.winnow.dfCap", "50").toInt
     val fps = Tables.spread(Tables.documents(s, dir))
       .selectExpr("doc_id", "split(text, ' ') AS ts")
       .where("size(ts) >= 4")
@@ -465,7 +472,7 @@ object Dedup {
       explode_outer(col("fps")).as("fh")).transform(graft.Tables.pin)
     val keep = post.groupBy(col("fh"))
       .agg(count(lit(1)).as("df"))
-      .filter(col("df") <= dfCap)
+      .filter(col("df") <= postingsDfCap)
       .select(col("fh"))
     val kept = post.join(keep, Seq("fh"))
     kept.as("a")
@@ -661,7 +668,7 @@ object Dedup {
     * case MinHash's global-Jaccard view under-weights).
     *
     * Scale design: postings are one row per gram position keyed by a
-    * uniform md5 hash; grams shared by more than `graft.substr.dfCap`
+    * uniform md5 hash; grams shared by more than [[postingsDfCap]]
     * docs (corpus boilerplate — df² pair blowup) are dropped before
     * pairing, exactly the [[winnow]] guard; the run-merge window and
     * its per-run aggregate share one (doc_a, doc_b, diag)-keyed
@@ -670,9 +677,6 @@ object Dedup {
     * shuffle); only pair-level aggregates leave that stage.
     */
   def substringRuns(s: SparkSession, dir: String): DataFrame = {
-    // The DuckDB oracle pins the DEFAULT cap (50), like winnow's; a
-    // non-default graft.substr.dfCap is a tuning run, not a parity run.
-    val dfCap = s.conf.get("graft.substr.dfCap", "50").toInt
     val grams = Tables.spread(Tables.documents(s, dir))
       .selectExpr("doc_id", "split(text, ' ') AS ts")
       .where("size(ts) >= 8")
@@ -689,7 +693,7 @@ object Dedup {
       .transform(graft.Tables.pin)
     val keep = post.groupBy(col("gh"))
       .agg(count(lit(1)).as("df"))
-      .filter(col("df") <= dfCap)
+      .filter(col("df") <= postingsDfCap)
       .select(col("gh"))
     val kept = post.join(keep, Seq("gh"))
     val hits = kept.as("a")

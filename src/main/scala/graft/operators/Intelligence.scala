@@ -20,11 +20,11 @@ object Intelligence {
     */
   private def latestFields(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("subject"))
-    // slim model: only the members read below are constructed, and
+    // latestMembers: only the members read below are constructed, and
     // the lag window (w_all) is never built — the latest-version
     // tools diff nothing, so paying the previous-version array per
     // row was pure model-widening tax (r5 verdict item #3).
-    Compat.fieldArrays(s, dir, slim = true)
+    Compat.fieldArrays(s, dir, Compat.latestMembers, withLag = false)
       .withColumn("maxv", max(col("version")).over(w))
       .filter(col("version") === col("maxv"))
       .select(col("subject"), explode(col("flds")).as("f"))
@@ -248,7 +248,7 @@ object Intelligence {
     * stack'd to (metric, value) rows.
     */
   def detectPatterns(s: SparkSession, dir: String): DataFrame = {
-    val vs = Compat.fieldArrays(s, dir, slim = true)
+    val vs = Compat.fieldArrays(s, dir, Compat.latestMembers, withLag = false)
       .groupBy(col("subject")).agg(max(col("version")).as("nv"))
     // pinned 1-row aggregate: `a` feeds both the ubiquity comparison
     // and the final stack — unpinned, each consumer re-ran the whole
@@ -276,7 +276,7 @@ object Intelligence {
     * version stream — max/sum/count all combine map-side.
     */
   def activeLatest(s: SparkSession, dir: String): DataFrame =
-    Compat.fieldArrays(s, dir, slim = true)
+    Compat.fieldArrays(s, dir, Compat.latestMembers, withLag = false)
       .groupBy(col("subject"))
       .agg(max(when(col("k") % 5 =!= 0, col("version"))).as("latest_active"),
         sum(when(col("k") % 5 === 0, 1).otherwise(0)).as("n_deleted"),
@@ -302,7 +302,7 @@ object Intelligence {
     */
   def compareSubjects(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("subject"))
-    val latestArr = Compat.fieldArrays(s, dir, slim = true)
+    val latestArr = Compat.fieldArrays(s, dir, Compat.latestMembers, withLag = false)
       .withColumn("maxv", max(col("version")).over(w))
       .filter(col("version") === col("maxv"))
       .select(col("subject"), col("flds"))

@@ -231,8 +231,8 @@ object EventStream {
   }
 
   /** Promotion closure over branch names (avro/checker.go:304) — the
-    * state-machine twin of [[graft.operators.Compat.typeBreak]]'s
-    * accept sets.
+    * state-machine twin of [[graft.operators.Compat.acceptsMaskOf]]'s
+    * accept mask.
     */
   private val nameAccepts: Map[String, Set[String]] = Map(
     "bigint" -> Set("bigint", "int"),
@@ -247,8 +247,8 @@ object EventStream {
     * the four avro/checker.go rules (:129 missing-without-default,
     * branch-set type resolution covering unions :224/:247/:263 and
     * the promotion matrix :304, required-reads-nullable, :182 enum
-    * symbol compat), one count per violating field, exactly
-    * [[graft.operators.Compat.compatScan]]'s predicate.
+    * symbol compat), one count per violating field, exactly the rules of
+    * [[graft.operators.Compat.pairRules]].
     */
   def backwardViolations(reader: Seq[FieldDef], writer: Seq[FieldDef]): Long =
     reader.count { r =>

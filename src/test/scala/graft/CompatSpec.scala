@@ -391,16 +391,38 @@ class CompatSpec extends SparkSpec {
     assert(stricter > 0, "expected a version that passes one-step forward but fails transitive")
   }
 
-  test("compat_gate: modes.go decision matrix over the four verdict streams") {
+  /** sf0.001 events with `props` = '{}' on every 7th event_id, so k is
+    * NULL there: the conditional fields (email, status) are absent and
+    * `name`'s nullability is unknown. The generated test data never has
+    * a NULL k, so this is the only place those versions are checked.
+    */
+  private lazy val nullKDir: String = {
+    import org.apache.spark.sql.functions._
+    val dir = java.nio.file.Files.createTempDirectory("graft-nullk").toString
+    Tables.events(spark, sfDir)
+      .withColumn("props", when(col("event_id") % 7 === 0, lit("{}")).otherwise(col("props")))
+      .write.parquet(s"$dir/events.parquet")
+    val nullK = operators.Compat.fieldArrays(spark, dir)
+      .filter(col("k").isNull && col("version") > 1).count()
+    assert(nullK > 0, "the fixture must contain NULL-k versions past the first")
+    dir
+  }
+
+  /** compat_gate's `allowed` against the four scans, mode by mode:
+    * BACKWARD = compat_scan, FORWARD = compat_forward_scan, the
+    * transitive modes = compat_transitive / compat_ftransitive, FULL
+    * and FULL_TRANSITIVE their exact conjunctions, NONE always. The
+    * gate states its rules over the packed slot profile, the one-step
+    * scans over the slot structs, so this ties the two forms.
+    */
+  private def assertGateReconciles(dir: String): Unit = {
     import org.apache.spark.sql.functions.col
-    val gate = operators.Compat.compatGate(spark, sfDir)
+    val gate = operators.Compat.compatGate(spark, dir)
     val rows = gate.collect()
     // every mode occurs (subject % 7 covers the mode vocabulary)
     val modes = rows.map(_.getAs[String]("mode")).toSet
     assert(modes == Set("NONE", "BACKWARD", "FORWARD", "FULL",
       "BACKWARD_TRANSITIVE", "FORWARD_TRANSITIVE", "FULL_TRANSITIVE"))
-    // NONE disables checking entirely (modes.go:9)
-    assert(rows.filter(_.getAs[String]("mode") == "NONE").forall(_.getAs[Boolean]("allowed")))
     // matrix flags match the mode string (RequiresBackward/RequiresForward/IsTransitive)
     rows.foreach { r =>
       val m = r.getAs[String]("mode")
@@ -410,20 +432,41 @@ class CompatSpec extends SparkSpec {
         Set("FORWARD", "FORWARD_TRANSITIVE", "FULL", "FULL_TRANSITIVE").contains(m))
       assert(r.getAs[Boolean]("transitive") == m.endsWith("TRANSITIVE"))
     }
-    // allowed reconciles with the underlying verdict streams
-    val b = operators.Compat.compatScan(spark, sfDir)
-      .select(col("subject"), col("version"), col("compatible").as("b_ok"))
-    val joined = gate.join(b, Seq("subject", "version")).collect()
-    joined.filter(r => r.getAs[String]("mode") == "BACKWARD").foreach { r =>
-      assert(r.getAs[Boolean]("allowed") == r.getAs[Boolean]("b_ok"))
-    }
-    // FULL is the conjunction: never more permissive than BACKWARD alone
-    joined.filter(r => r.getAs[String]("mode") == "FULL").foreach { r =>
-      assert(!r.getAs[Boolean]("allowed") || r.getAs[Boolean]("b_ok"))
+    val keys = Seq("subject", "version")
+    def verdict(df: org.apache.spark.sql.DataFrame, ok: String, as: String) =
+      df.select(col("subject"), col("version"), col(ok).as(as))
+    val verdicts = verdict(operators.Compat.compatScan(spark, dir), "compatible", "b")
+      .join(verdict(operators.Compat.compatForwardScan(spark, dir), "forward_ok", "f"), keys)
+      .join(verdict(operators.Compat.compatTransitive(spark, dir), "transitive_ok", "bt"), keys)
+      .join(verdict(operators.Compat.compatFTransitive(spark, dir), "ftransitive_ok", "ft"), keys)
+    val joined = gate.join(verdicts, keys).collect()
+    assert(joined.length == rows.length, "every gate row has all four verdicts")
+    joined.foreach { r =>
+      def v(n: String) = r.getAs[Boolean](n)
+      // NONE disables checking entirely (modes.go:9)
+      val expected = r.getAs[String]("mode") match {
+        case "NONE" => true
+        case "BACKWARD" => v("b")
+        case "FORWARD" => v("f")
+        case "FULL" => v("b") && v("f")
+        case "BACKWARD_TRANSITIVE" => v("bt")
+        case "FORWARD_TRANSITIVE" => v("ft")
+        case "FULL_TRANSITIVE" => v("bt") && v("ft")
+      }
+      assert(v("allowed") == expected,
+        s"${r.getAs[String]("mode")} at (${r.getAs[Long]("subject")}, ${r.getAs[Int]("version")})")
     }
     // both admission outcomes occur in real data
     assert(rows.exists(_.getAs[Boolean]("allowed")))
     assert(rows.exists(!_.getAs[Boolean]("allowed")))
+  }
+
+  test("compat_gate: modes.go decision matrix over the four verdict streams") {
+    assertGateReconciles(sfDir)
+  }
+
+  test("compat_gate reconciles with every mode's scan on events with NULL k") {
+    assertGateReconciles(nullKDir)
   }
 
   test("compat_multi: per-subject verdicts + all_compatible rollup reconcile") {
@@ -467,7 +510,33 @@ class CompatSpec extends SparkSpec {
     }
   }
 
+  test("positional model: each slot's fmask is the branch mask of its (ftype, funion)") {
+    // The scans resolve types on fmask alone; the oracles on the
+    // branch list coalesce(funion, [ftype]). Pin them together on the
+    // generated data and where k is NULL, which falls through every
+    // residue's when-chain.
+    import org.apache.spark.sql.functions._
+    Seq(sfDir, nullKDir).foreach { dir =>
+      val slots = operators.Compat.fieldArrays(spark, dir)
+        .select(explode(col("flds_all")).as("f"))
+        .select("f.ftype", "f.funion", "f.fmask").distinct().collect()
+      assert(slots.length > 10)
+      slots.foreach { r =>
+        val (t, u, m) = (r.getString(0), Option(r.getString(1)), r.getInt(2))
+        assert(m == operators.Compat.maskInt(t, u), s"$dir: ftype=$t funion=$u fmask=$m")
+      }
+    }
+  }
+
   test("transitive scans equal a generic pairwise evaluation of the Avro rules") {
+    assertTransitiveMatchesPairwise(sfDir)
+  }
+
+  test("transitive scans equal a generic pairwise evaluation on events with NULL k") {
+    assertTransitiveMatchesPairwise(nullKDir)
+  }
+
+  private def assertTransitiveMatchesPairwise(dir: String): Unit = {
     // The O(V) bit_or formulations specialize some rules to this
     // model (nested enum vocabularies, the two-name alias space).
     // Cross-check both scans against a literal readers-x-earlier-
@@ -475,7 +544,7 @@ class CompatSpec extends SparkSpec {
     // a model change that breaks a specialization fails loudly here
     // rather than only at oracle-parity time.
     import org.apache.spark.sql.functions._
-    val fields = operators.Compat.fieldArrays(spark, sfDir)
+    val fields = operators.Compat.fieldArrays(spark, dir)
       .select(col("subject"), col("version"),
         posexplode(col("flds_all")).as(Seq("pos", "f")))
       .select(col("subject"), col("version"), col("pos"),
@@ -510,7 +579,7 @@ class CompatSpec extends SparkSpec {
       .agg(max(when(col("viol"), 1L).otherwise(0L)).as("slot_bad"))
       .groupBy("subject", "version")
       .agg(sum("slot_bad").as("exp_bad"))
-    val bt = operators.Compat.compatTransitive(spark, sfDir)
+    val bt = operators.Compat.compatTransitive(spark, dir)
     val btCmp = bt.join(backExpected, Seq("subject", "version"), "left")
       .withColumn("exp", coalesce(col("exp_bad"), lit(0L)))
     assert(btCmp.filter(col("n_bad_fields") =!= col("exp")).count() == 0,
@@ -527,7 +596,7 @@ class CompatSpec extends SparkSpec {
       .agg(max(when(col("viol"), 1L).otherwise(0L)).as("slot_bad"))
       .groupBy("subject", "version")
       .agg(sum("slot_bad").as("exp_bad"))
-    val ft = operators.Compat.compatFTransitive(spark, sfDir)
+    val ft = operators.Compat.compatFTransitive(spark, dir)
     val ftCmp = ft.join(fwdExpected, Seq("subject", "version"), "left")
       .withColumn("exp", coalesce(col("exp_bad"), lit(0L)))
     assert(ftCmp.filter(col("n_bad_fields") =!= col("exp")).count() == 0,
