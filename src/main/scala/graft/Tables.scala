@@ -275,8 +275,8 @@ object Tables {
     new java.util.WeakHashMap[AnyRef, Seq[AnyRef]]())
 
   /** Scopes AQE's coalescing knob for driver-paced iteration loops
-    * (connected-components rounds, and the registry closure's
-    * semi-naive loop above its broadcast gate): the
+    * (the two loops above a broadcast gate: the registry closure's
+    * semi-naive loop and the connected-components star loop): the
     * session-level `parallelismFirst=true` is right for MB-scale
     * document-scan shuffles (see GraftSession) but multiplies the
     * fixed per-round task-dispatch cost of KB-scale iteration frames
@@ -291,15 +291,14 @@ object Tables {
     * `staticPlans = true` additionally turns AQE OFF and pins a small
     * static shuffle width for the scope — for loops whose join
     * strategies are already decided by count-gated broadcast hints
-    * (the registry closure's above-gate loop,
-    * `Registry.closureLoop`): AQE's stage-by-stage re-optimization
+    * (`Registry.closureLoop`): AQE's stage-by-stage re-optimization
     * added driver latency to every tiny per-round query (measured
     * ~45 → ~29 jobs on reg_refs_closure when it ran as this loop)
     * while its runtime statistics
     * cannot beat the loop's own EXACT convergence counts — see
-    * [[iterWidth]], which those loops call per round. Loops that rely
-    * on AQE's runtime join re-selection (ccStar's alternations, whose
-    * per-round frames have no count-gated hints) keep the default.
+    * [[iterWidth]], which that loop calls per round. Loops that rely
+    * on AQE's runtime join re-selection (`Pipeline.ccStar`, whose
+    * per-round frames have no count-gated hints) pass false.
     */
   def withIterConf[T](s: SparkSession, staticPlans: Boolean)(body: => T): T = {
     // parallelismFirst=false alone regressed the closure family 3x at
@@ -325,26 +324,26 @@ object Tables {
     }
   }
 
-  /** Row bound under which driver-paced loops broadcast a join side
-    * (and run with static per-round plans): 2M two-long rows ≈ ~60 MB
-    * built — comfortably inside driver/executor memory, far above
-    * every test scale, and a graph above it falls back to the former
-    * AQE/shuffle form per side, per round. Shared by the registry
-    * closure (the edge bound under which it runs as one broadcast-BFS
-    * operator) and the CC cores (r12; the registry-local constant
-    * since r11).
+  /** Edge-row bound of the broadcast-BFS operator
+    * (graft.plans.TransitiveClosure): at or under it, the registry
+    * closure (`Registry.closure`) and connected components
+    * (`Pipeline.components`) run as that one operator; above it, as
+    * their loops. The registry's semi-naive loop also broadcasts a
+    * per-round join side under it. 2M two-long rows ≈ ~60 MB built —
+    * comfortably inside driver/executor memory and far above every
+    * test scale.
     */
   private[graft] val BcastRows = 2000000L
 
   /** Static shuffle width for the NEXT round of a driver-paced loop
     * over ~`rows` rows: ~64 MB per partition at ~24 B/row, floor 8
     * (the local fixed-dispatch trade [[withIterConf]] exists for),
-    * cap 20000. Loops call this inside [[withIterConf]] with their
-    * own exact convergence counts before planning a round — the
-    * scale-adaptive replacement for AQE's runtime coalescing (the
-    * count is exact where AQE would have had an estimate), without
-    * AQE's per-round replanning latency. The conf key is saved and
-    * restored by [[withIterConf]].
+    * cap 20000. The registry closure loop calls this inside
+    * [[withIterConf]] with its own exact convergence counts before
+    * planning a round — the scale-adaptive replacement for AQE's
+    * runtime coalescing (the count is exact where AQE would have had
+    * an estimate), without AQE's per-round replanning latency. The
+    * conf key is saved and restored by [[withIterConf]].
     */
   def iterWidth(s: SparkSession, rows: Long): Unit =
     s.conf.set("spark.sql.shuffle.partitions",

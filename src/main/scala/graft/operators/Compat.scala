@@ -1094,10 +1094,12 @@ object Compat {
       col("user_id").as("subject"), col("ts"), col("event_id"),
       get_json_object(col("props"), "$.k").cast("bigint").as("k"))
     val w = Window.partitionBy(col("subject")).orderBy(col("ts"), col("event_id"))
+    // never NULL: a NULL k leaves a conditional path ABSENT, as the
+    // oracle's `WHERE` drops it (see fieldArrays)
     def p(path: String, ptype: Column, pnull: Column, present: Column,
           pmask: Column): Column =
       struct(lit(path).as("path"), ptype.as("ptype"), pnull.as("pnull"),
-        pmask.as("pmask"), present.as("present"))
+        pmask.as("pmask"), coalesce(present, lit(false)).as("present"))
     val geoPresent = col("k") % lit(5) < 3
     ev
       .withColumn("version", row_number().over(w))

@@ -10,172 +10,98 @@ import org.apache.spark.sql.functions._
   * packing, corpus boilerplate detection, and embedding centroids
   * (the IVF training step).
   *
-  * Scale notes per operator are on each method; none touches the
-  * driver except the duplicate-cluster fixpoint check (a 1-row
-  * aggregate per iteration, the standard convergence probe of
-  * iterative graph algorithms — GraphX does the same internally).
+  * Scale notes per operator are on each method. Duplicate-cluster
+  * resolution is connected components through one entry,
+  * [[components]]: below the broadcast gate it is the broadcast-BFS
+  * operator of [[graft.plans.TransitiveClosure]] (no loop, no
+  * driver round trip), above it the [[ccStar]] loop, whose rounds
+  * each end in a count job on the driver.
   */
 object Pipeline {
 
-  // Convergence-cap warnings (the iterative CC cores). slf4j rides
-  // Spark's own logging backend.
+  // The CC gate's above-gate decision and ccStar's convergence. slf4j
+  // rides Spark's own logging backend.
   private val ccLog = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** Duplicate clusters = connected components over the MinHash-LSH
     * near-dup pair graph (the step that turns pairwise candidates
-    * into "keep one doc per cluster" at corpus scale). Min-label
-    * propagation: every node starts labeled with its own id; each
-    * round every node takes the min of its own and its neighbors'
-    * labels; fixpoint = components labeled by their min member.
-    *
-    * Scale: each round is one shuffle join on doc_id + one partial-
-    * aggregated groupBy min — no driver data movement; rounds =
-    * component diameter. Near-dup clusters are shallow in practice,
-    * so the cap of 20 is generous; a corpus with adversarially long
-    * duplicate chains would want the O(log n)-round large-star/
-    * small-star variant (Kiveris et al., "Connected Components in
-    * MapReduce and Beyond") — same join/agg building blocks. Labels
-    * only ever decrease, so sum(label) is a monotone convergence
-    * witness: unchanged sum == fixpoint.
-    *
-    * Each round's frontier is eagerly localCheckpoint'd: without
-    * lineage truncation the logical plan nests one level per round
-    * and Catalyst re-analysis cost grows with iteration count (the
-    * classic iterative-algorithm failure mode — deep plans plan
-    * slowly and eventually overflow the stack). On a real cluster
-    * with a checkpoint dir this would be `checkpoint()` for
-    * fault tolerance; the shape is identical.
+    * into "keep one doc per cluster" at corpus scale), each labelled
+    * by its least doc_id — see [[components]].
     * Output: (cluster_id = min doc_id, doc_id, n_docs) per member.
     */
-  def dedupClusters(s: SparkSession, dir: String): DataFrame = {
-    // symmetric expansion as a row-local explode: a self-union would
-    // evaluate the (uncached) LSH pair scorer twice before the cache
-    // materializes
-    val edges = Dedup.minhashPairs(s, dir)
-      .selectExpr("""explode(array(
-        |  named_struct('src', doc_a, 'dst', doc_b),
-        |  named_struct('src', doc_b, 'dst', doc_a))) AS e""".stripMargin)
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .repartition(col("dst"))
-      .cache()
-    // Materialize the cache HERE, under the session conf: the edge
-    // generation is a corpus-scale LSH scan that wants full-width
-    // shuffles — only the iteration rounds inside the CC cores run
-    // under the scoped small-frame coalescing (Tables.withIterConf).
-    // The count doubles as the CC core's broadcast/static-plan gate
-    // (r12) — exact and already paid for.
-    val nEdges = edges.count()
-    // label propagation, not ccStar: the LSH pair graph is cliques of
-    // near-copies with tiny diameters, where it runs 14 jobs against
-    // the star core's 21 at sf0.1.
-    val (labels, _) = ccLabelProp(edges, edgeRowsHint = Some(nEdges))
-    edges.unpersist()
-    // size via a window over the cluster key, not a groupBy+join whose
-    // build side re-ran the whole member subplan a second time (r12,
-    // guide §2.4 duplicated subtrees — the ccStar label assembly is
-    // not checkpointed); one exchange, identical rows.
-    labels.select(col("label").as("cluster_id"), col("id").as("doc_id"))
-      .withColumn("n_docs", count(lit(1)).over(
-        Window.partitionBy(col("cluster_id"))))
-      .select(col("cluster_id"), col("doc_id"), col("n_docs"))
-  }
+  def dedupClusters(s: SparkSession, dir: String): DataFrame =
+    clusters(Dedup.minhashPairs(s, dir), "doc_a", "doc_b", "doc_id", "n_docs")
 
-  /** Min-label propagation CC core: every node takes the min of its
-    * own and its neighbors' labels each round; rounds = component
-    * diameter. `edges` must be symmetric (src, dst). Labels only
-    * decrease, so sum(label) is the monotone 1-row convergence
-    * witness. Returns (labels (id, label), rounds run).
+  /** Member rows (cluster_id, `id`, `size`) of the components of the
+    * pair graph (`a`, `b`). The size is a window over the cluster key,
+    * not a groupBy+join whose build side would re-run the member
+    * subplan: one exchange, identical rows.
     */
-  /** `edgeRowsHint` (r12, VERDICT r11 #3): the caller's exact edge
-    * count (both production callers count the cached edge frame
-    * anyway). When it fits the loop broadcast gate, the rounds run
-    * with STATIC plans (AQE off — no per-stage replanning latency on
-    * KB-scale round frames), the shuffle width set from the known
-    * count, and the node-sized label map BROADCAST into the per-round
-    * join (nodes ≤ symmetric-edge rows, so the gate on edges bounds
-    * the build side too) — the round's only exchange is then the
-    * groupBy-min. Above the gate (100 TB pair graphs) the loop keeps
-    * AQE's runtime re-optimization exactly as before — the same
-    * count-gated discipline the registry closure loops landed in r11.
+  private def clusters(pairs: DataFrame, a: String, b: String,
+                       id: String, size: String): DataFrame =
+    components(pairs.select(col(a).as("src"), col(b).as("dst")))
+      .select(col("label").as("cluster_id"), col("id").as(id))
+      .withColumn(size, count(lit(1)).over(Window.partitionBy(col("cluster_id"))))
+
+  /** The one connected-components entry: (id, label) for every node of
+    * the undirected graph whose edges are the (src, dst) rows of
+    * `pairs`, labelled by the least id of its component — the oracle's
+    * `reach` CTE over both directions of every pair, with `min(lab)`
+    * per node. NULL endpoints follow that CTE (see
+    * [[graft.plans.TransitiveClosure]]).
+    *
+    * The pairs are pinned ([[Tables.pin]]) and counted here, so the
+    * pair scorer runs once, in the count's jobs — the only jobs
+    * construction launches below the gate. The symmetric row count
+    * (twice the exact pair count) is the edge bound:
+    *  - bound ≤ [[Tables.BcastRows]]:
+    *    [[graft.plans.TransitiveClosure.components]], the broadcast-BFS
+    *    operator in its label form. Both of its children read the
+    *    pinned pairs; execution is one broadcast job for the adjacency
+    *    and one stage over the distinct nodes. Its explain string shows
+    *    the bound, the threshold and the branch.
+    *  - otherwise: [[ccStar]], a loop of jobs at construction. One INFO
+    *    line records the same three values.
     */
-  private[graft] def ccLabelProp(edges: DataFrame, maxIter: Int = 20,
-      edgeRowsHint: Option[Long] = None): (DataFrame, Int) = {
-    val s = edges.sparkSession
-    val static = edgeRowsHint.exists(n => n > 0 && n <= Tables.BcastRows / 2)
-    def bc(df: DataFrame): DataFrame = if (static) broadcast(df) else df
-    Tables.withIterConf(s, staticPlans = static) {
-    if (static) Tables.iterWidth(s, edgeRowsHint.get)
-    var labels = edges.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("label"))
-      .transform(Tables.iterCheckpoint)
-    def labelSum(df: DataFrame): Long =
-      df.agg(coalesce(sum(col("label")), lit(0L))).first().getLong(0)
-    var prevSum = -1L
-    var curSum = labelSum(labels)
-    var iter = 0
-    while (curSum != prevSum && iter < maxIter) {
-      // LAZY checkpoint: the witness aggregate materializes (and pins)
-      // the round's partitions in the SAME job — one job per round,
-      // not two, with lineage still truncated for the next plan
-      // (the r7 closure-loop discipline, see Registry.closureLoop).
-      val next = edges
-        .join(bc(labels.select(col("id").as("dst"), col("label").as("nl"))), "dst")
-        .select(col("src").as("id"), col("nl").as("label"))
-        .union(labels)
-        .groupBy(col("id")).agg(min(col("label")).as("label"))
-        .transform(Tables.iterCheckpoint)
-      prevSum = curSum
-      curSum = labelSum(next)
-      // next is materialized by the witness job and the old round is
-      // never read again — release its checkpoint blocks (see
-      // GraftShim.freeCheckpoint).
-      org.apache.spark.sql.graftshim.GraftShim.freeCheckpoint(labels)
-      labels = next
-      iter += 1
-    }
-    if (curSum != prevSum)
-      ccLog.warn(s"ccLabelProp exited at maxIter=$maxIter WITHOUT converging - " +
-        "labels are not a fixpoint; raise maxIter, or use ccStar for high-diameter graphs")
-    (labels, iter)
+  private[graft] def components(pairs: DataFrame): DataFrame = {
+    val edges = Tables.pin(pairs.select(col("src"), col("dst")))
+    val bound = 2 * edges.queryExecution.toRdd.count()
+    if (bound <= Tables.BcastRows) {
+      val sym = edges.select(explode(array(
+          struct(col("src"), col("dst")),
+          struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
+        .select(col("e.src").as("src"), col("e.dst").as("dst"))
+      graft.plans.TransitiveClosure.components(sym.select(col("src")).distinct(), sym,
+        bound, Tables.BcastRows)
+    } else {
+      ccLog.info(s"connected components edgeBound=$bound threshold=${Tables.BcastRows} " +
+        "branch=star-loop")
+      ccStar(edges)._1
     }
   }
 
   /** Large-star/small-star CC core (Kiveris et al., "Connected
-    * Components in MapReduce and Beyond") — the adversarial-diameter
-    * upgrade path: path lengths contract multiplicatively, so a
-    * chain that costs label propagation diameter-many rounds
-    * converges in O(log n) alternations.
+    * Components in MapReduce and Beyond"), [[components]]' branch
+    * above the broadcast gate: path lengths contract multiplicatively,
+    * so a chain converges in O(log n) alternations whatever its
+    * diameter.
     *
     *  - large-star(u): every strictly-larger neighbor of u re-points
     *    to m = min(Γ(u) ∪ u).
     *  - small-star(u): edges orient toward the smaller endpoint;
     *    every smaller-or-equal neighbor (and u itself) re-points to m.
     *
-    * Both steps are one groupBy-min + one join over the edge set —
-    * the same building blocks as label propagation, applied to a
-    * shrinking edge list rather than a static one. Fixpoint = the
-    * edge set is stable (each node points straight at its component
-    * min); checked exactly via two symmetric-difference counts per
-    * round over the (tiny) pair-graph edge list — the honest price
-    * of an exact stop condition on a non-monotone edge set.
-    * Returns (labels (id, label), rounds run).
+    * Both steps are one groupBy-min + one join over a shrinking edge
+    * list. Fixpoint = the edge set is stable (each node points
+    * straight at its component min); checked exactly via two
+    * symmetric-difference counts per round — the honest price of an
+    * exact stop condition on a non-monotone edge set. The rounds run
+    * under AQE ([[Tables.withIterConf]] without static plans): its
+    * runtime statistics pick each round's join strategy.
+    * `edges` need not be symmetric. Returns (labels (id, label),
+    * rounds run).
     */
-  /** `edgeRowsHint` (r12, VERDICT r11 #3): the caller's exact edge
-    * count. When it fits the loop broadcast gate, the whole run uses
-    * STATIC plans (AQE off) with the shuffle width set from the known
-    * counts, and every node-sized map (the per-alternation min-
-    * neighbor map, the seed map, the final label map) carries an
-    * explicit broadcast hint — replacing AQE's runtime broadcast
-    * conversion, which paid stage-by-stage replanning latency on
-    * every tiny alternation frame. Node counts are bounded by the
-    * symmetric edge rows, so the edge gate bounds every build side.
-    * Above the gate the alternations keep AQE exactly as before
-    * (its per-round joins then rely on runtime broadcast conversion).
-    */
-  private[graft] def ccStar(edges: DataFrame, maxIter: Int = 30,
-      edgeRowsHint: Option[Long] = None): (DataFrame, Int) = {
-    val static = edgeRowsHint.exists(n => n > 0 && n <= Tables.BcastRows / 2)
-    def bc(df: DataFrame): DataFrame = if (static) broadcast(df) else df
+  private[graft] def ccStar(edges: DataFrame, maxIter: Int = 30): (DataFrame, Int) = {
     def largeStar(e: DataFrame): DataFrame = {
       val sym = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
       val m = sym.groupBy(col("src")).agg(min(col("dst")).as("mn"))
@@ -184,7 +110,7 @@ object Pipeline {
       // (one row per input edge) and smallStar's groupBy-min and
       // terminal distinct absorb duplicates — one fewer shuffle per
       // alternation for the same fixpoint.
-      sym.join(bc(m), "src")
+      sym.join(m, "src")
         .filter(col("dst") > col("src"))
         .select(col("dst").as("src"), col("m").as("dst"))
         .filter(col("src") =!= col("dst"))
@@ -194,14 +120,13 @@ object Pipeline {
         least(col("src"), col("dst")).as("dst"))
       val m = oriented.groupBy(col("src")).agg(min(col("dst")).as("mn"))
         .select(col("src"), least(col("mn"), col("src")).as("m"))
-      oriented.join(bc(m), "src")
+      oriented.join(m, "src")
         .select(col("dst").as("src"), col("m").as("dst"))
         .union(m.select(col("src"), col("m").as("dst")))
         .filter(col("src") =!= col("dst"))
         .distinct()
     }
-    Tables.withIterConf(edges.sparkSession, staticPlans = static) {
-    if (static) Tables.iterWidth(edges.sparkSession, 2 * edgeRowsHint.get)
+    Tables.withIterConf(edges.sparkSession, staticPlans = false) {
     // Seed pass (r8): one min-label hop + graph contraction before the
     // alternations. seed(u) = min(Γ(u) ∪ u) is a member of u's own
     // component, so contracting every edge (u,v) → (seed(u), seed(v))
@@ -214,8 +139,10 @@ object Pipeline {
     // two relabel joins); saves alternations whenever clique mass
     // dominates (the LSH pair graphs) and is measured, not assumed —
     // see SURVEY §14.
+    // Self-loops stay in the seed: a node whose only edge is a
+    // self-loop is still its own component, as the oracle seeds it;
+    // the contraction below drops the loop.
     val e0 = edges.select(col("src"), col("dst"))
-      .filter(col("src") =!= col("dst"))
     val sym0 = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
     // The two relabel joins below broadcast the lazy seed checkpoint
     // as two concurrent jobs (see Tables.lazyCheckpoint).
@@ -226,22 +153,18 @@ object Pipeline {
     // map stays "u → some member of u's component" (closed under
     // composition), which is the only property contraction needs.
     val seed = (1 to 2).foldLeft(seed1) { (sd, _) =>
-      Tables.lazyCheckpoint(sd.join(bc(sd.select(col("id").as("slabel"), col("slabel").as("l2"))), Seq("slabel"))
+      Tables.lazyCheckpoint(sd.join(sd.select(col("id").as("slabel"), col("slabel").as("l2")), Seq("slabel"))
         .select(col("id"), col("l2").as("slabel")))
     }
     var e = sym0
-      .join(bc(seed.select(col("id").as("src"), col("slabel").as("ls"))), "src")
-      .join(bc(seed.select(col("id").as("dst"), col("slabel").as("ld"))), "dst")
+      .join(seed.select(col("id").as("src"), col("slabel").as("ls")), "src")
+      .join(seed.select(col("id").as("dst"), col("slabel").as("ld")), "dst")
       .select(col("ls").as("src"), col("ld").as("dst"))
       .filter(col("src") =!= col("dst")).distinct().transform(Tables.iterCheckpoint)
     var eCount = e.count()
     var iter = 0
     var stable = false
     while (!stable && iter < maxIter) {
-      // per-alternation width from the exact edge count — the
-      // contracted edge set shrinks fast, and the static-plan path
-      // has no AQE coalescing to absorb an over-wide shuffle
-      if (static) Tables.iterWidth(edges.sparkSession, eCount)
       // lazy checkpoint, materialized by the count probe. Exact
       // set-equality fixpoint in at most two cheap jobs: both frames
       // are distinct sets, so |next| == |e| AND |next ∪ e| == |e|
@@ -275,7 +198,7 @@ object Pipeline {
       .union(e.select(col("dst").as("id"), col("dst").as("label")))
       .groupBy(col("id")).agg(min(col("label")).as("label"))
     val labels = seed
-      .join(bc(starLabels.select(col("id").as("slabel"), col("label"))), Seq("slabel"), "left")
+      .join(starLabels.select(col("id").as("slabel"), col("label")), Seq("slabel"), "left")
       .select(col("id"), coalesce(col("label"), col("slabel")).as("label"))
     (labels, iter)
     }
@@ -615,9 +538,9 @@ object Pipeline {
     * doc). n_docs per size row recounts the corpus exactly; the
     * aggregate dedup rate falls out as 1 − n_clusters/n_docs.
     *
-    * Scale: composes [[dedupClusters]] (LSH + min-label CC); the
-    * stats are two vocabulary-sized rollups (cluster ids, then
-    * sizes) after one left join keyed by uniform doc_id.
+    * Scale: composes [[dedupClusters]] (LSH pairs + connected
+    * components); the stats are two vocabulary-sized rollups (cluster
+    * ids, then sizes) after one left join keyed by uniform doc_id.
     */
   def clusterStats(s: SparkSession, dir: String): DataFrame = {
     val cl = dedupClusters(s, dir).select(col("doc_id"), col("cluster_id"))
@@ -1015,36 +938,15 @@ object Pipeline {
     * the embedding-space twin of [[dedupClusters]] (which clusters
     * lexical MinHash pairs). Paraphrases and translations that share
     * no n-grams still land in one semantic cluster; the survivor
-    * policy then keeps one rendition per meaning. Same min-label CC
-    * core, same O(log diameter) round structure, same scoped
-    * iteration conf.
+    * policy then keeps one rendition per meaning. The embedding graph
+    * chains through hub vectors, so its components have a larger
+    * diameter than the LSH cliques; [[components]] is indifferent to
+    * that below its gate (one BFS per component) and above it (ccStar's
+    * O(log n) alternations).
+    * Output: (cluster_id = min vec_id, vec_id, n_vecs) per member.
     */
-  def semanticClusters(s: SparkSession, dir: String): DataFrame = {
-    // pairs go in ONCE (r8): ccStar symmetrizes internally (its seed
-    // pass builds sym0 = e ∪ reverse), so the former symmetric
-    // explode + repartition doubled every frame the seed/contraction
-    // joins scan for no benefit. The cache still pins the (uncached)
-    // SRP pair scorer's output so the iteration never re-runs it.
-    val edges = Dedup.embedLsh(s, dir)
-      .select(col("vec_a").as("src"), col("vec_b").as("dst"))
-      .cache()
-    // exact count, already paid for to pin the scorer — doubles as
-    // the CC core's broadcast/static-plan gate (r12)
-    val nEdges = edges.count()
-    // the embedding graph chains through hub vectors (a vector close
-    // to two distant neighbors bridges them), so component diameters
-    // grow with the corpus — at sf0.1 label propagation does NOT
-    // converge in 20 rounds. The star core contracts path lengths
-    // multiplicatively (O(log n) alternations regardless of
-    // diameter), so it is the default here, not the fallback.
-    val (labels, _) = ccStar(edges, edgeRowsHint = Some(nEdges))
-    edges.unpersist()
-    // window-sized, not groupBy+join — see [[dedupClusters]] (r12)
-    labels.select(col("label").as("cluster_id"), col("id").as("vec_id"))
-      .withColumn("n_vecs", count(lit(1)).over(
-        Window.partitionBy(col("cluster_id"))))
-      .select(col("cluster_id"), col("vec_id"), col("n_vecs"))
-  }
+  def semanticClusters(s: SparkSession, dir: String): DataFrame =
+    clusters(Dedup.embedLsh(s, dir), "vec_a", "vec_b", "vec_id", "n_vecs")
 
   /** Per-source semantic-duplication rate: the fraction of each
     * source's vectors that participate in at least one SRP-bucketed

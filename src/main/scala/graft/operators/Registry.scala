@@ -661,12 +661,6 @@ object Registry {
           floor(col("doc_id") / 3).cast("bigint").as("parent")))
   }
 
-  /** Row bound under which the closure runs as one broadcast-BFS
-    * operator, and under which the above-gate loop broadcasts a join
-    * side — the shared loop constant, see [[Tables.BcastRows]].
-    */
-  private val BcastRows = Tables.BcastRows
-
   private val closureLog = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** The (doc_id, transitive ancestor `anc`[, min hop count `d`])
@@ -692,11 +686,11 @@ object Registry {
     val sources = docs.select(col("doc_id"))
     val e = edges.select(col("child"), col("parent"))
     val bound = Tables.footerRowBound(e)
-    bound.filter(_ <= BcastRows) match {
-      case Some(n) => graft.plans.TransitiveClosure.of(sources, e, withDepth, n, BcastRows)
+    bound.filter(_ <= Tables.BcastRows) match {
+      case Some(n) => graft.plans.TransitiveClosure.of(sources, e, withDepth, n, Tables.BcastRows)
       case None =>
         closureLog.info(s"closure edgeBound=${bound.getOrElse("unknown")} " +
-          s"threshold=$BcastRows branch=semi-naive-loop")
+          s"threshold=${Tables.BcastRows} branch=semi-naive-loop")
         closureLoop(e, withDepth)
           .join(sources.select(col("doc_id").as("src")), col("doc_id") <=> col("src"), "left_semi")
     }
@@ -787,9 +781,9 @@ object Registry {
       // Adaptive broadcasts (r11): the convergence counts are EXACT and
       // known before each round is planned, so each round broadcasts
       // the step relation and the closure-so-far anti-join side while
-      // they fit ([[BcastRows]]); a side too big to broadcast keeps the
+      // they fit ([[Tables.BcastRows]]); a side too big to broadcast keeps the
       // shuffle form, per side, per round.
-      val stepBcast = frontierCount <= BcastRows
+      val stepBcast = frontierCount <= Tables.BcastRows
       var closureCount = frontierCount
       while (frontierCount > 0) {
         Tables.iterWidth(s, closureCount)
@@ -799,7 +793,7 @@ object Registry {
           .join(if (stepBcast) broadcast(stepSide) else stepSide, "mid")
           .select(col("doc_id"), col("anc"), (col("df") + col("ds")).as("d"))
         val closure = rounds.reduce(_ unionAll _).select(col("doc_id"), col("anc"))
-        val fresh = newPairs(hop, if (closureCount <= BcastRows) broadcast(closure) else closure)
+        val fresh = newPairs(hop, if (closureCount <= Tables.BcastRows) broadcast(closure) else closure)
           .groupBy(col("doc_id"), col("anc")).agg(min(col("d")).as("d"))
           .transform(Tables.iterCheckpoint)
         frontierCount = fresh.count()

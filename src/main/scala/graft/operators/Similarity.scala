@@ -320,7 +320,7 @@ object Similarity {
   def graphRecall(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("probe_id")).orderBy(col("cos").desc, col("vec_id"))
     val truth = scored(s, dir).withColumn("rnk", row_number().over(w))
-      .where(col("rnk") <= 3).select(col("probe_id"), col("vec_id")).transform(Tables.lazyCheckpoint(_))
+      .where(col("rnk") <= 3).select(col("probe_id"), col("vec_id")).transform(Tables.pin)
     def card(stage: String, edges: DataFrame): DataFrame = {
       val pe = edges.where(col("src") < 10)
         .select(col("src").as("probe_id"), col("dst").as("vec_id"))
@@ -331,11 +331,12 @@ object Similarity {
           (floor(col("n_hit") / col("n_true").cast("double") * 10000 + 0.5) / lit(10000.0))
             .as("recall3"))
     }
-    // Build the round-0 graph ONCE and checkpoint it: both cards and
-    // the descent round read it, and before r9 each card rebuilt the
-    // full adaptive-SRP bucket join from scratch (the graph stage ran
-    // twice and its cached corpus frames stayed pinned).
-    val g0 = Tables.lazyCheckpoint(nnGraphEdges(s, dir).select("src", "dst"))
+    // Build the round-0 graph ONCE and pin it: both cards and the
+    // descent round read it, and before r9 each card rebuilt the full
+    // adaptive-SRP bucket join from scratch (the graph stage ran twice
+    // and its cached corpus frames stayed pinned). A pin plans without
+    // AQE, so constructing it materializes no query stage.
+    val g0 = Tables.pin(nnGraphEdges(s, dir).select("src", "dst"))
     card("graph", g0)
       .unionAll(card("descent", nnDescentFrom(g0, s, dir)))
   }

@@ -20,11 +20,20 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   * registry's transitive reference resolution (references /
   * referenced-by, registry.go:1039; deletion guard, registry.go:591).
   *
+  * The [[TransitiveClosure.Labels]] form reads symmetric `edges` as an
+  * undirected graph and emits one row per source instead, (id = source,
+  * label = least(source, min reached)): connected-component labels,
+  * the duplicate-cluster resolution of [[graft.operators.Pipeline]].
+  * On symmetric edges every node a source reaches reaches the same
+  * set, so a task memoizes the label of each node it has walked and
+  * walks each component at most once.
+  *
   * NULL endpoints follow the recursive-CTE definition
   * `anc(c, p) :- edge(c, p); anc(c, p) :- anc(c, m), edge(m, p)`: a
   * NULL source expands over the edges whose child is NULL (nothing
   * ever reaches it, since NULL = NULL is not true), and a NULL parent
-  * is emitted as an ancestor but never expanded.
+  * is emitted as an ancestor but never expanded (nor counted in a
+  * label).
   *
   * Physical shape ([[TransitiveClosureExec]]) is that of a broadcast
   * hash join: the edges are collected once into a compact adjacency
@@ -33,15 +42,15 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   * rounds a fixpoint loop would launch as separate jobs become loop
   * iterations inside one task, so constructing the operator launches
   * no job and executing it runs one broadcast job and one stage. Held
-  * state per task is the adjacency plus one source's visited set; the
-  * output is streamed. Callers gate it on a bound of the edge count
-  * (`edgeBound`, checked against `threshold`), which the plan strings
-  * show.
+  * state per task is the adjacency plus one source's visited set (and
+  * the label memo); the output is streamed. Callers gate it on a bound
+  * of the edge count (`edgeBound`, checked against `threshold`), which
+  * the plan strings show.
   */
 case class TransitiveClosure(
     sources: LogicalPlan,
     edges: LogicalPlan,
-    withDepth: Boolean,
+    form: TransitiveClosure.Form,
     edgeBound: Long,
     threshold: Long,
     output: Seq[Attribute]) extends BinaryNode {
@@ -62,12 +71,14 @@ case class TransitiveClosure(
   /** Size estimate for join planning: the edge bound bounds the
     * number of sources that emit anything, and each is charged
     * log2(edgeBound) ancestors — the depth of a reference DAG whose
-    * ids halve along every edge. The default for an unknown binary
-    * node (the product of both children's sizes) would push every
-    * downstream join to a sort-merge join.
+    * ids halve along every edge — or one label. The default for an
+    * unknown binary node (the product of both children's sizes) would
+    * push every downstream join to a sort-merge join.
     */
   override def stats: Statistics = {
-    val rows = BigInt(edgeBound.max(1L)) * (64 - java.lang.Long.numberOfLeadingZeros(edgeBound.max(1L)))
+    val n = edgeBound.max(1L)
+    val rows = if (form == TransitiveClosure.Labels) BigInt(n)
+      else BigInt(n) * (64 - java.lang.Long.numberOfLeadingZeros(n))
     Statistics(sizeInBytes = rows * EstimationUtils.getSizePerRow(output))
   }
 
@@ -77,21 +88,45 @@ case class TransitiveClosure(
 }
 
 object TransitiveClosure {
+  /** What the operator emits per source: its (doc_id, anc) pairs, the
+    * same with the min hop count d, or one (id, label) row.
+    */
+  sealed trait Form
+  case object Pairs extends Form
+  case object Depths extends Form
+  case object Labels extends Form
+
   /** The closure operator over two frames, as a DataFrame with
     * columns (doc_id, anc[, d]). Launches no job.
     */
   def of(sources: DataFrame, edges: DataFrame, withDepth: Boolean,
-         edgeBound: Long, threshold: Long): DataFrame = {
+         edgeBound: Long, threshold: Long): DataFrame =
+    plan(sources, edges, if (withDepth) Depths else Pairs, edgeBound, threshold)
+
+  /** Connected-component labels over symmetric `edges`: one row
+    * (id, label) per row of `sources`, labelled by the least id of its
+    * component. Launches no job.
+    */
+  def components(sources: DataFrame, edges: DataFrame,
+                 edgeBound: Long, threshold: Long): DataFrame =
+    plan(sources, edges, Labels, edgeBound, threshold)
+
+  private def plan(sources: DataFrame, edges: DataFrame, form: Form,
+                   edgeBound: Long, threshold: Long): DataFrame = {
     val s = sources.sparkSession
     TransitiveClosureStrategy.ensureRegistered(s)
     val src = sources.queryExecution.analyzed
     val e = edges.queryExecution.analyzed
-    val out = Seq(
-      AttributeReference("doc_id", LongType, src.output.head.nullable)(),
-      AttributeReference("anc", LongType, e.output(1).nullable)()) ++
-      (if (withDepth) Seq(AttributeReference("d", LongType, nullable = false)()) else Nil)
+    val srcNullable = src.output.head.nullable
+    val out = form match {
+      case Labels => Seq(AttributeReference("id", LongType, srcNullable)(),
+        AttributeReference("label", LongType, srcNullable)())
+      case _ => Seq(AttributeReference("doc_id", LongType, srcNullable)(),
+        AttributeReference("anc", LongType, e.output(1).nullable)()) ++
+        (if (form == Depths) Seq(AttributeReference("d", LongType, nullable = false)()) else Nil)
+    }
     org.apache.spark.sql.graftshim.GraftShim.ofRows(s,
-      TransitiveClosure(src, e, withDepth, edgeBound, threshold, out))
+      TransitiveClosure(src, e, form, edgeBound, threshold, out))
   }
 }
 
@@ -100,8 +135,8 @@ object TransitiveClosure {
   */
 object TransitiveClosureStrategy extends GraftStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case TransitiveClosure(src, e, withDepth, bound, threshold, out) =>
-      TransitiveClosureExec(planLater(src), planLater(e), withDepth, bound, threshold, out) :: Nil
+    case TransitiveClosure(src, e, form, bound, threshold, out) =>
+      TransitiveClosureExec(planLater(src), planLater(e), form, bound, threshold, out) :: Nil
     case _ => Nil
   }
 }
@@ -109,7 +144,7 @@ object TransitiveClosureStrategy extends GraftStrategy {
 case class TransitiveClosureExec(
     sources: SparkPlan,
     edges: SparkPlan,
-    withDepth: Boolean,
+    form: TransitiveClosure.Form,
     edgeBound: Long,
     threshold: Long,
     output: Seq[Attribute]) extends BinaryExecNode {
@@ -144,22 +179,46 @@ case class TransitiveClosureExec(
   protected override def doExecute(): RDD[InternalRow] = {
     val adjacency = edges.executeBroadcast[Array[InternalRow]]()
     val numOutputRows = longMetric("numOutputRows")
-    val depth = withDepth
+    val f = form
     sources.execute().mapPartitions { rows =>
       val adj = new Adjacency(adjacency.value.head.asInstanceOf[UnsafeRow])
       val seen = new VisitedSet
       val layerEnds = scala.collection.mutable.ArrayBuffer.empty[Int]
-      val writer = new UnsafeRowWriter(if (depth) 3 else 2)
-      rows.flatMap { row =>
+      val writer = new UnsafeRowWriter(if (f == TransitiveClosure.Depths) 3 else 2)
+      def start(srcNull: Boolean, src: Long): Unit = {
+        writer.reset()
+        writer.zeroOutNullBytes()
+        if (srcNull) writer.setNullAt(0) else writer.write(0, src)
+        numOutputRows += 1
+      }
+      if (f == TransitiveClosure.Labels) {
+        // node -> its component's label, for every node walked so far
+        val memo = new scala.collection.mutable.LongMap[Long]
+        rows.map { row =>
+          val srcNull = row.isNullAt(0)
+          val src = if (srcNull) 0L else row.getLong(0)
+          start(srcNull, src)
+          if (!srcNull && memo.contains(src)) writer.write(1, memo(src))
+          else {
+            adj.reach(srcNull, src, seen, layerEnds)
+            var label = if (srcNull) Long.MaxValue else src
+            var i = 0
+            while (i < seen.size) { label = math.min(label, seen(i)); i += 1 }
+            if (srcNull && seen.size == 0) writer.setNullAt(1) else writer.write(1, label)
+            // a NULL source's reach spans every component its edges
+            // touch, so only a non-NULL source's walk labels its nodes
+            if (!srcNull) { i = 0; while (i < seen.size) { memo(seen(i)) = label; i += 1 } }
+          }
+          writer.getRow
+        }
+      } else rows.flatMap { row =>
         val srcNull = row.isNullAt(0)
         val src = if (srcNull) 0L else row.getLong(0)
         val nullDepth = adj.reach(srcNull, src, seen, layerEnds)
         val n = seen.size
         var layer = 0
         Iterator.range(0, if (nullDepth > 0) n + 1 else n).map { i =>
-          writer.reset()
-          writer.zeroOutNullBytes()
-          if (srcNull) writer.setNullAt(0) else writer.write(0, src)
+          start(srcNull, src)
           val d = if (i == n) {
             writer.setNullAt(1)
             nullDepth
@@ -168,8 +227,7 @@ case class TransitiveClosureExec(
             while (layerEnds(layer) <= i) layer += 1
             layer + 1
           }
-          if (depth) writer.write(2, d.toLong)
-          numOutputRows += 1
+          if (f == TransitiveClosure.Depths) writer.write(2, d.toLong)
           writer.getRow
         }
       }

@@ -4,8 +4,7 @@ import graft.operators.Registry
 import graft.plans.{TransitiveClosure, TransitiveClosureExec}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.RDDScanExec
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.functions._
 
@@ -98,12 +97,6 @@ class ClosureSpec extends SparkSpec {
     assert(rows(viaEntry) == rows(TransitiveClosure.of(docs, e, withDepth = true, 0L, 0L)))
     assert(rows(viaEntry).map(_._1.get).toSet == Set(10L, 7L, 2L))
   }
-
-  private def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-    case s: QueryStageExec => nodes(s.plan)
-    case other => other.children.flatMap(nodes)
-  })
 
   test("closure family builds and explains with zero jobs; the plan shows the gate") {
     Tables.documents(spark, sfDir) // warm the schema cache: the first load infers it with a job

@@ -469,6 +469,28 @@ class CompatSpec extends SparkSpec {
     assertGateReconciles(nullKDir)
   }
 
+  test("compat_nested: a path absent at a NULL-k writer breaks a required reader path") {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+    val w = Window.partitionBy(col("subject")).orderBy(col("ts"), col("event_id"))
+    // A NULL-k writer has only the unconditional paths: meta, meta.score
+    // (bigint), tags[] (bytes) and attrs{} (string). A reader with a
+    // bigint score and string attrs then breaks on nothing but its
+    // required meta.rank (present when k % 11 < 6), which the oracle's
+    // LEFT JOIN finds no writer path for.
+    val versions = Tables.events(spark, nullKDir)
+      .select(col("user_id").as("subject"), col("ts"), col("event_id"),
+        get_json_object(col("props"), "$.k").cast("bigint").as("k"))
+      .withColumn("version", row_number().over(w))
+      .withColumn("w_k", lag(col("k"), 1).over(w))
+      .filter(col("version") > 1 && col("w_k").isNull && col("k") % 4 >= 2 && col("k") % 6 >= 3)
+      .select(col("subject"), col("version"), (col("k") % 11 < 6).as("rank"))
+    val got = operators.Compat.nestedScan(spark, nullKDir)
+      .join(versions, Seq("subject", "version")).select("rank", "n_violations").collect()
+    assert(got.exists(_.getBoolean(0)), "the fixture must hold such a reader with meta.rank")
+    got.foreach(r => assert(r.getLong(1) == (if (r.getBoolean(0)) 1L else 0L)))
+  }
+
   test("compat_multi: per-subject verdicts + all_compatible rollup reconcile") {
     import org.apache.spark.sql.functions.col
     val rows = operators.Compat.compatMulti(spark, sfDir).collect()

@@ -6,31 +6,33 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
   * r10 #7): constructing a registered DataFrame — what `Explain`, a
   * gated consumer, or a dry-run driver does — must launch ZERO Spark
   * jobs, so plan inspection never triggers cluster work. The
-  * exceptions are the driver-paced ITERATIVE operators, whose result
-  * plan is definitionally data-dependent (connected-components rounds
-  * and the nn-descent rounds): those run their loop at construction
-  * and are allow-listed here BY NAME so any new operator that
-  * accidentally grows an eager probe/checkpoint fails this spec
-  * loudly. The registry reference closures are not on the list: they
-  * run as one broadcast-BFS operator (graft.plans.TransitiveClosure),
-  * whose rounds happen at execution, and their semi-naive loop is only
-  * the fallback above the edge-count gate. Power iteration, k-means
-  * assignment, the ANN graph, the semantic duplicate rate and the BPE
-  * merge rounds build with zero jobs (measured at sf0.001 and sf0.1),
-  * so this spec guards them too.
+  * exceptions are listed here BY NAME, each with the most jobs its
+  * construction may launch, so any new operator that accidentally
+  * grows an eager probe/checkpoint fails this spec loudly, and a
+  * listed one that grows more fails too. The registry reference
+  * closures are not on the list: they run as one broadcast-BFS
+  * operator (graft.plans.TransitiveClosure), whose rounds happen at
+  * execution, and their semi-naive loop is only the fallback above the
+  * edge-count gate. Power iteration, k-means assignment, the semantic
+  * duplicate rate and the BPE merge rounds build with zero jobs
+  * (measured at sf0.001 and sf0.1), so this spec guards them too.
   */
 class ConstructionJobsSpec extends SparkSpec {
 
-  /** Operators whose construction legitimately runs jobs: every one is
-    * a driver-paced loop (or composes one), where the NUMBER of plan
-    * stages is decided by the data. Everything else must be lazy.
+  /** Operators whose construction legitimately runs jobs, with the
+    * measured ceiling (sf0.001) and why. The map and its ceilings may
+    * only shrink.
     */
-  private val iterative = Set(
-    // connected-components loops and their consumers
-    "dedup_clusters", "dedup_cluster_stats", "dedup_survivors",
-    "dedup_semantic_clusters", "corpus_funnel",
-    // nn-descent rounds and their recall evaluation
-    "ann_nn_descent", "ann_graph_recall"
+  private val ceilings = Map(
+    // connected components: the exact pair count that pins the pair
+    // scorer and gates the broadcast-BFS operator (the count job plus
+    // the scorer's own broadcast jobs)
+    "dedup_clusters" -> 3, "dedup_cluster_stats" -> 3, "dedup_survivors" -> 3,
+    "corpus_funnel" -> 3, "dedup_semantic_clusters" -> 3,
+    // nn-descent: the round's data-dependent candidate fan-out
+    "ann_nn_descent" -> 2,
+    // nn-descent's round, under the recall cards
+    "ann_graph_recall" -> 3
   )
 
   test("constructing every registered query launches zero jobs (iterative ops excepted)") {
@@ -49,17 +51,16 @@ class ConstructionJobsSpec extends SparkSpec {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-        case (name, fn) if !iterative(name) =>
-          // drain listener bus so a previous construction's events
-          // don't get charged to this one
-          org.apache.spark.sql.graftshim.GraftShim.flushListeners(spark)
-          jobs.set(0)
-          fn(spark, sfDir) // construct only — no action
-          org.apache.spark.sql.graftshim.GraftShim.flushListeners(spark)
-          val n = jobs.get()
-          if (n > 0) Some(s"$name ran $n construction job(s)") else None
-        case _ => None
+      val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+        // drain listener bus so a previous construction's events
+        // don't get charged to this one
+        org.apache.spark.sql.graftshim.GraftShim.flushListeners(spark)
+        jobs.set(0)
+        fn(spark, sfDir) // construct only — no action
+        org.apache.spark.sql.graftshim.GraftShim.flushListeners(spark)
+        val n = jobs.get()
+        val ceiling = ceilings.getOrElse(name, 0)
+        if (n > ceiling) Some(s"$name ran $n construction job(s), ceiling $ceiling") else None
       }
       assert(offenders.isEmpty, offenders.mkString("\n"))
     } finally {
@@ -68,7 +69,7 @@ class ConstructionJobsSpec extends SparkSpec {
   }
 
   test("iterative allow-list stays tight: every listed op is registered") {
-    val unknown = iterative -- SparkEntry.queries.keySet
+    val unknown = ceilings.keySet -- SparkEntry.queries.keySet
     assert(unknown.isEmpty, s"allow-listed but not registered: $unknown")
   }
 }

@@ -31,34 +31,24 @@ class PipelineSpec extends SparkSpec {
     assert(members.filter(col("n_docs") >= 3).count() > 0)
   }
 
-  test("large-star/small-star: O(log n) rounds on a 999-diameter chain label-prop can't finish") {
+  private def ccLabels(labels: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+    labels.collect().map(r => r.getAs[Long]("id") -> r.getAs[Long]("label")).toMap
+
+  test("large-star/small-star: O(log n) rounds on a 999-edge chain, equal to the exec") {
     val n = 1000L
     val chain = spark.range(n - 1).select(col("id").as("src"), (col("id") + lit(1)).as("dst"))
     val (labels, rounds) = Pipeline.ccStar(chain)
     assert(rounds <= 15, s"star took $rounds rounds — not logarithmic in $n")
-    val l = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val l = ccLabels(labels)
     assert(l.size == n && l.values.forall(_ == 0L), "chain must collapse to one cluster rooted at 0")
-    // the same chain defeats min-label propagation: still iterating
-    // at a cap far beyond ccStar's convergence (diameter-bound rounds)
-    val sym = chain.union(chain.select(col("dst").as("src"), col("src").as("dst")))
-    val (_, lpRounds) = Pipeline.ccLabelProp(sym, maxIter = 25)
-    assert(lpRounds == 25, "label prop should still be iterating at the cap on this chain")
+    assert(ccLabels(Pipeline.components(chain)) == l)
   }
 
-  test("star variant reproduces the label-prop clusters on the real LSH pair graph") {
-    val pairs = Dedup.minhashLsh(spark, sfDir)
-    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .cache()
-    val n = Some(edges.count())
-    def clusters(labels: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
-      labels.collect().map(r => (r.getAs[Long]("label"), r.getAs[Long]("id"))).toSet
-    try {
-      val base = clusters(Pipeline.ccLabelProp(edges, edgeRowsHint = n)._1)
-      assert(base.nonEmpty)
-      val star = clusters(Pipeline.ccStar(edges, edgeRowsHint = n)._1)
-      assert(star == base, "the two CC algorithms must reach the same fixpoint")
-    } finally edges.unpersist()
+  test("the component-label exec reproduces ccStar on the real LSH pair graph") {
+    val pairs = Dedup.minhashLsh(spark, sfDir).select(col("doc_a").as("src"), col("doc_b").as("dst"))
+    val exec = ccLabels(Pipeline.components(pairs))
+    assert(exec.nonEmpty)
+    assert(exec == ccLabels(Pipeline.ccStar(pairs)._1), "the two CC branches must reach the same fixpoint")
   }
 
   test("a lazy checkpoint keeps its source plan's SQL metrics alive after its lineage is cut") {
