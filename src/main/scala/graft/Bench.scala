@@ -150,9 +150,10 @@ object Bench {
       // assumed ±10% under best-of-two). Raw cold times stay in
       // bench_detail.json.
       val cold = run(fn)
-      // Drop anything a run pinned with .cache() BEFORE the next
-      // one: otherwise CacheManager swaps the warm plan for the
-      // cold run's InMemoryRelation and the warm number measures a
+      // No operator caches (they pin through Tables.pin), but drop
+      // any cached table BEFORE the next run all the same: a cache
+      // left in the session would let CacheManager swap the warm plan
+      // for an InMemoryRelation, and the warm number would measure a
       // cached-table read, not the plan.
       spark.catalog.clearCache()
       val warms = (1 to 2).map { _ =>

@@ -9,7 +9,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * are small at every scale factor and are broadcast explicitly at the
   * join sites; fact tables (lineitem, orders, events, documents,
   * embeddings) scale with sf and are only ever shuffled on their join
-  * or group keys.
+  * or group keys, or by [[Tables.spread]] before row-local CPU work.
+  * Sizing lives here too: the footer row bound, the row probe, and
+  * the broadcast gate.
   */
 object Tables {
   def region(s: SparkSession, dir: String): DataFrame = load(s, dir, "region")
@@ -85,10 +87,9 @@ object Tables {
     * scale-safe branch early, never to an unsafe one late.
     *
     * None when the frame has no file-backed scan (checkpointed /
-    * in-memory frames) or a footer is unreadable — callers fall back
-    * to their precise (job-running) probe. Per-file counts are cached
-    * for the JVM's lifetime: the driver's data files are immutable
-    * within a session, and the cache is what keeps repeated
+    * in-memory frames) or a footer is unreadable. Per-file counts are
+    * cached for the JVM's lifetime: the input data files are
+    * immutable within a session, and the cache is what keeps repeated
     * constructions of the same operator (Bench runs each query three
     * times) from re-reading footers.
     */
@@ -98,123 +99,46 @@ object Tables {
     }.collect { case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation => fs }
     if (leaves.isEmpty) return None
     val conf = df.sparkSession.sessionState.newHadoopConf()
-    try {
-      var total = 0L
-      for (leaf <- leaves; f <- leaf.location.inputFiles) {
-        val cached = footerCache.get(f)
-        val n: Long = if (cached != null) cached.longValue() else {
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromPath(new org.apache.hadoop.fs.Path(f), conf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          val c = try r.getRecordCount finally r.close()
-          footerCache.put(f, c)
-          c
-        }
-        total += n
-      }
-      Some(total)
-    } catch {
-      case scala.util.control.NonFatal(_) => None
-    }
+    def rows(f: String): Long = footerCache.computeIfAbsent(f, _ => {
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile
+        .fromPath(new org.apache.hadoop.fs.Path(f), conf)
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      try r.getRecordCount finally r.close()
+    })
+    try Some(leaves.iterator.flatMap(_.location.inputFiles).map(rows).sum)
+    catch { case scala.util.control.NonFatal(_) => None }
   }
 
-  /** Spread a table across tasks before an expression-heavy
-    * projection. The driver's parquet files hold ONE row group, so a
-    * scan is a single task no matter how wide the cluster — a cheap
-    * round-robin repartition restores parallelism. On datasets with
-    * many splits (any real 100 TB table) the input already
-    * parallelizes and callers can drop this. Parallelism is the
-    * session's shuffle partition count — no magic constant on a
-    * cluster.
+  /** Row count of an unfiltered scan: the [[footerRowBound]] (zero
+    * jobs) when `df` reads parquet files, else one `count()` job. The
+    * one row-count probe for the data-sized literals (sample moduli,
+    * plane counts) that must hold on any frame.
     */
-  def spread(df: DataFrame): DataFrame = df.repartition(spreadWidth(df))
+  def scanRows(df: DataFrame): Long = footerRowBound(df).getOrElse(df.count())
 
-  /** Upper bound on the split count `df`'s file scan can reach, from
-    * driver-side metadata only (zero Spark jobs, zero filesystem
-    * RPCs): Σ ceil(bytes / maxPartitionBytes) over the scan's files,
-    * with file lengths read from the scan's OWN FileIndex — the
-    * relation already holds every leaf FileStatus from the listing it
-    * did at read time (r12, ADVICE r11: the former per-file
-    * getFileStatus loop was a listing storm on many-file tables and
-    * its JVM-lifetime length cache could serve stale sizes for a
-    * rewritten path). Parquet cannot split below row-group
-    * granularity, so the real parallelism may be lower (the driver's
-    * single-row-group files read as ONE task even when their byte
-    * count suggests a few splits) — which is the safe direction for
-    * [[spreadIfNarrow]]: a table big enough to report many
-    * byte-splits has many row groups in practice. None when the
-    * frame has no file-backed scan.
+  /** Spread `df` across the session's shuffle width before
+    * expression-heavy row-local work: hash-partitioned on `by` when
+    * keys are given (a fan-out that also satisfies a downstream
+    * window or aggregate keyed by them), round-robin otherwise.
     *
-    * V1-only contract: only `LogicalRelation`s over a
-    * `HadoopFsRelation` (every `spark.read.parquet` read here) count.
-    * A DataSource-V2 file scan contributes nothing, so a frame read
-    * only through V2 gets None and [[spreadIfNarrow]] leaves it as is.
+    * Unconditional, at every call site and width: a parquet file
+    * reads as at most one task per row group (the test-scale files
+    * hold ONE and read as a single task), so a bound from file bytes
+    * alone can claim parallelism a scan never gets. Skipping the
+    * spread where the scan already parallelizes needs a row-group
+    * bound measured on a many-row-group input.
     */
-  def scanSplitBound(df: DataFrame): Option[Long] = {
-    val maxSplit = df.sparkSession.sessionState.conf.filesMaxPartitionBytes.max(1L)
-    try {
-      val byPath = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-      df.queryExecution.analyzed.foreach {
-        case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          lr.relation match {
-            case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-              fs.location.listFiles(Nil, Nil).foreach(_.files.foreach { f =>
-                byPath.update(f.getPath.toString, f.getLen)
-              })
-            case _ => ()
-          }
-        case _ => ()
-      }
-      if (byPath.isEmpty) None
-      else Some(byPath.valuesIterator.map(len => (len + maxSplit - 1) / maxSplit).sum)
-    } catch {
-      case scala.util.control.NonFatal(_) => None
-    }
+  def spread(df: DataFrame, by: org.apache.spark.sql.Column*): DataFrame = {
+    val width = df.sparkSession.sessionState.conf.numShufflePartitions
+    if (by.isEmpty) df.repartition(width) else df.repartition(width, by: _*)
   }
-
-  /** True when `df`'s scan provably cannot reach the session's
-    * parallelism — the single-row-group test-file shape where an
-    * expression-heavy projection serializes on one task (guide §2.5
-    * "input skew: one huge unsplittable file — repartition immediately
-    * after the read"). On a real many-split table (any 100 TB input)
-    * this is false and the adaptive spreads below are the identity —
-    * no shuffle is ever added where the scan already parallelizes.
-    */
-  private def narrowScan(df: DataFrame): Boolean =
-    scanSplitBound(df).exists(_ < spreadWidth(df) / 2)
-
-  /** [[spread]] only when the scan is provably narrow — adds a
-    * round-robin exchange on test-scale single-split files, identity
-    * on real tables. Use before CPU-heavy row-local projections whose
-    * input is not about to be shuffled anyway.
-    */
-  def spreadIfNarrow(df: DataFrame): DataFrame =
-    if (narrowScan(df)) spread(df) else df
-
-  /** Keyed variant of [[spreadIfNarrow]] for inputs flowing into a
-    * window/aggregation keyed by `cols`: the fan-out hash exchange
-    * SATISFIES the downstream ClusteredDistribution, so the plan gets
-    * the same exchange count as the un-spread form — the downstream
-    * shuffle simply moves below the expensive projection. On wide
-    * scans this is the identity and the downstream operator keeps its
-    * own exchange above the (already parallel) projection, keeping
-    * the shuffle as narrow as the projected columns.
-    */
-  def spreadByIfNarrow(df: DataFrame, cols: org.apache.spark.sql.Column*): DataFrame =
-    if (narrowScan(df)) spreadBy(df, cols: _*) else df
-
-  /** Keyed variant of [[spread]]: hash-repartition on the given
-    * columns with the same conf-driven parallelism — the co-location
-    * shape pair-scoring joins need, without a hard-coded width.
-    */
-  def spreadBy(df: DataFrame, cols: org.apache.spark.sql.Column*): DataFrame =
-    df.repartition(spreadWidth(df), cols: _*)
-
-  private def spreadWidth(df: DataFrame): Int =
-    df.sparkSession.sessionState.conf.numShufflePartitions
 
   /** Multi-consumer pin (r11, VERDICT r10 #7): a LAZY localCheckpoint
-    * planned with AQE OFF, so constructing the pin launches ZERO jobs.
+    * planned with AQE OFF, so constructing the pin runs no shuffle —
+    * with one exception: preparing the static plan starts every
+    * broadcast exchange in it (a BroadcastExchangeExec's relation
+    * future is submitted at prepare time), so a pinned plan that
+    * broadcasts launches its build side's jobs at construction.
     * Under AQE even `localCheckpoint(eager = false)` materializes every
     * intermediate query stage at construction (AdaptiveSparkPlanExec
     * finalizes the plan inside `toRdd`, submitting the shuffle-map
@@ -234,14 +158,8 @@ object Tables {
     * planning call; operator construction is single-threaded in every
     * entry point (Verify/Bench/Explain), which keeps it race-free.
     */
-  def pin(df: DataFrame): DataFrame = {
-    val s = df.sparkSession
-    val key = "spark.sql.adaptive.enabled"
-    val prev = s.conf.get(key, "true")
-    s.conf.set(key, "false")
-    try lazyCheckpoint(df)
-    finally s.conf.set(key, prev)
-  }
+  def pin(df: DataFrame): DataFrame =
+    withConf(df.sparkSession, Seq("spark.sql.adaptive.enabled" -> "false"))(lazyCheckpoint(df))
 
   /** `df.localCheckpoint(eager = false)` at `level` (Spark's default
     * when None) that keeps the SQL metrics of `df`'s plan registered
@@ -308,15 +226,21 @@ object Tables {
     // advisory keeps KB-scale rounds at 1-2 tasks (the sf0.1 fixed-
     // dispatch win this conf exists for) while a genuinely large
     // round still fans out to ~frame/4MB tasks.
-    val ks = Seq(
+    withConf(s, Seq(
       "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "4m") ++
       (if (staticPlans) Seq(
         "spark.sql.adaptive.enabled" -> "false",
         "spark.sql.shuffle.partitions" -> "8")
-      else Seq.empty)
-    val prev = ks.map { case (k, _) => k -> s.conf.getOption(k) }
-    ks.foreach { case (k, v) => s.conf.set(k, v) }
+      else Seq.empty))(body)
+  }
+
+  /** Runs `body` with the session confs `kvs` set, then restores each
+    * key's previous value, or unsets it when it was not set. */
+  private def withConf[T](s: SparkSession, kvs: Seq[(String, String)])(body: => T): T = {
+    val set = s.conf.getAll
+    val prev = kvs.map { case (k, _) => k -> set.get(k) }
+    kvs.foreach { case (k, v) => s.conf.set(k, v) }
     try body
     finally prev.foreach {
       case (k, Some(v)) => s.conf.set(k, v)

@@ -17,8 +17,9 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // operators that cache() intermediates would otherwise pin them
-      // for the remaining ~120 queries and squeeze execution memory
+      // no operator caches (they pin through Tables.pin, whose blocks
+      // go with the frame); this only drops a cache some other caller
+      // of the session left, so it cannot squeeze the next query
       spark.catalog.clearCache()
     }
     // reg_similar's oracle enumerates ALL identity-class pairs, but

@@ -535,11 +535,12 @@ object Analytics {
     // co-locates every (l_orderkey, l_suppkey) group too (guide §2.4
     // shared exchange; §2.3 fewer bytes — no Expand at any scale).
     // countDistinct(supp) = count of level-1 rows; countDistinct(R-supp)
-    // = count of has_r rows; min(R-supp) = min over has_r rows.
-    val perOrder = Tables.spreadBy(
-      Tables.lineitem(s, dir)
-        .select(col("l_orderkey"), col("l_suppkey"), col("l_returnflag")),
-      col("l_orderkey"))
+    // = count of has_r rows; min(R-supp) = min over has_r rows. The
+    // explicit session width keeps AQE from coalescing the exchange,
+    // which it would do to a count-less repartition(cols).
+    val perOrder = Tables.lineitem(s, dir)
+      .select(col("l_orderkey"), col("l_suppkey"), col("l_returnflag"))
+      .repartition(s.sessionState.conf.numShufflePartitions, col("l_orderkey"))
       .groupBy(col("l_orderkey"), col("l_suppkey"))
       .agg(max(col("l_returnflag") === "R").as("has_r"))
       .groupBy(col("l_orderkey"))

@@ -502,12 +502,11 @@ object Audit {
     * edition). The k-mod predicate is a 2-op integer test instead.
     */
   private def promLines(s: SparkSession, dir: String, samplesOnly: Boolean): DataFrame = {
-    // spreadIfNarrow: the JSON parse + exposition-line rendering is
-    // ~20µs/row of row-local CPU; on the driver's single-row-group
-    // events file the whole pass serialized on one scan task (stage
-    // profile: 2.3s 1-task stage = ~95% of each metrics_* query's
-    // wall). Identity on real many-split tables.
-    val parsed = Tables.spreadIfNarrow(
+    // spread: the JSON parse + exposition-line rendering is ~20µs/row
+    // of row-local CPU; on a single-row-group events file
+    // the whole pass serialized on one scan task (stage profile: 2.3s
+    // 1-task stage = ~95% of each metrics_* query's wall).
+    val parsed = Tables.spread(
       Tables.events(s, dir).select(col("user_id"), col("props")))
       .select(col("user_id"),
         get_json_object(col("props"), "$.k").cast("bigint").as("k"))

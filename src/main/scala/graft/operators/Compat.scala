@@ -389,14 +389,14 @@ object Compat {
                                  members: Seq[String] = allMembers,
                                  withLag: Boolean = true): DataFrame = {
     val keep = members.toSet + "present"
-    // spreadByIfNarrow on the window key: on the driver's single-row-
-    // group events file the JSON parse serialized on the one scan task
+    // spread on the window key: on a single-row-group events file
+    // the JSON parse serialized on the one scan task
     // (stage profile: a multi-second 1-task stage under every consumer
     // of this model). Keyed by `subject`, the fan-out exchange IS the
     // version window's exchange — same exchange count, parse moved to
-    // the parallel side. On real many-split tables this is the
-    // identity and only `k` crosses the window shuffle, as before.
-    val ev = Tables.spreadByIfNarrow(
+    // the parallel side, at the price of `props` (not only `k`)
+    // crossing that shuffle.
+    val ev = Tables.spread(
       Tables.events(s, dir).select(
         col("user_id").as("subject"), col("ts"), col("event_id"), col("props")),
       col("subject"))

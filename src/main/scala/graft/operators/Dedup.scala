@@ -78,7 +78,7 @@ object Dedup {
   private def minhashSignaturesOn(s: SparkSession, docs: DataFrame): DataFrame = {
     graft.functions.Native.register(s)
     docs
-      .transform(Tables.spread)
+      .transform(Tables.spread(_))
       .selectExpr("doc_id", "split(text, ' ') AS ts")
       .where("size(ts) >= 3")
       .selectExpr("doc_id",
@@ -137,7 +137,7 @@ object Dedup {
   private def simhashChunks(s: SparkSession, dir: String): DataFrame = {
     graft.functions.Native.register(s)
     Tables.documents(s, dir)
-      .transform(Tables.spread)
+      .transform(Tables.spread(_))
       .selectExpr("doc_id", "graft_simhash64(split(text, ' ')) AS ch")
       .selectExpr("doc_id",
         "element_at(ch, 1) AS c0", "element_at(ch, 2) AS c1",
@@ -149,7 +149,7 @@ object Dedup {
     * 64-bit hamming distance via xor + bit_count.
     */
   def simhash(s: SparkSession, dir: String): DataFrame = {
-    val ch = simhashChunks(s, dir).cache()
+    val ch = simhashChunks(s, dir).transform(Tables.pin)
     val a = ch.select(col("doc_id").as("doc_a"), col("c0").as("a0"), col("c1").as("a1"), col("c2").as("a2"), col("c3").as("a3"))
     val b = ch.select(col("doc_id").as("doc_b"), col("c0").as("b0"), col("c1").as("b1"), col("c2").as("b2"), col("c3").as("b3"))
     val joined = Seq("a0" -> "b0", "a1" -> "b1", "a2" -> "b2", "a3" -> "b3")
@@ -555,42 +555,26 @@ object Dedup {
     * (s²/blocks ∝ N·500/blocks) — linear like any scan, never the
     * full card's quadratic. Power-of-two via bit length keeps the
     * modulus integer-exact in both engines (no libm sqrt boundary
-    * flips); it rides in as a broadcast 1-row aggregate, mirrored in
-    * the oracle as a scalar CTE.
+    * flips); N is the [[Tables.scanRows]] probe (the footer count, so
+    * the sample plans with zero jobs), and smod rides in as a literal,
+    * mirrored in the oracle as a scalar CTE. The pinned sample comes
+    * with its modulus and ceil(N/smod), the size bound the recall
+    * cards pick [[jaccardBlockedOn]]'s branch by (dense doc_ids make
+    * it exact; id sparsity only shrinks the sample below it).
     */
-  private def sampledDocs(s: SparkSession, dir: String): DataFrame = {
+  private def sampledDocs(s: SparkSession, dir: String): Sample = {
     val d = Tables.documents(s, dir)
-    Tables.footerRowBound(d) match {
-      // Footer-exact N (r11): smod inlined as a literal — no params
-      // aggregate, no broadcast crossJoin, so pinning the sample (or
-      // any plan-only consumer) launches zero jobs. Same integer
-      // formula as the broadcast form and the oracle's scalar CTE.
-      case Some(n) if n > 0 =>
-        val v = math.max(1L, n / 500)
-        val smod = 1L << ((64 - java.lang.Long.numberOfLeadingZeros(v) - 1) / 2)
-        d.withColumn("smod", lit(smod)).where(s"doc_id % $smod = 0")
-      case _ =>
-        val params = broadcast(d.agg(expr(
-          "cast(shiftleft(1, (length(bin(greatest(1, count(1) div 500))) - 1) div 2) AS bigint) AS smod")))
-        d.crossJoin(params).where("doc_id % smod = 0")
-    }
+    val n = Tables.scanRows(d)
+    val smod = 1L << ((64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, n / 500)) - 1) / 2)
+    Sample(d.where(s"doc_id % $smod = 0").transform(graft.Tables.pin), smod, (n + smod - 1) / smod)
   }
 
-  /** Driver-side expected size of [[sampledDocs]] — the same
-    * smod = 2^((bitlen(N div 500) − 1) div 2) arithmetic evaluated on
-    * the parquet footer row count, so the sampled recall cards can
-    * pick [[jaccardBlockedOn]]'s branch with zero construction jobs
-    * (the footer N is exact for the raw table; dense doc_ids make
-    * ceil(N/smod) the exact sample size, and any id sparsity only
-    * shrinks the sample below this bound).
-    */
-  private def sampledDocsHint(s: SparkSession, dir: String): Option[Long] =
-    Tables.footerRowBound(Tables.documents(s, dir)).map { n =>
-      val v = math.max(1L, n / 500)
-      val bitlen = 64 - java.lang.Long.numberOfLeadingZeros(v)
-      val smod = 1L << ((bitlen - 1) / 2)
-      (n + smod - 1) / smod
-    }
+  private final case class Sample(docs: DataFrame, smod: Long, sizeBound: Long) {
+    /** The (smod, n_docs) card columns: smod is the literal modulus,
+      * so an empty sample still reports it, as the oracle's CTE does. */
+    def card: DataFrame =
+      docs.agg(count(lit(1)).as("n_docs")).select(lit(smod).as("smod"), col("n_docs"))
+  }
 
   /** The 100 TB form of [[minhashRecall]]: the same
     * truth-vs-candidates accounting, measured on the deterministic
@@ -602,18 +586,18 @@ object Dedup {
     * pairs-complete card exactly (spec-pinned).
     */
   def minhashRecallSampled(s: SparkSession, dir: String): DataFrame = {
-    val sample = sampledDocs(s, dir).transform(graft.Tables.pin)
+    val sample = sampledDocs(s, dir)
     // truth arrives pre-pinned from [[jaccardBlockedOn]] on the scale
     // path (two consumers below: the hit semi join and n_true); cand
     // stays lazy — its re-evaluation is banding over the checkpointed
     // signatures, cheap at any scale.
-    val truth = jaccardBlockedOn(s, sample,
-      docsHint = sampledDocsHint(s, dir)).select(col("doc_a"), col("doc_b"))
-    val cand = minhashPairsFrom(minhashSignaturesOn(s, sample).transform(graft.Tables.pin))
+    val truth = jaccardBlockedOn(s, sample.docs,
+      docsHint = Some(sample.sizeBound)).select(col("doc_a"), col("doc_b"))
+    val cand = minhashPairsFrom(minhashSignaturesOn(s, sample.docs).transform(graft.Tables.pin))
       .select(col("doc_a").as("c_a"), col("doc_b").as("c_b"))
     val hits = truth.join(cand,
       col("doc_a") === col("c_a") && col("doc_b") === col("c_b"), "left_semi")
-    sample.agg(max(col("smod")).as("smod"), count(lit(1)).as("n_docs"))
+    sample.card
       .crossJoin(truth.agg(count(lit(1)).as("n_true")))
       .crossJoin(cand.agg(count(lit(1)).as("n_candidates")))
       .crossJoin(hits.agg(count(lit(1)).as("n_hit")))
@@ -633,10 +617,10 @@ object Dedup {
     * sf (smod = 1) the card coincides with the pairs-complete one.
     */
   def lshTuningSampled(s: SparkSession, dir: String): DataFrame = {
-    val sample = sampledDocs(s, dir).transform(graft.Tables.pin)
-    val card = broadcast(sample.agg(max(col("smod")).as("smod"), count(lit(1)).as("n_docs")))
-    val truth = jaccardBlockedOn(s, sample,
-      docsHint = sampledDocsHint(s, dir)).selectExpr("jaccard AS s0")
+    val sample = sampledDocs(s, dir)
+    val card = broadcast(sample.card)
+    val truth = jaccardBlockedOn(s, sample.docs,
+      docsHint = Some(sample.sizeBound)).selectExpr("jaccard AS s0")
     // Same one-rollup shape as [[lshTuning]] (r9): all five configs'
     // expected recalls ride one pass over the sampled distribution
     // (single consumer — no checkpoint barrier needed).

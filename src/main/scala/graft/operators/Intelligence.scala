@@ -214,7 +214,7 @@ object Intelligence {
     // subjects-sized view — unmaterialized, each union branch re-runs
     // the events window scan. localCheckpoint (not cache) so the
     // blocks are ContextCleaner-collected once the DataFrame goes out
-    // of scope: a .cache() here pinned memory for the life of the
+    // of scope: a cache here pinned memory for the life of the
     // session across repeated invocations.
     val latest = Compat.fieldArrays(s, dir,
         Seq("fname", "ftype", "fnull", "fdefault", "present"), withLag = true)

@@ -392,9 +392,9 @@ object Pipeline {
   def textLogprob(s: SparkSession, dir: String): DataFrame = {
     val tok = Tables.spread(Tables.documents(s, dir))
       .select(col("doc_id"), explode(split(col("text"), " ")).as("t"))
-    // vocab-sized (not corpus-sized): cache so vocab + total + probe
+    // vocab-sized (not corpus-sized): pinned so vocab + total + probe
     // share one token-counting pass
-    val counts = tok.groupBy(col("t")).agg(count(lit(1)).as("cnt")).cache()
+    val counts = tok.groupBy(col("t")).agg(count(lit(1)).as("cnt")).transform(Tables.pin)
     val vocab = counts.orderBy(col("cnt").desc, col("t")).limit(1000)
     val total = counts.agg(sum(col("cnt")).as("n"))
     tok.join(broadcast(vocab), Seq("t"), "left_outer")

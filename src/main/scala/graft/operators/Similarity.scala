@@ -150,7 +150,7 @@ object Similarity {
     * scale — the (table, bucket) self-join cost is then
     * Σ|bucket|² ≈ N·TargetBucket, LINEAR in the corpus (the fixed
     * 4-plane variant grows quadratically past ~256 vectors). The
-    * count rides in as a broadcast 1-row aggregate; the DuckDB oracle
+    * count is inlined as a literal plane count; the DuckDB oracle
     * mirrors it as a scalar subquery over the same integer formula.
     */
   private def srpBucketsAdaptive(s: SparkSession, dir: String): DataFrame = {
@@ -165,56 +165,40 @@ object Similarity {
     * hyperplane family.
     */
   /** `e` must be an UNFILTERED scan (projection/repartition only):
-    * the plane count is inlined from the parquet footer row count
-    * when available, which equals `count(1)` only when no filter
-    * drops rows — a filtered caller would diverge from the oracle's
-    * scalar-subquery plane count (the parity gate would catch it).
+    * the plane count is inlined from [[graft.Tables.scanRows]], which
+    * equals `count(1)` only when no filter drops rows — a filtered
+    * caller would diverge from the oracle's scalar-subquery plane
+    * count (the parity gate would catch it).
     */
   private[operators] def adaptiveBuckets(e: DataFrame): DataFrame =
-    bucketsNp(e, "count(1)", graft.Tables.footerRowBound(e))
+    bucketsNp(e, graft.Tables.scanRows(e))
 
-  /** [[adaptiveBuckets]] with the occupancy target applied to an
-    * arbitrary aggregate of the corpus count (`nExpr` over the input
-    * frame). [[ivfTopK]] buckets VECTORS at the plane count sized for
-    * its CENTROID population (nExpr = count/stride) so each bucket
-    * holds ~[[TargetBucket]] centroids — same hyperplane family, same
-    * broadcast-1-row-params idiom, different cell-count driver.
+  /** [[adaptiveBuckets]] with the occupancy target applied to a
+    * population of `n`. [[ivfTopK]] buckets VECTORS at the plane count
+    * sized for its CENTROID population (n = count/stride) so each
+    * bucket holds ~[[TargetBucket]] centroids — same hyperplane
+    * family, a different population. The plane count is a
+    * LITERAL ([[planesFor]] mirrors the oracle's integer formula), so
+    * pinning the bucketed frame launches zero jobs.
     */
-  private def bucketsNp(e: DataFrame, nExpr: String,
-                        nLit: Option[Long] = None): DataFrame = {
-    def proj(npTerm: String) =
+  private def bucketsNp(e: DataFrame, n: Long): DataFrame =
+    e.selectExpr("vec_id", "e",
       s"""transform(sequence(0, ${NTables - 1}), t ->
-         |  aggregate(sequence(0, ($npTerm) - 1), cast(0 AS bigint), (acc, p) ->
+         |  aggregate(sequence(0, ${planesFor(n)} - 1), cast(0 AS bigint), (acc, p) ->
          |    acc + CASE WHEN aggregate(zip_with(element_at($weightMatrixSqlBig, t * $MaxPlanesPerTable + p + 1), e, (w, x) -> w * x),
          |                              cast(0 AS double), (a2, x) -> a2 + x) >= 0
-         |          THEN shiftleft(cast(1 AS bigint), p) ELSE cast(0 AS bigint) END)) AS buckets""".stripMargin
-    nLit match {
-      // Footer-exact corpus size (r11, VERDICT r10 #7): the plane
-      // count becomes a LITERAL — no params aggregate, no broadcast
-      // crossJoin, and pinning the bucketed frame launches zero jobs
-      // (a broadcast exchange's relation future starts at RDD
-      // construction, so the broadcast form runs the corpus count the
-      // moment a pin or plan-only consumer touches it). planesFor
-      // mirrors the SQL integer formula bit-for-bit for n >= 1.
-      case Some(n) if n > 0 =>
-        e.selectExpr("vec_id", "e", proj(planesFor(n).toString))
-      case _ =>
-        val params = broadcast(e.agg(
-          expr(s"least($MaxPlanesPerTable, greatest(4, length(bin((($nExpr) + ${TargetBucket - 1}) div $TargetBucket - 1)))) AS np")))
-        e.crossJoin(params).selectExpr("vec_id", "e", proj("np"))
-    }
-  }
+         |          THEN shiftleft(cast(1 AS bigint), p) ELSE cast(0 AS bigint) END)) AS buckets""".stripMargin)
 
   /** The raw graph edge list (top-3 per src, unrounded cosines) —
     * shared by [[nnGraph]] (the registered card) and [[nnDescent]]
     * (which treats these edges as the round-0 graph to refine).
     */
   private def nnGraphEdges(s: SparkSession, dir: String): DataFrame = {
-    // lazy localCheckpoint, not .cache(): the bucketed corpus is only
+    // lazy localCheckpoint, not a cache: the bucketed corpus is only
     // needed while THIS query runs, and checkpoint blocks are
     // reclaimed by the ContextCleaner when the frame goes out of
-    // scope — a .cache() here stayed pinned across every later query
-    // of a long-lived session (r8 advice).
+    // scope — a cache here stayed pinned across every later query of
+    // a long-lived session (r8 advice).
     val e = srpBucketsAdaptive(s, dir).transform(graft.Tables.pin)
     val tbl = e.selectExpr("vec_id", s"explode(sequence(0, ${NTables - 1})) AS t", "buckets")
       .selectExpr("vec_id", "t", "element_at(buckets, t + 1) AS bucket")
@@ -388,8 +372,7 @@ object Similarity {
       .selectExpr("vec_id", "cast(embedding AS array<double>) AS e")
     // lazy localCheckpoint: buckets + vectors feed assignment, probe
     // and member sides; blocks reclaimed when the frame drops
-    val b = bucketsNp(e0, s"(count(1) + ${IvfListOcc - 1}) div $IvfListOcc",
-        graft.Tables.footerRowBound(e0).map(n => (n + IvfListOcc - 1) / IvfListOcc))
+    val b = bucketsNp(e0, (graft.Tables.scanRows(e0) + IvfListOcc - 1) / IvfListOcc)
       .transform(graft.Tables.pin)
     val tbl = b.selectExpr("vec_id", s"explode(sequence(0, ${NTables - 1})) AS t", "buckets")
       .selectExpr("vec_id", "t", "element_at(buckets, t + 1) AS bucket")

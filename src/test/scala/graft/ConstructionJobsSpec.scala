@@ -29,9 +29,14 @@ class ConstructionJobsSpec extends SparkSpec {
     // the scorer's own broadcast jobs)
     "dedup_clusters" -> 3, "dedup_cluster_stats" -> 3, "dedup_survivors" -> 3,
     "corpus_funnel" -> 3, "dedup_semantic_clusters" -> 3,
-    // nn-descent: the round's data-dependent candidate fan-out
+    // nn-descent: preparing the static plan of the pinned symmetric
+    // edges starts the round-0 graph's two broadcast exchanges, the
+    // bucket self-join's build side and the vector lookup (the second
+    // lookup reuses it); a job listener saw both jobs under that pin's
+    // localCheckpoint execution
     "ann_nn_descent" -> 2,
-    // nn-descent's round, under the recall cards
+    // the same two broadcasts, in the pinned round-0 graph, plus the
+    // probe broadcast in the pinned exact top-3
     "ann_graph_recall" -> 3
   )
 

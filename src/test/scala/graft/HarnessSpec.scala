@@ -10,7 +10,7 @@ import scala.util.matching.Regex
 /** The harness mains share one session builder and one task-metrics
   * listener; the SQL entry point and the imperative registration
   * share one native-function table; lazy checkpoints share one
-  * helper. */
+  * helper, and so do multi-consumer pins and scan spreads. */
 class HarnessSpec extends SparkSpec {
 
   /** (file name, occurrences of `literal`) for every main source file
@@ -27,6 +27,15 @@ class HarnessSpec extends SparkSpec {
 
   test("every lazy local checkpoint goes through Tables.lazyCheckpoint") {
     assert(occurrences(".localCheckpoint(").map(_._1) == Seq("Tables.scala"))
+  }
+
+  test("operators share frames through Tables.pin: no cache or persist in src/main/scala") {
+    assert(occurrences(".cache()").isEmpty)
+    assert(occurrences(".persist(").isEmpty)
+  }
+
+  test("repartition only in Tables.spread and the Analytics keyed aggregate") {
+    assert(occurrences(".repartition(").toMap == Map("Tables.scala" -> 2, "Analytics.scala" -> 1))
   }
 
   test("the fixture is GraftSession.local(4) without the extension") {
