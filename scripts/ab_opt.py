@@ -1,30 +1,36 @@
 #!/usr/bin/env python3
-"""Interleaved A/B of two build jars on an arbitrary query list (r11
-optimization round). Same machinery as ab_attrib.py (java -cp spark
-jars + build jar, graft.Bench with SPARK_GRAFT_QUERIES), generalized:
+"""Interleaved A/B of two build jars on a query list: java -cp the
+Spark jars plus a build jar, running graft.Bench with
+SPARK_GRAFT_QUERIES.
 
 Usage: ab_opt.py BEFORE_JAR AFTER_JAR "q1,q2,..." [rounds] [out.json]
 
 Runs BEFORE/AFTER alternated `rounds` times in the same host window and
 tables per-query median wall / summed task / cpu seconds, plus each
-run's bracketing loadavg — the honest way to attribute a change on this
-co-tenant-noisy host (BENCH_VARIANCE.md).
+run's wall, calibration reference (`cal.ref`, the per-run probe time
+to normalize walls across windows and rounds) and bracketing loadavg —
+the honest way to attribute a change on a co-tenant-noisy host
+(BENCH_VARIANCE.md). The core count is SPARK_GRAFT_CPUS (default: the
+CPUs this process may run on) and the heap SPARK_DRIVER_MEM (default
+8g), as in the tier-1 test command.
 """
 import json, os, subprocess, sys, tempfile, time
 
 SPARK_JARS = "/opt/spark/jars/*"
+CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+HEAP = os.environ.get("SPARK_DRIVER_MEM") or "8g"
 
 
 def run_bench(jar, label, workdir, queries):
     env = dict(os.environ,
                SPARK_GRAFT_SF_DIR="/root/testdata/sf0.1",
-               SPARK_GRAFT_CPUS="32",
+               SPARK_GRAFT_CPUS=CPUS,
                SPARK_GRAFT_QUERIES=queries,
                SPARK_GRAFT_REQUEUE_MAX="0")
     t0 = time.monotonic()
     load0 = open("/proc/loadavg").read().split()[0]
     p = subprocess.run(
-        ["java", "-Xmx96g", "-cp", f"{SPARK_JARS}:{jar}",
+        ["java", f"-Xmx{HEAP}", "-cp", f"{SPARK_JARS}:{jar}",
          "--add-opens=java.base/java.lang=ALL-UNNAMED",
          "--add-opens=java.base/java.lang.invoke=ALL-UNNAMED",
          "--add-opens=java.base/java.lang.reflect=ALL-UNNAMED",
@@ -75,8 +81,10 @@ def main(before_jar, after_jar, queries, rounds=2, out="AB_OPT.json"):
             vals = [r[metric].get(q, -1) for r in runs]
             table.setdefault(metric, {})[q] = vals
             print(f"{q:24s} " + " ".join(f"{v:11.2f}" for v in vals))
-    print("loads: " + " ".join(f"{r['label']}={r['load'][0]}->{r['load'][1]}"
-                               for r in runs))
+    for r in runs:
+        ref = (r["cal"] or {}).get("ref")
+        print(f"{r['label']:>11s} wall={r['wall_s']}s cal.ref={ref} "
+              f"load={r['load'][0]}->{r['load'][1]}")
     json.dump({"queries_run": names, "rounds": rounds,
                "runs": [{k: r[k] for k in ("label", "wall_s", "load", "cal")}
                         for r in runs],

@@ -81,10 +81,12 @@ object Tables {
     * scan and UPPER-BOUNDS the frame's own count when the plan only
     * filters, projects and unions (joins that multiply rows are not
     * bounded by it). That direction is the safe one for every caller:
-    * size-adaptive branch probes (ScaleNtile, Dedup's pair generators,
-    * the registry closure gate) only need "small enough for the dense
-    * branch", and an over-estimate can only send them to the
-    * scale-safe branch early, never to an unsafe one late.
+    * size-adaptive branch probes (ScaleNtile, Dedup's pair generators)
+    * only need "small enough for the dense branch", and an over-estimate
+    * can only send them to the scale-safe branch early, never to an
+    * unsafe one late. The closure operator takes it as its plan-time
+    * bound: its size estimate, and whether its edges arrive as a
+    * broadcast (it gates on the exact count at execution).
     *
     * None when the frame has no file-backed scan (checkpointed /
     * in-memory frames) or a footer is unreadable. Per-file counts are
@@ -149,10 +151,10 @@ object Tables {
     * is either large (AQE wouldn't coalesce it anyway) or MB-scale
     * (where the session's parallelismFirst config keeps full width
     * regardless), and it is read many times — runtime re-planning of
-    * its single materialization buys nothing. Driver-paced LOOPS keep
-    * [[lazyCheckpoint]] without the flip: their per-round frames want
-    * [[withIterConf]]'s AQE coalescing, and their witness action runs
-    * the round's jobs immediately anyway.
+    * its single materialization buys nothing. No pin sits above the
+    * closure operator: preparing the pin's static plan would start the
+    * operator's own jobs (its size gate runs at execution) while the
+    * query is built.
     *
     * The conf flip is visible only during this (driver-side, quick)
     * planning call; operator construction is single-threaded in every
@@ -161,21 +163,18 @@ object Tables {
   def pin(df: DataFrame): DataFrame =
     withConf(df.sparkSession, Seq("spark.sql.adaptive.enabled" -> "false"))(lazyCheckpoint(df))
 
-  /** `df.localCheckpoint(eager = false)` at `level` (Spark's default
-    * when None) that keeps the SQL metrics of `df`'s plan registered
-    * for as long as the checkpoint's RDD lives. Two jobs that first
-    * read the same lazy checkpoint (two consumers' concurrent stages,
-    * or two broadcasts of it) both compute it from its lineage; the
-    * first to finish truncates that lineage, the source plan and its
-    * metrics become unreachable, and the other job's tasks then report
-    * metrics the driver has garbage-collected ("Failed to update
-    * accumulator" ERROR lines). Only the metric objects are held, not
-    * the plan: a loop's round plans (and their broadcasts) still free
-    * as soon as the lineage is cut.
+  /** `df.localCheckpoint(eager = false)` that keeps the SQL metrics of
+    * `df`'s plan registered for as long as the checkpoint's RDD lives.
+    * Two jobs that first read the same lazy checkpoint (two consumers'
+    * concurrent stages, or two broadcasts of it) both compute it from
+    * its lineage; the first to finish truncates that lineage, the
+    * source plan and its metrics become unreachable, and the other
+    * job's tasks then report metrics the driver has garbage-collected
+    * ("Failed to update accumulator" ERROR lines). Only the metric objects are held, not
+    * the plan: its broadcasts still free as soon as the lineage is cut.
     */
-  def lazyCheckpoint(df: DataFrame,
-      level: Option[org.apache.spark.storage.StorageLevel] = None): DataFrame = {
-    val cp = level.fold(df.localCheckpoint(false))(df.localCheckpoint(false, _))
+  def lazyCheckpoint(df: DataFrame): DataFrame = {
+    val cp = df.localCheckpoint(false)
     val metrics = PlanWalk.collectWithSubqueries(df.queryExecution.executedPlan) {
       case p => p.metrics.values
     }.flatten
@@ -192,49 +191,6 @@ object Tables {
   private val checkpointMetrics = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[AnyRef, Seq[AnyRef]]())
 
-  /** Scopes AQE's coalescing knob for driver-paced iteration loops
-    * (the two loops above a broadcast gate: the registry closure's
-    * semi-naive loop and the connected-components star loop): the
-    * session-level `parallelismFirst=true` is right for MB-scale
-    * document-scan shuffles (see GraftSession) but multiplies the
-    * fixed per-round task-dispatch cost of KB-scale iteration frames
-    * by keeping every tiny shuffle at full width. Measured r7 (sf0.1,
-    * warm): the registry closure family, then a loop at every scale,
-    * 3.4–4.3s with the session conf vs 2.5–3.0s with size-driven
-    * coalescing. At cluster scale
-    * flipping it off inside the loop is also right: iteration state
-    * is metadata-sized next to the corpus, and size-based coalescing
-    * still widens genuinely large rounds.
-    *
-    * `staticPlans = true` additionally turns AQE OFF and pins a small
-    * static shuffle width for the scope — for loops whose join
-    * strategies are already decided by count-gated broadcast hints
-    * (`Registry.closureLoop`): AQE's stage-by-stage re-optimization
-    * added driver latency to every tiny per-round query (measured
-    * ~45 → ~29 jobs on reg_refs_closure when it ran as this loop)
-    * while its runtime statistics
-    * cannot beat the loop's own EXACT convergence counts — see
-    * [[iterWidth]], which that loop calls per round. Loops that rely
-    * on AQE's runtime join re-selection (`Pipeline.ccStar`, whose
-    * per-round frames have no count-gated hints) pass false.
-    */
-  def withIterConf[T](s: SparkSession, staticPlans: Boolean)(body: => T): T = {
-    // parallelismFirst=false alone regressed the closure family 3x at
-    // sf1 (7s -> 17-23s, r7 measurement): size-driven coalescing with
-    // the DEFAULT 64 MB advisory folds a ~50 MB iteration frame into
-    // ONE post-shuffle partition and serializes every round. A 4 MB
-    // advisory keeps KB-scale rounds at 1-2 tasks (the sf0.1 fixed-
-    // dispatch win this conf exists for) while a genuinely large
-    // round still fans out to ~frame/4MB tasks.
-    withConf(s, Seq(
-      "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "4m") ++
-      (if (staticPlans) Seq(
-        "spark.sql.adaptive.enabled" -> "false",
-        "spark.sql.shuffle.partitions" -> "8")
-      else Seq.empty))(body)
-  }
-
   /** Runs `body` with the session confs `kvs` set, then restores each
     * key's previous value, or unsets it when it was not set. */
   private def withConf[T](s: SparkSession, kvs: Seq[(String, String)])(body: => T): T = {
@@ -248,45 +204,16 @@ object Tables {
     }
   }
 
-  /** Edge-row bound of the broadcast-BFS operator
-    * (graft.plans.TransitiveClosure): at or under it, the registry
-    * closure (`Registry.closure`) and connected components
-    * (`Pipeline.components`) run as that one operator; above it, as
-    * their loops. The registry's semi-naive loop also broadcasts a
-    * per-round join side under it. 2M two-long rows ≈ ~60 MB built —
+  /** The closure operator's size gate (graft.plans.TransitiveClosure),
+    * in edge rows: at or under it, the operator collects its edges into
+    * one broadcast adjacency and runs a BFS per source; above it, it
+    * runs partitioned rounds. The registry closure (`Registry.closure`)
+    * and connected components (`Pipeline.components`) pass it. Also
+    * nn-descent's broadcast gate. 2M two-long rows ≈ ~60 MB built —
     * comfortably inside driver/executor memory and far above every
     * test scale.
     */
   private[graft] val BcastRows = 2000000L
-
-  /** Static shuffle width for the NEXT round of a driver-paced loop
-    * over ~`rows` rows: ~64 MB per partition at ~24 B/row, floor 8
-    * (the local fixed-dispatch trade [[withIterConf]] exists for),
-    * cap 20000. The registry closure loop calls this inside
-    * [[withIterConf]] with its own exact convergence counts before
-    * planning a round — the scale-adaptive replacement for AQE's
-    * runtime coalescing (the count is exact where AQE would have had
-    * an estimate), without AQE's per-round replanning latency. The
-    * conf key is saved and restored by [[withIterConf]].
-    */
-  def iterWidth(s: SparkSession, rows: Long): Unit =
-    s.conf.set("spark.sql.shuffle.partitions",
-      math.min(20000L, math.max(8L, rows * 24 / (64L << 20))).toString)
-
-  /** Lazy localCheckpoint at MEMORY_AND_DISK_SER for the per-round
-    * frames of driver-paced fixpoint loops. The default deserialized
-    * level stores one UnsafeRow OBJECT per row (~40 B JVM overhead on
-    * a 2-long pair row — more header than data); a closure loop whose
-    * rounds accumulate into an 18M-pair result keeps ~1.3 GiB of row
-    * objects live per construction, and a bench session running three
-    * constructions of five closure queries OOMed an 8 GiB heap on
-    * exactly that. Serialized storage packs the same rows into a few
-    * large byte arrays (~3x smaller, near-zero object count), and for
-    * KB-to-MB-scale round frames the codec cost is noise next to the
-    * round's shuffle.
-    */
-  def iterCheckpoint(df: DataFrame): DataFrame =
-    lazyCheckpoint(df, Some(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
 
   /** A Filter that must stay EXACTLY where it is written. Catalyst
     * freely pushes deterministic predicates below joins and even into

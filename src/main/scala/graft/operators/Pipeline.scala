@@ -12,16 +12,11 @@ import org.apache.spark.sql.functions._
   *
   * Scale notes per operator are on each method. Duplicate-cluster
   * resolution is connected components through one entry,
-  * [[components]]: below the broadcast gate it is the broadcast-BFS
-  * operator of [[graft.plans.TransitiveClosure]] (no loop, no
-  * driver round trip), above it the [[ccStar]] loop, whose rounds
-  * each end in a count job on the driver.
+  * [[components]]: the label form of the
+  * [[graft.plans.TransitiveClosure]] operator, which takes its size
+  * gate (broadcast BFS, or large-star/small-star rounds) at execution.
   */
 object Pipeline {
-
-  // The CC gate's above-gate decision and ccStar's convergence. slf4j
-  // rides Spark's own logging backend.
-  private val ccLog = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** Duplicate clusters = connected components over the MinHash-LSH
     * near-dup pair graph (the step that turns pairwise candidates
@@ -30,16 +25,17 @@ object Pipeline {
     * Output: (cluster_id = min doc_id, doc_id, n_docs) per member.
     */
   def dedupClusters(s: SparkSession, dir: String): DataFrame =
-    clusters(Dedup.minhashPairs(s, dir), "doc_a", "doc_b", "doc_id", "n_docs")
+    clusters(Dedup.minhashPairs(s, dir), Tables.documents(s, dir), "doc_a", "doc_b", "doc_id", "n_docs")
 
   /** Member rows (cluster_id, `id`, `size`) of the components of the
-    * pair graph (`a`, `b`). The size is a window over the cluster key,
-    * not a groupBy+join whose build side would re-run the member
-    * subplan: one exchange, identical rows.
+    * pair graph (`a`, `b`), whose ids are rows of the table `nodes`.
+    * The size is a window over the cluster key, not a groupBy+join
+    * whose build side would re-run the member subplan: one exchange,
+    * identical rows.
     */
-  private def clusters(pairs: DataFrame, a: String, b: String,
+  private def clusters(pairs: DataFrame, nodes: DataFrame, a: String, b: String,
                        id: String, size: String): DataFrame =
-    components(pairs.select(col(a).as("src"), col(b).as("dst")))
+    components(pairs.select(col(a).as("src"), col(b).as("dst")), Tables.footerRowBound(nodes))
       .select(col("label").as("cluster_id"), col("id").as(id))
       .withColumn(size, count(lit(1)).over(Window.partitionBy(col("cluster_id"))))
 
@@ -50,158 +46,20 @@ object Pipeline {
     * per node. NULL endpoints follow that CTE (see
     * [[graft.plans.TransitiveClosure]]).
     *
-    * The pairs are pinned ([[Tables.pin]]) and counted here, so the
-    * pair scorer runs once, in the count's jobs — the only jobs
-    * construction launches below the gate. The symmetric row count
-    * (twice the exact pair count) is the edge bound:
-    *  - bound ≤ [[Tables.BcastRows]]:
-    *    [[graft.plans.TransitiveClosure.components]], the broadcast-BFS
-    *    operator in its label form. Both of its children read the
-    *    pinned pairs; execution is one broadcast job for the adjacency
-    *    and one stage over the distinct nodes. Its explain string shows
-    *    the bound, the threshold and the branch.
-    *  - otherwise: [[ccStar]], a loop of jobs at construction. One INFO
-    *    line records the same three values.
+    * The operator takes both directions of every pair as its edges,
+    * and decides at execution between its broadcast BFS (at or under
+    * `threshold` symmetric edge rows) and large-star/small-star rounds
+    * above it; its plan string shows the threshold and `nodeBound`, a
+    * plan-time bound on the node count that sizes the estimate
+    * downstream joins plan with. Construction launches no job.
     */
-  private[graft] def components(pairs: DataFrame): DataFrame = {
-    val edges = Tables.pin(pairs.select(col("src"), col("dst")))
-    val bound = 2 * edges.queryExecution.toRdd.count()
-    if (bound <= Tables.BcastRows) {
-      val sym = edges.select(explode(array(
-          struct(col("src"), col("dst")),
-          struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      graft.plans.TransitiveClosure.components(sym.select(col("src")).distinct(), sym,
-        bound, Tables.BcastRows)
-    } else {
-      ccLog.info(s"connected components edgeBound=$bound threshold=${Tables.BcastRows} " +
-        "branch=star-loop")
-      ccStar(edges)._1
-    }
-  }
-
-  /** Large-star/small-star CC core (Kiveris et al., "Connected
-    * Components in MapReduce and Beyond"), [[components]]' branch
-    * above the broadcast gate: path lengths contract multiplicatively,
-    * so a chain converges in O(log n) alternations whatever its
-    * diameter.
-    *
-    *  - large-star(u): every strictly-larger neighbor of u re-points
-    *    to m = min(Γ(u) ∪ u).
-    *  - small-star(u): edges orient toward the smaller endpoint;
-    *    every smaller-or-equal neighbor (and u itself) re-points to m.
-    *
-    * Both steps are one groupBy-min + one join over a shrinking edge
-    * list. Fixpoint = the edge set is stable (each node points
-    * straight at its component min); checked exactly via two
-    * symmetric-difference counts per round — the honest price of an
-    * exact stop condition on a non-monotone edge set. The rounds run
-    * under AQE ([[Tables.withIterConf]] without static plans): its
-    * runtime statistics pick each round's join strategy.
-    * `edges` need not be symmetric. Returns (labels (id, label),
-    * rounds run).
-    */
-  private[graft] def ccStar(edges: DataFrame, maxIter: Int = 30): (DataFrame, Int) = {
-    def largeStar(e: DataFrame): DataFrame = {
-      val sym = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
-      val m = sym.groupBy(col("src")).agg(min(col("dst")).as("mn"))
-        .select(col("src"), least(col("mn"), col("src")).as("m"))
-      // no distinct here (r8): output multiplicity is bounded by |sym|
-      // (one row per input edge) and smallStar's groupBy-min and
-      // terminal distinct absorb duplicates — one fewer shuffle per
-      // alternation for the same fixpoint.
-      sym.join(m, "src")
-        .filter(col("dst") > col("src"))
-        .select(col("dst").as("src"), col("m").as("dst"))
-        .filter(col("src") =!= col("dst"))
-    }
-    def smallStar(e: DataFrame): DataFrame = {
-      val oriented = e.select(greatest(col("src"), col("dst")).as("src"),
-        least(col("src"), col("dst")).as("dst"))
-      val m = oriented.groupBy(col("src")).agg(min(col("dst")).as("mn"))
-        .select(col("src"), least(col("mn"), col("src")).as("m"))
-      oriented.join(m, "src")
-        .select(col("dst").as("src"), col("m").as("dst"))
-        .union(m.select(col("src"), col("m").as("dst")))
-        .filter(col("src") =!= col("dst"))
-        .distinct()
-    }
-    Tables.withIterConf(edges.sparkSession, staticPlans = false) {
-    // Seed pass (r8): one min-label hop + graph contraction before the
-    // alternations. seed(u) = min(Γ(u) ∪ u) is a member of u's own
-    // component, so contracting every edge (u,v) → (seed(u), seed(v))
-    // preserves components 1:1 while collapsing each replica-clique to
-    // (near-)single nodes — the bulk of a near-dup pair graph. The
-    // composed label is still the GLOBAL component min: the min node m
-    // seeds to itself (all neighbors are larger), so m survives as a
-    // contracted id and the star fixpoint on the contracted graph
-    // roots its component at m. Costs ~one alternation (groupBy-min +
-    // two relabel joins); saves alternations whenever clique mass
-    // dominates (the LSH pair graphs) and is measured, not assumed —
-    // see SURVEY §14.
-    // Self-loops stay in the seed: a node whose only edge is a
-    // self-loop is still its own component, as the oracle seeds it;
-    // the contraction below drops the loop.
-    val e0 = edges.select(col("src"), col("dst"))
-    val sym0 = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
-    // The two relabel joins below broadcast the lazy seed checkpoint
-    // as two concurrent jobs (see Tables.lazyCheckpoint).
-    val seed1 = Tables.lazyCheckpoint(sym0.groupBy(col("src")).agg(min(col("dst")).as("mn"))
-      .select(col("src").as("id"), least(col("mn"), col("src")).as("slabel")))
-    // Two pointer jumps on the seed forest (slabel ∘ slabel): each is
-    // ONE node-sized self-join and squares the hop horizon — the seed
-    // map stays "u → some member of u's component" (closed under
-    // composition), which is the only property contraction needs.
-    val seed = (1 to 2).foldLeft(seed1) { (sd, _) =>
-      Tables.lazyCheckpoint(sd.join(sd.select(col("id").as("slabel"), col("slabel").as("l2")), Seq("slabel"))
-        .select(col("id"), col("l2").as("slabel")))
-    }
-    var e = sym0
-      .join(seed.select(col("id").as("src"), col("slabel").as("ls")), "src")
-      .join(seed.select(col("id").as("dst"), col("slabel").as("ld")), "dst")
-      .select(col("ls").as("src"), col("ld").as("dst"))
-      .filter(col("src") =!= col("dst")).distinct().transform(Tables.iterCheckpoint)
-    var eCount = e.count()
-    var iter = 0
-    var stable = false
-    while (!stable && iter < maxIter) {
-      // lazy checkpoint, materialized by the count probe. Exact
-      // set-equality fixpoint in at most two cheap jobs: both frames
-      // are distinct sets, so |next| == |e| AND |next ∪ e| == |e|
-      // ⟺ next == e — and the (usual) pre-fixpoint round where the
-      // edge count moved short-circuits before the union-distinct
-      // job. Cheaper than the former two except().isEmpty probes,
-      // which shuffled both frames twice every round. (Running TWO
-      // alternations per probe cycle was measured in r8 and is
-      // WORSE — 7.1→9.9s warm: the doubled per-job stage DAG costs
-      // more in AQE replanning latency than the probe jobs it saves.)
-      val next = Tables.iterCheckpoint(smallStar(largeStar(e)))
-      val nextCount = next.count()
-      stable = nextCount == eCount && next.union(e).distinct().count() == nextCount
-      // the stability probe above was the old round's last read —
-      // release its checkpoint blocks (see GraftShim.freeCheckpoint).
-      org.apache.spark.sql.graftshim.GraftShim.freeCheckpoint(e)
-      e = next
-      eCount = nextCount
-      iter += 1
-    }
-    if (!stable)
-      ccLog.warn(s"ccStar exited at maxIter=$maxIter WITHOUT reaching the edge-set " +
-        "fixpoint - component labels may be wrong; raise maxIter")
-    ccLog.info(s"ccStar converged in $iter alternations (final edge count $eCount)")
-    // Converged: every contracted edge is (member → component min);
-    // minima label themselves. Compose back through the seed map: a
-    // seed label absent from the contracted edge set means its whole
-    // seed class was already a component (clique collapsed in the
-    // seed hop) — it labels itself via the coalesce.
-    val starLabels = e.select(col("src").as("id"), col("dst").as("label"))
-      .union(e.select(col("dst").as("id"), col("dst").as("label")))
-      .groupBy(col("id")).agg(min(col("label")).as("label"))
-    val labels = seed
-      .join(starLabels.select(col("id").as("slabel"), col("label")), Seq("slabel"), "left")
-      .select(col("id"), coalesce(col("label"), col("slabel")).as("label"))
-    (labels, iter)
-    }
+  private[graft] def components(pairs: DataFrame, nodeBound: Option[Long] = None,
+                                threshold: Long = Tables.BcastRows): DataFrame = {
+    val sym = pairs.select(explode(array(
+        struct(col("src"), col("dst")),
+        struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+    graft.plans.TransitiveClosure.components(sym, nodeBound, threshold)
   }
 
   /** Deterministic stratified sampling: each (source, lang) stratum
@@ -540,12 +398,16 @@ object Pipeline {
     *
     * Scale: composes [[dedupClusters]] (LSH pairs + connected
     * components); the stats are two vocabulary-sized rollups (cluster
-    * ids, then sizes) after one left join keyed by uniform doc_id.
+    * ids, then sizes) after one left join keyed by uniform doc_id. The
+    * cluster side is broadcast, as in [[corpusFunnel]]: it holds only
+    * the documents with a near duplicate, but its plan-time estimate
+    * is the whole documents table's footer count (see [[components]]),
+    * which passes the broadcast threshold near 400k documents.
     */
   def clusterStats(s: SparkSession, dir: String): DataFrame = {
     val cl = dedupClusters(s, dir).select(col("doc_id"), col("cluster_id"))
     val labeled = Tables.documents(s, dir).select(col("doc_id"))
-      .join(cl, Seq("doc_id"), "left")
+      .join(broadcast(cl), Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
     labeled.groupBy(col("cluster_id"))
       .agg(count(lit(1)).as("size"))
@@ -733,13 +595,13 @@ object Pipeline {
     * curated-source priority list) with doc_id as the deterministic
     * tiebreak. One row_number window over the cluster key (state
     * bounded by cluster size) + the same-keyed rollup; the
-    * documents join shuffles on doc_id only.
+    * documents join broadcasts the cluster side (see [[clusterStats]]).
     */
   def dedupSurvivors(s: SparkSession, dir: String): DataFrame = {
     val clusters = dedupClusters(s, dir).select(col("cluster_id"), col("doc_id"))
     val docs = Tables.documents(s, dir).select(col("doc_id"), col("source"))
     val w = Window.partitionBy(col("cluster_id")).orderBy(col("source"), col("doc_id"))
-    clusters.join(docs, "doc_id")
+    broadcast(clusters).join(docs, "doc_id")
       .withColumn("rk", row_number().over(w))
       .groupBy(col("cluster_id"))
       .agg(min(when(col("rk") === 1, col("doc_id"))).as("survivor_doc_id"),
@@ -941,12 +803,12 @@ object Pipeline {
     * policy then keeps one rendition per meaning. The embedding graph
     * chains through hub vectors, so its components have a larger
     * diameter than the LSH cliques; [[components]] is indifferent to
-    * that below its gate (one BFS per component) and above it (ccStar's
-    * O(log n) alternations).
+    * that below its gate (one BFS per component) and above it (the
+    * O(log n) large-star/small-star alternations).
     * Output: (cluster_id = min vec_id, vec_id, n_vecs) per member.
     */
   def semanticClusters(s: SparkSession, dir: String): DataFrame =
-    clusters(Dedup.embedLsh(s, dir), "vec_a", "vec_b", "vec_id", "n_vecs")
+    clusters(Dedup.embedLsh(s, dir), Tables.embeddings(s, dir), "vec_a", "vec_b", "vec_id", "n_vecs")
 
   /** Per-source semantic-duplication rate: the fraction of each
     * source's vectors that participate in at least one SRP-bucketed

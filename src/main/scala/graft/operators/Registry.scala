@@ -661,149 +661,21 @@ object Registry {
           floor(col("doc_id") / 3).cast("bigint").as("parent")))
   }
 
-  private val closureLog = org.slf4j.LoggerFactory.getLogger(getClass)
-
   /** The (doc_id, transitive ancestor `anc`[, min hop count `d`])
     * pairs of every document of `docs` over the (child, parent)
     * `edges` — the one closure entry of [[refsClosure]], [[depDepth]],
-    * [[gcCandidates]] and [[refCycles]]. The branch is chosen by the
-    * edges' parquet footer bound, read at zero jobs
-    * ([[Tables.footerRowBound]]):
-    *  - bound ≤ [[Tables.BcastRows]]: [[graft.plans.TransitiveClosure]],
-    *    a broadcast-BFS Catalyst operator. Construction launches no
-    *    job; execution is one broadcast job for the edges and one
-    *    stage over `docs`. Its explain string shows the bound, the
-    *    threshold and the branch.
-    *  - otherwise (or with no footer bound): [[closureLoop]], the
-    *    semi-naive loop of per-round jobs, restricted to `docs` by a
-    *    null-safe semi join. One INFO line records the same three
-    *    values.
-    * Both branches converge on cyclic graphs (the BFS visited set and
-    * the loop's anti-join stop at the finite pair set) and give a
-    * source its own id as an ancestor only through a cycle.
+    * [[gcCandidates]] and [[refCycles]]: the
+    * [[graft.plans.TransitiveClosure]] operator, which takes its size
+    * gate at execution. The edges' parquet footer bound, read at zero
+    * jobs ([[Tables.footerRowBound]]), is its plan-time bound.
+    * Construction launches no job. The closure converges on cyclic
+    * graphs and gives a source its own id as an ancestor only through
+    * a cycle.
     */
   private[graft] def closure(docs: DataFrame, edges: DataFrame, withDepth: Boolean): DataFrame = {
-    val sources = docs.select(col("doc_id"))
     val e = edges.select(col("child"), col("parent"))
-    val bound = Tables.footerRowBound(e)
-    bound.filter(_ <= Tables.BcastRows) match {
-      case Some(n) => graft.plans.TransitiveClosure.of(sources, e, withDepth, n, Tables.BcastRows)
-      case None =>
-        closureLog.info(s"closure edgeBound=${bound.getOrElse("unknown")} " +
-          s"threshold=${Tables.BcastRows} branch=semi-naive-loop")
-        closureLoop(e, withDepth)
-          .join(sources.select(col("doc_id").as("src")), col("doc_id") <=> col("src"), "left_semi")
-    }
-  }
-
-  /** [[closure]]'s above-gate branch: the (doc_id, anc[, d]) pairs of
-    * every child of `edges` by SEMI-NAIVE frontier expansion carrying
-    * the min hop count d. Each round joins only the newly-discovered
-    * pairs against a step relation, so per-round join work is
-    * |frontier| · avg-outdegree and the whole run touches O(|closure|)
-    * join rows. Pointer doubling (closure ∘ closure, O(log depth)
-    * rounds; r6–r10) is the wrong trade on hub-heavy DAGs: its
-    * self-join intermediate is Σ_mid descendants(mid)·ancestors(mid)
-    * ≈ N·log³N (small-id hubs have ~N/id descendants), ~5.7e9 rows at
-    * 500k docs against semi-naive's ~18M. [[Tables.withIterConf]]
-    * coalesces the tiny round shuffles.
-    *
-    * NULLs follow the recursive-CTE oracle: equi-joins on the mid node
-    * never expand a NULL parent nor reach a NULL child, and the dedup
-    * anti-joins are null-safe, so a NULL-bearing pair is kept once.
-    *
-    * Per round: frontier ⋈ step (d' = d_frontier + d_step), an
-    * anti-join against closure-so-far to keep only new pairs (the BFS
-    * dedup that also terminates cycles) and a min-d rollup per fresh
-    * pair. The frontier count is the convergence witness (empty
-    * frontier = fixpoint). localCheckpoint per round keeps the plan
-    * flat, and the superseded build frames' blocks are freed as soon
-    * as the step relation is materialized (GraftShim.freeCheckpoint).
-    */
-  private[graft] def closureLoop(edges: DataFrame, withDepth: Boolean): DataFrame = {
-    val s = edges.sparkSession
-    // pairs of `l` not in `r`, NULLs matching NULLs
-    def newPairs(l: DataFrame, r: DataFrame): DataFrame =
-      l.join(r.select(col("doc_id").as("r_doc"), col("anc").as("r_anc")),
-        col("doc_id") <=> col("r_doc") && col("anc") <=> col("r_anc"), "left_anti")
-    val pairs = Tables.withIterConf(s, staticPlans = true) {
-      // Widen BEFORE the first materialization (r12, ADVICE r11): the
-      // staticPlans scope pins shuffle.partitions=8, which is right for
-      // the KB-scale round frames but would serialize the edge distinct
-      // and the step self-joins below on a large graph. The footer row
-      // bound of the edge scans (zero jobs) upper-bounds |edges|; each
-      // round's iterWidth then re-tightens from the exact counts.
-      Tables.footerRowBound(edges).foreach(n => Tables.iterWidth(s, n))
-      val e = edges
-        .select(col("child").as("doc_id"), col("parent").as("anc"))
-        .distinct().transform(Tables.iterCheckpoint)
-      // STRIDE-4 step relation carrying its EXACT min distance (r12):
-      // direct edges at d=1, two-hop pairs WITHOUT a direct edge at d=2
-      // (the anti-join makes d exact within the ≤2 window); squaring
-      // step2 then yields every pair at min distance ≤4 with exact d —
-      // a composition's d1+d2 is a real path length (≥ the true min
-      // m), and splitting a shortest path of length m ≤ 4 into halves
-      // of lengths a, b ≤ 2 gives step2 entries with d1 ≤ a, d2 ≤ b, so
-      // d1+d2 ≤ m and the min-per-pair is exactly m. The BFS then needs
-      // ⌈depth/4⌉ rounds instead of depth, and the loop's cost is the
-      // per-round FIXED cost (a round of jobs each), not bytes. Exactness
-      // of the loop: a shortest path of length L has a prefix of
-      // length L-4 whose min-dist is exactly L-4 (else a shorter path
-      // would exist), that prefix is in the previous frontier with
-      // exact d by induction, and the 4-step suffix is in the step
-      // relation at its exact ≤4 distance — so min over a round's
-      // candidates is the true min distance, and the per-round
-      // anti-join still discards longer rediscoveries of earlier pairs.
-      val twoHop = newPairs(e.select(col("doc_id"), col("anc").as("mid"))
-        .join(e.select(col("doc_id").as("mid"), col("anc")), "mid")
-        .select(col("doc_id"), col("anc")), e)
-        .distinct()
-      val step2 = e.select(col("doc_id"), col("anc"), lit(1L).as("d"))
-        .unionAll(twoHop.select(col("doc_id"), col("anc"), lit(2L).as("d")))
-        .transform(Tables.iterCheckpoint)
-      val step = step2.unionAll(
-        step2.select(col("doc_id"), col("anc").as("mid"), col("d").as("df"))
-          .join(step2.select(col("doc_id").as("mid"), col("anc"), col("d").as("ds")), "mid")
-          .select(col("doc_id"), col("anc"), (col("df") + col("ds")).as("d")))
-        .groupBy(col("doc_id"), col("anc")).agg(min(col("d")).as("d"))
-        .transform(Tables.iterCheckpoint)
-      // Closure-so-far stays a UNION VIEW of the per-round frontier
-      // checkpoints — each pair is checkpoint-written exactly once, in
-      // the round that discovered it.
-      val rounds = scala.collection.mutable.ListBuffer(step)
-      var frontier = step
-      var frontierCount = frontier.count() // materializes e → step2 → step
-      // e and step2 exist only to build step — their checkpoint blocks
-      // are provably never read again once the count above has
-      // materialized step.
-      org.apache.spark.sql.graftshim.GraftShim.freeCheckpoint(e)
-      org.apache.spark.sql.graftshim.GraftShim.freeCheckpoint(step2)
-      // Adaptive broadcasts (r11): the convergence counts are EXACT and
-      // known before each round is planned, so each round broadcasts
-      // the step relation and the closure-so-far anti-join side while
-      // they fit ([[Tables.BcastRows]]); a side too big to broadcast keeps the
-      // shuffle form, per side, per round.
-      val stepBcast = frontierCount <= Tables.BcastRows
-      var closureCount = frontierCount
-      while (frontierCount > 0) {
-        Tables.iterWidth(s, closureCount)
-        val stepSide = step.select(col("doc_id").as("mid"), col("anc"), col("d").as("ds"))
-        val hop = frontier
-          .select(col("doc_id"), col("anc").as("mid"), col("d").as("df"))
-          .join(if (stepBcast) broadcast(stepSide) else stepSide, "mid")
-          .select(col("doc_id"), col("anc"), (col("df") + col("ds")).as("d"))
-        val closure = rounds.reduce(_ unionAll _).select(col("doc_id"), col("anc"))
-        val fresh = newPairs(hop, if (closureCount <= Tables.BcastRows) broadcast(closure) else closure)
-          .groupBy(col("doc_id"), col("anc")).agg(min(col("d")).as("d"))
-          .transform(Tables.iterCheckpoint)
-        frontierCount = fresh.count()
-        frontier = fresh
-        closureCount += frontierCount
-        if (frontierCount > 0) rounds += fresh
-      }
-      rounds.reduce(_ unionAll _)
-    }
-    if (withDepth) pairs else pairs.select(col("doc_id"), col("anc"))
+    graft.plans.TransitiveClosure.of(docs.select(col("doc_id")), e, withDepth,
+      Tables.footerRowBound(e), Tables.BcastRows)
   }
 
   /** Transitive reference closure per document (the resolution set a
@@ -847,11 +719,12 @@ object Registry {
     * every strongly-connected component of size ≥ 1 that contains a
     * cycle: (cycle_id = min member, member, component size).
     *
-    * Scale: reachability via [[closure]] — the broadcast-BFS
-    * operator, with the semi-naive loop above the gate; both converge
-    * on cyclic graphs, and a node is its own ancestor exactly when it
-    * lies on a cycle. SCC membership is one self-join of the closure
-    * with its transpose (mutual reach), then a min-label rollup.
+    * Scale: reachability via [[closure]], which converges on cyclic
+    * graphs; a node is its own ancestor exactly when it lies on a
+    * cycle. SCC membership is one self-join of the closure with its
+    * transpose (mutual reach), then a min-label rollup. The two closure
+    * instances read one edge computation: exchange reuse shares their
+    * edge broadcast (or their edge exchange, without a footer bound).
     */
   def refCycles(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir).select(col("doc_id"))

@@ -23,22 +23,4 @@ object GraftShim {
     */
   def flushListeners(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
-
-  /** Release the block-manager storage behind a `localCheckpoint`'d
-    * frame. `Dataset.unpersist` only talks to the CacheManager, so a
-    * checkpoint's MEMORY_AND_DISK blocks otherwise live until the
-    * ContextCleaner happens to GC the underlying RDD — in a
-    * driver-paced fixpoint loop that means every superseded round's
-    * blocks pile up for the whole loop (measured: the sf10 closure
-    * family OOMs an 8 GiB heap on exactly this). Callers free a
-    * round's frame only once the NEXT round is materialized and the
-    * old one is provably never read again — a freed localCheckpoint
-    * cannot be recomputed (its lineage is truncated by design).
-    */
-  def freeCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
 }

@@ -4,17 +4,19 @@ import graft.operators.{Dedup, Pipeline}
 import graft.plans.TransitiveClosureExec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.RDDScanExec
-import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
-/** Both sides of the connected-components gate ([[Pipeline.components]]):
-  * the label form of the broadcast-BFS operator, taken at every test
-  * scale, and the star loop it falls back to above [[Tables.BcastRows]]
-  * ([[Pipeline.ccStar]], called directly here) must give the same
+/** Both sides of the connected-components gate, which the label form
+  * of the closure operator takes at execution ([[Pipeline.components]]):
+  * the broadcast BFS it takes at the default threshold at every test
+  * scale, and the large-star/small-star rounds it runs above the
+  * threshold (forced here with threshold 0) must give the same
   * (id, label) rows — on the semantic pair graph (PipelineSpec compares
-  * them on the LSH pair graph), a long chain, and self-loops with
+  * them on the LSH pair graph and a long chain) and on self-loops with
   * duplicate edges. On inputs the pair graphs never contain (no edges,
-  * self-loops, duplicate edges, NULL endpoints) the operator is checked
+  * self-loops, duplicate edges, NULL endpoints) both are checked
   * against hand-computed values of the oracle's recursive CTE:
   * `reach(id, lab)` seeded with (src, src) for every distinct src of
   * the symmetric edges, `reach(e.src, r.lab) :- edge(e), reach(r),
@@ -23,33 +25,32 @@ import org.apache.spark.sql.functions._
 class ConnectedComponentsSpec extends SparkSpec {
   import spark.implicits._
 
+  /** the (id, label) rows, collected from `df` itself so its metrics are read */
   private def labels(df: DataFrame): Map[Option[Long], Option[Long]] = {
-    val rows = df.select(col("id"), col("label")).collect().toSeq.map { r =>
+    val rows = df.collect().toSeq.map { r =>
       (Option(r.get(0)).map(_.asInstanceOf[Long]), Option(r.get(1)).map(_.asInstanceOf[Long]))
     }
     assert(rows.map(_._1).distinct.size == rows.size, "one row per node")
     rows.toMap
   }
 
-  /** the exec's labels through the gate, which takes it at test scale */
+  /** the labels at the default threshold (the BFS) and at threshold 0
+    * (the rounds, unless there are no edges), which must agree */
   private def exec(pairs: DataFrame): Map[Option[Long], Option[Long]] = {
-    val cc = Pipeline.components(pairs)
-    assert(cc.queryExecution.executedPlan.toString.contains("TransitiveClosure"))
-    labels(cc)
+    val bfs = Pipeline.components(pairs)
+    val star = Pipeline.components(pairs, threshold = 0L)
+    val l = labels(bfs)
+    assert(labels(star) == l, "the two sides of the CC gate must give the same labels")
+    assert(closureMetric(bfs, "rounds") == 0)
+    assert(closureMetric(star, "rounds") > 0 || pairs.isEmpty)
+    l
   }
 
   private def pairs(ps: (java.lang.Long, java.lang.Long)*): DataFrame =
     ps.toSeq.toDF("src", "dst")
 
-  private def compareWithStar(ps: DataFrame): Map[Option[Long], Option[Long]] = {
-    val e = exec(ps)
-    assert(e.nonEmpty)
-    assert(e == labels(Pipeline.ccStar(ps)._1), "the two CC branches must give the same labels")
-    e
-  }
-
-  test("exec labels equal ccStar's on the semantic pair graph") {
-    compareWithStar(Dedup.embedLsh(spark, sfDir).select(col("vec_a").as("src"), col("vec_b").as("dst")))
+  test("the rounds' labels equal the BFS labels on the semantic pair graph") {
+    assert(exec(Dedup.embedLsh(spark, sfDir).select(col("vec_a").as("src"), col("vec_b").as("dst"))).nonEmpty)
   }
 
   test("a 999-edge chain is one component rooted at 0") {
@@ -62,7 +63,7 @@ class ConnectedComponentsSpec extends SparkSpec {
   }
 
   test("self-loops and duplicate edges: a self-loop alone is its own component") {
-    val l = compareWithStar(
+    val l = exec(
       pairs((1L, 1L), (1L, 1L), (2L, 1L), (2L, 1L), (3L, 2L), (5L, 5L), (8L, 7L), (7L, 8L)))
     assert(l == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 5L, 7L -> 7L, 8L -> 7L)
       .map { case (k, v) => Some(k) -> Some(v) })
@@ -84,16 +85,29 @@ class ConnectedComponentsSpec extends SparkSpec {
     for (name <- Seq("dedup_clusters", "dedup_semantic_clusters")) {
       val df = SparkEntry.queries(name)(spark, sfDir)
       val plan = df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
-      assert(s"edgeBound=\\d+, threshold=${Tables.BcastRows}, branch=broadcast-bfs".r
-        .findFirstIn(plan).nonEmpty, s"$name:\n$plan")
+      assert(s"threshold=${Tables.BcastRows}, bound=\\d+".r.findFirstIn(plan).nonEmpty, s"$name:\n$plan")
       df.queryExecution.toRdd.count()
       val executed = nodes(df.queryExecution.executedPlan)
       val closures = executed.collect { case c: TransitiveClosureExec => c }
       assert(closures.size == 1, s"$name: ${df.queryExecution.executedPlan}")
-      assert(nodes(closures.head.edges).count(_.isInstanceOf[BroadcastExchangeExec]) == 1, name)
-      // the only checkpoint read is the pinned pair frame, by both children
-      val scans = executed.collect { case r: RDDScanExec => r.rdd.id }.distinct
-      assert(scans.size == 1, s"$name: loop checkpoint scans in the plan: $scans")
+      // the exec clusters its edges itself (no planner exchange on the
+      // edge column) and takes the BFS side, with no rounds
+      val edgeCol = closures.head.edges.output.head
+      assert(!nodes(closures.head.edges).exists {
+        case x: ShuffleExchangeExec => x.outputPartitioning match {
+          case h: HashPartitioning => h.expressions.exists(_.semanticEquals(edgeCol))
+          case _ => false
+        }
+        case _ => false
+      }, s"$name: ${closures.head.edges}")
+      assert(closureMetric(df, "rounds") == 0 && closureMetric(df, "edgeRows") > 0, name)
+      // no pinned pair frame: the only checkpoint read is the MinHash
+      // signature pin in the edges' subplan (none in the semantic graph).
+      // That pin is today's state, not the target: ROADMAP direction 3
+      // removes it.
+      val pins = executed.collect { case r: RDDScanExec => r }
+      assert(pins.map(_.rdd.id).distinct.size == (if (name == "dedup_clusters") 1 else 0) &&
+        pins.forall(p => nodes(closures.head.edges).contains(p)), s"$name: checkpoint scans $pins")
     }
   }
 }

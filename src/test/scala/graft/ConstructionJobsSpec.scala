@@ -9,13 +9,13 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
   * exceptions are listed here BY NAME, each with the most jobs its
   * construction may launch, so any new operator that accidentally
   * grows an eager probe/checkpoint fails this spec loudly, and a
-  * listed one that grows more fails too. The registry reference
-  * closures are not on the list: they run as one broadcast-BFS
-  * operator (graft.plans.TransitiveClosure), whose rounds happen at
-  * execution, and their semi-naive loop is only the fallback above the
-  * edge-count gate. Power iteration, k-means assignment, the semantic
-  * duplicate rate and the BPE merge rounds build with zero jobs
-  * (measured at sf0.001 and sf0.1), so this spec guards them too.
+  * listed one that grows more fails too. The registry closures and the
+  * connected-components queries are not on the list: they run as one
+  * closure operator (graft.plans.TransitiveClosure), which counts its
+  * edges and takes its size gate at execution, broadcast BFS or
+  * partitioned rounds. Power iteration, k-means assignment, the
+  * semantic duplicate rate and the BPE merge rounds build with zero
+  * jobs (measured at sf0.001 and sf0.1), so this spec guards them too.
   */
 class ConstructionJobsSpec extends SparkSpec {
 
@@ -24,11 +24,6 @@ class ConstructionJobsSpec extends SparkSpec {
     * only shrink.
     */
   private val ceilings = Map(
-    // connected components: the exact pair count that pins the pair
-    // scorer and gates the broadcast-BFS operator (the count job plus
-    // the scorer's own broadcast jobs)
-    "dedup_clusters" -> 3, "dedup_cluster_stats" -> 3, "dedup_survivors" -> 3,
-    "corpus_funnel" -> 3, "dedup_semantic_clusters" -> 3,
     // nn-descent: preparing the static plan of the pinned symmetric
     // edges starts the round-0 graph's two broadcast exchanges, the
     // bucket self-join's build side and the vector lookup (the second

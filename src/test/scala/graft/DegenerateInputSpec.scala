@@ -4,10 +4,14 @@ import org.apache.spark.sql.Row
 
 import java.nio.file.Files
 
-/** The row-probed operators on empty `documents` and `embeddings`
-  * tables: the sf0.001 schema with zero rows, so the footer bound is
-  * Some(0) and every literal the probes inline (sample modulus, plane
-  * count) is the n = 0 value of the oracle's integer formula.
+/** The row-probed operators and the nine closure-gate consumers on
+  * empty `documents` and `embeddings` tables: the sf0.001 schema with
+  * zero rows, so the footer bound is Some(0) and every literal the
+  * probes inline (sample modulus, plane count) is the n = 0 value of
+  * the oracle's integer formula. The gate consumers also run on a
+  * one-row `documents` (one sf0.001 row whose doc_id is a multiple of
+  * 5 from 5 up, so its reference edges point at parents the table does
+  * not hold) with the empty `embeddings`.
   */
 class DegenerateInputSpec extends SparkSpec {
 
@@ -18,7 +22,26 @@ class DegenerateInputSpec extends SparkSpec {
     dir
   }
 
-  private def rows(name: String): Seq[Row] = SparkEntry.queries(name)(spark, emptyDir).collect().toSeq
+  private lazy val oneRowDir: String = {
+    val dir = s"$emptyDir/one-row"
+    Tables.documents(spark, sfDir).where("doc_id >= 5 AND doc_id % 5 = 0").orderBy("doc_id").limit(1)
+      .write.parquet(s"$dir/documents.parquet")
+    Tables.embeddings(spark, emptyDir).write.parquet(s"$dir/embeddings.parquet")
+    dir
+  }
+
+  private def rows(name: String, dir: String = emptyDir): Seq[Row] =
+    SparkEntry.queries(name)(spark, dir).collect().toSeq
+
+  /** the query's rows, and the rounds its closure operators ran (0 = the broadcast BFS) */
+  private def gated(name: String, dir: String): (Seq[Row], Long) = {
+    val df = SparkEntry.queries(name)(spark, dir)
+    (df.collect().toSeq, closureMetric(df, "rounds"))
+  }
+
+  private val ccQueries = Seq("dedup_clusters", "dedup_cluster_stats", "dedup_survivors",
+    "corpus_funnel", "dedup_semantic_clusters")
+  private val closureQueries = Seq("reg_refs_closure", "reg_dep_depth", "reg_gc_candidates", "reg_ref_cycles")
 
   test("the empty fixtures read as footer-bounded zero-row tables") {
     assert(Tables.footerRowBound(Tables.documents(spark, emptyDir)).contains(0L))
@@ -39,5 +62,35 @@ class DegenerateInputSpec extends SparkSpec {
       Seq((16, 1, 0.0625), (8, 2, 0.3536), (4, 4, 0.7071), (2, 8, 0.917), (1, 16, 1.0)))
     assert(r.forall(x => x.getAs[Long]("smod") == 1L && x.getAs[Long]("n_docs") == 0L &&
       x.getAs[Long]("n_true") == 0L && x.isNullAt(x.fieldIndex("exp_recall"))))
+  }
+
+  test("the nine closure-gate consumers on empty documents: zero edges take the BFS side") {
+    for (q <- ccQueries ++ closureQueries) {
+      val (r, rounds) = gated(q, emptyDir)
+      assert(rounds == 0, q)
+      if (q == "corpus_funnel") assert(r.map(x => (x.getString(0), x.get(1))) == Seq(
+        "s0_total" -> 0L, "s1_lang_en" -> null, "s2_length" -> null, "s3_dedup" -> null, "s4_sample" -> null))
+      else assert(r.isEmpty, q)
+    }
+  }
+
+  test("the nine closure-gate consumers on one document whose reference parents are absent") {
+    val doc = Tables.documents(spark, oneRowDir).head()
+    val id = doc.getAs[Long]("doc_id")
+    assert(Tables.documents(spark, oneRowDir).count() == 1 && id >= 5 && id % 5 == 0)
+    val results = (ccQueries ++ closureQueries).map(q => q -> gated(q, oneRowDir)).toMap
+    assert(results.values.forall(_._2 == 0), "one document's edges take the BFS side")
+    // no near-dup pair: no clusters, survivors or semantic clusters,
+    // and the document is a singleton that the funnel never drops
+    Seq("dedup_clusters", "dedup_survivors", "dedup_semantic_clusters").foreach(q => assert(results(q)._1.isEmpty, q))
+    assert(results("dedup_cluster_stats")._1 == Seq(Row(1L, 1L, 1L)))
+    val funnel = results("corpus_funnel")._1.map(x => x.getString(0) -> x.getLong(1)).toMap
+    assert(funnel("s0_total") == 1L && funnel("s3_dedup") == funnel("s2_length"))
+    // its two edges, to id / 2 and id / 3, end at parents outside the table
+    assert(results("reg_refs_closure")._1 == Seq(Row(id, 2L, id / 2)))
+    assert(results("reg_dep_depth")._1 == Seq(Row(id, 2L, 1L, 2L)))
+    // not a tombstone (id % 7 != 0 for the first such row) and on no ring
+    assert(results("reg_gc_candidates")._1.isEmpty == (id % 7 != 0))
+    assert(results("reg_ref_cycles")._1.isEmpty)
   }
 }

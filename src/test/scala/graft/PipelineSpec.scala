@@ -37,18 +37,21 @@ class PipelineSpec extends SparkSpec {
   test("large-star/small-star: O(log n) rounds on a 999-edge chain, equal to the exec") {
     val n = 1000L
     val chain = spark.range(n - 1).select(col("id").as("src"), (col("id") + lit(1)).as("dst"))
-    val (labels, rounds) = Pipeline.ccStar(chain)
-    assert(rounds <= 15, s"star took $rounds rounds — not logarithmic in $n")
+    val labels = Pipeline.components(chain, threshold = 0L)
     val l = ccLabels(labels)
+    val rounds = closureMetric(labels, "rounds")
+    assert(rounds > 0 && rounds <= 15, s"star took $rounds rounds — not logarithmic in $n")
     assert(l.size == n && l.values.forall(_ == 0L), "chain must collapse to one cluster rooted at 0")
     assert(ccLabels(Pipeline.components(chain)) == l)
   }
 
-  test("the component-label exec reproduces ccStar on the real LSH pair graph") {
+  test("the component rounds reproduce the BFS labels on the real LSH pair graph") {
     val pairs = Dedup.minhashLsh(spark, sfDir).select(col("doc_a").as("src"), col("doc_b").as("dst"))
     val exec = ccLabels(Pipeline.components(pairs))
     assert(exec.nonEmpty)
-    assert(exec == ccLabels(Pipeline.ccStar(pairs)._1), "the two CC branches must reach the same fixpoint")
+    val star = Pipeline.components(pairs, threshold = 0L)
+    assert(exec == ccLabels(star), "the two CC branches must reach the same fixpoint")
+    assert(closureMetric(star, "rounds") > 0)
   }
 
   test("a lazy checkpoint keeps its source plan's SQL metrics alive after its lineage is cut") {

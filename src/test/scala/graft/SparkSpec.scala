@@ -17,6 +17,12 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     case s: QueryStageExec => nodes(s.plan)
     case other => other.children.flatMap(nodes)
   })
+
+  /** The sum of a closure-operator metric over an executed plan (`rounds`: 0 = the broadcast BFS). */
+  protected def closureMetric(df: org.apache.spark.sql.DataFrame, name: String): Long =
+    nodes(df.queryExecution.executedPlan).collect {
+      case c: graft.plans.TransitiveClosureExec => c.metrics(name).value
+    }.sum
 }
 
 object SparkSpec {
