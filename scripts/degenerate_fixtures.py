@@ -3,18 +3,21 @@
 
 Usage: degenerate_fixtures.py SRC_SF_DIR OUT_DIR
 
-Writes two scale-factor directories under OUT_DIR, each holding every
+Writes three scale-factor directories under OUT_DIR, each holding every
 table of SRC_SF_DIR (the untouched ones as symlinks):
   empty/    documents and embeddings with the source schema, zero rows;
   one-row/  documents = the first row whose doc_id is a multiple of 5
             from 5 up (its reference edges, to doc_id/2 and doc_id/3,
-            point at parents the table does not hold); embeddings empty.
+            point at parents the table does not hold); embeddings empty;
+  null-k/   events with props = '{}' on every 7th event_id, so those
+            versions carry a NULL k in the registry field model.
 The same fixtures DegenerateInputSpec builds with Spark. Never write
 into the source directory.
 """
 import os
 import sys
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 
 
@@ -39,6 +42,11 @@ def main(src, out):
     one = docs.slice(pick, 1)
     write_dir(src, os.path.join(out, "empty"), {"documents": docs.slice(0, 0), "embeddings": emb.slice(0, 0)})
     write_dir(src, os.path.join(out, "one-row"), {"documents": one, "embeddings": emb.slice(0, 0)})
+    ev = pq.read_table(os.path.join(src, "events.parquet"))
+    seventh = pa.array([e is not None and e % 7 == 0 for e in ev.column("event_id").to_pylist()])
+    props = pc.if_else(seventh, pa.scalar("{}", ev.schema.field("props").type), ev.column("props"))
+    ev = ev.set_column(ev.schema.get_field_index("props"), ev.schema.field("props"), props)
+    write_dir(src, os.path.join(out, "null-k"), {"events": ev})
     print(f"one-row doc_id={one.column('doc_id')[0].as_py()}")
 
 

@@ -150,7 +150,8 @@ object Bench {
       // assumed ±10% under best-of-two). Raw cold times stay in
       // bench_detail.json.
       val cold = run(fn)
-      // No operator caches (they pin through Tables.pin), but drop
+      // No operator caches (they share frames through reused
+      // exchanges), but drop
       // any cached table BEFORE the next run all the same: a cache
       // left in the session would let CacheManager swap the warm plan
       // for an InMemoryRelation, and the warm number would measure a

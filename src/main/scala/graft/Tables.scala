@@ -12,6 +12,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * or group keys, or by [[Tables.spread]] before row-local CPU work.
   * Sizing lives here too: the footer row bound, the row probe, and
   * the broadcast gate.
+  *
+  * Nothing is materialized outside the planner. A frame that several
+  * consumers read ends in one exchange — its own aggregate's, or a
+  * [[Tables.spread]] — that every consumer reads with the same
+  * columns, so Spark plans it once per query and the other readers
+  * get a `ReusedExchange` (or AQE's reused query stage).
   */
 object Tables {
   def region(s: SparkSession, dir: String): DataFrame = load(s, dir, "region")
@@ -88,8 +94,8 @@ object Tables {
     * bound: its size estimate, and whether its edges arrive as a
     * broadcast (it gates on the exact count at execution).
     *
-    * None when the frame has no file-backed scan (checkpointed /
-    * in-memory frames) or a footer is unreadable. Per-file counts are
+    * None when the frame has no file-backed scan (an in-memory
+    * `LocalRelation`, say) or a footer is unreadable. Per-file counts are
     * cached for the JVM's lifetime: the input data files are
     * immutable within a session, and the cache is what keeps repeated
     * constructions of the same operator (Bench runs each query three
@@ -129,79 +135,14 @@ object Tables {
     * alone can claim parallelism a scan never gets. Skipping the
     * spread where the scan already parallelizes needs a row-group
     * bound measured on a many-row-group input.
+    *
+    * A keyed spread placed above expensive row-local work is also the
+    * exchange through which several consumers share that work (see
+    * the object header).
     */
   def spread(df: DataFrame, by: org.apache.spark.sql.Column*): DataFrame = {
     val width = df.sparkSession.sessionState.conf.numShufflePartitions
     if (by.isEmpty) df.repartition(width) else df.repartition(width, by: _*)
-  }
-
-  /** Multi-consumer pin (r11, VERDICT r10 #7): a LAZY localCheckpoint
-    * planned with AQE OFF, so constructing the pin runs no shuffle —
-    * with one exception: preparing the static plan starts every
-    * broadcast exchange in it (a BroadcastExchangeExec's relation
-    * future is submitted at prepare time), so a pinned plan that
-    * broadcasts launches its build side's jobs at construction.
-    * Under AQE even `localCheckpoint(eager = false)` materializes every
-    * intermediate query stage at construction (AdaptiveSparkPlanExec
-    * finalizes the plan inside `toRdd`, submitting the shuffle-map
-    * jobs); a static plan defers everything to the first consumer's
-    * action, which then materializes the pin exactly once for all
-    * consumers. The trade is explicit and cheap: a pinned frame is a
-    * one-shot vocabulary/posting/signature aggregation whose shuffle
-    * is either large (AQE wouldn't coalesce it anyway) or MB-scale
-    * (where the session's parallelismFirst config keeps full width
-    * regardless), and it is read many times — runtime re-planning of
-    * its single materialization buys nothing. No pin sits above the
-    * closure operator: preparing the pin's static plan would start the
-    * operator's own jobs (its size gate runs at execution) while the
-    * query is built.
-    *
-    * The conf flip is visible only during this (driver-side, quick)
-    * planning call; operator construction is single-threaded in every
-    * entry point (Verify/Bench/Explain), which keeps it race-free.
-    */
-  def pin(df: DataFrame): DataFrame =
-    withConf(df.sparkSession, Seq("spark.sql.adaptive.enabled" -> "false"))(lazyCheckpoint(df))
-
-  /** `df.localCheckpoint(eager = false)` that keeps the SQL metrics of
-    * `df`'s plan registered for as long as the checkpoint's RDD lives.
-    * Two jobs that first read the same lazy checkpoint (two consumers'
-    * concurrent stages, or two broadcasts of it) both compute it from
-    * its lineage; the first to finish truncates that lineage, the
-    * source plan and its metrics become unreachable, and the other
-    * job's tasks then report metrics the driver has garbage-collected
-    * ("Failed to update accumulator" ERROR lines). Only the metric objects are held, not
-    * the plan: its broadcasts still free as soon as the lineage is cut.
-    */
-  def lazyCheckpoint(df: DataFrame): DataFrame = {
-    val cp = df.localCheckpoint(false)
-    val metrics = PlanWalk.collectWithSubqueries(df.queryExecution.executedPlan) {
-      case p => p.metrics.values
-    }.flatten
-    cp.queryExecution.logical.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => checkpointMetrics.put(lr.rdd, metrics)
-      case _ => ()
-    }
-    cp
-  }
-
-  private object PlanWalk extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-  // checkpoint RDD -> its source plan's metrics; weak keys, so an
-  // entry goes when its RDD does
-  private val checkpointMetrics = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[AnyRef, Seq[AnyRef]]())
-
-  /** Runs `body` with the session confs `kvs` set, then restores each
-    * key's previous value, or unsets it when it was not set. */
-  private def withConf[T](s: SparkSession, kvs: Seq[(String, String)])(body: => T): T = {
-    val set = s.conf.getAll
-    val prev = kvs.map { case (k, _) => k -> set.get(k) }
-    kvs.foreach { case (k, v) => s.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
-    }
   }
 
   /** The closure operator's size gate (graft.plans.TransitiveClosure),

@@ -17,8 +17,8 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // no operator caches (they pin through Tables.pin, whose blocks
-      // go with the frame); this only drops a cache some other caller
+      // no operator caches (they share frames through reused
+      // exchanges); this only drops a cache some other caller
       // of the session left, so it cannot squeeze the next query
       spark.catalog.clearCache()
     }

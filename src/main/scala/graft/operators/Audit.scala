@@ -606,8 +606,9 @@ object Audit {
     * the ≤ label-cardinality series vocabulary, one shuffle), then a
     * 27-row broadcast joins against ~35 series rows — card
     * composition costs nothing beyond the parse scan at any corpus
-    * size. localCheckpoint pins the aggregated series so the two
-    * joins (named + family) don't re-derive the scan.
+    * size. The two joins (named + family) read the aggregated series
+    * through its one exchange, reused within the query, so the scan
+    * is derived once.
     */
   def metricsSummary(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -647,7 +648,6 @@ object Audit {
     val sagg = promSeriesParsed(s, dir)
       .groupBy(col("name"), col("series"))
       .agg(sum(col("val")).as("value"))
-      .transform(graft.Tables.pin)
     val outCols = Seq(col("sec_order"), col("section"), col("item_order"),
       col("kind"), col("metric"), col("descr"), col("series"), col("value"),
       col("status"))

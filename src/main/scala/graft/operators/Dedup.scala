@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Document deduplication family for large-scale pipeline use:
@@ -75,6 +76,10 @@ object Dedup {
   private def minhashSignatures(s: SparkSession, dir: String): DataFrame =
     minhashSignaturesOn(s, Tables.documents(s, dir))
 
+  /** (doc_id, m) signatures, ending in a doc_id-keyed spread: the
+    * band self-join's two sides and the per-side lookups all read that
+    * one exchange, reused within the query, so each signature is
+    * computed once. */
   private def minhashSignaturesOn(s: SparkSession, docs: DataFrame): DataFrame = {
     graft.functions.Native.register(s)
     docs
@@ -85,6 +90,7 @@ object Dedup {
         """transform(sequence(1, size(ts) - 2),
           |  i -> concat(element_at(ts, i), ' ', element_at(ts, i + 1), ' ', element_at(ts, i + 2))) AS shingles""".stripMargin)
       .selectExpr("doc_id", "graft_minhash16(shingles) AS m")
+      .transform(Tables.spread(_, col("doc_id")))
   }
 
   /** Raw MinHash-LSH near-dup pairs (unordered, unrounded): 4 bands ×
@@ -108,13 +114,8 @@ object Dedup {
       .distinct()
   }
 
-  private[operators] def minhashPairs(s: SparkSession, dir: String): DataFrame = {
-    // localCheckpoint (not cache): the signatures are reused by the
-    // band self-join and both per-side lookups, but the blocks are
-    // ContextCleaner-collected with the DataFrame instead of pinning
-    // memory across repeated invocations in a long-lived session.
-    minhashPairsFrom(minhashSignatures(s, dir).transform(graft.Tables.pin))
-  }
+  private[operators] def minhashPairs(s: SparkSession, dir: String): DataFrame =
+    minhashPairsFrom(minhashSignatures(s, dir))
 
   private def minhashPairsFrom(mh: DataFrame): DataFrame = {
     minhashCandidates(mh)
@@ -138,7 +139,10 @@ object Dedup {
     graft.functions.Native.register(s)
     Tables.documents(s, dir)
       .transform(Tables.spread(_))
-      .selectExpr("doc_id", "graft_simhash64(split(text, ' ')) AS ch")
+      // a one-element explode_outer: the isnotnull filters a consumer's
+      // joins infer on the chunks stop at a generate's output, so they
+      // never re-run the hash below the spread, on the one scan task
+      .selectExpr("doc_id", "explode_outer(array(graft_simhash64(split(text, ' ')))) AS ch")
       .selectExpr("doc_id",
         "element_at(ch, 1) AS c0", "element_at(ch, 2) AS c1",
         "element_at(ch, 3) AS c2", "element_at(ch, 4) AS c3")
@@ -149,7 +153,9 @@ object Dedup {
     * 64-bit hamming distance via xor + bit_count.
     */
   def simhash(s: SparkSession, dir: String): DataFrame = {
-    val ch = simhashChunks(s, dir).transform(Tables.pin)
+    // the four chunk joins read the chunks through one doc_id-keyed
+    // exchange, reused within the query, so each simhash runs once
+    val ch = simhashChunks(s, dir).transform(Tables.spread(_, col("doc_id")))
     val a = ch.select(col("doc_id").as("doc_a"), col("c0").as("a0"), col("c1").as("a1"), col("c2").as("a2"), col("c3").as("a3"))
     val b = ch.select(col("doc_id").as("doc_b"), col("c0").as("b0"), col("c1").as("b1"), col("c2").as("b2"), col("c3").as("b3"))
     val joined = Seq("a0" -> "b0", "a1" -> "b1", "a2" -> "b2", "a3" -> "b3")
@@ -196,27 +202,13 @@ object Dedup {
     *
     * Construction launches ZERO jobs (r11, VERDICT r10 #7): the
     * branch is picked from the parquet footer row bound (or the
-    * sampled callers' size hint), and every pin is a LAZY
-    * localCheckpoint — the first consumer's action materializes each
-    * pinned frame exactly once, so the two-consumer recall cards
-    * still run the candidate pipeline a single time while plan-only
-    * consumers (Explain, gated callers) execute nothing.
+    * sampled callers' size hint). The two-consumer recall cards
+    * evaluate the returned pairs once per consumer.
     */
   def ngramJaccardBlocked(s: SparkSession, dir: String): DataFrame =
     jaccardBlockedOn(s, Tables.documents(s, dir))
 
-  /** Plan-inspection face of [[ngramJaccardBlocked]] (spec-only): the
-    * same truth frame WITHOUT the scale-path checkpoint pin — the pin
-    * replaces the executed plan with an ExistingRDD scan, which is
-    * right for the two-consumer recall cards but hides the candidate
-    * join tree from plan assertions (r10: DedupSpec's keyed-join check
-    * was reading the post-checkpoint scan and failing).
-    */
-  private[graft] def ngramJaccardBlockedUnpinned(s: SparkSession, dir: String): DataFrame =
-    jaccardBlockedOn(s, Tables.documents(s, dir), pin = false)
-
   private def jaccardBlockedOn(s: SparkSession, docs: DataFrame,
-                               pin: Boolean = true,
                                docsHint: Option[Long] = None): DataFrame = {
     graft.functions.Native.register(s)
     val sh = docs
@@ -225,10 +217,9 @@ object Dedup {
       .selectExpr("doc_id", "lang", "len_bucket",
         """array_sort(array_distinct(transform(sequence(1, size(ts) - 2),
           |  i -> concat(element_at(ts, i), ' ', element_at(ts, i + 1), ' ', element_at(ts, i + 2))))) AS sh""".stripMargin)
-      // localCheckpoint (not cache): blocks are ContextCleaner-
-      // collected with the DataFrame, so repeated invocations in a
-      // long-lived session do not accumulate pinned memory
-      .transform(graft.Tables.pin)
+      // every reader below (both pair sides, the prefix tokens, the
+      // shingle lookups) reads this one spread, reused within the query
+      .transform(Tables.spread(_))
     // Size-adaptive pair generation, both branches EXACT (identical
     // output, so the branch is parity-safe — the same documented
     // data-adaptive idiom as Similarity.planesFor). Below the
@@ -249,14 +240,12 @@ object Dedup {
     // so a bound-induced early flip to the prefix branch only costs
     // its fixed stage latency, never correctness. The count job runs
     // only when neither driver-side signal exists (synthetic frames
-    // in specs) — and `sh` is a lazy checkpoint, so even then it is
-    // the one materialization the consumers would pay anyway.
-    val big = docsHint.orElse(Tables.footerRowBound(docs))
-      .getOrElse(sh.count()) >= minDocs
+    // in specs).
+    val big = docsHint.getOrElse(Tables.scanRows(docs)) >= minDocs
     val scored = if (!big) {
-      // Spread the stream side BY ROW (not by block key) so pair
+      // The stream side is spread BY ROW (not by block key) so pair
       // scoring parallelizes across the full partition space.
-      Tables.spread(sh).as("a").join(broadcast(sh.as("b")),
+      sh.as("a").join(broadcast(sh.as("b")),
           col("a.lang") === col("b.lang") && col("a.len_bucket") === col("b.len_bucket") &&
             col("a.doc_id") < col("b.doc_id"))
         .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
@@ -265,9 +254,9 @@ object Dedup {
       // Rare-first prefix tokens: global df per shingle (one linear
       // explode + count), then each doc keeps the first
       // n − ⌈0.3·n⌉ + 1 of its shingles ordered by (df, token) —
-      // integer-exact ceil via (3n + 9) div 10. Checkpointed: it
-      // feeds both sides of the candidate self-join.
-      val toks = Tables.spread(sh).select(col("doc_id"), col("lang"), col("len_bucket"),
+      // integer-exact ceil via (3n + 9) div 10. Both sides of the
+      // candidate self-join read it through one reused exchange.
+      val toks = sh.select(col("doc_id"), col("lang"), col("len_bucket"),
         size(col("sh")).as("n"), explode(col("sh")).as("tok"))
       val dfreq = toks.groupBy(col("tok")).agg(count(lit(1)).as("df"))
       val pre = toks.join(dfreq, Seq("tok"))
@@ -275,7 +264,6 @@ object Dedup {
         .agg(expr("array_sort(collect_list(struct(df, tok)))").as("ord"))
         .selectExpr("doc_id", "lang", "len_bucket",
           s"explode(transform(slice(ord, 1, ${jaccardPrefixLenSql("n")}), x -> x.tok)) AS tok")
-        .transform(graft.Tables.pin)
       // Candidates: pairs in the same block sharing ≥1 prefix token.
       // The join is keyed by (tok, lang, len_bucket) — a uniform hash
       // key (rare-first ordering bounds per-token fan-out); distinct
@@ -294,14 +282,8 @@ object Dedup {
     }
     // The score threshold goes through Tables.filterBarrier so
     // Catalyst cannot hoist the expensive expression into a join.
-    val truth = Tables.filterBarrier(scored, col("jaccard") >= JaccardThreshold)
+    Tables.filterBarrier(scored, col("jaccard") >= JaccardThreshold)
       .selectExpr("doc_a", "doc_b", "floor(jaccard * 10000 + 0.5) / cast(10000 AS double) AS jaccard")
-    // On the scale path, pin the (tiny) pair list so two-consumer
-    // callers (the recall cards read truth twice) run the candidate
-    // pipeline once; below the threshold the lazy frame is cheap to
-    // re-evaluate and skipping the checkpoint barrier keeps the
-    // small-sf cards at their one-job wall cost.
-    if (big && pin) truth.transform(graft.Tables.pin) else truth
   }
 
   /** The REGISTERED (and benched) n-gram Jaccard verifier — the
@@ -323,12 +305,7 @@ object Dedup {
       .selectExpr("doc_id",
         """array_sort(array_distinct(transform(sequence(1, size(ts) - 2),
           |  i -> concat(element_at(ts, i), ' ', element_at(ts, i + 1), ' ', element_at(ts, i + 2))))) AS sh""".stripMargin)
-    // localCheckpoint (not cache): the signatures are reused by the
-    // band self-join and both per-side lookups, but the blocks are
-    // ContextCleaner-collected with the DataFrame instead of pinning
-    // memory across repeated invocations in a long-lived session.
-    val mh = minhashSignatures(s, dir).transform(graft.Tables.pin)
-    val scored = minhashCandidates(mh)
+    val scored = minhashCandidates(minhashSignatures(s, dir))
       .join(sh.selectExpr("doc_id AS doc_a", "sh AS sha"), "doc_a")
       .join(sh.selectExpr("doc_id AS doc_b", "sh AS shb"), "doc_b")
       .selectExpr("doc_a", "doc_b", "graft_jaccard(sha, shb) AS jaccard")
@@ -406,11 +383,11 @@ object Dedup {
     */
   def minhashRecall(s: SparkSession, dir: String): DataFrame = {
     // Both pair lists feed two consumers (the hit semi join and their
-    // own 1-row counts); on the scale path [[jaccardBlockedOn]]
-    // returns truth pre-pinned so the prefix pipeline runs once. The
-    // lazy small-sf re-evaluation is cheaper than checkpoint barriers
-    // (measured: pinning both frames here cost ~3s of serialized job
-    // latency at sf0.1 to save sub-second recomputes).
+    // own 1-row counts), and each consumer evaluates them over the
+    // shared signature and shingle exchanges: a pair-keyed spread to
+    // share the lists measured slower at sf0.1 (the semi join infers
+    // its own NULL filters, so its copy differs from the count's),
+    // and pinning both frames cost ~3s of serialized job latency.
     val truth = ngramJaccardBlocked(s, dir).select(col("doc_a"), col("doc_b"))
     val cand = minhashPairs(s, dir)
       .select(col("doc_a").as("c_a"), col("doc_b").as("c_b"))
@@ -446,8 +423,10 @@ object Dedup {
     * fingerprint hash (uniform md5); and fingerprints shared by more
     * than [[postingsDfCap]] docs (corpus boilerplate — df² pair
     * blowup) are dropped from pairing, the [[Intelligence]] dfCap
-    * guard applied to grams. The two joins share one fh-keyed
-    * exchange.
+    * guard applied to grams. The df is a window over the
+    * fingerprint, so the postings have one reader, and its fh-keyed
+    * exchange is the pair self-join's distribution: both sides reuse
+    * it.
     */
   def winnow(s: SparkSession, dir: String): DataFrame = {
     val fps = Tables.spread(Tables.documents(s, dir))
@@ -465,16 +444,13 @@ object Dedup {
     // pre-spread parquet partition single-threaded (measured 5.3s for
     // a 0.45s expression at sf0.1). Outer generates infer no filters;
     // `size(ts) >= 4` already guarantees a non-empty fps, so the
-    // semantics are identical. localCheckpoint then materializes the
-    // tiny ≤8-rows/doc postings once for the df-filter branch and both
-    // sides of the pair self-join.
-    val post = fps.select(col("doc_id"), size(col("fps")).as("n_fp"),
-      explode_outer(col("fps")).as("fh")).transform(graft.Tables.pin)
-    val keep = post.groupBy(col("fh"))
-      .agg(count(lit(1)).as("df"))
-      .filter(col("df") <= postingsDfCap)
-      .select(col("fh"))
-    val kept = post.join(keep, Seq("fh"))
+    // semantics are identical. (A NULL fh keeps its df row here but
+    // never passes the self-join's equality, as it never passed the
+    // df join.)
+    val kept = fps.select(col("doc_id"), size(col("fps")).as("n_fp"),
+        explode_outer(col("fps")).as("fh"))
+      .withColumn("df", count(lit(1)).over(Window.partitionBy(col("fh"))))
+      .where(col("df") <= postingsDfCap)
     kept.as("a")
       .join(kept.as("b"),
         col("a.fh") === col("b.fh") && col("a.doc_id") < col("b.doc_id"))
@@ -526,8 +502,8 @@ object Dedup {
     // ONE rollup over the truth distribution computes every config's
     // expected recall (r9: the r8 form re-aggregated truth once per
     // factorization — five jobs for one pass's work, which also made
-    // the r8 truth checkpoint necessary; single-consumer truth no
-    // longer needs the barrier); stack unpivots the single row into
+    // the r8 truth checkpoint necessary; truth has one consumer
+    // now); stack unpivots the single row into
     // the per-config card.
     val one = truth.agg(count(lit(1)).as("n_true"),
       lshConfigs.map { case (b, r) =>
@@ -557,7 +533,7 @@ object Dedup {
     * modulus integer-exact in both engines (no libm sqrt boundary
     * flips); N is the [[Tables.scanRows]] probe (the footer count, so
     * the sample plans with zero jobs), and smod rides in as a literal,
-    * mirrored in the oracle as a scalar CTE. The pinned sample comes
+    * mirrored in the oracle as a scalar CTE. The sample comes
     * with its modulus and ceil(N/smod), the size bound the recall
     * cards pick [[jaccardBlockedOn]]'s branch by (dense doc_ids make
     * it exact; id sparsity only shrinks the sample below it).
@@ -566,7 +542,7 @@ object Dedup {
     val d = Tables.documents(s, dir)
     val n = Tables.scanRows(d)
     val smod = 1L << ((64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, n / 500)) - 1) / 2)
-    Sample(d.where(s"doc_id % $smod = 0").transform(graft.Tables.pin), smod, (n + smod - 1) / smod)
+    Sample(d.where(s"doc_id % $smod = 0"), smod, (n + smod - 1) / smod)
   }
 
   private final case class Sample(docs: DataFrame, smod: Long, sizeBound: Long) {
@@ -587,13 +563,10 @@ object Dedup {
     */
   def minhashRecallSampled(s: SparkSession, dir: String): DataFrame = {
     val sample = sampledDocs(s, dir)
-    // truth arrives pre-pinned from [[jaccardBlockedOn]] on the scale
-    // path (two consumers below: the hit semi join and n_true); cand
-    // stays lazy — its re-evaluation is banding over the checkpointed
-    // signatures, cheap at any scale.
-    val truth = jaccardBlockedOn(s, sample.docs,
-      docsHint = Some(sample.sizeBound)).select(col("doc_a"), col("doc_b"))
-    val cand = minhashPairsFrom(minhashSignaturesOn(s, sample.docs).transform(graft.Tables.pin))
+    // two consumers per pair list, evaluated as in [[minhashRecall]]
+    val truth = jaccardBlockedOn(s, sample.docs, docsHint = Some(sample.sizeBound))
+      .select(col("doc_a"), col("doc_b"))
+    val cand = minhashPairsFrom(minhashSignaturesOn(s, sample.docs))
       .select(col("doc_a").as("c_a"), col("doc_b").as("c_b"))
     val hits = truth.join(cand,
       col("doc_a") === col("c_a") && col("doc_b") === col("c_b"), "left_semi")
@@ -623,7 +596,7 @@ object Dedup {
       docsHint = Some(sample.sizeBound)).selectExpr("jaccard AS s0")
     // Same one-rollup shape as [[lshTuning]] (r9): all five configs'
     // expected recalls ride one pass over the sampled distribution
-    // (single consumer — no checkpoint barrier needed).
+    // (single consumer).
     val one = truth.agg(count(lit(1)).as("n_true"),
       lshConfigs.map { case (b, r) =>
         val p = s"(1.0 - ${ipow(s"(1.0 - ${ipow("s0", r)})", b)})"
@@ -654,7 +627,8 @@ object Dedup {
     * Scale design: postings are one row per gram position keyed by a
     * uniform md5 hash; grams shared by more than [[postingsDfCap]]
     * docs (corpus boilerplate — df² pair blowup) are dropped before
-    * pairing, exactly the [[winnow]] guard; the run-merge window and
+    * pairing, exactly the [[winnow]] guard (the df a window over the
+    * gram, whose exchange both pair sides reuse); the run-merge window and
     * its per-run aggregate share one (doc_a, doc_b, diag)-keyed
     * exchange (the groupBy keys are a superset of the window
     * partition keys, so EnsureRequirements inserts no second
@@ -669,17 +643,11 @@ object Dedup {
     // posexplode_OUTER for the same reason winnow uses explode_outer:
     // plain generates make InferFiltersFromGenerate re-derive the md5
     // HOF chain as a pushed filter below the spread repartition.
-    // localCheckpoint: the tiny postings table feeds the df filter and
-    // both sides of the pair self-join.
-    val post = grams
+    val kept = grams
       .select(col("doc_id"), posexplode_outer(col("ghs")).as(Seq("p0", "gh")))
       .select(col("doc_id"), (col("p0") + 1).as("pos"), col("gh"))
-      .transform(graft.Tables.pin)
-    val keep = post.groupBy(col("gh"))
-      .agg(count(lit(1)).as("df"))
-      .filter(col("df") <= postingsDfCap)
-      .select(col("gh"))
-    val kept = post.join(keep, Seq("gh"))
+      .withColumn("df", count(lit(1)).over(Window.partitionBy(col("gh"))))
+      .where(col("df") <= postingsDfCap)
     val hits = kept.as("a")
       .join(kept.as("b"),
         col("a.gh") === col("b.gh") && col("a.doc_id") < col("b.doc_id"))
@@ -779,8 +747,7 @@ object Dedup {
       .selectExpr("doc_id",
         """array_distinct(transform(sequence(1, size(ts) - 2),
           |  i -> concat(element_at(ts, i), ' ', element_at(ts, i + 1), ' ', element_at(ts, i + 2)))) AS sh""".stripMargin)
-    val mh = minhashSignatures(s, dir).transform(graft.Tables.pin)
-    val scored = minhashCandidates(mh)
+    val scored = minhashCandidates(minhashSignatures(s, dir))
       .join(sh.selectExpr("doc_id AS doc_a", "sh AS sha"), "doc_a")
       .join(sh.selectExpr("doc_id AS doc_b", "sh AS shb"), "doc_b")
       .selectExpr("doc_a", "doc_b",

@@ -53,11 +53,7 @@ object Intelligence {
     */
   def similarSchemas(s: SparkSession, dir: String): DataFrame = {
     val cap = s.conf.get("graft.similar.dfCap", "100000").toInt
-    val sigs = latestFields(s, dir)
-      .groupBy(col("subject"))
-      .agg(count(lit(1)).as("n"),
-        md5(concat_ws("|", sort_array(collect_list(
-          concat_ws(":", col("fname"), col("ftype"), col("fnull").cast("string")))))).as("sig"))
+    val sigs = schemaSigs(s, dir)
     val capped = sigs.join(
       broadcast(sigs.groupBy(col("sig")).agg(count(lit(1)).as("df"))
         .filter(col("df") <= cap).select(col("sig"))),
@@ -73,19 +69,33 @@ object Intelligence {
     * (the no-silent-cap rule): how many whole-schema identity classes
     * exceeded the cap and were excluded from pair enumeration, and
     * how many subjects they held. One subjects-sized aggregate —
-    * cost negligible next to the pair join it guards.
+    * cost negligible next to the pair join it guards. Subjects with a
+    * NULL signature form no class: they pair with no one either way.
     */
   def similarDropReport(s: SparkSession, dir: String): DataFrame = {
     val cap = s.conf.get("graft.similar.dfCap", "100000").toInt
-    latestFields(s, dir)
-      .groupBy(col("subject"))
-      .agg(md5(concat_ws("|", sort_array(collect_list(
-        concat_ws(":", col("fname"), col("ftype"), col("fnull").cast("string")))))).as("sig"))
+    schemaSigs(s, dir).where(col("sig").isNotNull)
       .groupBy(col("sig")).agg(count(lit(1)).as("df"))
       .agg(sum(when(col("df") > cap, 1L).otherwise(0L)).as("n_dropped_signatures"),
         sum(when(col("df") > cap, col("df")).otherwise(0L)).as("n_dropped_postings"),
         count(lit(1)).as("n_signatures"))
   }
+
+  /** (subject, n, sig): the latest field count and the whole-set
+    * signature, md5 of the sorted `fname:ftype:fnull` list. The sig is
+    * NULL when a field has a NULL part (a NULL `k` leaves `fnull`
+    * unknown): the oracle's equality join never matches that field,
+    * so the subject can pair with no one. `concat_ws` would skip the
+    * NULL and let two such subjects collide.
+    */
+  private def schemaSigs(s: SparkSession, dir: String): DataFrame =
+    latestFields(s, dir)
+      .groupBy(col("subject"))
+      .agg(count(lit(1)).as("n"),
+        count(when(col("fname").isNull || col("ftype").isNull || col("fnull").isNull, 1)).as("n_unknown"),
+        md5(concat_ws("|", sort_array(collect_list(
+          concat_ws(":", col("fname"), col("ftype"), col("fnull").cast("string")))))).as("sig0"))
+      .select(col("subject"), col("n"), when(col("n_unknown") === 0, col("sig0")).as("sig"))
 
   /** CheckFieldConsistency (tools_intelligence.go:370): for every
     * field name, does the corpus agree on its type and nullability
@@ -198,46 +208,44 @@ object Intelligence {
     *    default — the next consumer-breaking addition candidate.
     *  - widen_int_to_long: an int field whose name is typed bigint in
     *    some other subject's latest version (cross-subject drift,
-    *    detected via a vocab-sized broadcast of bigint field names).
+    *    detected by a window over the field name).
     *  - add_enum_default: enum field without a default — symbol
     *    evolution is unsafe until one exists (checker.go:182).
     *  - deprecate_before_remove: a field the latest version just
     *    dropped (present in maxv-1, gone in maxv) — flag for formal
     *    deprecation. Uses the lag array already on the latest row:
     *    row-local, no extra shuffle.
-    * All rules are row-local over the latest-fields view except the
-    * broadcast name-set join; one window shuffle total.
+    * The latest view has ONE reader: its current and dropped fields
+    * explode into one row stream, the bigint-name test is a window
+    * over the field name, and every rule is a CASE over that row, so
+    * the events window scan runs once.
     */
   def evolutionSuggest(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("subject"))
-    // Materialized once: four rule branches consume this
-    // subjects-sized view — unmaterialized, each union branch re-runs
-    // the events window scan. localCheckpoint (not cache) so the
-    // blocks are ContextCleaner-collected once the DataFrame goes out
-    // of scope: a cache here pinned memory for the life of the
-    // session across repeated invocations.
     val latest = Compat.fieldArrays(s, dir,
         Seq("fname", "ftype", "fnull", "fdefault", "present"), withLag = true)
       .withColumn("maxv", max(col("version")).over(w))
       .filter(col("version") === col("maxv"))
-      .transform(graft.Tables.pin)
-    val lf = latest.select(col("subject"), explode(col("flds")).as("f"))
-      .select(col("subject"), col("f.fname").as("fname"), col("f.ftype").as("ftype"),
-        col("f.fnull").as("fnull"), col("f.fdefault").as("fdefault"))
-    val removed = latest
-      .select(col("subject"),
-        explode(expr("filter(w_flds, w -> !exists(flds, f -> f.fname = w.fname))")).as("f"))
-      .select(col("subject"), col("f.fname").as("fname"))
-    val bigintNames = lf.filter(col("ftype") === "bigint").select(col("fname")).distinct()
-    val s1 = lf.filter(!col("fnull") && col("fdefault").isNull && col("ftype") =!= "enum")
-      .select(col("subject"), lit("add_default_or_nullable").as("rule"), col("fname"))
-    val s2 = lf.filter(col("ftype") === "int")
-      .join(broadcast(bigintNames), "fname")
-      .select(col("subject"), lit("widen_int_to_long").as("rule"), col("fname"))
-    val s3 = lf.filter(col("ftype") === "enum" && col("fdefault").isNull)
-      .select(col("subject"), lit("add_enum_default").as("rule"), col("fname"))
-    val s4 = removed.select(col("subject"), lit("deprecate_before_remove").as("rule"), col("fname"))
-    s1.unionByName(s2).unionByName(s3).unionByName(s4)
+    // current fields, then the fields the latest version dropped
+    // (none on a first version, whose w_flds is NULL)
+    val fields = latest.select(col("subject"), explode(expr(
+      """concat(
+        |  transform(flds, f -> named_struct('fname', f.fname, 'ftype', f.ftype,
+        |    'fnull', f.fnull, 'fdefault', f.fdefault, 'gone', false)),
+        |  transform(coalesce(filter(w_flds, w -> !exists(flds, f -> f.fname = w.fname)), array()),
+        |    w -> named_struct('fname', w.fname, 'ftype', CAST(NULL AS STRING),
+        |      'fnull', CAST(NULL AS BOOLEAN), 'fdefault', CAST(NULL AS STRING), 'gone', true)))""".stripMargin)).as("f"))
+      .select(col("subject"), col("f.*"))
+      .withColumn("bigint_name", max(when(!col("gone") && col("ftype") === "bigint", true))
+        .over(Window.partitionBy(col("fname"))))
+    val cur = !col("gone")
+    fields.select(col("subject"), explode(filter(array(
+        when(cur && !col("fnull") && col("fdefault").isNull && col("ftype") =!= "enum",
+          "add_default_or_nullable"),
+        when(cur && col("ftype") === "int" && col("bigint_name"), "widen_int_to_long"),
+        when(cur && col("ftype") === "enum" && col("fdefault").isNull, "add_enum_default"),
+        when(col("gone"), "deprecate_before_remove")),
+      _.isNotNull)).as("rule"), col("fname"))
   }
 
   /** DetectSchemaPatterns (tools_intelligence.go:485): the corpus-
@@ -250,18 +258,17 @@ object Intelligence {
   def detectPatterns(s: SparkSession, dir: String): DataFrame = {
     val vs = Compat.fieldArrays(s, dir, Compat.latestMembers, withLag = false)
       .groupBy(col("subject")).agg(max(col("version")).as("nv"))
-    // pinned 1-row aggregate: `a` feeds both the ubiquity comparison
-    // and the final stack — unpinned, each consumer re-ran the whole
-    // field-model build (r12, guide §2.4 duplicated subtrees)
-    val a = graft.Tables.pin(vs.agg(count(lit(1)).as("n_subjects"),
+    val a = vs.agg(count(lit(1)).as("n_subjects"),
       sum(col("nv")).as("total_versions"),
-      sum(when(col("nv") > 1, 1).otherwise(0)).as("multi_version_subjects")))
-    val ubi = latestFields(s, dir)
+      sum(when(col("nv") > 1, 1).otherwise(0)).as("multi_version_subjects"))
+    val nsub = latestFields(s, dir)
       .groupBy(col("fname")).agg(countDistinct(col("subject")).as("nsub"))
-      .crossJoin(broadcast(a.select(col("n_subjects"))))
-      .where(col("nsub") === col("n_subjects"))
-      .agg(count(lit(1)).as("ubiquitous_fields"))
-    a.crossJoin(broadcast(ubi))
+    // the 1-row `a` has ONE reader: the ubiquity count rolls up over
+    // its outer join with every field's subject count (r12, guide §2.4
+    // duplicated subtrees: two readers re-ran the field-model build)
+    a.join(broadcast(nsub), lit(true), "left_outer")
+      .groupBy(col("n_subjects"), col("total_versions"), col("multi_version_subjects"))
+      .agg(count(when(col("nsub") === col("n_subjects"), 1)).as("ubiquitous_fields"))
       .selectExpr(
         """stack(4, 'n_subjects', n_subjects, 'total_versions', total_versions,
           |  'multi_version_subjects', multi_version_subjects,
@@ -353,22 +360,19 @@ object Intelligence {
     */
   def fieldCooccur(s: SparkSession, dir: String): DataFrame = {
     // The latest-fields view (events scan + version window + field
-    // model build) feeds FOUR consumers below — both self-join sides,
-    // the document-frequency rollup, and the 1-row subject count. r6
-    // re-derived it four times; localCheckpoint materializes the slim
-    // 2-column view once (vocabulary-sized: subjects × fields rows)
-    // and every consumer reads the checkpointed partitions.
+    // model build) feeds the self-join and the 1-row subject count
+    // (r6 re-derived it four times). The document frequency is a
+    // window over the field name, so both self-join sides read one
+    // frame and reuse its subject exchange; the subject count builds
+    // the view a second time.
     val lf = latestFields(s, dir).select(col("subject"), col("fname"))
-      .transform(graft.Tables.pin)
-    val dfx = lf.groupBy(col("fname")).agg(count(lit(1)).as("dfx"))
+    val lfx = lf.withColumn("dfx", count(lit(1)).over(Window.partitionBy(col("fname"))))
     val n = lf.agg(countDistinct(col("subject")).as("n_subjects"))
-    lf.as("a").join(lf.as("b"),
+    lfx.as("a").join(lfx.as("b"),
         col("a.subject") === col("b.subject") && col("a.fname") < col("b.fname"))
       .groupBy(col("a.fname").as("f1"), col("b.fname").as("f2"))
-      .agg(count(lit(1)).as("n_both"))
+      .agg(count(lit(1)).as("n_both"), max(col("a.dfx")).as("df1"), max(col("b.dfx")).as("df2"))
       .filter(col("n_both") >= 2)
-      .join(broadcast(dfx.select(col("fname").as("f1"), col("dfx").as("df1"))), "f1")
-      .join(broadcast(dfx.select(col("fname").as("f2"), col("dfx").as("df2"))), "f2")
       .crossJoin(broadcast(n))
       .select(col("f1"), col("f2"), col("n_both"), col("df1"), col("df2"),
         (floor(col("n_both") * col("n_subjects") / (col("df1") * col("df2")).cast("double") * 10000 + 0.5)

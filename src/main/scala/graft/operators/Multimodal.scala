@@ -3,6 +3,7 @@ package graft.operators
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.RowEncoder
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -203,7 +204,10 @@ object Multimodal {
     * as the winnowing dedup); the ONLY pair-generating shuffle is
     * keyed by uniform md5 block_hash. Containment = shared /
     * min(total blocks), the asymmetric "is one payload mostly inside
-    * the other" measure a blob GC wants.
+    * the other" measure a blob GC wants. A document's block count and
+    * a block's df are windows, so the distinct postings have one
+    * reader, and the block_hash window's exchange is the pair
+    * self-join's distribution: both sides reuse it.
     */
   def sigDup(s: SparkSession, dir: String): DataFrame = {
     val blocks = Tables.spread(Tables.documents(s, dir))
@@ -212,19 +216,16 @@ object Multimodal {
         "CASE WHEN length(payload) > 0 THEN sequence(cast(0 as bigint), cast(ceil(length(payload) / 64.0) as bigint) - 1) ELSE array() END")).as("i"))
       .select(col("doc_id"), md5(expr("substring(payload, cast(i * 64 + 1 as int), 64)")).as("block_hash"))
       .distinct()
-      .transform(graft.Tables.pin) // feeds totals, the df cap, and both join sides
-    val totals = blocks.groupBy(col("doc_id")).agg(count(lit(1)).as("n_blocks"))
-    val capped = blocks.join(
-      blocks.groupBy(col("block_hash")).agg(count(lit(1)).as("df"))
-        .where(col("df") >= 2 && col("df") <= 16).drop("df"),
-      "block_hash")
-    val pairs = capped.as("a").join(capped.as("b"),
+    val capped = blocks
+      .withColumn("n_blocks", count(lit(1)).over(Window.partitionBy(col("doc_id"))))
+      .withColumn("df", count(lit(1)).over(Window.partitionBy(col("block_hash"))))
+      .where(col("df") >= 2 && col("df") <= 16)
+    capped.as("a").join(capped.as("b"),
         col("a.block_hash") === col("b.block_hash") && col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("n_shared_blocks"))
+      .agg(count(lit(1)).as("n_shared_blocks"), max(col("a.n_blocks")).as("na"),
+        max(col("b.n_blocks")).as("nb"))
       .where(col("n_shared_blocks") >= 2)
-    pairs.join(totals.selectExpr("doc_id AS doc_a", "n_blocks AS na"), "doc_a")
-      .join(totals.selectExpr("doc_id AS doc_b", "n_blocks AS nb"), "doc_b")
       .selectExpr("doc_a", "doc_b", "n_shared_blocks",
         "floor(n_shared_blocks / cast(least(na, nb) AS double) * 10000 + 0.5) / cast(10000 AS double) AS containment")
   }

@@ -250,9 +250,9 @@ object Pipeline {
   def textLogprob(s: SparkSession, dir: String): DataFrame = {
     val tok = Tables.spread(Tables.documents(s, dir))
       .select(col("doc_id"), explode(split(col("text"), " ")).as("t"))
-    // vocab-sized (not corpus-sized): pinned so vocab + total + probe
-    // share one token-counting pass
-    val counts = tok.groupBy(col("t")).agg(count(lit(1)).as("cnt")).transform(Tables.pin)
+    // vocab-sized (not corpus-sized): vocab and total read the one
+    // token-counting exchange, reused within the query
+    val counts = tok.groupBy(col("t")).agg(count(lit(1)).as("cnt"))
     val vocab = counts.orderBy(col("cnt").desc, col("t")).limit(1000)
     val total = counts.agg(sum(col("cnt")).as("n"))
     tok.join(broadcast(vocab), Seq("t"), "left_outer")
@@ -273,8 +273,8 @@ object Pipeline {
     *
     * Scale shape: the corpus collapses to per-doc DISTINCT bigrams
     * with occurrence counts first (one shuffle, map-side combined,
-    * checkpointed once because it feeds both the bigram-count
-    * training rollup and the scoring join); bigram counts then ride a
+    * whose exchange the bigram-count training rollup and the scoring
+    * join both read); bigram counts then ride a
     * (w1, w2)-keyed shuffle join — bigram vocabulary is Zipf-bounded,
     * not corpus-bounded, and the join key is uniform enough that no
     * salting is needed. Unigram counts and the 1-row total are
@@ -288,11 +288,9 @@ object Pipeline {
         "explode(transform(sequence(1, size(ts) - 1), i -> struct(ts[i - 1] AS w1, ts[i] AS w2))) AS bg")
       .groupBy(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
       .agg(count(lit(1)).as("k"))
-      .transform(graft.Tables.pin)
     val c12 = dbg.groupBy(col("w1"), col("w2")).agg(sum(col("k")).as("c12"))
     val uni = toks.selectExpr("doc_id", "explode(ts) AS w")
       .groupBy(col("w")).agg(count(lit(1)).as("cw"))
-      .transform(graft.Tables.pin)
     val n = uni.agg(sum(col("cw")).as("n"))
     dbg.join(c12, Seq("w1", "w2"))
       .join(broadcast(uni.selectExpr("w AS w1", "cw AS c1")), "w1")
@@ -430,8 +428,8 @@ object Pipeline {
     * Scale (r10, VERDICT r9 #6): the r9 composition called the three
     * registered signal operators directly, so the documents table was
     * scanned and tokenized THREE times (the suite's largest committed
-    * task sum, 61.7s at sf0.1). The gate now tokenizes ONCE into a
-    * lazily-localCheckpoint'd (doc_id, words) frame and derives all
+    * task sum, 61.7s at sf0.1). The gate now tokenizes ONCE into one
+    * (doc_id, words) frame and derives all
     * three signals from it with the signal operators' OWN expression
     * trees ([[TextAnalysis.runLen]] for the repetition fields, the
     * same token-count chain for entropy, the same span-window chain
@@ -444,7 +442,6 @@ object Pipeline {
     import org.apache.spark.sql.expressions.Window
     val docs = Tables.spread(Tables.documents(s, dir))
       .selectExpr("doc_id", "split(text, ' ') AS ws")
-      .transform(graft.Tables.pin)
     val rep = docs
       .selectExpr("doc_id", "ws",
         """CASE WHEN size(ws) >= 2
@@ -879,7 +876,8 @@ object Pipeline {
     * sized, keyed by a uniform hash, and each gram contributes at
     * most sources² pair rows (sources is a small bounded set — the
     * per-key fan-out cap that makes the join safe at 100 TB). Totals
-    * broadcast back onto the pair rollup.
+    * broadcast back onto the pair rollup; the totals and both
+    * self-join sides read the distinct grams' one exchange.
     */
   def sourceOverlap(s: SparkSession, dir: String): DataFrame = {
     val sg = Tables.spread(Tables.documents(s, dir))
@@ -888,11 +886,10 @@ object Pipeline {
       .selectExpr("source",
         """explode(array_distinct(transform(sequence(1, size(ts) - 2),
           |  i -> md5(concat(element_at(ts, i), ' ', element_at(ts, i + 1), ' ', element_at(ts, i + 2)))))) AS gh""".stripMargin)
+      // never NULL (md5 is not); stated here, the self-join's inferred
+      // filter is already known, so the totals read the same frame
+      .where(col("gh").isNotNull)
       .distinct()
-      // three consumers (both self-join sides + totals) would each
-      // re-run the corpus explode; materialize the vocabulary-sized
-      // distinct frame once (same trade as text_ngram_novelty)
-      .transform(graft.Tables.pin)
     val tot = sg.groupBy(col("source")).agg(count(lit(1)).as("n_grams"))
     sg.selectExpr("source AS source_a", "gh")
       .join(sg.selectExpr("source AS source_b", "gh"), "gh")

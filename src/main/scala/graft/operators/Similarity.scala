@@ -110,7 +110,7 @@ object Similarity {
     * remain the recall knob.
     */
   def lshTopK(s: SparkSession, dir: String): DataFrame = {
-    val e = srpBucketsAdaptive(s, dir).transform(graft.Tables.pin)
+    val e = srpBucketsAdaptive(s, dir)
     val tbl = e.selectExpr("vec_id", "explode(sequence(0, " + (NTables - 1) + ")) AS t", "buckets")
       .selectExpr("vec_id", "t", "element_at(buckets, t + 1) AS bucket")
     val probeTbl = broadcast(tbl.where("vec_id < 10")
@@ -194,12 +194,10 @@ object Similarity {
     * (which treats these edges as the round-0 graph to refine).
     */
   private def nnGraphEdges(s: SparkSession, dir: String): DataFrame = {
-    // lazy localCheckpoint, not a cache: the bucketed corpus is only
-    // needed while THIS query runs, and checkpoint blocks are
-    // reclaimed by the ContextCleaner when the frame goes out of
-    // scope — a cache here stayed pinned across every later query of
-    // a long-lived session (r8 advice).
-    val e = srpBucketsAdaptive(s, dir).transform(graft.Tables.pin)
+    // Both sides of the bucket self-join read the same (t, bucket)
+    // exchange, reused within the query; the vector lookups read only
+    // the cast embedding, never the buckets.
+    val e = srpBucketsAdaptive(s, dir)
     val tbl = e.selectExpr("vec_id", s"explode(sequence(0, ${NTables - 1})) AS t", "buckets")
       .selectExpr("vec_id", "t", "element_at(buckets, t + 1) AS bucket")
     val cand = tbl.selectExpr("vec_id AS src", "t", "bucket")
@@ -256,15 +254,16 @@ object Similarity {
     val und = round0
       .selectExpr("explode(array(struct(src, dst), struct(dst AS src, src AS dst))) AS p")
       .selectExpr("p.src AS src", "p.dst AS dst")
-      .distinct().transform(graft.Tables.pin)
+      .distinct()
     // Count-gated broadcast of the two-hop build side (r12, VERDICT
     // r11 #4): |und| ≤ 2·3·N by the round-0 top-3 window, and N is
     // footer-exact at zero jobs — when the bound fits the loop
     // broadcast gate the expansion needs no exchange at all (the
-    // checkpointed edge list otherwise shuffles twice into a
+    // edge list otherwise shuffles twice into a
     // sort-merge join, and AQE's runtime BHJ conversion still
     // materializes both exchanges first). Above the gate (100 TB
-    // graphs) the former shuffle join stands.
+    // graphs) the former shuffle join stands. All three readers of
+    // `und` share its distinct's exchange.
     val undBound = graft.Tables.footerRowBound(Tables.embeddings(s, dir)).map(_ * 6)
     val hop2Side =
       if (undBound.exists(n => n > 0 && n <= graft.Tables.BcastRows)) broadcast(und.alias("b"))
@@ -304,7 +303,7 @@ object Similarity {
   def graphRecall(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("probe_id")).orderBy(col("cos").desc, col("vec_id"))
     val truth = scored(s, dir).withColumn("rnk", row_number().over(w))
-      .where(col("rnk") <= 3).select(col("probe_id"), col("vec_id")).transform(Tables.pin)
+      .where(col("rnk") <= 3).select(col("probe_id"), col("vec_id"))
     def card(stage: String, edges: DataFrame): DataFrame = {
       val pe = edges.where(col("src") < 10)
         .select(col("src").as("probe_id"), col("dst").as("vec_id"))
@@ -315,12 +314,10 @@ object Similarity {
           (floor(col("n_hit") / col("n_true").cast("double") * 10000 + 0.5) / lit(10000.0))
             .as("recall3"))
     }
-    // Build the round-0 graph ONCE and pin it: both cards and the
-    // descent round read it, and before r9 each card rebuilt the full
-    // adaptive-SRP bucket join from scratch (the graph stage ran twice
-    // and its cached corpus frames stayed pinned). A pin plans without
-    // AQE, so constructing it materializes no query stage.
-    val g0 = Tables.pin(nnGraphEdges(s, dir).select("src", "dst"))
+    // One round-0 graph for both cards and the descent round (before
+    // r9 each card rebuilt the bucket join). The graph card's
+    // `src < 10` reaches the scans; the descent reads the whole graph.
+    val g0 = nnGraphEdges(s, dir).select("src", "dst")
     card("graph", g0)
       .unionAll(card("descent", nnDescentFrom(g0, s, dir)))
   }
@@ -370,10 +367,10 @@ object Similarity {
     graft.functions.Native.register(s)
     val e0 = Tables.embeddings(s, dir)
       .selectExpr("vec_id", "cast(embedding AS array<double>) AS e")
-    // lazy localCheckpoint: buckets + vectors feed assignment, probe
-    // and member sides; blocks reclaimed when the frame drops
+    // buckets + vectors feed assignment, probe and member sides; the
+    // centroid and probe filters reach the scan, and the vector sides
+    // read only the cast embedding
     val b = bucketsNp(e0, (graft.Tables.scanRows(e0) + IvfListOcc - 1) / IvfListOcc)
-      .transform(graft.Tables.pin)
     val tbl = b.selectExpr("vec_id", s"explode(sequence(0, ${NTables - 1})) AS t", "buckets")
       .selectExpr("vec_id", "t", "element_at(buckets, t + 1) AS bucket")
     val ctbl = tbl.where(s"vec_id % $IvfListOcc = 0")

@@ -419,8 +419,9 @@ object Temporal {
     * the shape that doesn't need a global percentile sketch.
     *
     * Scale: one (type, minute) rollup shuffle; both rank windows run
-    * per-series on the calendar-sized rollup (checkpointed once for
-    * its three consumers); the two 1-row-per-series median frames
+    * per-series on the calendar-sized rollup (its three consumers
+    * read the rollup's one exchange, reused within the query); the
+    * two 1-row-per-series median frames
     * broadcast back.
     */
   def anomalyMad(s: SparkSession, dir: String): DataFrame = {
@@ -428,7 +429,6 @@ object Temporal {
       .select(col("event_type"), date_trunc("minute", col("ts")).as("minute"), col("value"))
       .groupBy(col("event_type"), col("minute"))
       .agg((floor(avg(col("value")) * 10000 + 0.5) / lit(10000.0)).as("v_obs"))
-      .transform(graft.Tables.pin)
     def lowerMedian(df: DataFrame, valueCol: String, out: String): DataFrame = {
       val w = Window.partitionBy(col("event_type")).orderBy(col(valueCol), col("minute"))
       df.withColumn("rn", row_number().over(w))

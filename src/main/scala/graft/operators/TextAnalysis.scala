@@ -299,14 +299,11 @@ object TextAnalysis {
     import org.apache.spark.sql.expressions.Window
     val docs = Tables.spread(Tables.documents(s, dir))
     // tf feeds BOTH the document-frequency rollup and the scoring
-    // join; without the checkpoint the explode + (doc, word) groupBy
-    // evaluate twice (r6 plan: sh 9). The checkpoint is corpus-scale
-    // but exactly the bytes the scoring shuffle moves anyway — the
-    // same materialize-once trade as the dedup postings tables.
+    // join; both read its (doc, word) exchange, reused within the
+    // query, so the explode + groupBy evaluate once (r6 plan: sh 9).
     val tf = docs.select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
       .groupBy(col("doc_id"), col("word"))
       .agg(count(lit(1)).as("tf"))
-      .transform(graft.Tables.pin)
     val df = tf.groupBy(col("word")).agg(count(lit(1)).as("df"))
     val n = docs.agg(countDistinct(col("doc_id")).as("n_docs"))
     val scored = tf.join(broadcast(df), Seq("word"))
@@ -372,9 +369,10 @@ object TextAnalysis {
       .selectExpr("doc_id",
         """explode(array_distinct(transform(sequence(1, size(ts) - 2),
           |  i -> md5(concat(element_at(ts, i), ' ', element_at(ts, i + 1), ' ', element_at(ts, i + 2)))))) AS gh""".stripMargin)
-      // feeds both the first-occurrence rollup and the join-back;
-      // materialize once (same trade as text_keywords' tf frame)
-      .transform(graft.Tables.pin)
+      // feeds both the first-occurrence rollup and the join-back:
+      // spread on the gram, the rollup needs no exchange of its own
+      // and the join-back reuses this one, so the explode runs once
+      .transform(Tables.spread(_, col("gh")))
     val first = grams.groupBy(col("gh")).agg(min(col("doc_id")).as("first_doc"))
     grams.join(first, "gh")
       .groupBy(col("doc_id"))

@@ -190,8 +190,11 @@ object EventStream {
   // Incremental schema-compatibility gate
   // ---------------------------------------------------------------------
 
-  final case class RegEvt(subject: Long, ts: java.sql.Timestamp, event_id: Long, k: Long)
-  final case class FieldDef(fname: String, ftype: String, fnull: Boolean,
+  /** `k` is NULL when the version's `props` lacks `$.k`. */
+  final case class RegEvt(subject: Long, ts: java.sql.Timestamp, event_id: Long, k: Option[Long])
+  /** `fnull` is None where the relational model's is NULL: a NULL `k`
+    * leaves the `name` slot's nullability unknown. */
+  final case class FieldDef(fname: String, ftype: String, fnull: Option[Boolean],
     fdefault: Option[String], fsyms: Option[String], funion: Option[String] = None,
     falias: Option[String] = None)
   final case class CompatState(version: Int, fields: Seq[FieldDef])
@@ -200,33 +203,37 @@ object EventStream {
 
   /** The registration's field set, derived from payload k — the
     * state-machine twin of [[graft.operators.Compat.fieldArrays]]'
-    * array expression (same model, same residues).
+    * array expression (same model, same residues, same NULL-k
+    * semantics: a residue test on a NULL k is unknown, so a CASE takes
+    * its ELSE branch, a conditional field is absent, and `name`'s
+    * nullability stays unknown).
     */
-  def fieldsOf(k: Long): Seq[FieldDef] = {
+  def fieldsOf(k: Option[Long]): Seq[FieldDef] = {
+    def is(p: Long => Boolean): Boolean = k.exists(p)
     val b = Seq.newBuilder[FieldDef]
-    b += FieldDef("id", "bigint", fnull = false, None, None)
-    b += FieldDef("name", "string", k % 2 == 0, None, None)
-    if (k % 3 == 0) b += FieldDef("email", "string", fnull = true, None, None)
-    b += FieldDef("score", if (k % 4 < 2) "int" else "bigint", fnull = false, None, None)
-    if (k % 3 < 2) b += FieldDef("status", "enum", fnull = false,
-      if (k % 5 < 3) Some("A") else None,
-      if (k % 2 == 0) Some("A,B") else Some("A,B,C"))
+    b += FieldDef("id", "bigint", Some(false), None, None)
+    b += FieldDef("name", "string", k.map(_ % 2 == 0), None, None)
+    if (is(_ % 3 == 0)) b += FieldDef("email", "string", Some(true), None, None)
+    b += FieldDef("score", if (is(_ % 4 < 2)) "int" else "bigint", Some(false), None, None)
+    if (is(_ % 3 < 2)) b += FieldDef("status", "enum", Some(false),
+      if (is(_ % 5 < 3)) Some("A") else None,
+      if (is(_ % 2 == 0)) Some("A,B") else Some("A,B,C"))
     b += FieldDef("ratio",
-      if (k % 9 < 2) "int" else if (k % 9 < 4) "bigint"
-      else if (k % 9 < 6) "float" else "double", fnull = true, None, None)
-    b += FieldDef("payload", if (k % 13 < 7) "string" else "bytes",
-      fnull = true, None, None)
+      if (is(_ % 9 < 2)) "int" else if (is(_ % 9 < 4)) "bigint"
+      else if (is(_ % 9 < 6)) "float" else "double", Some(true), None, None)
+    b += FieldDef("payload", if (is(_ % 13 < 7)) "string" else "bytes",
+      Some(true), None, None)
     b += FieldDef("ref",
-      if (k % 6 == 0) "int" else if (k % 6 == 1) "string" else "union",
-      fnull = true, None, None,
-      if (k % 6 == 4 || k % 6 == 5) Some("null,string")
-      else if (k % 6 == 2) Some("bigint,null,string")
-      else if (k % 6 == 3) Some("bigint,string") else None)
-    b += FieldDef("token", if (k % 23 < 12) "fixed8" else "fixed16",
-      fnull = true, None, None)
-    b += FieldDef(if (k % 29 < 15) "nick" else "nickname", "string",
-      fnull = false, None, None,
-      falias = if (k % 31 < 16) Some(if (k % 29 < 15) "nickname" else "nick") else None)
+      if (is(_ % 6 == 0)) "int" else if (is(_ % 6 == 1)) "string" else "union",
+      Some(true), None, None,
+      if (is(m => m % 6 == 4 || m % 6 == 5)) Some("null,string")
+      else if (is(_ % 6 == 2)) Some("bigint,null,string")
+      else if (is(_ % 6 == 3)) Some("bigint,string") else None)
+    b += FieldDef("token", if (is(_ % 23 < 12)) "fixed8" else "fixed16",
+      Some(true), None, None)
+    b += FieldDef(if (is(_ % 29 < 15)) "nick" else "nickname", "string",
+      Some(false), None, None,
+      falias = if (is(_ % 31 < 16)) Some(if (is(_ % 29 < 15)) "nickname" else "nick") else None)
     b.result()
   }
 
@@ -255,14 +262,16 @@ object EventStream {
       // name-or-alias resolution in both directions (checker.go:112)
       writer.find(w => w.fname == r.fname ||
         r.falias.contains(w.fname) || w.falias.contains(r.fname)) match {
-        case None => !r.fnull && r.fdefault.isEmpty
+        // a rule breaks only when it is TRUE: an unknown `fnull`
+        // fails it, as a NULL fails the relational rule's WHERE
+        case None => r.fnull.contains(false) && r.fdefault.isEmpty
         case Some(w) =>
           val accepts = branches(r).flatMap(b => nameAccepts.getOrElse(b, Set(b))).toSet
           val typeBreak = branches(w).exists(!accepts(_))
           val enumBreak = r.ftype == "enum" && w.ftype == "enum" &&
             r.fdefault.isEmpty && w.fsyms.exists(ws => r.fsyms.exists(rs =>
               (ws.split(',').toSet -- rs.split(',').toSet).nonEmpty))
-          typeBreak || (!r.fnull && w.fnull) || enumBreak
+          typeBreak || (r.fnull.contains(false) && w.fnull.contains(true)) || enumBreak
       }
     }.toLong
 

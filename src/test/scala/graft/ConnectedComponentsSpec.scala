@@ -101,13 +101,9 @@ class ConnectedComponentsSpec extends SparkSpec {
         case _ => false
       }, s"$name: ${closures.head.edges}")
       assert(closureMetric(df, "rounds") == 0 && closureMetric(df, "edgeRows") > 0, name)
-      // no pinned pair frame: the only checkpoint read is the MinHash
-      // signature pin in the edges' subplan (none in the semantic graph).
-      // That pin is today's state, not the target: ROADMAP direction 3
-      // removes it.
-      val pins = executed.collect { case r: RDDScanExec => r }
-      assert(pins.map(_.rdd.id).distinct.size == (if (name == "dedup_clusters") 1 else 0) &&
-        pins.forall(p => nodes(closures.head.edges).contains(p)), s"$name: checkpoint scans $pins")
+      // no checkpoint scan anywhere: shared frames are reused exchanges
+      val scans = executed.collect { case r: RDDScanExec => r }
+      assert(scans.isEmpty, s"$name: checkpoint scans $scans")
     }
   }
 }

@@ -5,17 +5,18 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 /** Construction must be plan-building, not execution (r11, VERDICT
   * r10 #7): constructing a registered DataFrame — what `Explain`, a
   * gated consumer, or a dry-run driver does — must launch ZERO Spark
-  * jobs, so plan inspection never triggers cluster work. The
-  * exceptions are listed here BY NAME, each with the most jobs its
-  * construction may launch, so any new operator that accidentally
-  * grows an eager probe/checkpoint fails this spec loudly, and a
-  * listed one that grows more fails too. The registry closures and the
-  * connected-components queries are not on the list: they run as one
-  * closure operator (graft.plans.TransitiveClosure), which counts its
-  * edges and takes its size gate at execution, broadcast BFS or
-  * partitioned rounds. Power iteration, k-means assignment, the
-  * semantic duplicate rate and the BPE merge rounds build with zero
-  * jobs (measured at sf0.001 and sf0.1), so this spec guards them too.
+  * jobs, so plan inspection never triggers cluster work. An
+  * exception would be listed here BY NAME, with the most jobs its
+  * construction may launch; none is. The registry closures and the
+  * connected-components queries run as one closure operator
+  * (graft.plans.TransitiveClosure), which counts its edges and takes
+  * its size gate at execution, broadcast BFS or partitioned rounds.
+  * Power iteration, k-means assignment, the semantic duplicate rate
+  * and the BPE merge rounds build with zero jobs (measured at sf0.001
+  * and sf0.1). No frame is checkpointed: frames read by several
+  * consumers are shared through reused exchanges, planned with the
+  * query, so the nn-descent queries no longer start broadcasts while
+  * they are built.
   */
 class ConstructionJobsSpec extends SparkSpec {
 
@@ -23,17 +24,7 @@ class ConstructionJobsSpec extends SparkSpec {
     * measured ceiling (sf0.001) and why. The map and its ceilings may
     * only shrink.
     */
-  private val ceilings = Map(
-    // nn-descent: preparing the static plan of the pinned symmetric
-    // edges starts the round-0 graph's two broadcast exchanges, the
-    // bucket self-join's build side and the vector lookup (the second
-    // lookup reuses it); a job listener saw both jobs under that pin's
-    // localCheckpoint execution
-    "ann_nn_descent" -> 2,
-    // the same two broadcasts, in the pinned round-0 graph, plus the
-    // probe broadcast in the pinned exact top-3
-    "ann_graph_recall" -> 3
-  )
+  private val ceilings = Map.empty[String, Int]
 
   test("constructing every registered query launches zero jobs (iterative ops excepted)") {
     // Warm the per-path schema cache: the FIRST load of a parquet path

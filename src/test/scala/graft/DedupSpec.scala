@@ -129,9 +129,7 @@ class DedupSpec extends SparkSpec {
   test("prefix-filtered truth path plans with keyed joins only — no cartesian, no block cross product") {
     spark.conf.set("graft.jaccard.prefixMinDocs", "1")
     try {
-      // unpinned probe: the registered form localCheckpoints the big
-      // path, which swaps the executed plan for an ExistingRDD scan
-      val qe = Dedup.ngramJaccardBlockedUnpinned(spark, sfDir).queryExecution
+      val qe = Dedup.ngramJaccardBlocked(spark, sfDir).queryExecution
       qe.toRdd.count()
       val p = qe.executedPlan.toString.split("== Initial Plan ==").head
       assert(!p.contains("CartesianProduct"), p)

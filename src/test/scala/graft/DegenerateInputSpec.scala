@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.Compat
 import org.apache.spark.sql.Row
 
 import java.nio.file.Files
@@ -11,7 +12,9 @@ import java.nio.file.Files
   * the oracle's integer formula. The gate consumers also run on a
   * one-row `documents` (one sf0.001 row whose doc_id is a multiple of
   * 5 from 5 up, so its reference edges point at parents the table does
-  * not hold) with the empty `embeddings`.
+  * not hold) with the empty `embeddings`. The registry's stream gate
+  * and similarity search run on `events` whose `props` is `{}` on
+  * every 7th event_id, so those versions carry a NULL `k`.
   */
 class DegenerateInputSpec extends SparkSpec {
 
@@ -27,6 +30,14 @@ class DegenerateInputSpec extends SparkSpec {
     Tables.documents(spark, sfDir).where("doc_id >= 5 AND doc_id % 5 = 0").orderBy("doc_id").limit(1)
       .write.parquet(s"$dir/documents.parquet")
     Tables.embeddings(spark, emptyDir).write.parquet(s"$dir/embeddings.parquet")
+    dir
+  }
+
+  private lazy val nullKDir: String = {
+    val dir = s"$emptyDir/null-k"
+    Tables.events(spark, sfDir)
+      .withColumn("props", org.apache.spark.sql.functions.expr("IF(event_id % 7 = 0, '{}', props)"))
+      .write.parquet(s"$dir/events.parquet")
     dir
   }
 
@@ -62,6 +73,30 @@ class DegenerateInputSpec extends SparkSpec {
       Seq((16, 1, 0.0625), (8, 2, 0.3536), (4, 4, 0.7071), (2, 8, 0.917), (1, 16, 1.0)))
     assert(r.forall(x => x.getAs[Long]("smod") == 1L && x.getAs[Long]("n_docs") == 0L &&
       x.getAs[Long]("n_true") == 0L && x.isNullAt(x.fieldIndex("exp_recall"))))
+  }
+
+  test("on NULL k, stream_compat and reg_similar follow their oracles") {
+    import org.apache.spark.sql.functions.{col, count, explode, lit, max}
+    assert(Tables.events(spark, nullKDir).where("props = '{}'").count() > 0)
+    // stream_compat's oracle is compat_scan's SQL, which compat_scan matches
+    def sorted(q: String) = rows(q, nullKDir).map(_.toSeq.mkString(",")).sorted
+    assert(sorted("stream_compat") == sorted("compat_scan"))
+    // reg_similar's oracle: an equality join on (fname, ftype, fnull) over
+    // the latest fields, where a NULL part never matches
+    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("subject"))
+    val lf = Compat.fieldArrays(spark, nullKDir, Seq("fname", "ftype", "fnull"), withLag = false)
+      .withColumn("maxv", max(col("version")).over(w)).where(col("version") === col("maxv"))
+      .select(col("subject"), explode(col("flds")).as("f"))
+      .select(col("subject"), col("f.fname").as("fname"), col("f.ftype").as("ftype"), col("f.fnull").as("fnull"))
+    val n = lf.groupBy("subject").agg(count(lit(1)).as("n"))
+    val oracle = lf.as("a").join(lf.as("b"), col("a.fname") === col("b.fname") &&
+        col("a.ftype") === col("b.ftype") && col("a.fnull") === col("b.fnull") && col("a.subject") < col("b.subject"))
+      .groupBy(col("a.subject").as("sub_a"), col("b.subject").as("sub_b")).agg(count(lit(1)).as("c"))
+      .join(n.select(col("subject").as("sub_a"), col("n").as("na")), "sub_a")
+      .join(n.select(col("subject").as("sub_b"), col("n").as("nb")), "sub_b")
+      .where(col("c") === col("na") && col("c") === col("nb"))
+      .select("sub_a", "sub_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(rows("reg_similar", nullKDir).map(r => (r.getAs[Long]("sub_a"), r.getAs[Long]("sub_b"))).toSet == oracle)
   }
 
   test("the nine closure-gate consumers on empty documents: zero edges take the BFS side") {

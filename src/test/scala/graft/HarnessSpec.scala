@@ -9,8 +9,8 @@ import scala.util.matching.Regex
 
 /** The harness mains share one session builder and one task-metrics
   * listener; the SQL entry point and the imperative registration
-  * share one native-function table; lazy checkpoints share one
-  * helper, and so do multi-consumer pins and scan spreads. */
+  * share one native-function table; scan spreads share one helper,
+  * and no frame is materialized outside the planner. */
 class HarnessSpec extends SparkSpec {
 
   /** (file name, occurrences of `literal`) for every main source file
@@ -25,11 +25,12 @@ class HarnessSpec extends SparkSpec {
     assert(occurrences("SparkSession.builder()") == Seq("GraftSession.scala" -> 1))
   }
 
-  test("every lazy local checkpoint goes through Tables.lazyCheckpoint") {
-    assert(occurrences(".localCheckpoint(").map(_._1) == Seq("Tables.scala"))
+  test("no lazy local checkpoint in src/main/scala") {
+    assert(occurrences(".localCheckpoint(").isEmpty)
+    assert(occurrences(".checkpoint(").isEmpty)
   }
 
-  test("operators share frames through Tables.pin: no cache, and persist only in the closure rounds") {
+  test("no cache, and persist only in the closure rounds") {
     assert(occurrences(".cache()").isEmpty)
     // the closure operator's above-gate RDD rounds persist each round serialized
     assert(occurrences(".persist(").map(_._1) == Seq("Closure.scala"))

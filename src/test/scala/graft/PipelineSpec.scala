@@ -54,24 +54,6 @@ class PipelineSpec extends SparkSpec {
     assert(closureMetric(star, "rounds") > 0)
   }
 
-  test("a lazy checkpoint keeps its source plan's SQL metrics alive after its lineage is cut") {
-    // built in a method, so no local keeps the source frame reachable
-    def cut(): (org.apache.spark.sql.DataFrame, Seq[java.lang.ref.WeakReference[AnyRef]]) = {
-      val src = spark.range(0, 1000, 1, 4).groupBy((col("id") % 7).as("k")).count()
-      val cp = Tables.pin(src)
-      (cp, src.queryExecution.executedPlan.collect { case p => p.metrics.values }.flatten
-        .map(new java.lang.ref.WeakReference[AnyRef](_)))
-    }
-    val (cp, metrics) = cut()
-    assert(metrics.nonEmpty)
-    // materializes the checkpoint, which truncates its lineage
-    assert(cp.count() == 7)
-    System.gc()
-    assert(metrics.forall(_.get != null),
-      "a job still computing the checkpoint from its lineage would report collected metrics")
-    assert(cp.count() == 7)
-  }
-
   test("stratified sample keeps rate-consistent counts per stratum") {
     val rows = Pipeline.sampleStratified(spark, sfDir).collect()
     assert(rows.nonEmpty)

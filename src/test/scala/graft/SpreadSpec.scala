@@ -7,9 +7,9 @@ import org.apache.spark.sql.functions.col
 
 import java.nio.file.Files
 
-/** The one spread, [[Tables.spread]]: every scan, single- or
-  * multi-file, pinned or not, at any width, is spread to the session
-  * width. Plus the row probe and the conf scope the pin plans under.
+/** The one spread, [[Tables.spread]]: every frame, a single- or
+  * multi-file scan or one without file leaves, at any width, is spread
+  * to the session width. Plus the row probe.
   */
 class SpreadSpec extends SparkSpec {
 
@@ -39,9 +39,15 @@ class SpreadSpec extends SparkSpec {
     assert(shuffles(Tables.spread(docs)).map(_.toString) == Seq("RoundRobinPartitioning(4)"))
   }
 
-  test("a pinned frame is spread") {
-    val pinned = Tables.pin(Tables.documents(spark, sfDir).select(col("doc_id"), col("text")))
-    assert(shuffles(Tables.spread(pinned)).map(_.toString) == Seq("RoundRobinPartitioning(4)"))
+  /** The documents' `(doc_id, text)` rows as a `LocalRelation`: a
+    * frame without file leaves. */
+  private def localDocs(): DataFrame = {
+    val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
+    spark.createDataFrame(java.util.Arrays.asList(docs.collect(): _*), docs.schema)
+  }
+
+  test("a frame without file leaves is spread") {
+    assert(shuffles(Tables.spread(localDocs())).map(_.toString) == Seq("RoundRobinPartitioning(4)"))
   }
 
   test("a one-split file spreads at width 3 too") {
@@ -64,29 +70,16 @@ class SpreadSpec extends SparkSpec {
     }
   }
 
-  test("scanRows reads the footer without a job and counts a pinned frame") {
+  test("scanRows reads the footer without a job and counts a local frame") {
     val docs = Tables.documents(spark, sfDir)
     val n = docs.count()
+    val local = localDocs().where("doc_id % 2 = 0")
     val m = new StageMetrics(spark)
     try {
       assert(m.record(Tables.scanRows(docs)) == n)
       assert(m.jobs == 0)
-      assert(m.record(Tables.scanRows(Tables.pin(docs.where("doc_id % 2 = 0")))) ==
-        docs.where("doc_id % 2 = 0").count())
+      assert(m.record(Tables.scanRows(local)) == docs.where("doc_id % 2 = 0").count())
       assert(m.jobs >= 1)
     } finally spark.sparkContext.removeSparkListener(m)
-  }
-
-  test("pin restores the AQE key as it found it, unset included") {
-    val key = "spark.sql.adaptive.enabled"
-    val before = spark.conf.getAll.get(key)
-    spark.conf.unset(key)
-    try {
-      Tables.pin(Tables.documents(spark, sfDir))
-      assert(!spark.conf.getAll.contains(key))
-      spark.conf.set(key, "true")
-      Tables.pin(Tables.documents(spark, sfDir))
-      assert(spark.conf.get(key) == "true")
-    } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 }

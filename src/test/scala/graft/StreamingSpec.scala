@@ -131,7 +131,7 @@ class StreamingSpec extends SparkSpec {
     try {
       // batch 1: v1 (k=1: name required, score int, status enum A,B,C
       // defaultless). First registration emits no verdict.
-      stream.addData(RegEvt(7L, ts(0), 1L, 1L))
+      stream.addData(RegEvt(7L, ts(0), 1L, Some(1L)))
       q.processAllAvailable()
       assert(spark.table("compat_gate_stream").count() == 0)
       // batch 2: k=11 — score widens int→bigint (promotion), status
@@ -139,7 +139,7 @@ class StreamingSpec extends SparkSpec {
       // string] union reads the writer's scalar string, token stays
       // fixed8 → v2 compatible. The writer fields come from STATE
       // carried across the batch boundary.
-      stream.addData(RegEvt(7L, ts(10), 2L, 11L))
+      stream.addData(RegEvt(7L, ts(10), 2L, Some(11L)))
       q.processAllAvailable()
       val afterV2 = spark.table("compat_gate_stream").as[CompatOut].collect()
       assert(afterV2.length == 1)
@@ -149,14 +149,14 @@ class StreamingSpec extends SparkSpec {
       // via the symmetric string<->bytes promotion, and ref WIDENS
       // [null,string] -> [bigint,null,string] (checkUnion: every
       // writer branch still readable) -> v3 compatible.
-      stream.addData(RegEvt(7L, ts(20), 3L, 2L))
+      stream.addData(RegEvt(7L, ts(20), 3L, Some(2L)))
       q.processAllAvailable()
       // batch 4: k=5 — name turns REQUIRED while v3's writer had it
       // nullable (required-reads-nullable), score narrows bigint->int
       // (only int->bigint is promotable), and ref narrows its union
       // [bigint,null,string] -> [null,string] (the bigint branch is
       // unreadable): three violations. token stays fixed8 throughout.
-      stream.addData(RegEvt(7L, ts(30), 4L, 5L))
+      stream.addData(RegEvt(7L, ts(30), 4L, Some(5L)))
       q.processAllAvailable()
       val out = spark.table("compat_gate_stream").as[CompatOut].collect().sortBy(_.version)
       assert(out.map(_.version).toSeq == Seq(2, 3, 4))

@@ -27,6 +27,9 @@ class TemporalSpec extends SparkSpec {
       assert(Option(r.getAs[java.sql.Timestamp]("last_signup_ts")) == expected.map(_._2),
         s"purchase ${r.getAs[Long]("purchase_id")}")
     }
+    // a cached events frame left in the shared session would turn every
+    // later spec's events scan into an in-memory scan
+    ev.unpersist()
   }
 
   test("range join: deltas within [0, 600] and no missed in-window pair on a sample user") {
@@ -47,6 +50,7 @@ class TemporalSpec extends SparkSpec {
     val got = df.filter(col("user_id") === someUser)
       .select("click_id", "buy_id").collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(got.toSet == brute.toSet)
+    df.unpersist()
   }
 
   test("custom AsOfJoinExec plans as a physical merge and matches the window formulation") {
