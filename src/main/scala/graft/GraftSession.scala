@@ -42,7 +42,10 @@ object GraftSession {
 
 /** Per-stage task metrics and the job count of every job since the
   * last [[record]]: task count, summed executor run and CPU time,
-  * shuffle read/write bytes, and stage wall (submission→completion).
+  * shuffle read/write bytes, stage wall (submission→completion), and
+  * the stage's operator scopes as its name (`Scan parquet >
+  * WholeStageCodegen (3) > Exchange`; an AQE stage's call-site name
+  * is the same for every stage).
   * StageProfile prints the stages; Bench reads the [[total]] per query.
   */
 class StageMetrics(spark: SparkSession) extends SparkListener {
@@ -71,7 +74,7 @@ class StageMetrics(spark: SparkSession) extends SparkListener {
     val i = sc.stageInfo
     val st = stages.getOrElseUpdate(i.stageId, new Stage)
     st.wallMs = (for { s <- i.submissionTime; c <- i.completionTime } yield c - s).getOrElse(-1L)
-    st.name = i.name.takeWhile(_ != '\n').take(60)
+    st.name = GraftShim.stageScopes(i).mkString(" > ")
   }
 
   /** Runs `body` with the metrics cleared first, and returns once the

@@ -1,17 +1,26 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expressions for the hot paths that interpreted
-  * higher-order-function chains make slow: SimHash fingerprinting,
-  * n-gram Jaccard, and cosine similarity. Each keeps whole-stage
+  * higher-order-function chains make slow. Each keeps whole-stage
   * codegen intact by emitting a single static call (the per-row work
-  * is a tight JVM loop, so the call boundary is negligible).
+  * is a tight JVM loop, so the call boundary is negligible):
+  *  - `graft_shingles(ts, n)` / `graft_shingle_md5(ts, n)`: word
+  *    n-grams of a token array, joined by one space, or their md5 hex
+  *    (the `transform(sequence(...), i -> concat(...))` lambdas);
+  *  - `graft_minhash16`: the 16-seed MinHash signature;
+  *  - `graft_simhash64`: SimHash fingerprinting;
+  *  - `graft_jaccard` / `graft_cosine`: pair scores;
+  *  - `graft_json_paths` / `graft_avro_pcf` / `graft_json_canon`:
+  *    schema-document walks;
+  *  - `graft_topk` ([[TopKAgg]]): the bounded top-k aggregate.
   *
   * Semantics are bit-identical to the SQL/HOF formulations they
   * replace (and therefore to the DuckDB oracles): hashing is md5 of
@@ -68,7 +77,7 @@ object Native {
   }
 
   /** Exact set Jaccard |A∩B| / |A∪B| over SORTED distinct string
-    * arrays (callers pre-sort once per row with `array_sort` — the
+    * arrays (callers pre-sort once per row with `sort_array` — the
     * per-pair work is then a linear merge with no hashing).
     */
   def jaccard(a: ArrayData, b: ArrayData): Double = {
@@ -115,32 +124,91 @@ object Native {
     false
   }
 
+  private val seedPrefixes = Array.tabulate(16)(sd => s"$sd:".getBytes)
+
   /** 16-permutation MinHash signature: per seed sd, the minimum
     * md5("sd:shingle") as a lowercase hex string — byte-identical to
     * `array_min(transform(sh, x -> md5(concat(sd, ':', x))))`
-    * (lexicographic hex order == unsigned digest order).
+    * (lexicographic hex order == unsigned digest order). Each
+    * shingle's bytes are read once; every digest lands in one reused
+    * buffer, and only a new minimum is copied out.
     */
   def minhash16(shingles: ArrayData): ArrayData = {
     val n = shingles.numElements()
-    val mins = new Array[Array[Byte]](16)
+    val bytes = new Array[Array[Byte]](n)
+    var i = 0
+    while (i < n) {
+      val t = shingles.getUTF8String(i)
+      // md5 of a NULL shingle is NULL, which array_min skips
+      bytes(i) = if (t == null) null else t.getBytes
+      i += 1
+    }
     val md = md5Local.get()
+    val d = new Array[Byte](16)
+    val out = new Array[AnyRef](16)
     var sd = 0
     while (sd < 16) {
-      val prefix = (sd.toString + ":").getBytes
-      var i = 0
+      val prefix = seedPrefixes(sd)
       var best: Array[Byte] = null
+      i = 0
       while (i < n) {
-        md.reset()
-        md.update(prefix)
-        md.update(shingles.getUTF8String(i).getBytes)
-        val d = md.digest()
-        if (best == null || unsignedLess(d, best)) best = d
+        if (bytes(i) != null) {
+          md.update(prefix)
+          md.update(bytes(i))
+          md.digest(d, 0, 16)
+          if (best == null) best = d.clone()
+          else if (unsignedLess(d, best)) System.arraycopy(d, 0, best, 0, 16)
+        }
         i += 1
       }
-      mins(sd) = best
+      out(sd) = if (best == null) null else toHex(best)
       sd += 1
     }
-    new GenericArrayData(mins.map(b => if (b == null) null else toHex(b)): Array[AnyRef])
+    new GenericArrayData(out)
+  }
+
+  /** The word n-grams of `tokens`, in order: element i joins tokens
+    * i .. i+n-1 with one space, and is NULL when any of them is NULL
+    * (as `concat` is). Fewer than n tokens (or n < 1) give an empty
+    * array. With `md5` set each n-gram is replaced by its md5 hex, the
+    * `md5(concat(...))` form.
+    */
+  def shingles(tokens: ArrayData, n: Int, md5: Boolean): ArrayData = {
+    val len = tokens.numElements()
+    val m = if (n < 1) 0 else math.max(len - n + 1, 0)
+    val toks = new Array[UTF8String](len)
+    var i = 0
+    while (i < len) { toks(i) = tokens.getUTF8String(i); i += 1 }
+    val out = new Array[AnyRef](m)
+    val md = if (md5) md5Local.get() else null
+    val d = if (md5) new Array[Byte](16) else null
+    var buf = new Array[Byte](64)
+    i = 0
+    while (i < m) {
+      var size = n - 1
+      var j = i
+      while (j < i + n && toks(j) != null) { size += toks(j).numBytes; j += 1 }
+      if (j == i + n) {
+        if (buf.length < size) buf = new Array[Byte](math.max(size, buf.length * 2))
+        var p = 0
+        j = i
+        while (j < i + n) {
+          if (j > i) { buf(p) = ' '; p += 1 }
+          val t = toks(j)
+          t.writeToMemory(buf, Platform.BYTE_ARRAY_OFFSET + p)
+          p += t.numBytes
+          j += 1
+        }
+        out(i) =
+          if (md5) {
+            md.update(buf, 0, size)
+            md.digest(d, 0, 16)
+            toHex(d)
+          } else UTF8String.fromBytes(java.util.Arrays.copyOf(buf, size))
+      }
+      i += 1
+    }
+    new GenericArrayData(out)
   }
 
   /** Cosine similarity of two double arrays, left-to-right sums. */
@@ -365,6 +433,8 @@ object Native {
   val functions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
     ("graft_simhash64", classOf[SimHash64Expr], e => SimHash64Expr(e.head)),
     ("graft_minhash16", classOf[MinHash16Expr], e => MinHash16Expr(e.head)),
+    ("graft_shingles", classOf[ShinglesExpr], e => ShinglesExpr(e(0), e(1))),
+    ("graft_shingle_md5", classOf[ShinglesExpr], e => ShinglesExpr(e(0), e(1), md5 = true)),
     ("graft_jaccard", classOf[JaccardExpr], e => JaccardExpr(e(0), e(1))),
     ("graft_cosine", classOf[CosineExpr], e => CosineExpr(e(0), e(1))),
     ("graft_json_paths", classOf[JsonPathsExpr], e => JsonPathsExpr(e.head)),
@@ -405,6 +475,21 @@ case class MinHash16Expr(child: Expression) extends UnaryExpression with Expects
   override protected def withNewChildInternal(newChild: Expression): MinHash16Expr =
     copy(child = newChild)
   override def prettyName: String = "graft_minhash16"
+}
+
+/** `graft_shingles(array<string>, int) -> array<string>`: the word
+  * n-grams; `graft_shingle_md5` (`md5` set) gives their md5 hex. */
+case class ShinglesExpr(left: Expression, right: Expression, md5: Boolean = false)
+    extends BinaryExpression with ImplicitCastInputTypes {
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType), IntegerType)
+  override def dataType: DataType = ArrayType(StringType, containsNull = true)
+  override def nullSafeEval(a: Any, n: Any): Any =
+    Native.shingles(a.asInstanceOf[ArrayData], n.asInstanceOf[Int], md5)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, n) => s"graft.functions.Native.shingles($a, $n, $md5)")
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): ShinglesExpr =
+    copy(left = newLeft, right = newRight)
+  override def prettyName: String = if (md5) "graft_shingle_md5" else "graft_shingles"
 }
 
 /** `graft_jaccard(array<string>, array<string>) -> double`. */

@@ -14,9 +14,10 @@ import org.apache.spark.sql.functions._
   * the oracle can reproduce the exact signatures.
   *
   * Scale design: no operator compares all n² pairs. MinHash shingle
-  * signatures are computed row-locally with higher-order functions
-  * (no explode of the shingle set), then only 4 band rows per doc
-  * shuffle into the LSH bucket join. SimHash blocks on 16-bit chunk
+  * signatures are computed row-locally by the native kernels
+  * (`graft_shingles`, `graft_minhash16`; no explode of the shingle
+  * set), then only 4 band rows per doc shuffle into the LSH bucket
+  * join. SimHash blocks on 16-bit chunk
   * equality (pigeonhole: hamming ≤ 3 ⇒ some chunk equal). Jaccard
   * and cosine block on (lang, length-bucket) / label before any
   * pairwise work. All pair joins shuffle on the block key only.
@@ -86,10 +87,7 @@ object Dedup {
       .transform(Tables.spread(_))
       .selectExpr("doc_id", "split(text, ' ') AS ts")
       .where("size(ts) >= 3")
-      .selectExpr("doc_id",
-        """transform(sequence(1, size(ts) - 2),
-          |  i -> concat(element_at(ts, i), ' ', element_at(ts, i + 1), ' ', element_at(ts, i + 2))) AS shingles""".stripMargin)
-      .selectExpr("doc_id", "graft_minhash16(shingles) AS m")
+      .selectExpr("doc_id", "graft_minhash16(graft_shingles(ts, 3)) AS m")
       .transform(Tables.spread(_, col("doc_id")))
   }
 
@@ -214,9 +212,7 @@ object Dedup {
     val sh = docs
       .selectExpr("doc_id", "lang", "n_chars div 50 AS len_bucket", "split(text, ' ') AS ts")
       .where("size(ts) >= 3")
-      .selectExpr("doc_id", "lang", "len_bucket",
-        """array_sort(array_distinct(transform(sequence(1, size(ts) - 2),
-          |  i -> concat(element_at(ts, i), ' ', element_at(ts, i + 1), ' ', element_at(ts, i + 2))))) AS sh""".stripMargin)
+      .selectExpr("doc_id", "lang", "len_bucket", "sort_array(array_distinct(graft_shingles(ts, 3))) AS sh")
       // every reader below (both pair sides, the prefix tokens, the
       // shingle lookups) reads this one spread, reused within the query
       .transform(Tables.spread(_))
@@ -261,7 +257,7 @@ object Dedup {
       val dfreq = toks.groupBy(col("tok")).agg(count(lit(1)).as("df"))
       val pre = toks.join(dfreq, Seq("tok"))
         .groupBy(col("doc_id"), col("lang"), col("len_bucket"), col("n"))
-        .agg(expr("array_sort(collect_list(struct(df, tok)))").as("ord"))
+        .agg(expr("sort_array(collect_list(struct(df, tok)))").as("ord"))
         .selectExpr("doc_id", "lang", "len_bucket",
           s"explode(transform(slice(ord, 1, ${jaccardPrefixLenSql("n")}), x -> x.tok)) AS tok")
       // Candidates: pairs in the same block sharing ≥1 prefix token.
@@ -298,19 +294,30 @@ object Dedup {
     * license to run candidates-only at scale).
     */
   def ngramJaccard(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.Native.register(s)
-    val sh = Tables.documents(s, dir)
-      .selectExpr("doc_id", "split(text, ' ') AS ts")
-      .where("size(ts) >= 3")
-      .selectExpr("doc_id",
-        """array_sort(array_distinct(transform(sequence(1, size(ts) - 2),
-          |  i -> concat(element_at(ts, i), ' ', element_at(ts, i + 1), ' ', element_at(ts, i + 2))))) AS sh""".stripMargin)
-    val scored = minhashCandidates(minhashSignatures(s, dir))
-      .join(sh.selectExpr("doc_id AS doc_a", "sh AS sha"), "doc_a")
-      .join(sh.selectExpr("doc_id AS doc_b", "sh AS shb"), "doc_b")
+    val scored = verifierCandidates(s, dir)
       .selectExpr("doc_a", "doc_b", "graft_jaccard(sha, shb) AS jaccard")
     Tables.filterBarrier(scored, col("jaccard") >= JaccardThreshold)
       .selectExpr("doc_a", "doc_b", "floor(jaccard * 10000 + 0.5) / cast(10000 AS double) AS jaccard")
+  }
+
+  /** The MinHash verifiers' input: LSH band candidates (doc_a, doc_b)
+    * with both documents' sorted distinct word-3-gram sets (sha, shb),
+    * computed on the spread scan. The signatures are taken over the
+    * same sets: a minimum over the distinct set equals the minimum
+    * over the raw shingles, so they are [[minhashSignatures]]' byte
+    * for byte, and they end in the same doc_id-keyed spread.
+    */
+  private def verifierCandidates(s: SparkSession, dir: String): DataFrame = {
+    graft.functions.Native.register(s)
+    val sh = Tables.spread(Tables.documents(s, dir))
+      .selectExpr("doc_id", "split(text, ' ') AS ts")
+      .where("size(ts) >= 3")
+      .selectExpr("doc_id", "sort_array(array_distinct(graft_shingles(ts, 3))) AS sh")
+    val mh = sh.selectExpr("doc_id", "graft_minhash16(sh) AS m")
+      .transform(Tables.spread(_, col("doc_id")))
+    minhashCandidates(mh)
+      .join(sh.selectExpr("doc_id AS doc_a", "sh AS sha"), "doc_a")
+      .join(sh.selectExpr("doc_id AS doc_b", "sh AS shb"), "doc_b")
   }
 
   /** Embedding-cosine near-dup pairs, blocked by label (the cluster
@@ -429,14 +436,12 @@ object Dedup {
     * it.
     */
   def winnow(s: SparkSession, dir: String): DataFrame = {
+    graft.functions.Native.register(s)
     val fps = Tables.spread(Tables.documents(s, dir))
       .selectExpr("doc_id", "split(text, ' ') AS ts")
       .where("size(ts) >= 4")
       .selectExpr("doc_id",
-        """slice(array_sort(array_distinct(transform(sequence(1, size(ts) - 3),
-          |  i -> md5(concat(element_at(ts, i), ' ', element_at(ts, i + 1), ' ',
-          |                  element_at(ts, i + 2), ' ', element_at(ts, i + 3)))))),
-          |  1, 8) AS fps""".stripMargin)
+        "slice(sort_array(array_distinct(graft_shingle_md5(ts, 4))), 1, 8) AS fps")
     // explode_OUTER, deliberately: for a plain explode,
     // InferFiltersFromGenerate derives `size(fps)>0 AND isnotnull(fps)`
     // and pushes BOTH — each spelling out the whole md5-HOF derivation
@@ -635,11 +640,12 @@ object Dedup {
     * shuffle); only pair-level aggregates leave that stage.
     */
   def substringRuns(s: SparkSession, dir: String): DataFrame = {
+    graft.functions.Native.register(s)
     val grams = Tables.spread(Tables.documents(s, dir))
       .selectExpr("doc_id", "split(text, ' ') AS ts")
       .where("size(ts) >= 8")
       .selectExpr("doc_id",
-        "transform(sequence(1, size(ts) - 7), i -> md5(array_join(slice(ts, i, 8), ' '))) AS ghs")
+        "graft_shingle_md5(ts, 8) AS ghs")
     // posexplode_OUTER for the same reason winnow uses explode_outer:
     // plain generates make InferFiltersFromGenerate re-derive the md5
     // HOF chain as a pushed filter below the spread repartition.
@@ -709,7 +715,7 @@ object Dedup {
         "lower(regexp_extract(base, '^[^:]+', 0)) AS scheme",
         "lower(regexp_extract(base, '^[^:]+://([^/]+)', 1)) AS hostport",
         "regexp_extract(base, '^[^:]+://[^/]+(/.*)?$', 1) AS path0",
-        "array_join(array_sort(filter(split(q, '&'), p -> substring(p, 1, 4) <> 'utm_')), '&') AS cq")
+        "array_join(sort_array(filter(split(q, '&'), p -> substring(p, 1, 4) <> 'utm_')), '&') AS cq")
       .selectExpr("doc_id", "scheme",
         """regexp_replace(
           |  CASE WHEN scheme = 'http' THEN regexp_replace(hostport, ':80$', '')
@@ -740,16 +746,7 @@ object Dedup {
     * doc id. Nothing is corpus-quadratic.
     */
   def containment(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.Native.register(s)
-    val sh = Tables.documents(s, dir)
-      .selectExpr("doc_id", "split(text, ' ') AS ts")
-      .where("size(ts) >= 3")
-      .selectExpr("doc_id",
-        """array_distinct(transform(sequence(1, size(ts) - 2),
-          |  i -> concat(element_at(ts, i), ' ', element_at(ts, i + 1), ' ', element_at(ts, i + 2)))) AS sh""".stripMargin)
-    val scored = minhashCandidates(minhashSignatures(s, dir))
-      .join(sh.selectExpr("doc_id AS doc_a", "sh AS sha"), "doc_a")
-      .join(sh.selectExpr("doc_id AS doc_b", "sh AS shb"), "doc_b")
+    val scored = verifierCandidates(s, dir)
       .selectExpr("doc_a", "doc_b",
         "size(array_intersect(sha, shb)) AS n_common",
         "size(sha) AS n_a", "size(shb) AS n_b")

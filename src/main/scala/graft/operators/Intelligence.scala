@@ -362,12 +362,13 @@ object Intelligence {
     // The latest-fields view (events scan + version window + field
     // model build) feeds the self-join and the 1-row subject count
     // (r6 re-derived it four times). The document frequency is a
-    // window over the field name, so both self-join sides read one
-    // frame and reuse its subject exchange; the subject count builds
-    // the view a second time.
+    // window over the field name, and all three readers read its
+    // output, so they share the window's fname exchange: the subject
+    // count names dfx (always >= 1, so the count is unchanged) to keep
+    // column pruning from cutting the window, and the view, away.
     val lf = latestFields(s, dir).select(col("subject"), col("fname"))
     val lfx = lf.withColumn("dfx", count(lit(1)).over(Window.partitionBy(col("fname"))))
-    val n = lf.agg(countDistinct(col("subject")).as("n_subjects"))
+    val n = lfx.agg(countDistinct(when(col("dfx") > 0, col("subject"))).as("n_subjects"))
     lfx.as("a").join(lfx.as("b"),
         col("a.subject") === col("b.subject") && col("a.fname") < col("b.fname"))
       .groupBy(col("a.fname").as("f1"), col("b.fname").as("f2"))

@@ -270,13 +270,15 @@ object Multimodal {
     * payload's leading bytes, longest signature first, exactly as
     * file(1)/libmagic dispatch.
     *
-    * Row-local sniff on the scan (Spark hexes only the first 4
-    * bytes), one mime-vocabulary partial-agg groupBy, 1-row share
-    * denominator. At 100 TB this is the manifest-building pass that
+    * Two stages: the sniff runs row-local on the scan (Spark hexes
+    * only the leading bytes), and ONE global aggregate counts docs
+    * and sums bytes per mime from the [[magic]] table next to the
+    * corpus total; its one row explodes to the present mimes (at
+    * most five). At 100 TB this is the manifest-building pass that
     * sizes each decoder fleet.
     */
   def typeSniff(s: SparkSession, dir: String): DataFrame = {
-    val payloads = Tables.spread(Tables.documents(s, dir))
+    val payloads = Tables.documents(s, dir)
       .selectExpr("doc_id",
         """concat(
           |  CASE cast(doc_id % 5 AS int)
@@ -286,25 +288,32 @@ object Multimodal {
           |  WHEN 3 THEN unhex('47494638')
           |  ELSE cast('' AS binary) END,
           |  encode(text, 'UTF-8')) AS payload""".stripMargin)
-    val mimed = payloads.selectExpr("doc_id",
-      "length(payload) AS n_bytes",
-      """CASE
-        |WHEN hex(substring(payload, 1, 4)) LIKE '89504E47%' THEN 'image/png'
-        |WHEN hex(substring(payload, 1, 4)) LIKE '52494646%' THEN 'audio/riff'
-        |WHEN hex(substring(payload, 1, 3)) LIKE 'FFD8FF%' THEN 'image/jpeg'
-        |WHEN hex(substring(payload, 1, 3)) LIKE '474946%' THEN 'image/gif'
-        |ELSE 'application/octet-stream' END AS mime""".stripMargin)
-    // corpus total via a window-sum over the ≤5-row mime rollup
-    // (every doc sniffs to exactly one mime) — the former broadcast
-    // aggregate re-ran the payload-sniffing scan (r12, guide §2.4)
-    mimed.groupBy(col("mime"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_bytes")).as("total_bytes"))
-      .withColumn("n_corpus", sum(col("n_docs")).over(
-        org.apache.spark.sql.expressions.Window.partitionBy()))
-      .withColumn("share",
-        expr("floor(n_docs / cast(n_corpus AS double) * 10000 + 0.5) / cast(10000 AS double)"))
-      .drop("n_corpus")
+    val sniff = magic.map { case (sig, mime) =>
+      s"WHEN hex(substring(payload, 1, ${sig.length / 2})) = '$sig' THEN '$mime'"
+    }.mkString("CASE ", " ", s" ELSE '$unknownMime' END")
+    val mimed = payloads.selectExpr("length(payload) AS n_bytes", s"$sniff AS mime")
+    val labels = magic.map(_._2) :+ unknownMime
+    val per = labels.zipWithIndex.flatMap { case (m, i) =>
+      Seq(count(when(col("mime") === m, 1)).as(s"n$i"),
+        sum(when(col("mime") === m, col("n_bytes"))).as(s"b$i"))
+    }
+    mimed.agg(count(lit(1)).as("n_corpus"), per: _*)
+      .select(col("n_corpus"), inline(array(labels.indices.map { i =>
+        struct(lit(labels(i)).as("mime"), col(s"n$i").as("n_docs"), col(s"b$i").as("total_bytes"))
+      }: _*)))
+      .where(col("n_docs") > 0)
+      .select(col("mime"), col("n_docs"), col("total_bytes"),
+        expr("floor(n_docs / cast(n_corpus AS double) * 10000 + 0.5) / cast(10000 AS double)").as("share"))
   }
+
+  /** [[typeSniff]]'s signatures as (leading bytes in hex, mime),
+    * longest first; a payload matching none is [[unknownMime]]. */
+  private val magic = Seq(
+    "89504E47" -> "image/png",
+    "52494646" -> "audio/riff",
+    "FFD8FF" -> "image/jpeg",
+    "474946" -> "image/gif")
+  private val unknownMime = "application/octet-stream"
 
   /** Inference micro-batch planning over the media corpus — the
     * data-loading step between storage and a GPU decode/embed pass:

@@ -175,19 +175,18 @@ object Pipeline {
     * the partial-aggregated groupBy on the 5-gram — the exact shape
     * of a corpus-wide counting job at 100 TB.
     */
-  def textBoilerplate(s: SparkSession, dir: String): DataFrame =
+  def textBoilerplate(s: SparkSession, dir: String): DataFrame = {
+    graft.functions.Native.register(s)
     Tables.spread(Tables.documents(s, dir))
       .selectExpr("doc_id", "split(text, ' ') AS ts")
       .where("size(ts) >= 5")
-      .selectExpr(
-        // explode_outer: the size guard makes the gram set non-empty;
-        // see [[Dedup.winnow]] on InferFiltersFromGenerate
-        """explode_outer(array_distinct(transform(sequence(1, size(ts) - 4),
-          |  i -> concat_ws(' ', element_at(ts, i), element_at(ts, i+1), element_at(ts, i+2),
-          |                 element_at(ts, i+3), element_at(ts, i+4))))) AS ngram""".stripMargin)
+      // explode_outer: the size guard makes the gram set non-empty;
+      // see [[Dedup.winnow]] on InferFiltersFromGenerate
+      .selectExpr("explode_outer(array_distinct(graft_shingles(ts, 5))) AS ngram")
       .groupBy(col("ngram"))
       .agg(count(lit(1)).as("df"))
       .where(col("df") >= 3)
+  }
 
   /** Per-label embedding centroids, one row per (label, dimension) —
     * the k-means/IVF training step ([[Similarity]]'s IVF quantizer
@@ -215,14 +214,14 @@ object Pipeline {
     * Output: flagged doc, its gram counts, contamination rate.
     */
   def textDecontaminate(s: SparkSession, dir: String): DataFrame = {
+    graft.functions.Native.register(s)
     val grams = Tables.spread(Tables.documents(s, dir))
       .selectExpr("doc_id", "split(text, ' ') AS ts")
       .where("size(ts) >= 8")
       .selectExpr("doc_id",
         // explode_outer: non-empty under the size guard; avoids the
         // InferFiltersFromGenerate re-derivation below the spread
-        """explode_outer(array_distinct(transform(sequence(1, size(ts) - 7),
-          |  i -> concat_ws(' ', slice(ts, i, 8))))) AS g""".stripMargin)
+        "explode_outer(array_distinct(graft_shingles(ts, 8))) AS g")
     val evalSet = grams.where(col("doc_id") % lit(7) === 0)
       .select(col("g")).distinct()
     grams.where(col("doc_id") % lit(7) =!= 0)
@@ -440,14 +439,11 @@ object Pipeline {
     */
   def gopherGate(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
+    graft.functions.Native.register(s)
     val docs = Tables.spread(Tables.documents(s, dir))
       .selectExpr("doc_id", "split(text, ' ') AS ws")
     val rep = docs
-      .selectExpr("doc_id", "ws",
-        """CASE WHEN size(ws) >= 2
-          |  THEN transform(sequence(1, size(ws) - 1),
-          |         i -> concat(element_at(ws, i), ' ', element_at(ws, i + 1)))
-          |  ELSE array() END AS gs""".stripMargin)
+      .selectExpr("doc_id", "ws", "graft_shingles(ws, 2) AS gs")
       .selectExpr("doc_id", "size(ws) AS n_words",
         s"${TextAnalysis.runLen("ws")}.runs AS n_distinct_words",
         s"${TextAnalysis.runLen("gs")}.best AS top_bigram_count",
@@ -462,7 +458,7 @@ object Pipeline {
     val cov = docs
       .where("size(ws) >= 3")
       .selectExpr("doc_id",
-        "transform(sequence(1, size(ws) - 2), i -> md5(array_join(slice(ws, i, 3), ' '))) AS ghs")
+        "graft_shingle_md5(ws, 3) AS ghs")
       .select(col("doc_id"), posexplode_outer(col("ghs")).as(Seq("p0", "gh")))
       .select(col("doc_id"), (col("p0") + 1).as("pos"), col("gh"))
       .withColumn("cnt", count(lit(1)).over(Window.partitionBy(col("doc_id"), col("gh"))))
@@ -654,7 +650,7 @@ object Pipeline {
     graft.functions.Native.register(s)
     val cArr = embCentroids(s, dir)
       .groupBy(col("label").as("c_label"))
-      .agg(expr("transform(array_sort(collect_list(struct(dim, centroid))), x -> x.centroid)")
+      .agg(expr("transform(sort_array(collect_list(struct(dim, centroid))), x -> x.centroid)")
         .as("c_vec"))
     val vecs = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("label"),
@@ -747,6 +743,7 @@ object Pipeline {
     * merge list applied in the same row-local pass.
     */
   def tokMergeApply(s: SparkSession, dir: String): DataFrame = {
+    graft.functions.Native.register(s)
     val words = Tables.spread(Tables.documents(s, dir))
       .select(explode(split(col("text"), " ")).as("w"))
       .where(length(col("w")) >= 2)
@@ -760,11 +757,10 @@ object Pipeline {
       .crossJoin(broadcast(top))
       .selectExpr("merge", "split(replace(sym, merge, replace(merge, ' ', '')), ' ') AS l")
       // a word equal to the merge itself collapses to ONE symbol — it
-      // has no adjacent pairs left. The guard is load-bearing: Spark's
-      // sequence(1, 0) auto-steps DOWN to [1, 0] (it does not return
-      // empty like DuckDB's range), which would probe element_at 0
+      // has no adjacent pairs left. The guard is load-bearing: the
+      // explode_outer of its empty pair list would emit a NULL pair
       .where("size(l) >= 2")
-      .selectExpr("merge", "explode_outer(transform(sequence(1, size(l) - 1), i -> concat(element_at(l, i), ' ', element_at(l, i + 1)))) AS pair")
+      .selectExpr("merge", "explode_outer(graft_shingles(l, 2)) AS pair")
       .groupBy(col("merge"), col("pair")).agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("pair")).limit(20)
   }
@@ -880,12 +876,12 @@ object Pipeline {
     * self-join sides read the distinct grams' one exchange.
     */
   def sourceOverlap(s: SparkSession, dir: String): DataFrame = {
+    graft.functions.Native.register(s)
     val sg = Tables.spread(Tables.documents(s, dir))
       .selectExpr("source", "split(text, ' ') AS ts")
       .where("size(ts) >= 3")
       .selectExpr("source",
-        """explode(array_distinct(transform(sequence(1, size(ts) - 2),
-          |  i -> md5(concat(element_at(ts, i), ' ', element_at(ts, i + 1), ' ', element_at(ts, i + 2)))))) AS gh""".stripMargin)
+        "explode(array_distinct(graft_shingle_md5(ts, 3))) AS gh")
       // never NULL (md5 is not); stated here, the self-join's inferred
       // filter is already known, so the totals read the same frame
       .where(col("gh").isNotNull)

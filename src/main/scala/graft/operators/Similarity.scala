@@ -671,7 +671,7 @@ object Similarity {
         "transform(sequence(0, 3), j -> slice(e, j * 16 + 1, 16)) AS subs")
     val cb = broadcast(sub.where("vec_id < 16")
       .groupBy()
-      .agg(expr("transform(array_sort(collect_list(struct(vec_id, subs))), x -> x.subs)").as("cent")))
+      .agg(expr("transform(sort_array(collect_list(struct(vec_id, subs))), x -> x.subs)").as("cent")))
     def l2sub(a: String, b: String): String =
       s"aggregate(zip_with($a, $b, (p, q) -> (p - q) * (p - q)), cast(0 AS double), (s2, x) -> s2 + x)"
     val coded = Tables.spread(sub).crossJoin(cb)
@@ -742,7 +742,7 @@ object Similarity {
       .withColumn("bigS", sum(col("s")).over(wAll))
       .withColumn("nvec", max(col("n")).over(wAll))
       .withColumn("v1", col("nvec") * col("u") - col("s") * col("bigS"))
-      .withColumn("lst", array_sort(collect_list(struct(col("dim"), col("v1"))).over(wAll)))
+      .withColumn("lst", sort_array(collect_list(struct(col("dim"), col("v1"))).over(wAll)))
       .withColumn("nsq", expr(
         """aggregate(transform(lst, x -> cast(x.v1 AS double) * cast(x.v1 AS double)),
           |  cast(0 AS double), (acc, x) -> acc + x)""".stripMargin))

@@ -6,9 +6,12 @@ import org.apache.spark.sql.functions._
 
 /** Text-analysis operators for pipeline curation: language ID,
   * quality scoring, token counting, and winnowing-style document
-  * fingerprinting — all single-pass narrow scans over `documents`
-  * (row-local higher-order functions, no shuffle besides the final
-  * sort), so throughput is scan-bound at any scale.
+  * fingerprinting — single-pass narrow scans over `documents` behind
+  * a [[Tables.spread]], so throughput is scan-bound at any scale.
+  * Word n-grams come from the native `graft_shingles` /
+  * `graft_shingle_md5` kernels and sorts from the compiled
+  * `sort_array`; the remaining per-row higher-order functions are
+  * short filters and folds.
   */
 object TextAnalysis {
 
@@ -88,17 +91,17 @@ object TextAnalysis {
     * smallest word-4-gram hashes — stable under small edits, the
     * copy-detection primitive (Schleimer et al. MOSS shape).
     */
-  def fingerprint(s: SparkSession, dir: String): DataFrame =
+  def fingerprint(s: SparkSession, dir: String): DataFrame = {
+    graft.functions.Native.register(s)
     Tables.spread(Tables.documents(s, dir))
       .selectExpr("doc_id", "split(text, ' ') AS ts")
       .where("size(ts) >= 4")
       .selectExpr("doc_id",
-        """array_sort(transform(sequence(1, size(ts) - 3),
-          |  i -> md5(concat(element_at(ts, i), ' ', element_at(ts, i + 1), ' ',
-          |                  element_at(ts, i + 2), ' ', element_at(ts, i + 3))))) AS h""".stripMargin)
+        "sort_array(graft_shingle_md5(ts, 4)) AS h")
       .selectExpr("doc_id",
         "md5(concat_ws('', slice(h, 1, 4))) AS fingerprint",
         "size(h) AS n_shingles")
+  }
 
   /** Blocklist-term redaction — the PII-scrubbing shape (emails,
     * phone numbers, ids) with a term blocklist standing in for PII
@@ -154,7 +157,7 @@ object TextAnalysis {
     * exactly.
     */
   private[operators] def runLen(arr: String): String =
-    s"""aggregate(array_sort($arr),
+    s"""aggregate(sort_array($arr),
        |  named_struct('prev', cast(null as string), 'cur', 0, 'best', 0,
        |               'bw', cast(null as string), 'runs', 0),
        |  (a, x) -> named_struct(
@@ -166,16 +169,12 @@ object TextAnalysis {
        |    'runs', a.runs + IF(a.prev <=> x, 0, 1)),
        |  a -> named_struct('best', a.best, 'bw', a.bw, 'runs', a.runs))""".stripMargin
 
-  def repetition(s: SparkSession, dir: String): DataFrame =
+  def repetition(s: SparkSession, dir: String): DataFrame = {
+    graft.functions.Native.register(s)
     Tables.spread(Tables.documents(s, dir))
       .selectExpr("doc_id", "split(text, ' ') AS ws")
-      // sequence(1, 0) would infer step -1 and yield [1, 0] — guard
-      // one-word docs before building the bigram index list.
-      .selectExpr("doc_id", "ws",
-        """CASE WHEN size(ws) >= 2
-          |  THEN transform(sequence(1, size(ws) - 1),
-          |         i -> concat(element_at(ws, i), ' ', element_at(ws, i + 1)))
-          |  ELSE array() END AS gs""".stripMargin)
+      // a one-word doc has no bigrams: graft_shingles yields []
+      .selectExpr("doc_id", "ws", "graft_shingles(ws, 2) AS gs")
       .selectExpr("doc_id", "ws", "gs",
         s"${runLen("ws")} AS wtop", s"${runLen("gs")} AS gtop")
       .selectExpr("doc_id",
@@ -186,6 +185,7 @@ object TextAnalysis {
         "size(gs) AS n_bigrams",
         "gtop.runs AS n_distinct_bigrams",
         "gtop.best AS top_bigram_count")
+  }
 
   /** Duplicate-3-gram coverage (the other half of Gopher's repetition
     * battery, Rae et al. 2021 §A1.1 — the "fraction of characters in
@@ -209,11 +209,12 @@ object TextAnalysis {
     */
   def dupCoverage(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
+    graft.functions.Native.register(s)
     val docs = Tables.spread(Tables.documents(s, dir))
       .selectExpr("doc_id", "split(text, ' ') AS ts")
       .where("size(ts) >= 3")
       .selectExpr("doc_id", "cast(size(ts) AS bigint) AS n_words",
-        "transform(sequence(1, size(ts) - 2), i -> md5(array_join(slice(ts, i, 3), ' '))) AS ghs")
+        "graft_shingle_md5(ts, 3) AS ghs")
     val base = docs.select(col("doc_id"), col("n_words"))
     val occ = docs
       .select(col("doc_id"), posexplode_outer(col("ghs")).as(Seq("p0", "gh")))
@@ -363,12 +364,12 @@ object TextAnalysis {
     * uniformly distributed hashes; nothing is corpus-quadratic.
     */
   def ngramNovelty(s: SparkSession, dir: String): DataFrame = {
+    graft.functions.Native.register(s)
     val grams = Tables.spread(Tables.documents(s, dir))
       .selectExpr("doc_id", "split(text, ' ') AS ts")
       .where("size(ts) >= 3")
       .selectExpr("doc_id",
-        """explode(array_distinct(transform(sequence(1, size(ts) - 2),
-          |  i -> md5(concat(element_at(ts, i), ' ', element_at(ts, i + 1), ' ', element_at(ts, i + 2)))))) AS gh""".stripMargin)
+        "explode(array_distinct(graft_shingle_md5(ts, 3))) AS gh")
       // feeds both the first-occurrence rollup and the join-back:
       // spread on the gram, the rollup needs no exchange of its own
       // and the join-back reuses this one, so the explode runs once

@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graftshim
 
+import org.apache.spark.scheduler.StageInfo
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.{Dataset, SparkSession => ClassicSession}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -23,4 +24,10 @@ object GraftShim {
     */
   def flushListeners(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** A stage's operator scopes (`private[spark]` RDDOperationScope
+    * names such as `Scan parquet`, `WholeStageCodegen (3)`,
+    * `Exchange`), in the creation order of its RDDs, each once. */
+  def stageScopes(stage: StageInfo): Seq[String] =
+    stage.rddInfos.sortBy(_.id).flatMap(_.scope.map(_.name.trim)).distinct
 }

@@ -65,7 +65,19 @@ class HarnessSpec extends SparkSpec {
       .map(_.funcName).filter(_.startsWith("graft_"))
     assert(injected.sorted == registered.sorted)
     assert(injected.toSet == functions.Native.functions.map(_._1).toSet)
-    assert(injected.distinct.size == 8)
+    assert(injected.distinct.size == 10)
+    assert(Set("graft_shingles", "graft_shingle_md5").subsetOf(injected.toSet))
+  }
+
+  test("no interpreted n-gram lambda and no array_sort in src/main/scala") {
+    // graft_shingles / graft_shingle_md5 build word n-grams; the one
+    // index-sequence transform left over a token array is
+    // text_bigram_lm's struct bigram
+    val bigram = "transform(sequence(1, size(ts) - 1), i -> struct(ts[i - 1] AS w1, ts[i] AS w2))"
+    assert(occurrences("transform(sequence(1, size(") == Seq("Pipeline.scala" -> 1))
+    assert(occurrences(bigram) == Seq("Pipeline.scala" -> 1))
+    // its default comparator is an interpreted lambda; sort_array is compiled
+    assert(occurrences("array_sort(").isEmpty)
   }
 
   test("StageMetrics records the jobs, stages and tasks of one query") {
@@ -77,6 +89,8 @@ class HarnessSpec extends SparkSpec {
       assert(n == 7)
       assert(m.jobs >= 1)
       assert(m.stages.nonEmpty && m.stages.values.forall(_.wallMs >= 0))
+      // each stage is named by its operator scopes
+      assert(m.stages.values.exists(_.name.contains("Exchange")), m.stages.values.map(_.name))
       val t = m.total
       assert(t.tasks == m.stages.values.map(_.tasks).sum && t.tasks >= 4)
       assert(t.swBytes > 0 && t.srBytes > 0)

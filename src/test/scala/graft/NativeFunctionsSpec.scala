@@ -49,6 +49,76 @@ class NativeFunctionsSpec extends SparkSpec {
     assert(native.exceptAll(hof).count() == 0 && hof.exceptAll(native).count() == 0)
   }
 
+  /** The word n-gram lambda `graft_shingles(ts, n)` replaced (with
+    * `md5` around each gram for `graft_shingle_md5`), guarded for
+    * fewer than n tokens, where `sequence` would count down, and NULL
+    * on a NULL array. */
+  private def ngramLambda(n: Int, md5: Boolean): String = {
+    val gram = (0 until n).map(k => s"element_at(ts, i + $k)").mkString("concat(", ", ' ', ", ")")
+    val body = if (md5) s"md5($gram)" else gram
+    s"CASE WHEN size(ts) >= $n THEN transform(sequence(1, size(ts) - ${n - 1}), i -> $body) " +
+      "WHEN ts IS NOT NULL THEN array() END"
+  }
+
+  /** Rows of (k, ts) where `native` and `lambda` differ, either way. */
+  private def mismatches(rows: org.apache.spark.sql.DataFrame, native: String, lambda: String) = {
+    val a = rows.selectExpr("k", s"$native AS g")
+    val b = rows.selectExpr("k", s"$lambda AS g")
+    a.exceptAll(b).unionByName(b.exceptAll(a))
+  }
+
+  private val ngramWidths = Seq(3, 4, 5, 8)
+
+  test("graft_shingles and graft_shingle_md5 equal their lambda forms on the documents") {
+    val rows = Tables.spread(docs).selectExpr("doc_id AS k", "split(text, ' ') AS ts")
+    for (n <- ngramWidths; md5 <- Seq(false, true)) {
+      val fn = if (md5) "graft_shingle_md5" else "graft_shingles"
+      assert(mismatches(rows, s"$fn(ts, $n)", ngramLambda(n, md5)).isEmpty, s"$fn n=$n")
+    }
+  }
+
+  test("graft_shingles and graft_shingle_md5 equal their lambda forms on edge rows") {
+    Native.register(spark)
+    import spark.implicits._
+    val rows = Seq[(Int, Seq[String])](
+      1 -> "a b c d e f g h".split(" ").toSeq, // exactly 8 tokens
+      2 -> Seq("a", "b"), // fewer than n: no n-grams
+      3 -> Seq.empty,
+      4 -> "a  b c  d e f g h i".split(" ").toSeq, // empty tokens from double spaces
+      5 -> "naïve café 日本語 données über straße ñandú ok 🙂".split(" ").toSeq,
+      6 -> Seq("a", null, "c", "d", "e", "f", "g", "h", "i"), // NULL element: NULL n-grams
+      7 -> null).toDF("k", "ts")
+    for (n <- ngramWidths; md5 <- Seq(false, true)) {
+      val fn = if (md5) "graft_shingle_md5" else "graft_shingles"
+      assert(mismatches(rows, s"$fn(ts, $n)", ngramLambda(n, md5)).isEmpty, s"$fn n=$n")
+    }
+    val g = rows.selectExpr("k", "graft_shingles(ts, 3) AS g").collect()
+      .map(r => r.getInt(0) -> Option(r.getSeq[String](1))).toMap
+    assert(g(1).get == Seq("a b c", "b c d", "c d e", "d e f", "e f g", "f g h"))
+    assert(g(2).get.isEmpty && g(3).get.isEmpty && g(7).isEmpty)
+    assert(g(4).get.take(2) == Seq("a  b", " b c"))
+    assert(g(6).get.take(3) == Seq(null, null, "c d e"))
+  }
+
+  test("graft_minhash16 over the sorted distinct shingles equals it over the raw shingles") {
+    val sh = Tables.spread(docs)
+      .selectExpr("doc_id AS k", "split(text, ' ') AS ts").where("size(ts) >= 3")
+      .selectExpr("k", "graft_shingles(ts, 3) AS ts")
+    assert(mismatches(sh, "graft_minhash16(sort_array(array_distinct(ts)))", "graft_minhash16(ts)").isEmpty)
+  }
+
+  test("sort_array equals array_sort on the shingle arrays and the (df, tok) lists") {
+    val sh = Tables.spread(docs)
+      .selectExpr("doc_id", "split(text, ' ') AS ts").where("size(ts) >= 3")
+      .selectExpr("doc_id", "array_distinct(graft_shingles(ts, 3)) AS sh")
+    assert(mismatches(sh.withColumnRenamed("doc_id", "k"), "sort_array(sh)", "array_sort(sh)").isEmpty)
+    val toks = sh.select(col("doc_id"), explode(col("sh")).as("tok"))
+    val lists = toks.join(toks.groupBy("tok").agg(count(lit(1)).as("df")), "tok")
+      .groupBy(col("doc_id").as("k")).agg(collect_list(struct(col("df"), col("tok"))).as("l"))
+    assert(mismatches(lists, "sort_array(l)", "array_sort(l)").isEmpty)
+    assert(lists.count() == sh.count())
+  }
+
   test("graft_jaccard equals array_intersect/array_union on sorted sets") {
     val sh = docs
       .selectExpr("doc_id", "split(text, ' ') AS ts").where("size(ts) >= 3")
