@@ -20,7 +20,9 @@ import org.apache.spark.sql.types._
   *  - FULL: both. `_TRANSITIVE` variants check every prior version,
   *    non-transitive only the latest (checker.go:57-66).
   *  - Type promotions (avro/checker.go:304): int → long/float/double,
-  *    long → float/double, float → double, string ↔ binary.
+  *    long → float/double, float → double, string ↔ binary — the
+  *    branch-name promotion of the one field model,
+  *    [[AvroFields.promotes]].
   *  - Enum symbol compatibility (avro/checker.go:182-194): enums are
   *    string fields with metadata key `"enumSymbols"`; a writer
   *    symbol unknown to the reader breaks the read unless the reader
@@ -137,17 +139,6 @@ object SchemaCompat {
     case other => other.simpleString
   }
 
-  /** Promotion closure over branch names (avro/checker.go:304): the
-    * writer types a reader branch can decode.
-    */
-  private val nameAccepts: Map[String, Set[String]] = Map(
-    "bigint" -> Set("bigint", "int"),
-    "float" -> Set("float", "bigint", "int"),
-    "double" -> Set("double", "float", "bigint", "int"),
-    "string" -> Set("string", "bytes"),
-    "bytes" -> Set("bytes", "string"))
-  private def acceptsName(b: String): Set[String] = nameAccepts.getOrElse(b, Set(b))
-
   /** Record rule (avro/checker.go:102): every reader field must be
     * resolvable from the writer, be nullable, or carry a default.
     */
@@ -180,8 +171,7 @@ object SchemaCompat {
             case (ru, wu) =>
               val rb = ru.map(_.toSeq).getOrElse(Seq(typeName(rf.dataType)))
               val wb = wu.map(_.toSeq).getOrElse(Seq(typeName(wf.dataType)))
-              val acc = rb.flatMap(acceptsName).toSet
-              val badBranches = wb.filterNot(acc)
+              val badBranches = wb.filterNot(w => rb.exists(AvroFields.promotes(w, _)))
               if (badBranches.isEmpty) Compatible
               else incompatible(s"$fieldPath: writer branch(es) [${badBranches.mkString(",")}] " +
                 s"not readable by any reader branch of [${rb.mkString(",")}]")
@@ -228,20 +218,9 @@ object SchemaCompat {
         canReadType(r.keyType, w.keyType, s"$path{k}")
           .merge(canReadType(r.valueType, w.valueType, s"$path{}"))
       case (r, w) if r == w => Compatible
-      case (r, w) if promotable(writer = w, reader = r) => Compatible
+      case (r, w) if AvroFields.promotes(typeName(w), typeName(r)) => Compatible
       case (r, w) =>
         incompatible(s"$path: type mismatch: reader ${r.simpleString}, writer ${w.simpleString} (not promotable)")
-    }
-
-  /** Promotion rules (avro/checker.go:304). */
-  private def promotable(writer: DataType, reader: DataType): Boolean =
-    (writer, reader) match {
-      case (IntegerType, LongType | FloatType | DoubleType) => true
-      case (LongType, FloatType | DoubleType) => true
-      case (FloatType, DoubleType) => true
-      case (StringType, BinaryType) => true
-      case (BinaryType, StringType) => true
-      case _ => false
     }
 
   private def pathOrRoot(path: String): String = if (path.isEmpty) "root" else path

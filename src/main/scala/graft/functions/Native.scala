@@ -1,8 +1,11 @@
 package graft.functions
 
+import graft.compat.AvroFields
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, ImplicitCastInputTypes, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.Platform
@@ -20,6 +23,13 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - `graft_jaccard` / `graft_cosine`: pair scores;
   *  - `graft_json_paths` / `graft_avro_pcf` / `graft_json_canon`:
   *    schema-document walks;
+  *  - `graft_avro_slots(k)` / `graft_avro_profile(k)`: the registry's
+  *    Avro field model ([[AvroFields]]) as the positional slot structs
+  *    or their packed profiles, so every compat query shares one
+  *    compiled model instead of inlining its own expression tree;
+  *  - `graft_srp_buckets(e, planes)`: sign-random-projection bucket
+  *    ids over the hyperplane matrix built once from
+  *    [[graft.operators.Similarity.weight]];
   *  - `graft_topk` ([[TopKAgg]]): the bounded top-k aggregate.
   *
   * Semantics are bit-identical to the SQL/HOF formulations they
@@ -428,6 +438,62 @@ object Native {
     }
   }
 
+  /** The `flds_all` element type: one [[AvroFields.Slot]]. */
+  val slotType: StructType = StructType.fromDDL(
+    "fname STRING NOT NULL, ftype STRING NOT NULL, fnull BOOLEAN, fdefault STRING, " +
+      "fsyms STRING, funion STRING, fmask INT NOT NULL, falias STRING, present BOOLEAN NOT NULL")
+
+  private val utf8s = new java.util.concurrent.ConcurrentHashMap[String, UTF8String]()
+
+  /** The model's strings are a small literal vocabulary: encode each once. */
+  private def utf8(s: String): UTF8String = utf8s.computeIfAbsent(s, UTF8String.fromString(_))
+  private def utf8(s: Option[String]): UTF8String = s.map(utf8).orNull
+
+  /** The [[AvroFields.slots]] of payload `k` (unknown when `isNull`)
+    * as `slotType` rows, or with `profile` set as their packed
+    * [[AvroFields.profile]] ints.
+    */
+  def avroSlots(isNull: Boolean, k: Long, profile: Boolean): ArrayData = {
+    val slots = AvroFields.slots(if (isNull) None else Some(k))
+    if (profile) new GenericArrayData(slots.map(AvroFields.profile).toArray)
+    else new GenericArrayData(slots.map { f =>
+      InternalRow(utf8(f.fname), utf8(f.ftype),
+        f.fnull.getOrElse(null), utf8(f.fdefault), utf8(f.fsyms), utf8(f.funion), f.fmask,
+        utf8(f.falias), f.present)
+    }.toArray[Any])
+  }
+
+  /** SRP bucket ids of one vector, one per hash table: bit p (p <
+    * `planes`) of table t is set when the dot product with hyperplane
+    * t * stripe + p of [[graft.operators.Similarity.srpWeights]],
+    * summed left to right, is >= 0 in SQL order (NaN is greatest). As
+    * in the `aggregate(zip_with(...))` form, a NULL vector or element,
+    * or a length other than the planes', makes every dot NULL: no bit.
+    */
+  def srpBuckets(e: ArrayData, planes: Int): ArrayData = {
+    val w = graft.operators.Similarity.srpWeights
+    val stripe = graft.operators.Similarity.MaxPlanesPerTable
+    val out = new Array[Long](w.length / stripe)
+    val dims = w(0).length
+    if (e != null && e.numElements() == dims && !(0 until dims).exists(e.isNullAt)) {
+      val x = e.toDoubleArray()
+      var t = 0
+      while (t < out.length) {
+        var p = 0
+        while (p < planes) {
+          val row = w(t * stripe + p)
+          var dot = 0.0
+          var d = 0
+          while (d < dims) { dot += row(d) * x(d); d += 1 }
+          if (dot >= 0 || java.lang.Double.isNaN(dot)) out(t) |= 1L << p
+          p += 1
+        }
+        t += 1
+      }
+    }
+    new GenericArrayData(out)
+  }
+
   /** Every native SQL function as (name, implementing class, builder):
     * the one table [[register]] and [[graft.GraftExtensions]] iterate. */
   val functions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
@@ -440,6 +506,12 @@ object Native {
     ("graft_json_paths", classOf[JsonPathsExpr], e => JsonPathsExpr(e.head)),
     ("graft_avro_pcf", classOf[AvroPcfExpr], e => AvroPcfExpr(e.head)),
     ("graft_json_canon", classOf[JsonCanonExpr], e => JsonCanonExpr(e.head)),
+    ("graft_avro_slots", classOf[AvroSlotsExpr], e => AvroSlotsExpr(e.head)),
+    ("graft_avro_profile", classOf[AvroSlotsExpr], e => AvroSlotsExpr(e.head, profile = true)),
+    ("graft_srp_buckets", classOf[SrpBucketsExpr], e => {
+      require(e(1).foldable, "graft_srp_buckets: the plane count must be a constant")
+      SrpBucketsExpr(e(0), e(1).eval().asInstanceOf[Int])
+    }),
     ("graft_topk", classOf[TopKAgg], e => TopKAgg(e(0), e(1), e(2))))
 
   /** Register the functions on a session (idempotent). */
@@ -563,4 +635,58 @@ case class JsonPathsExpr(child: Expression) extends UnaryExpression with Expects
   override protected def withNewChildInternal(newChild: Expression): JsonPathsExpr =
     copy(child = newChild)
   override def prettyName: String = "graft_json_paths"
+}
+
+/** `graft_avro_slots(bigint) -> array<struct<fname, ftype, fnull,
+  * fdefault, fsyms, funion, fmask, falias, present>>`, or with
+  * `profile` set `graft_avro_profile(bigint) -> array<int>`: the
+  * registry field model of payload `k`. A NULL `k` has slots too
+  * (every residue takes its ELSE branch), so the result is never NULL.
+  */
+case class AvroSlotsExpr(child: Expression, profile: Boolean = false)
+    extends UnaryExpression with ImplicitCastInputTypes {
+  override def inputTypes: Seq[DataType] = Seq(LongType)
+  override def nullable: Boolean = false
+  override def dataType: DataType =
+    if (profile) ArrayType(IntegerType, containsNull = false)
+    else ArrayType(Native.slotType, containsNull = false)
+  override def eval(input: InternalRow): Any = {
+    val k = child.eval(input)
+    Native.avroSlots(k == null, if (k == null) 0L else k.asInstanceOf[Long], profile)
+  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val k = child.genCode(ctx)
+    ev.copy(code = code"""
+      |${k.code}
+      |${CodeGenerator.javaType(dataType)} ${ev.value} =
+      |  graft.functions.Native.avroSlots(${k.isNull}, ${k.value}, $profile);""".stripMargin,
+      isNull = FalseLiteral)
+  }
+  override protected def withNewChildInternal(newChild: Expression): AvroSlotsExpr =
+    copy(child = newChild)
+  override def prettyName: String = if (profile) "graft_avro_profile" else "graft_avro_slots"
+}
+
+/** `graft_srp_buckets(array<double>, int) -> array<bigint>`: the SRP
+  * bucket id of each hash table at a constant `planes` per table. A
+  * NULL vector has all-zero ids.
+  */
+case class SrpBucketsExpr(child: Expression, planes: Int)
+    extends UnaryExpression with ImplicitCastInputTypes {
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType))
+  override def nullable: Boolean = false
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def eval(input: InternalRow): Any =
+    Native.srpBuckets(child.eval(input).asInstanceOf[ArrayData], planes)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val e = child.genCode(ctx)
+    ev.copy(code = code"""
+      |${e.code}
+      |${CodeGenerator.javaType(dataType)} ${ev.value} =
+      |  graft.functions.Native.srpBuckets(${e.isNull} ? null : ${e.value}, $planes);""".stripMargin,
+      isNull = FalseLiteral)
+  }
+  override protected def withNewChildInternal(newChild: Expression): SrpBucketsExpr =
+    copy(child = newChild)
+  override def prettyName: String = "graft_srp_buckets"
 }

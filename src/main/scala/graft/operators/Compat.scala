@@ -1,104 +1,45 @@
 package graft.operators
 
 import graft.Tables
-import graft.compat.SchemaCompat
+import graft.compat.{AvroFields, SchemaCompat}
+import graft.compat.AvroFields._
 import graft.compat.SchemaCompat._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Compatibility checking exposed as a query: a fixed battery of
-  * schema-evolution cases run through [[SchemaCompat]] (the Spark
-  * StructType re-expression of internal/compatibility/). The oracle
-  * is the expected verdict table — semantics derived from the
-  * reference's checker rules, hand-traced per case.
+/** Compatibility checking as queries: a battery of schema-evolution
+  * cases run through [[SchemaCompat]] (oracle: the hand-traced verdict
+  * table), and corpus-wide scans over the registry's version history.
+  * The scans read the one Avro field model, [[AvroFields]], through its
+  * kernels `graft_avro_slots(k)` ([[fieldArrays]]) and
+  * `graft_avro_profile(k)` ([[slotProfiles]]), so every compat query
+  * shares one compiled model; the per-query rules stay declarative.
   */
 object Compat {
-
-  // -------------------------------------------------------------------
-  // Avro type-resolution core: promotion matrix + union branch sets
-  // -------------------------------------------------------------------
 
   /** Branch-set normalization (the union's branches, or the scalar
     * type as a singleton) lets ONE predicate cover checkUnion
     * (avro/checker.go:224), checkReaderUnion (:247), checkWriterUnion
     * (:263) and plain scalar resolution (:54 + :297): in every case
     * the rule is "every writer branch must be readable by some reader
-    * branch". The branch sets live as BITMASKS: array higher-order
-    * functions are interpreted per element and fall out of
-    * whole-stage codegen; on the full-corpus scans that cost ~3×
-    * (sf0.1 compat_gate 29.9s array-HOF vs 9-10s masked). With one
-    * bit per primitive type the whole resolution algebra is integer
-    * ops: set membership = AND, set union across versions = a single
-    * bit_or window aggregate. The oracles spell the same algebra over
-    * real branch lists ([[sqlBranches]]/[[sqlAccepts]]/
-    * [[sqlTypeBreak]]) — parity proves the two formulations equal.
+    * branch". The branch sets live as BITMASKS ([[AvroFields
+    * .typeBits]]): array higher-order functions are interpreted per
+    * element and fall out of whole-stage codegen, while a mask makes
+    * the whole resolution algebra integer ops. The oracles spell the
+    * same algebra over real branch lists ([[sqlBranches]]/
+    * [[sqlAccepts]]/[[sqlTypeBreak]]); parity proves the two equal.
     */
-  private val typeBits: Seq[(String, Int)] = Seq(
-    "int" -> 1, "bigint" -> 2, "float" -> 4, "double" -> 8,
-    "string" -> 16, "bytes" -> 32, "enum" -> 64, "null" -> 128,
-    // Avro fixed, one bit PER SIZE (checkFixed avro/checker.go:280:
-    // size mismatch breaks, symmetrically, no promotion) — distinct
-    // type bits make the size rule fall out of the mask algebra with
-    // no extra code. The model's name is constant, so the :280 name
-    // rule has no data to fire on (cited, not modeled).
-    "fixed8" -> 256, "fixed16" -> 512,
-    // `ref`'s type name when no branch list applies (a NULL k falls
-    // through every residue): the oracle's [[sqlBranches]] reads it as
-    // a scalar type named 'union' that only itself accepts.
-    "union" -> 1024)
+  private val acceptTable: Array[Int] = Array.tabulate(64)(AvroFields.accepts)
 
-  /** OR of every type bit — the complement space for the transitive
-    * scans' cannot-decode accounting.
-    */
-  private val allTypeBits: Int = typeBits.map(_._2).reduce(_ | _)
-
-  /** Width of a branch mask in bits. */
-  private val typeWidth: Int = typeBits.size
-
-  /** Scala-side twins of the mask algebra, for candidate schemas
-    * whose branch sets are compile-time constants.
-    */
-  private[graft] def maskInt(ftype: String, funion: Option[String]): Int = {
-    val bits = typeBits.toMap
-    funion.map(_.split(',').map(bits).sum).getOrElse(bits(ftype))
-  }
-  private[graft] def acceptsMaskInt(m: Int): Int = {
-    var a = m
-    if ((m & 2) != 0) a |= 1
-    if ((m & 4) != 0) a |= 3
-    if ((m & 8) != 0) a |= 7
-    if ((m & 16) != 0) a |= 32
-    if ((m & 32) != 0) a |= 16
-    a
-  }
-
-  /** Reader-side promotion closure (avro/checker.go:304 canPromote)
-    * over a branch mask: int→long/float/double, long→float/double,
-    * float→double, string↔bytes (`bigint` is the model's spelling of
-    * Avro long). Each reader branch contributes the writer types it
-    * can decode. Branch-free closed form: the numeric ladder
-    * int<long<float<double occupies bits 0-3 in promotion order, so
-    * "every type below my highest branch" is the right-shift smear
-    * n|n>>1|n>>2|n>>3; string(16)↔bytes(32) promote symmetrically, so
-    * either bit turns both on. Branchless matters: the transitive
-    * scans inline this per slot, and CASE WHEN chains there pushed
-    * the generated method past HotSpot's 8000-byte JIT ceiling —
-    * the whole stage ran as interpreted bytecode (measured 5x).
-    */
-  private[graft] def acceptsMaskOf(mask: Column): Column = {
-    val num = mask.bitwiseAND(lit(15))
-    val st = mask.bitwiseAND(lit(48))
-    mask
-      .bitwiseOR(shiftright(num, 1)).bitwiseOR(shiftright(num, 2))
-      .bitwiseOR(shiftright(num, 3))
-      .bitwiseOR(shiftleft(st, 1).bitwiseOR(shiftright(st, 1)).bitwiseAND(lit(48)))
-  }
+  /** [[AvroFields.accepts]] on a mask column: only bits 0-5 promote. */
+  private[graft] def acceptsOf(mask: Column): Column =
+    mask.bitwiseOR(element_at(typedLit(acceptTable), mask.bitwiseAND(lit(63)) + 1))
 
   /** DuckDB spellings of the mask algebra over real branch lists
-    * (the oracle side; the Spark side uses model-baked fmask ints +
-    * [[acceptsMaskOf]] — "some writer branch is unreadable by every
+    * (the oracle side; the Spark side uses the model's fmask ints +
+    * [[acceptsOf]] — "some writer branch is unreadable by every
     * reader branch" spelled NOT-free as (w AND acc) ≠ w).
     */
   private[operators] def sqlBranches(t: String, u: String): String =
@@ -264,15 +205,6 @@ object Compat {
     }.toDF("case_id", "description", "mode", "compatible", "n_messages")
   }
 
-  /** Every struct member of the field model. */
-  private[graft] val allMembers: Seq[String] = Seq(
-    "fname", "ftype", "fnull", "fdefault", "fsyms", "funion", "fmask",
-    "falias", "present")
-
-  /** The members the latest-version intelligence tools read. */
-  private[graft] val latestMembers: Seq[String] = Seq(
-    "fname", "ftype", "fnull", "fdefault", "fsyms", "present")
-
   /** The version order of a subject's registrations: (ts, event_id).
     * Every window over it shares one sort, that of the row_number
     * window that defines `version`.
@@ -280,115 +212,11 @@ object Compat {
   private val versionOrder =
     Window.partitionBy(col("subject")).orderBy(col("ts"), col("event_id"))
 
-  /** The slot model: each slot's members as expressions over `k`, in
-    * `flds_all` order. [[fieldArrays]] builds the structs from it; the
-    * packed profile ([[ppSlot]]) reads the expressions directly, so
-    * Catalyst folds each slot's constant members away instead of
-    * reading them back out of a struct.
+  /** (subject, ts, event_id, k, version): every events row is a
+    * registration for its subject (user_id), in version order.
     */
-  private val slotModel: Seq[Map[String, Column]] = {
-    val nullStr = lit(null).cast("string")
-    // fmask: the field's branch-set bitmask ([[typeBits]]), baked in
-    // as an integer when-chain at model-build time — every residue's
-    // branch set is statically known, so the scans' type algebra
-    // never touches an array or a string at probe time. `present` is
-    // never NULL: a NULL k leaves a conditional field ABSENT, as the
-    // oracle's `WHERE k % 3 = 0` drops it, so every scan sees absence.
-    def f(name: String, ftype: Column, fnull: Column, present: Column,
-          fmask: Column, fdefault: Column = nullStr, fsyms: Column = nullStr,
-          funion: Column = nullStr, fname: Column = null,
-          falias: Column = nullStr): Map[String, Column] =
-      Map("fname" -> Option(fname).getOrElse(lit(name)),
-        "ftype" -> ftype, "fnull" -> fnull, "fdefault" -> fdefault,
-        "fsyms" -> fsyms, "funion" -> funion, "fmask" -> fmask,
-        "falias" -> falias, "present" -> coalesce(present, lit(false)))
-    Seq(
-      f("id", lit("bigint"), lit(false), lit(true), lit(2)),
-      f("name", lit("string"), col("k") % lit(2) === 0, lit(true), lit(16)),
-      f("email", lit("string"), lit(true), col("k") % lit(3) === 0, lit(16)),
-      f("score", when(col("k") % lit(4) < 2, "int").otherwise("bigint"), lit(false), lit(true),
-        when(col("k") % lit(4) < 2, 1).otherwise(2)),
-      f("status", lit("enum"), lit(false), col("k") % lit(3) < 2, lit(64),
-        when(col("k") % lit(5) < 3, "A"),
-        when(col("k") % lit(2) === 0, "A,B").otherwise("A,B,C")),
-      f("ratio",
-        when(col("k") % lit(9) < 2, "int").when(col("k") % lit(9) < 4, "bigint")
-          .when(col("k") % lit(9) < 6, "float").otherwise("double"),
-        lit(true), lit(true),
-        when(col("k") % lit(9) < 2, 1).when(col("k") % lit(9) < 4, 2)
-          .when(col("k") % lit(9) < 6, 4).otherwise(8)),
-      f("payload", when(col("k") % lit(13) < 7, "string").otherwise("bytes"),
-        lit(true), lit(true),
-        when(col("k") % lit(13) < 7, 16).otherwise(32)),
-      f("ref",
-        when(col("k") % lit(6) === 0, "int")
-          .when(col("k") % lit(6) === 1, "string").otherwise("union"),
-        lit(true), lit(true),
-        when(col("k") % lit(6) === 0, 1).when(col("k") % lit(6) === 1, 16)
-          .when(col("k") % lit(6) === 2, 146).when(col("k") % lit(6) === 3, 18)
-          .when(col("k") % lit(6) === 4 || col("k") % lit(6) === 5, 144)
-          .otherwise(1024),
-        nullStr, nullStr,
-        when(col("k") % lit(6) === 4 || col("k") % lit(6) === 5, "null,string")
-          .when(col("k") % lit(6) === 2, "bigint,null,string")
-          .when(col("k") % lit(6) === 3, "bigint,string")),
-      f("token", when(col("k") % lit(23) < 12, "fixed8").otherwise("fixed16"),
-        lit(true), lit(true),
-        when(col("k") % lit(23) < 12, 256).otherwise(512)),
-      // the ALIAS slot (avro/checker.go:112-:125): its NAME flips
-      // nick↔nickname with k, and it sometimes declares the other
-      // name as an alias — a rename is rescued iff either side
-      // does. Required and defaultless so an unrescued rename hits
-      // the missing-reader-field rule. Type constant: alias
-      // matching and type resolution stay orthogonal in the model.
-      f("nick", lit("string"), lit(false), lit(true), lit(16),
-        fname = when(col("k") % lit(29) < 15, "nick").otherwise("nickname"),
-        falias = when(col("k") % lit(31) < 16,
-          when(col("k") % lit(29) < 15, "nickname").otherwise("nick")))
-    )
-  }
-
-  /** Shared synthetic schema-version field model: every events row is
-    * a registration for its subject (user_id); the field set derives
-    * deterministically from the payload `k`.
-    * Output: (subject, version, flds array, w_flds = previous
-    * version's array via lag — NULL for version 1). ONE shuffle (the
-    * subject window); everything downstream of it is row-local.
-    * Consumed by compat_scan, reg_diff_fields, and the latest-version
-    * intelligence operators.
-    *
-    * Each field carries the full Avro-checker dimension set
-    * (avro/checker.go): name, type, nullability, default value
-    * (fdefault — NULL = no default, checker.go:129's rescue
-    * condition), for enums the symbol list (fsyms, comma-joined —
-    * checker.go:182's symbol-compat input), and for unions the
-    * branch set (funion, comma-joined — checker.go:224/:247/:263's
-    * input; NULL = scalar). `status` is the enum field: required,
-    * present for 2/3 of registrations, default 'A' for k%5<3, symbol
-    * vocabulary flipping between {A,B} and {A,B,C} with k's parity.
-    * `ratio` walks the full numeric promotion matrix
-    * (int→bigint→float→double with k%9 — legal promotions and
-    * illegal narrowings both occur between versions); `payload`
-    * flips string↔bytes (promotable BOTH ways — never a violation,
-    * the matrix's symmetric case); `ref` walks union shapes — scalar
-    * string, scalar int, ["null","string"], ["bigint","null",
-    * "string"], ["bigint","string"] — so the T→["null",T] evolution,
-    * its breaking reverse, union widening/narrowing, and
-    * promotion-into-a-union-branch (int writer vs bigint branch) all
-    * fire both ways in real data.
-    *
-    * Member-pruned build: only the listed struct members are
-    * constructed, and the lag window (w_all/w_flds) is built only
-    * when asked for. Catalyst prunes unused TOP-LEVEL columns, but
-    * members of an array-of-struct built behind a higher-order
-    * filter + explode are constructed whether read or not, so the
-    * pruning has to happen at model build. `present` is always
-    * included (the set views filter on it).
-    */
-  private[graft] def fieldArrays(s: SparkSession, dir: String,
-                                 members: Seq[String] = allMembers,
-                                 withLag: Boolean = true): DataFrame = {
-    val keep = members.toSet + "present"
+  private def versions(s: SparkSession, dir: String): DataFrame = {
+    graft.functions.Native.register(s)
     // spread on the window key: on a single-row-group events file
     // the JSON parse serialized on the one scan task
     // (stage profile: a multi-second 1-task stage under every consumer
@@ -396,35 +224,32 @@ object Compat {
     // version window's exchange — same exchange count, parse moved to
     // the parallel side, at the price of `props` (not only `k`)
     // crossing that shuffle.
-    val ev = Tables.spread(
+    Tables.spread(
       Tables.events(s, dir).select(
         col("user_id").as("subject"), col("ts"), col("event_id"), col("props")),
       col("subject"))
       .select(col("subject"), col("ts"), col("event_id"),
         get_json_object(col("props"), "$.k").cast("bigint").as("k"))
-    val base = ev
       .withColumn("version", row_number().over(versionOrder))
-      .withColumn("flds_all", array(slotModel.map(m =>
-        struct(allMembers.filter(keep).map(n => m(n).as(n)): _*)): _*))
+  }
+
+  /** [[versions]] plus `flds_all`, the ten positional slot structs
+    * of [[AvroFields.slots]], `flds` (the present ones) and, with
+    * `withLag`, the previous version's `w_all` / `w_flds` (NULL for
+    * version 1). ONE shuffle, the subject window. The scans pair the
+    * positional arrays by element_at (codegen'd); the set views serve
+    * the diff and latest-version tools.
+    */
+  private[graft] def fieldArrays(s: SparkSession, dir: String,
+                                 withLag: Boolean = true): DataFrame = {
+    val base = versions(s, dir)
+      .withColumn("flds_all", expr("graft_avro_slots(k)"))
       .withColumn("flds", filter(col("flds_all"), fld => fld("present")))
-    // present-only views for consumers that think in field SETS
-    // (diffs, latest-version tools); the scans use the positional
-    // nSlots-wide arrays directly — element_at is codegen'd, a
-    // filter-by-fname probe is an interpreted HOF.
     if (!withLag) base
     else base
       .withColumn("w_all", lag(col("flds_all"), 1).over(versionOrder))
       .withColumn("w_flds", filter(col("w_all"), fld => fld("present")))
   }
-
-  /** Number of slots in the positional field-model array. The named
-    * constants below pin the slots whose INDEX is load-bearing
-    * (anything reading `flds_all(i)` positionally). A spec asserts
-    * slot names against these ([[graft.CompatSpec]]).
-    */
-  private[graft] val nSlots = slotModel.size
-  private[graft] val refSlot = 7
-  private[graft] val nickSlot = 9
 
   /** DuckDB mirror of [[fieldArrays]]' relational (subject, version,
     * fname, ftype, fnull, fdefault, fsyms) view — prepend inside
@@ -515,8 +340,8 @@ object Compat {
       (w("fname") === r("fname") ||
         r("falias") <=> w("fname") || w("falias") <=> r("fname"))
     val typeBreak = matched &&
-      w("fmask").bitwiseAND(acceptsMaskOf(r("fmask"))) =!= w("fmask")
-    val narrowing = r("fmask").bitwiseAND(acceptsMaskOf(w("fmask"))) === r("fmask")
+      w("fmask").bitwiseAND(acceptsOf(r("fmask"))) =!= w("fmask")
+    val narrowing = r("fmask").bitwiseAND(acceptsOf(w("fmask"))) === r("fmask")
     Seq(
       "missing_default" -> (!matched && !r("fnull") && r("fdefault").isNull),
       "type_narrowed" -> (typeBreak && narrowing),
@@ -664,21 +489,11 @@ object Compat {
     stepVerdict(slotPairs(s, dir, "w_all", "flds_all"), "n_reader_fields", "forward_ok")
 
   // ---------------------------------------------------------------
-  // Packed slot profile, shared by the two transitive scans and
-  // [[compatGate]]: one int per slot carrying everything any verdict
-  // tests: the branch mask, then its promotion-closure accept mask
-  // (precomputed once — acceptsMaskOf references its argument ~6x, so
-  // inlining it per USE site was a major term in the expression
-  // blowup), [[typeWidth]] bits each, then one bit per model fact —
-  // the ten facts fill the int's remaining bits. `fnull` can be
-  // NULL (the `name` slot on a NULL k), so it packs as PAIRED bits
-  // (REQ/NUL) where a NULL sets neither: every clause reads the bit
-  // whose set-state implies the three-valued conjunct was definitely
-  // true. `present` is never NULL ([[fieldArrays]]), so absence is
-  // simply an unset PRES bit.
-  //
-  // The transitive rule sets compile to a TEST-MASK algebra over this
-  // profile, evaluated per slot over ONE subject window on int arrays:
+  // The two transitive scans and [[compatGate]] read the packed slot
+  // profile ([[AvroFields.profile]]: one int per slot, the branch and
+  // accept masks plus one bit per model fact), and their rule sets
+  // compile to a TEST-MASK algebra over it, evaluated per slot over ONE
+  // subject window on int arrays:
   //   hb : the bits this version contributes to the running history
   //        (branch mask + existence [[fact]] bits; one marks ABSENCE), and
   //   tm : the bits of accumulated history that would break THIS
@@ -691,38 +506,12 @@ object Compat {
   // ten slots inlined in one projection), the same algebra made a
   // generated method HotSpot could not compile (C2 "out of nodes
   // during split") and ran interpreted: 9.6–10.6 task CPU-s per scan
-  // at sf0.1 on 4 cores, against 0.84–0.99 on the packed profile
-  // built from the slot model's expressions ([[slotModel]]). Exploded per
-  // slot it needed a second (subject, pos) shuffle that AQE coalesced
-  // to one task (7.5→15.5 s).
+  // at sf0.1 on 4 cores, against 0.84–0.99 on the packed profile.
+  // Exploded per slot it needed a second (subject, pos) shuffle that
+  // AQE coalesced to one task (7.5→15.5 s).
   // ---------------------------------------------------------------
-  private val ppPres = 1 << (2 * typeWidth) // present
-  private val ppReq = ppPres << 1 // fnull definitely false (required)
-  private val ppNul = ppPres << 2 // fnull definitely true (nullable)
-  private val ppDef = ppPres << 3 // fdefault present
-  private val ppEnum = ppPres << 4 // ftype == enum
-  private val ppWide = ppPres << 5 // fsyms == A,B,C
-  private val ppNarrow = ppPres << 6 // fsyms == A,B
-  private val ppNick = ppPres << 7 // fname == nick
-  private val ppNickname = ppPres << 8 // fname == nickname
-  private val ppAlias = ppPres << 9 // falias declared
-
   private def bitIf(c: Column, bit: Int): Column =
     when(c, lit(bit)).otherwise(lit(0))
-
-  private def ppSlot(f: Map[String, Column]): Column =
-    f("fmask")
-      .bitwiseOR(shiftleft(acceptsMaskOf(f("fmask")), typeWidth))
-      .bitwiseOR(bitIf(f("present"), ppPres))
-      .bitwiseOR(bitIf(!f("fnull"), ppReq))
-      .bitwiseOR(bitIf(f("fnull"), ppNul))
-      .bitwiseOR(bitIf(f("fdefault").isNotNull, ppDef))
-      .bitwiseOR(bitIf(f("ftype") === "enum", ppEnum))
-      .bitwiseOR(bitIf(f("fsyms") === "A,B,C", ppWide))
-      .bitwiseOR(bitIf(f("fsyms") === "A,B", ppNarrow))
-      .bitwiseOR(bitIf(f("fname") === "nick", ppNick))
-      .bitwiseOR(bitIf(f("fname") === "nickname", ppNickname))
-      .bitwiseOR(bitIf(f("falias").isNotNull, ppAlias))
 
   private def ppBit(p: Column, bit: Int): Column =
     p.bitwiseAND(lit(bit)) =!= 0
@@ -736,12 +525,12 @@ object Compat {
   private def fact(i: Int): Int = (allTypeBits + 1) << i
 
   /** (subject, version, ts, event_id, pp): each version's packed slot
-    * profiles, one int per slot.
+    * profiles, `graft_avro_profile(k)`.
     */
   private def slotProfiles(s: SparkSession, dir: String): DataFrame =
-    fieldArrays(s, dir, Nil, withLag = false)
+    versions(s, dir)
       .select(col("subject"), col("version"), col("ts"), col("event_id"),
-        array(slotModel.map(ppSlot): _*).as("pp"))
+        expr("graft_avro_profile(k)").as("pp"))
 
   /** Per slot, the bit_or of `hb` over every EARLIER version (0 for
     * version 1). `version` is strictly increasing within the subject,
@@ -765,12 +554,12 @@ object Compat {
     * version lacked the slot").
     */
   private def ppBtHb(p: Column): Column =
-    when(ppBit(p, ppPres),
+    when(ppBit(p, Pres),
       ppMask(p)
-        .bitwiseOR(bitIf(ppBit(p, ppNul), fact(0)))
-        .bitwiseOR(bitIf(ppBit(p, ppWide), fact(1)))
-        .bitwiseOR(bitIf(ppBit(p, ppNick) && !ppBit(p, ppAlias), fact(3)))
-        .bitwiseOR(bitIf(ppBit(p, ppNickname) && !ppBit(p, ppAlias), fact(4))))
+        .bitwiseOR(bitIf(ppBit(p, Nul), fact(0)))
+        .bitwiseOR(bitIf(ppBit(p, Wide), fact(1)))
+        .bitwiseOR(bitIf(ppBit(p, Nick) && !ppBit(p, Alias), fact(3)))
+        .bitwiseOR(bitIf(ppBit(p, Nickname) && !ppBit(p, Alias), fact(4))))
       .otherwise(lit(fact(5)))
 
   /** BACKWARD_TRANSITIVE tm, READER role: which history bits break
@@ -787,15 +576,15 @@ object Compat {
     *    two-name model the only unreachable history (checker.go:112).
     */
   private def ppBtTm(p: Column): Column = {
-    val reqNoDef = ppBit(p, ppReq) && !ppBit(p, ppDef)
-    when(ppBit(p, ppPres),
+    val reqNoDef = ppBit(p, Req) && !ppBit(p, Def)
+    when(ppBit(p, Pres),
       (lit(allTypeBits) - ppAccepts(p))
-        .bitwiseOR(bitIf(ppBit(p, ppReq), fact(0)))
-        .bitwiseOR(bitIf(ppBit(p, ppEnum) && !ppBit(p, ppDef) &&
-          ppBit(p, ppNarrow), fact(1)))
+        .bitwiseOR(bitIf(ppBit(p, Req), fact(0)))
+        .bitwiseOR(bitIf(ppBit(p, IsEnum) && !ppBit(p, Def) &&
+          ppBit(p, Narrow), fact(1)))
         .bitwiseOR(bitIf(reqNoDef, fact(5)))
-        .bitwiseOR(bitIf(ppBit(p, ppNick) && !ppBit(p, ppAlias) && reqNoDef, fact(4)))
-        .bitwiseOR(bitIf(ppBit(p, ppNickname) && !ppBit(p, ppAlias) && reqNoDef, fact(3))))
+        .bitwiseOR(bitIf(ppBit(p, Nick) && !ppBit(p, Alias) && reqNoDef, fact(4)))
+        .bitwiseOR(bitIf(ppBit(p, Nickname) && !ppBit(p, Alias) && reqNoDef, fact(3))))
       .otherwise(lit(0))
   }
 
@@ -807,14 +596,14 @@ object Compat {
     * per-subject field vocabulary is needed.
     */
   private def ppFtHb(p: Column): Column = {
-    val reqNoDef = ppBit(p, ppReq) && !ppBit(p, ppDef)
-    when(ppBit(p, ppPres),
+    val reqNoDef = ppBit(p, Req) && !ppBit(p, Def)
+    when(ppBit(p, Pres),
       (lit(allTypeBits) - ppAccepts(p))
         .bitwiseOR(bitIf(reqNoDef, fact(0)))
-        .bitwiseOR(bitIf(ppBit(p, ppReq), fact(1)))
-        .bitwiseOR(bitIf(ppBit(p, ppNarrow) && !ppBit(p, ppDef), fact(2)))
-        .bitwiseOR(bitIf(ppBit(p, ppNick) && !ppBit(p, ppAlias) && reqNoDef, fact(3)))
-        .bitwiseOR(bitIf(ppBit(p, ppNickname) && !ppBit(p, ppAlias) && reqNoDef, fact(4))))
+        .bitwiseOR(bitIf(ppBit(p, Req), fact(1)))
+        .bitwiseOR(bitIf(ppBit(p, Narrow) && !ppBit(p, Def), fact(2)))
+        .bitwiseOR(bitIf(ppBit(p, Nick) && !ppBit(p, Alias) && reqNoDef, fact(3)))
+        .bitwiseOR(bitIf(ppBit(p, Nickname) && !ppBit(p, Alias) && reqNoDef, fact(4))))
       .otherwise(lit(0))
   }
 
@@ -827,12 +616,12 @@ object Compat {
     * while some required defaultless reader still expects it (0).
     */
   private def ppFtTm(p: Column): Column =
-    when(ppBit(p, ppPres),
+    when(ppBit(p, Pres),
       ppMask(p)
-        .bitwiseOR(bitIf(ppBit(p, ppNul), fact(1)))
-        .bitwiseOR(bitIf(ppBit(p, ppWide), fact(2)))
-        .bitwiseOR(bitIf(ppBit(p, ppNick) && !ppBit(p, ppAlias), fact(4)))
-        .bitwiseOR(bitIf(ppBit(p, ppNickname) && !ppBit(p, ppAlias), fact(3))))
+        .bitwiseOR(bitIf(ppBit(p, Nul), fact(1)))
+        .bitwiseOR(bitIf(ppBit(p, Wide), fact(2)))
+        .bitwiseOR(bitIf(ppBit(p, Nick) && !ppBit(p, Alias), fact(4)))
+        .bitwiseOR(bitIf(ppBit(p, Nickname) && !ppBit(p, Alias), fact(3))))
       .otherwise(lit(fact(0)))
 
   /** The two transitive scans: the per-slot history over the packed
@@ -850,7 +639,7 @@ object Compat {
       .withColumn("hist", history(hb))
       .filter(col("version") > 1)
       .select(col("subject"), col("version"),
-        slotCount(i => ppBit(col("pp")(i), ppPres)).as("n_fields"),
+        slotCount(i => ppBit(col("pp")(i), Pres)).as("n_fields"),
         slotCount(slotBreaks("hist", tm)).as("n_bad_fields"))
       .withColumn(okName, col("n_bad_fields") === 0)
   }
@@ -881,17 +670,17 @@ object Compat {
     val w = wp(i)
     val nameMatch =
       if (i == nickSlot)
-        (r.bitwiseXOR(w).bitwiseAND(lit(ppNick | ppNickname)) === 0) ||
-          ppBit(r, ppAlias) || ppBit(w, ppAlias)
+        (r.bitwiseXOR(w).bitwiseAND(lit(Nick | Nickname)) === 0) ||
+          ppBit(r, Alias) || ppBit(w, Alias)
       else lit(true)
-    val wPres = ppBit(w, ppPres) && nameMatch
+    val wPres = ppBit(w, Pres) && nameMatch
     val wMask = ppMask(w)
-    ppBit(r, ppPres) && (
-      (!wPres && ppBit(r, ppReq) && !ppBit(r, ppDef)) ||
+    ppBit(r, Pres) && (
+      (!wPres && ppBit(r, Req) && !ppBit(r, Def)) ||
         (wPres && wMask.bitwiseAND(ppAccepts(r)) =!= wMask) ||
-        (wPres && ppBit(r, ppReq) && ppBit(w, ppNul)) ||
-        (ppBit(r, ppEnum) && wPres && ppBit(w, ppEnum) && !ppBit(r, ppDef) &&
-          ppBit(w, ppWide) && !ppBit(r, ppWide)))
+        (wPres && ppBit(r, Req) && ppBit(w, Nul)) ||
+        (ppBit(r, IsEnum) && wPres && ppBit(w, IsEnum) && !ppBit(r, Def) &&
+          ppBit(w, Wide) && !ppBit(r, Wide)))
   }
 
   /** The RegisterSchema admission gate (registry.go CheckCompatibility
@@ -1004,7 +793,7 @@ object Compat {
       val w = get(filter(col("flds"), x => x("fname") === lit(fname)), lit(0))
       val noDefault = lit(fdefault.isEmpty)
       // the candidate's accept mask is a compile-time constant
-      val candAccepts = lit(acceptsMaskInt(maskInt(ftype, funion)))
+      val candAccepts = lit(accepts(maskInt(ftype, funion)))
       val enumBreak = fsyms match {
         case Some(syms) =>
           lit(ftype == "enum") && w("ftype") === "enum" && noDefault &&
@@ -1060,7 +849,7 @@ object Compat {
       concat(when(wf("funion").isNotNull, "union").otherwise("scalar"),
         lit("_to_"),
         when(r("funion").isNotNull, "union").otherwise("scalar")).as("transition"),
-      (wf("fmask").bitwiseAND(acceptsMaskOf(r("fmask"))) === wf("fmask"))
+      (wf("fmask").bitwiseAND(acceptsOf(r("fmask"))) === wf("fmask"))
         .as("union_ok"))
   }
 
@@ -1162,7 +951,7 @@ object Compat {
     val violation =
       (!wp("present") && !r("pnull")) ||
         (wp("present") &&
-          wp("pmask").bitwiseAND(acceptsMaskOf(r("pmask"))) =!= wp("pmask")) ||
+          wp("pmask").bitwiseAND(acceptsOf(r("pmask"))) =!= wp("pmask")) ||
         (wp("present") && !r("pnull") && wp("pnull"))
     perPath
       .groupBy(col("subject"), col("version"))

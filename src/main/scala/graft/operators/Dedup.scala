@@ -346,8 +346,8 @@ object Dedup {
     * similarity surfaces assume a blocking key exists; a raw training
     * corpus has none). Every vector is hashed to one bucket per table
     * with the SAME deterministic ±1 hyperplane family as the ANN
-    * bucketer ([[Similarity.adaptiveBuckets]] — md5-parity weights,
-    * embedded as a plan literal so codegen folds it); candidates are
+    * bucketer ([[Similarity.adaptiveBuckets]] — md5-parity weights
+    * read by the `graft_srp_buckets` kernel); candidates are
     * pairs sharing a (table, bucket) slot, scored with exact cosine
     * above the [[embedCosine]] threshold. 2 tables, and (r9) the
     * plane count per table ADAPTS to the corpus size exactly as

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.compat.AvroFields
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -20,11 +21,9 @@ object Intelligence {
     */
   private def latestFields(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("subject"))
-    // latestMembers: only the members read below are constructed, and
-    // the lag window (w_all) is never built — the latest-version
-    // tools diff nothing, so paying the previous-version array per
-    // row was pure model-widening tax (r5 verdict item #3).
-    Compat.fieldArrays(s, dir, Compat.latestMembers, withLag = false)
+    // the lag window (w_all) is never built: the latest-version tools
+    // diff nothing
+    Compat.fieldArrays(s, dir, withLag = false)
       .withColumn("maxv", max(col("version")).over(w))
       .filter(col("version") === col("maxv"))
       .select(col("subject"), explode(col("flds")).as("f"))
@@ -138,20 +137,15 @@ object Intelligence {
     * slower per extra model dimension.)
     */
   def diffFields(s: SparkSession, dir: String): DataFrame = {
-    val nSlots = 10
     def r(i: Int) = col("flds_all")(i)
     def wf(i: Int) = col("w_all")(i)
     def cnt(cond: Int => org.apache.spark.sql.Column) =
-      (0 until nSlots).map(i => when(cond(i), 1L).otherwise(0L)).reduce(_ + _)
+      (0 until AvroFields.nSlots).map(i => when(cond(i), 1L).otherwise(0L)).reduce(_ + _)
     // The diff is NAME-based (computeFieldDiffs has no alias
     // resolution): a renamed slot counts as one removal + one
     // addition, so presence comparisons also require name equality.
     def sameName(i: Int) = r(i)("fname") === wf(i)("fname")
-    // member-pruned model: the diff reads name/type/null/present per
-    // slot; constructing the other five members (and lagging them)
-    // was measured at ~2x the query's cost on the full model
-    Compat.fieldArrays(s, dir,
-        Seq("fname", "ftype", "fnull", "present"), withLag = true)
+    Compat.fieldArrays(s, dir)
       .filter(col("version") > 1)
       .select(col("subject"), col("version"),
         cnt(i => r(i)("present") && !(wf(i)("present") && sameName(i))).as("n_added"),
@@ -222,8 +216,7 @@ object Intelligence {
     */
   def evolutionSuggest(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("subject"))
-    val latest = Compat.fieldArrays(s, dir,
-        Seq("fname", "ftype", "fnull", "fdefault", "present"), withLag = true)
+    val latest = Compat.fieldArrays(s, dir)
       .withColumn("maxv", max(col("version")).over(w))
       .filter(col("version") === col("maxv"))
     // current fields, then the fields the latest version dropped
@@ -256,7 +249,7 @@ object Intelligence {
     * stack'd to (metric, value) rows.
     */
   def detectPatterns(s: SparkSession, dir: String): DataFrame = {
-    val vs = Compat.fieldArrays(s, dir, Compat.latestMembers, withLag = false)
+    val vs = Compat.fieldArrays(s, dir, withLag = false)
       .groupBy(col("subject")).agg(max(col("version")).as("nv"))
     val a = vs.agg(count(lit(1)).as("n_subjects"),
       sum(col("nv")).as("total_versions"),
@@ -283,7 +276,7 @@ object Intelligence {
     * version stream — max/sum/count all combine map-side.
     */
   def activeLatest(s: SparkSession, dir: String): DataFrame =
-    Compat.fieldArrays(s, dir, Compat.latestMembers, withLag = false)
+    Compat.fieldArrays(s, dir, withLag = false)
       .groupBy(col("subject"))
       .agg(max(when(col("k") % 5 =!= 0, col("version"))).as("latest_active"),
         sum(when(col("k") % 5 === 0, 1).otherwise(0)).as("n_deleted"),
@@ -309,7 +302,7 @@ object Intelligence {
     */
   def compareSubjects(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("subject"))
-    val latestArr = Compat.fieldArrays(s, dir, Compat.latestMembers, withLag = false)
+    val latestArr = Compat.fieldArrays(s, dir, withLag = false)
       .withColumn("maxv", max(col("version")).over(w))
       .filter(col("version") === col("maxv"))
       .select(col("subject"), col("flds"))

@@ -473,15 +473,18 @@ object Pipeline {
         "CASE WHEN n_bigrams > 0 AND 100 * top_bigram_count > 8 * n_bigrams THEN 1 ELSE 0 END AS f3",
         "CASE WHEN entropy < 2.4 THEN 1 ELSE 0 END AS f4",
         "CASE WHEN coalesce(n_words_covered, 0) * 20 > n_words THEN 1 ELSE 0 END AS f5")
-      .selectExpr(
+      // one global aggregate, then the six rule rows: an empty corpus
+      // still reports every rule, with n_checked 0 and NULL sums
+      .selectExpr("count(*) AS n_checked", "sum(f1) AS s1", "sum(f2) AS s2",
+        "sum(f3) AS s3", "sum(f4) AS s4", "sum(f5) AS s5",
+        "sum(CASE WHEN f1 + f2 + f3 + f4 + f5 > 0 THEN 1 ELSE 0 END) AS s6")
+      .selectExpr("n_checked",
         """stack(6,
-          |  'r1_word_count', f1, 'r2_dup_ratio', f2, 'r3_top_bigram', f3,
-          |  'r4_entropy', f4, 'r5_dup_3gram', f5,
-          |  'r6_all_rules', CASE WHEN f1 + f2 + f3 + f4 + f5 > 0 THEN 1 ELSE 0 END)
-          |AS (rule, fail)""".stripMargin)
-      .groupBy(col("rule"))
-      .agg(count(lit(1)).as("n_checked"), sum(col("fail")).as("n_fail"))
-      .withColumn("n_pass", col("n_checked") - col("n_fail"))
+          |  'r1_word_count', s1, 'r2_dup_ratio', s2, 'r3_top_bigram', s3,
+          |  'r4_entropy', s4, 'r5_dup_3gram', s5, 'r6_all_rules', s6)
+          |AS (rule, n_fail)""".stripMargin)
+      .select(col("rule"), col("n_checked"), col("n_fail"),
+        (col("n_checked") - col("n_fail")).as("n_pass"))
   }
 
   /** CCNet-style perplexity bucketing (Wenzek et al. 2020): rank each

@@ -13,9 +13,9 @@ import org.apache.spark.sql.functions._
   * Scale design: probes are a bounded set (broadcast); the corpus is
   * scanned once and never self-joined. Brute force scores
   * |probes| × |corpus| rows and ranks per probe. The SRP variant
-  * hashes every vector to one of 256 buckets with a *literal* ±1
-  * hyperplane matrix (md5-parity-derived, embedded in the plan so
-  * codegen folds it — no per-row hashing), then scores only
+  * hashes every vector to a bucket per table with a fixed ±1
+  * hyperplane matrix (md5-parity-derived, built once per JVM and read
+  * by the `graft_srp_buckets` kernel — no per-row hashing), then scores only
   * same-bucket candidates: at 1000 executors the bucket join
   * shuffles on an 8-bit key and each task scores a 1/256 slice.
   */
@@ -28,7 +28,7 @@ object Similarity {
   /** Adaptive-SRP knobs for [[nnGraph]]: expected bucket occupancy is
     * held at ~[[TargetBucket]] rows by choosing the plane count from
     * the corpus size (see [[planesFor]]); [[MaxPlanesPerTable]] caps
-    * the literal matrix. At 32 planes/table (r9; was 20) the cap
+    * the hyperplane matrix. At 32 planes/table (r9; was 20) the cap
     * covers 2^32 buckets ≈ 68 BILLION vectors at occupancy 16 —
     * comfortably past any 100 TB corpus — and bucket codes ride as
     * BIGINT (a shift by up to 31 outgrows the int sign bit; both
@@ -60,20 +60,17 @@ object Similarity {
     if ((v & 1) == 1) 1 else -1
   }
 
-  /** The ±1 hyperplane family for the adaptive bucketer as a Spark
-    * SQL array literal: table t owns the contiguous stripe
-    * [t*MaxPlanesPerTable, (t+1)*MaxPlanesPerTable) so the chosen
-    * plane count can grow with the corpus without re-deriving earlier
-    * planes. md5-parity generator ([[weight]]); shared by every SRP
-    * consumer (lshTopK, nnGraph family, [[Dedup.embedLsh]]) so they
-    * provably hash with the same deterministic projections.
+  /** The ±1 hyperplane family for the adaptive bucketer, built once
+    * per JVM and read by the `graft_srp_buckets` kernel: table t owns
+    * the contiguous stripe [t*MaxPlanesPerTable, (t+1)*MaxPlanesPerTable)
+    * so the chosen plane count can grow with the corpus without
+    * re-deriving earlier planes. md5-parity generator ([[weight]]);
+    * shared by every SRP consumer (lshTopK, nnGraph family,
+    * [[Dedup.embedLsh]]) so they provably hash with the same
+    * deterministic projections.
     */
-  private[operators] lazy val weightMatrixSqlBig: String = {
-    val rows = (0 until NTables * MaxPlanesPerTable).map { p =>
-      (0 until Dims).map(d => weight(p, d)).mkString("array(", ", ", ")")
-    }
-    rows.mkString("array(", ", ", ")")
-  }
+  private[graft] lazy val srpWeights: Array[Array[Double]] =
+    Array.tabulate(NTables * MaxPlanesPerTable, Dims)((p, d) => weight(p, d).toDouble)
 
   private def scored(s: SparkSession, dir: String): DataFrame = {
     graft.functions.Native.register(s)
@@ -181,13 +178,10 @@ object Similarity {
     * LITERAL ([[planesFor]] mirrors the oracle's integer formula), so
     * pinning the bucketed frame launches zero jobs.
     */
-  private def bucketsNp(e: DataFrame, n: Long): DataFrame =
-    e.selectExpr("vec_id", "e",
-      s"""transform(sequence(0, ${NTables - 1}), t ->
-         |  aggregate(sequence(0, ${planesFor(n)} - 1), cast(0 AS bigint), (acc, p) ->
-         |    acc + CASE WHEN aggregate(zip_with(element_at($weightMatrixSqlBig, t * $MaxPlanesPerTable + p + 1), e, (w, x) -> w * x),
-         |                              cast(0 AS double), (a2, x) -> a2 + x) >= 0
-         |          THEN shiftleft(cast(1 AS bigint), p) ELSE cast(0 AS bigint) END)) AS buckets""".stripMargin)
+  private def bucketsNp(e: DataFrame, n: Long): DataFrame = {
+    graft.functions.Native.register(e.sparkSession)
+    e.selectExpr("vec_id", "e", s"graft_srp_buckets(e, ${planesFor(n)}) AS buckets")
+  }
 
   /** The raw graph edge list (top-3 per src, unrounded cosines) —
     * shared by [[nnGraph]] (the registered card) and [[nnDescent]]

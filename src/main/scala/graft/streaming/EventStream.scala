@@ -1,5 +1,7 @@
 package graft.streaming
 
+import graft.compat.AvroFields
+import graft.compat.AvroFields.Slot
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -9,6 +11,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * exporters stream changelogs): the same declarative transform runs
   * over a batch DataFrame or a `readStream` source unchanged — this
   * is the Spark-native version of tailing the audit log.
+  *
+  * The incremental compat gate ([[compatStateful]]) derives each
+  * registration's slots from the one Avro field model,
+  * [[graft.compat.AvroFields.slots]], the model the relational compat
+  * scans read through `graft_avro_slots`.
   *
   * Scale notes: windowed aggregation state is bounded by the
   * watermark horizon × key cardinality; sessionization keeps one
@@ -192,87 +199,34 @@ object EventStream {
 
   /** `k` is NULL when the version's `props` lacks `$.k`. */
   final case class RegEvt(subject: Long, ts: java.sql.Timestamp, event_id: Long, k: Option[Long])
-  /** `fnull` is None where the relational model's is NULL: a NULL `k`
-    * leaves the `name` slot's nullability unknown. */
-  final case class FieldDef(fname: String, ftype: String, fnull: Option[Boolean],
-    fdefault: Option[String], fsyms: Option[String], funion: Option[String] = None,
-    falias: Option[String] = None)
-  final case class CompatState(version: Int, fields: Seq[FieldDef])
+  /** The last accepted version and its ten positional slots. */
+  final case class CompatState(version: Int, slots: Seq[Slot])
   final case class CompatOut(subject: Long, version: Int, n_fields: Long,
     n_violations: Long, compatible: Boolean)
 
-  /** The registration's field set, derived from payload k — the
-    * state-machine twin of [[graft.operators.Compat.fieldArrays]]'
-    * array expression (same model, same residues, same NULL-k
-    * semantics: a residue test on a NULL k is unknown, so a CASE takes
-    * its ELSE branch, a conditional field is absent, and `name`'s
-    * nullability stays unknown).
+  /** BACKWARD violations of reader (new) vs writer (previous) slots,
+    * paired by position as [[graft.operators.Compat.pairRules]] pairs
+    * them — the four avro/checker.go rules (:129 missing-without-
+    * default, branch-mask type resolution covering unions
+    * :224/:247/:263 and the promotion matrix :304, required-reads-
+    * nullable, :182 enum symbol compat), one count per violating
+    * present reader slot. A rule breaks only when it is TRUE: an
+    * unknown `fnull` fails it, as a NULL fails the relational rule.
     */
-  def fieldsOf(k: Option[Long]): Seq[FieldDef] = {
-    def is(p: Long => Boolean): Boolean = k.exists(p)
-    val b = Seq.newBuilder[FieldDef]
-    b += FieldDef("id", "bigint", Some(false), None, None)
-    b += FieldDef("name", "string", k.map(_ % 2 == 0), None, None)
-    if (is(_ % 3 == 0)) b += FieldDef("email", "string", Some(true), None, None)
-    b += FieldDef("score", if (is(_ % 4 < 2)) "int" else "bigint", Some(false), None, None)
-    if (is(_ % 3 < 2)) b += FieldDef("status", "enum", Some(false),
-      if (is(_ % 5 < 3)) Some("A") else None,
-      if (is(_ % 2 == 0)) Some("A,B") else Some("A,B,C"))
-    b += FieldDef("ratio",
-      if (is(_ % 9 < 2)) "int" else if (is(_ % 9 < 4)) "bigint"
-      else if (is(_ % 9 < 6)) "float" else "double", Some(true), None, None)
-    b += FieldDef("payload", if (is(_ % 13 < 7)) "string" else "bytes",
-      Some(true), None, None)
-    b += FieldDef("ref",
-      if (is(_ % 6 == 0)) "int" else if (is(_ % 6 == 1)) "string" else "union",
-      Some(true), None, None,
-      if (is(m => m % 6 == 4 || m % 6 == 5)) Some("null,string")
-      else if (is(_ % 6 == 2)) Some("bigint,null,string")
-      else if (is(_ % 6 == 3)) Some("bigint,string") else None)
-    b += FieldDef("token", if (is(_ % 23 < 12)) "fixed8" else "fixed16",
-      Some(true), None, None)
-    b += FieldDef(if (is(_ % 29 < 15)) "nick" else "nickname", "string",
-      Some(false), None, None,
-      falias = if (is(_ % 31 < 16)) Some(if (is(_ % 29 < 15)) "nickname" else "nick") else None)
-    b.result()
-  }
-
-  /** Promotion closure over branch names (avro/checker.go:304) — the
-    * state-machine twin of [[graft.operators.Compat.acceptsMaskOf]]'s
-    * accept mask.
-    */
-  private val nameAccepts: Map[String, Set[String]] = Map(
-    "bigint" -> Set("bigint", "int"),
-    "float" -> Set("float", "bigint", "int"),
-    "double" -> Set("double", "float", "bigint", "int"),
-    "string" -> Set("string", "bytes"),
-    "bytes" -> Set("bytes", "string"))
-  private def branches(f: FieldDef): Seq[String] =
-    f.funion.map(_.split(',').toSeq).getOrElse(Seq(f.ftype))
-
-  /** BACKWARD violations of reader (new) vs writer (previous) —
-    * the four avro/checker.go rules (:129 missing-without-default,
-    * branch-set type resolution covering unions :224/:247/:263 and
-    * the promotion matrix :304, required-reads-nullable, :182 enum
-    * symbol compat), one count per violating field, exactly the rules of
-    * [[graft.operators.Compat.pairRules]].
-    */
-  def backwardViolations(reader: Seq[FieldDef], writer: Seq[FieldDef]): Long =
-    reader.count { r =>
+  def backwardViolations(reader: Seq[Slot], writer: Seq[Slot]): Long =
+    reader.zip(writer).count { case (r, w) =>
       // name-or-alias resolution in both directions (checker.go:112)
-      writer.find(w => w.fname == r.fname ||
-        r.falias.contains(w.fname) || w.falias.contains(r.fname)) match {
-        // a rule breaks only when it is TRUE: an unknown `fnull`
-        // fails it, as a NULL fails the relational rule's WHERE
-        case None => r.fnull.contains(false) && r.fdefault.isEmpty
-        case Some(w) =>
-          val accepts = branches(r).flatMap(b => nameAccepts.getOrElse(b, Set(b))).toSet
-          val typeBreak = branches(w).exists(!accepts(_))
+      val matched = w.present && (w.fname == r.fname ||
+        r.falias.contains(w.fname) || w.falias.contains(r.fname))
+      r.present && (
+        if (!matched) r.fnull.contains(false) && r.fdefault.isEmpty
+        else {
+          val typeBreak = (w.fmask & AvroFields.accepts(r.fmask)) != w.fmask
           val enumBreak = r.ftype == "enum" && w.ftype == "enum" &&
             r.fdefault.isEmpty && w.fsyms.exists(ws => r.fsyms.exists(rs =>
               (ws.split(',').toSet -- rs.split(',').toSet).nonEmpty))
           typeBreak || (r.fnull.contains(false) && w.fnull.contains(true)) || enumBreak
-      }
+        })
     }.toLong
 
   /** The RegisterSchema write path as an incremental stream
@@ -296,15 +250,15 @@ object EventStream {
           var cur = state.getOption
           val out = Seq.newBuilder[CompatOut]
           sorted.foreach { e =>
-            val flds = fieldsOf(e.k)
+            val slots = AvroFields.slots(e.k)
             cur match {
               case Some(st) =>
                 val v = st.version + 1
-                val nViol = backwardViolations(flds, st.fields)
-                out += CompatOut(subject, v, flds.size.toLong, nViol, nViol == 0)
-                cur = Some(CompatState(v, flds))
+                val nViol = backwardViolations(slots, st.slots)
+                out += CompatOut(subject, v, slots.count(_.present).toLong, nViol, nViol == 0)
+                cur = Some(CompatState(v, slots))
               case None =>
-                cur = Some(CompatState(1, flds))
+                cur = Some(CompatState(1, slots))
             }
           }
           cur.foreach(state.update)

@@ -1,6 +1,6 @@
 package graft
 
-import graft.compat.SchemaCompat
+import graft.compat.{AvroFields, SchemaCompat}
 import graft.compat.SchemaCompat._
 import org.apache.spark.sql.types._
 
@@ -213,8 +213,10 @@ class CompatSpec extends SparkSpec {
   }
 
   test("mask algebra == brute-force branch-set semantics on all pairs (property)") {
-    // The scans' entire type resolution is integer bitmask algebra
-    // (maskInt/acceptsMaskInt and their Column twins). Pin it against
+    // The scans' entire type resolution is the model's integer bitmask
+    // algebra (AvroFields.maskInt/accepts, the Column lookup
+    // Compat.acceptsOf, and the branch-name AvroFields.promotes that
+    // SchemaCompat resolves unions with). Pin it against
     // the definitional form: every writer branch must be readable by
     // some reader branch under the promotion matrix — enumerated over
     // ALL pairs of non-empty branch sets drawn from realistic union
@@ -236,13 +238,21 @@ class CompatSpec extends SparkSpec {
     var checked = 0
     for (r <- shapes; w <- shapes) {
       val expectBreak = !w.forall(wb => r.exists(rb => accepts(rb)(wb)))
-      val rm = operators.Compat.maskInt(r.head, if (r.size > 1) Some(r.mkString(",")) else None)
-      val wm = operators.Compat.maskInt(w.head, if (w.size > 1) Some(w.mkString(",")) else None)
-      val maskBreak = (wm & operators.Compat.acceptsMaskInt(rm)) != wm
+      val rm = AvroFields.maskInt(r.head, if (r.size > 1) Some(r.mkString(",")) else None)
+      val wm = AvroFields.maskInt(w.head, if (w.size > 1) Some(w.mkString(",")) else None)
+      val maskBreak = (wm & AvroFields.accepts(rm)) != wm
       assert(maskBreak == expectBreak, s"reader=$r writer=$w")
+      val nameBreak = !w.forall(wb => r.exists(AvroFields.promotes(wb, _)))
+      assert(nameBreak == expectBreak, s"by name: reader=$r writer=$w")
       checked += 1
     }
     assert(checked == shapes.size * shapes.size)
+    // the Column form agrees with the Scala closure on every mask
+    import org.apache.spark.sql.functions.col
+    val masks = 0 until (1 << AvroFields.typeWidth)
+    val got = spark.range(masks.size).select(operators.Compat.acceptsOf(col("id").cast("int")))
+      .collect().map(_.getInt(0)).toSeq
+    assert(got == masks.map(AvroFields.accepts))
   }
 
   test("alias dimension is live on the corpus: renames break only when unrescued") {
@@ -518,13 +528,13 @@ class CompatSpec extends SparkSpec {
     val row = operators.Compat.fieldArrays(spark, sfDir)
       .select(col("flds_all")).head()
     val slots = row.getSeq[org.apache.spark.sql.Row](0)
-    assert(slots.length == operators.Compat.nSlots,
-      "nSlots must match the flds_all array literal")
-    assert(slots(operators.Compat.refSlot).getAs[String]("fname") == "ref",
-      s"refSlot=${operators.Compat.refSlot} must be the union-walking ref field")
+    assert(slots.length == AvroFields.nSlots,
+      "nSlots must match the flds_all array")
+    assert(slots(AvroFields.refSlot).getAs[String]("fname") == "ref",
+      s"refSlot=${AvroFields.refSlot} must be the union-walking ref field")
     assert(Set("nick", "nickname")
-      .contains(slots(operators.Compat.nickSlot).getAs[String]("fname")),
-      s"nickSlot=${operators.Compat.nickSlot} must be the alias-walking field")
+      .contains(slots(AvroFields.nickSlot).getAs[String]("fname")),
+      s"nickSlot=${AvroFields.nickSlot} must be the alias-walking field")
     // every other slot's name is fixed: positional pairing depends on it
     val fixed = Seq("id", "name", "email", "score", "status", "ratio", "payload", "ref", "token")
     fixed.zipWithIndex.foreach { case (n, i) =>
@@ -534,10 +544,12 @@ class CompatSpec extends SparkSpec {
 
   test("positional model: each slot's fmask is the branch mask of its (ftype, funion)") {
     // The scans resolve types on fmask alone; the oracles on the
-    // branch list coalesce(funion, [ftype]). Pin them together on the
-    // generated data and where k is NULL, which falls through every
-    // residue's when-chain.
+    // branch list coalesce(funion, [ftype]). Pin the model's slots to
+    // a hand-written bit table on the generated data and where k is
+    // NULL, which takes every residue's ELSE branch.
     import org.apache.spark.sql.functions._
+    val bit = Seq("int", "bigint", "float", "double", "string", "bytes", "enum", "null",
+      "fixed8", "fixed16", "union").zipWithIndex.map { case (n, i) => n -> (1 << i) }.toMap
     Seq(sfDir, nullKDir).foreach { dir =>
       val slots = operators.Compat.fieldArrays(spark, dir)
         .select(explode(col("flds_all")).as("f"))
@@ -545,7 +557,8 @@ class CompatSpec extends SparkSpec {
       assert(slots.length > 10)
       slots.foreach { r =>
         val (t, u, m) = (r.getString(0), Option(r.getString(1)), r.getInt(2))
-        assert(m == operators.Compat.maskInt(t, u), s"$dir: ftype=$t funion=$u fmask=$m")
+        assert(m == u.map(_.split(',').map(bit).sum).getOrElse(bit(t)),
+          s"$dir: ftype=$t funion=$u fmask=$m")
       }
     }
   }
@@ -581,7 +594,7 @@ class CompatSpec extends SparkSpec {
         (w("fname") === r("fname") ||
           r("falias") <=> w("fname") || w("falias") <=> r("fname"))
       val typeBreak = w("fmask")
-        .bitwiseAND(operators.Compat.acceptsMaskOf(r("fmask"))) =!= w("fmask")
+        .bitwiseAND(operators.Compat.acceptsOf(r("fmask"))) =!= w("fmask")
       (!matched && !r("fnull") && r("fdefault").isNull) ||
         (matched && typeBreak) ||
         (matched && !r("fnull") && w("fnull")) ||

@@ -75,6 +75,12 @@ class DegenerateInputSpec extends SparkSpec {
       x.getAs[Long]("n_true") == 0L && x.isNullAt(x.fieldIndex("exp_recall"))))
   }
 
+  test("corpus_gopher_gate on an empty corpus reports its six rules with zero documents checked") {
+    assert(rows("corpus_gopher_gate").sortBy(_.getString(0)) ==
+      Seq("r1_word_count", "r2_dup_ratio", "r3_top_bigram", "r4_entropy", "r5_dup_3gram", "r6_all_rules")
+        .map(Row(_, 0L, null, null)))
+  }
+
   test("on NULL k, stream_compat and reg_similar follow their oracles") {
     import org.apache.spark.sql.functions.{col, count, explode, lit, max}
     assert(Tables.events(spark, nullKDir).where("props = '{}'").count() > 0)
@@ -84,7 +90,7 @@ class DegenerateInputSpec extends SparkSpec {
     // reg_similar's oracle: an equality join on (fname, ftype, fnull) over
     // the latest fields, where a NULL part never matches
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("subject"))
-    val lf = Compat.fieldArrays(spark, nullKDir, Seq("fname", "ftype", "fnull"), withLag = false)
+    val lf = Compat.fieldArrays(spark, nullKDir, withLag = false)
       .withColumn("maxv", max(col("version")).over(w)).where(col("version") === col("maxv"))
       .select(col("subject"), explode(col("flds")).as("f"))
       .select(col("subject"), col("f.fname").as("fname"), col("f.ftype").as("ftype"), col("f.fnull").as("fnull"))

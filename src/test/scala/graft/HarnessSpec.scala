@@ -65,8 +65,18 @@ class HarnessSpec extends SparkSpec {
       .map(_.funcName).filter(_.startsWith("graft_"))
     assert(injected.sorted == registered.sorted)
     assert(injected.toSet == functions.Native.functions.map(_._1).toSet)
-    assert(injected.distinct.size == 10)
-    assert(Set("graft_shingles", "graft_shingle_md5").subsetOf(injected.toSet))
+    assert(injected.distinct.size == 13)
+    assert(Set("graft_shingles", "graft_shingle_md5", "graft_avro_slots", "graft_avro_profile",
+      "graft_srp_buckets").subsetOf(injected.toSet))
+  }
+
+  test("the Avro field model and the SRP hyperplanes have one statement in src/main/scala") {
+    // AvroFields holds the slot residues and the promotion closure;
+    // graft_srp_buckets reads the hyperplanes built once
+    assert(occurrences("weightMatrixSqlBig").isEmpty)
+    assert(occurrences("fieldsOf(").isEmpty)
+    assert(occurrences("nameAccepts").isEmpty)
+    assert(occurrences("_ % 29 < 15").map(_._1) == Seq("AvroFields.scala"))
   }
 
   test("no interpreted n-gram lambda and no array_sort in src/main/scala") {

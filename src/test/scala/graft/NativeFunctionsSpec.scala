@@ -204,4 +204,77 @@ class NativeFunctionsSpec extends SparkSpec {
         | sqrt(aggregate(b.e, cast(0 AS double), (acc, x) -> acc + x * x))) AS c""".stripMargin)
     assert(native.exceptAll(hof).count() == 0 && hof.exceptAll(native).count() == 0)
   }
+
+  /** The SRP bucketer `graft_srp_buckets(e, planes)` replaced: per hash
+    * table, the bits of the hyperplanes whose dot product with `e`,
+    * summed left to right, is >= 0, over the weight matrix as a SQL
+    * array literal. */
+  private def srpHof(planes: Int): String = {
+    val stripe = operators.Similarity.MaxPlanesPerTable
+    val w = (0 until 2 * stripe).map(p =>
+      (0 until 64).map(d => operators.Similarity.weight(p, d)).mkString("array(", ", ", ")"))
+      .mkString("array(", ", ", ")")
+    s"""transform(sequence(0, 1), t ->
+       |  aggregate(sequence(0, $planes - 1), cast(0 AS bigint), (acc, p) ->
+       |    acc + CASE WHEN aggregate(zip_with(element_at($w, t * $stripe + p + 1), e, (w, x) -> w * x),
+       |                              cast(0 AS double), (a2, x) -> a2 + x) >= 0
+       |          THEN shiftleft(cast(1 AS bigint), p) ELSE cast(0 AS bigint) END))""".stripMargin
+  }
+
+  private val srpPlanes = Seq(4, 8, 32)
+
+  test("graft_srp_buckets equals the zip_with/aggregate form on the embeddings") {
+    Native.register(spark)
+    val rows = Tables.spread(Tables.embeddings(spark, sfDir))
+      .selectExpr("vec_id AS k", "cast(embedding AS array<double>) AS e")
+    for (p <- srpPlanes)
+      assert(mismatches(rows, s"graft_srp_buckets(e, $p)", srpHof(p)).isEmpty, s"planes=$p")
+    // the ids spread over buckets: the kernel is not constant
+    assert(rows.selectExpr("graft_srp_buckets(e, 8)[0] AS b").distinct().count() > 16)
+  }
+
+  test("graft_srp_buckets equals the zip_with/aggregate form on edge rows") {
+    Native.register(spark)
+    import spark.implicits._
+    val base = (0 until 64).map(d => math.sin(d + 1.0))
+    def row(f: Seq[Double] => Seq[java.lang.Double]): Seq[java.lang.Double] = f(base)
+    val edge = Seq[(Int, Seq[java.lang.Double])](
+      1 -> row(_.map(Double.box)),
+      2 -> Seq.fill(64)(Double.box(0.0)), // every dot is 0: every bit set
+      3 -> Seq.fill(64)(Double.box(-0.0)),
+      4 -> row(_.updated(5, Double.NaN).map(Double.box)), // NaN sorts above 0
+      5 -> row(_.updated(0, Double.PositiveInfinity).updated(1, Double.NegativeInfinity).map(Double.box)),
+      6 -> row(_.map(Double.box).updated(9, null)), // NULL element: no bit
+      7 -> row(_.take(63).map(Double.box)), // short: zip_with pads with NULL
+      8 -> row(_.map(Double.box) :+ Double.box(1.0)), // long
+      9 -> Seq.empty,
+      10 -> null).toDF("k", "e")
+    for (p <- srpPlanes)
+      assert(mismatches(edge, s"graft_srp_buckets(e, $p)", srpHof(p)).isEmpty, s"planes=$p")
+    val b = edge.selectExpr("k", "graft_srp_buckets(e, 32) AS b").collect()
+      .map(r => r.getInt(0) -> Option(r.getSeq[Long](1))).toMap
+    assert(b(2).get == Seq(0xffffffffL, 0xffffffffL))
+    assert(Seq(6, 7, 8, 9, 10).forall(k => b(k).get == Seq(0L, 0L)))
+  }
+
+  test("graft_avro_slots has the field model's struct type, and a value on a NULL k") {
+    Native.register(spark)
+    val df = spark.range(1).selectExpr("graft_avro_slots(CAST(NULL AS BIGINT)) AS s",
+      "graft_avro_profile(CAST(NULL AS BIGINT)) AS p")
+    val json = """{"type":"array","elementType":{"type":"struct","fields":[""" +
+      Seq("fname" -> "string" -> false, "ftype" -> "string" -> false, "fnull" -> "boolean" -> true,
+        "fdefault" -> "string" -> true, "fsyms" -> "string" -> true, "funion" -> "string" -> true,
+        "fmask" -> "integer" -> false, "falias" -> "string" -> true, "present" -> "boolean" -> false)
+        .map { case ((n, t), nb) => s"""{"name":"$n","type":"$t","nullable":$nb,"metadata":{}}""" }
+        .mkString(",") + """]},"containsNull":false}"""
+    assert(df.schema("s").dataType.json == json)
+    assert(!df.schema("s").nullable && !df.schema("p").nullable)
+    val r = df.head()
+    val slots = r.getSeq[org.apache.spark.sql.Row](0)
+    assert(slots.map(_.getString(0)) ==
+      Seq("id", "name", "email", "score", "status", "ratio", "payload", "ref", "token", "nickname"))
+    // name's nullability is unknown; the conditional slots are absent
+    assert(slots(1).isNullAt(2) && !slots(2).getBoolean(8) && !slots(4).getBoolean(8))
+    assert(r.getSeq[Int](1) == graft.compat.AvroFields.slots(None).map(graft.compat.AvroFields.profile))
+  }
 }
