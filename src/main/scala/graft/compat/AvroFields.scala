@@ -1,5 +1,10 @@
 package graft.compat
 
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.types.UTF8String
+
 /** The registry's synthetic Avro field model, stated once: type bits,
   * promotion closure, the ten slots of payload `k` and their packed
   * profile. The compat scans read it through the `graft_avro_slots` /
@@ -27,13 +32,9 @@ object AvroFields {
   /** Width of a branch mask in bits. */
   val typeWidth: Int = typeBits.size
 
-  private val masks = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-
-  /** The branch mask of a field: its union branches, else its type
-    * (memoized: the scans ask for it once per slot of every row).
-    */
+  /** The branch mask of a field: its union branches, else its type. */
   def maskInt(ftype: String, funion: Option[String]): Int =
-    masks.computeIfAbsent(funion.getOrElse(ftype), _.split(',').map(bitOf).sum)
+    funion.fold(bitOf(ftype))(_.split(',').map(bitOf).sum)
 
   /** Reader-side promotion closure (avro/checker.go:304 canPromote):
     * the writer types a reader mask can decode. int→long/float/double,
@@ -61,7 +62,23 @@ object AvroFields {
   /** One positional slot; a None is a NULL column. */
   final case class Slot(fname: String, ftype: String, fnull: Option[Boolean],
     fdefault: Option[String], fsyms: Option[String], funion: Option[String],
-    fmask: Int, falias: Option[String], present: Boolean)
+    fmask: Int, falias: Option[String], present: Boolean) {
+
+    /** This slot as a row of the [[slotType]] members at `members`
+      * (ascending indexes into it).
+      */
+    def row(members: Array[Int]): InternalRow = {
+      def utf8(s: Option[String]): UTF8String = s.map(UTF8String.fromString).orNull
+      val all = Array[Any](UTF8String.fromString(fname), UTF8String.fromString(ftype),
+        fnull.getOrElse(null), utf8(fdefault), utf8(fsyms), utf8(funion), fmask, utf8(falias), present)
+      new GenericInternalRow(members.map(all))
+    }
+  }
+
+  /** The `flds_all` element type: one [[Slot]], members in its order. */
+  val slotType: StructType = StructType.fromDDL(
+    "fname STRING NOT NULL, ftype STRING NOT NULL, fnull BOOLEAN, fdefault STRING, " +
+      "fsyms STRING, funion STRING, fmask INT NOT NULL, falias STRING, present BOOLEAN NOT NULL")
 
   /** The ten slots of payload `k`, absent ones included, in `flds_all`
     * order. A residue test on a NULL k is unknown, as in SQL: every

@@ -23,10 +23,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - `graft_jaccard` / `graft_cosine`: pair scores;
   *  - `graft_json_paths` / `graft_avro_pcf` / `graft_json_canon`:
   *    schema-document walks;
-  *  - `graft_avro_slots(k)` / `graft_avro_profile(k)`: the registry's
-  *    Avro field model ([[AvroFields]]) as the positional slot structs
-  *    or their packed profiles, so every compat query shares one
-  *    compiled model instead of inlining its own expression tree;
+  *  - `graft_avro_slots(k[, member, ...])` / `graft_avro_profile(k)`:
+  *    the registry's Avro field model ([[AvroFields]]) as the
+  *    positional slot structs (cut to the named members) or their
+  *    packed profiles, so every compat query shares one compiled model
+  *    instead of inlining its own expression tree;
   *  - `graft_srp_buckets(e, planes)`: sign-random-projection bucket
   *    ids over the hyperplane matrix built once from
   *    [[graft.operators.Similarity.weight]];
@@ -438,29 +439,14 @@ object Native {
     }
   }
 
-  /** The `flds_all` element type: one [[AvroFields.Slot]]. */
-  val slotType: StructType = StructType.fromDDL(
-    "fname STRING NOT NULL, ftype STRING NOT NULL, fnull BOOLEAN, fdefault STRING, " +
-      "fsyms STRING, funion STRING, fmask INT NOT NULL, falias STRING, present BOOLEAN NOT NULL")
-
-  private val utf8s = new java.util.concurrent.ConcurrentHashMap[String, UTF8String]()
-
-  /** The model's strings are a small literal vocabulary: encode each once. */
-  private def utf8(s: String): UTF8String = utf8s.computeIfAbsent(s, UTF8String.fromString(_))
-  private def utf8(s: Option[String]): UTF8String = s.map(utf8).orNull
-
   /** The [[AvroFields.slots]] of payload `k` (unknown when `isNull`)
-    * as `slotType` rows, or with `profile` set as their packed
-    * [[AvroFields.profile]] ints.
+    * as rows of the [[AvroFields.slotType]] members at `members`, or
+    * with `profile` set as their packed [[AvroFields.profile]] ints.
     */
-  def avroSlots(isNull: Boolean, k: Long, profile: Boolean): ArrayData = {
-    val slots = AvroFields.slots(if (isNull) None else Some(k))
-    if (profile) new GenericArrayData(slots.map(AvroFields.profile).toArray)
-    else new GenericArrayData(slots.map { f =>
-      InternalRow(utf8(f.fname), utf8(f.ftype),
-        f.fnull.getOrElse(null), utf8(f.fdefault), utf8(f.fsyms), utf8(f.funion), f.fmask,
-        utf8(f.falias), f.present)
-    }.toArray[Any])
+  def avroSlots(isNull: Boolean, k: Long, profile: Boolean, members: Array[Int]): ArrayData = {
+    val slots = AvroFields.slots(if (isNull) None else Some(k)).toArray
+    new GenericArrayData(
+      if (profile) slots.map[Any](AvroFields.profile) else slots.map[Any](_.row(members)))
   }
 
   /** SRP bucket ids of one vector, one per hash table: bit p (p <
@@ -506,7 +492,8 @@ object Native {
     ("graft_json_paths", classOf[JsonPathsExpr], e => JsonPathsExpr(e.head)),
     ("graft_avro_pcf", classOf[AvroPcfExpr], e => AvroPcfExpr(e.head)),
     ("graft_json_canon", classOf[JsonCanonExpr], e => JsonCanonExpr(e.head)),
-    ("graft_avro_slots", classOf[AvroSlotsExpr], e => AvroSlotsExpr(e.head)),
+    ("graft_avro_slots", classOf[AvroSlotsExpr],
+      e => AvroSlotsExpr(e.head, members = e.tail.map(_.eval().toString))),
     ("graft_avro_profile", classOf[AvroSlotsExpr], e => AvroSlotsExpr(e.head, profile = true)),
     ("graft_srp_buckets", classOf[SrpBucketsExpr], e => {
       require(e(1).foldable, "graft_srp_buckets: the plane count must be a constant")
@@ -637,29 +624,36 @@ case class JsonPathsExpr(child: Expression) extends UnaryExpression with Expects
   override def prettyName: String = "graft_json_paths"
 }
 
-/** `graft_avro_slots(bigint) -> array<struct<fname, ftype, fnull,
-  * fdefault, fsyms, funion, fmask, falias, present>>`, or with
-  * `profile` set `graft_avro_profile(bigint) -> array<int>`: the
-  * registry field model of payload `k`. A NULL `k` has slots too
-  * (every residue takes its ELSE branch), so the result is never NULL.
+/** `graft_avro_slots(bigint[, member, ...]) -> array<struct<fname,
+  * ftype, fnull, fdefault, fsyms, funion, fmask, falias, present>>`,
+  * or with `profile` set `graft_avro_profile(bigint) -> array<int>`:
+  * the registry field model of payload `k`. Member names, as string
+  * literals, cut the struct to those members: Catalyst builds and
+  * copies every member of an array-of-struct whether read or not. A
+  * NULL `k` has slots too (every residue takes its ELSE branch), so
+  * the result is never NULL.
   */
-case class AvroSlotsExpr(child: Expression, profile: Boolean = false)
+case class AvroSlotsExpr(child: Expression, profile: Boolean = false, members: Seq[String] = Nil)
     extends UnaryExpression with ImplicitCastInputTypes {
+  require(members.forall(AvroFields.slotType.fieldNames.contains), s"unknown slot members $members")
+  private lazy val memberIdx: Array[Int] = AvroFields.slotType.fieldNames.indices
+    .filter(i => members.isEmpty || members.contains(AvroFields.slotType(i).name)).toArray
   override def inputTypes: Seq[DataType] = Seq(LongType)
   override def nullable: Boolean = false
   override def dataType: DataType =
     if (profile) ArrayType(IntegerType, containsNull = false)
-    else ArrayType(Native.slotType, containsNull = false)
+    else ArrayType(StructType(memberIdx.map(AvroFields.slotType(_))), containsNull = false)
   override def eval(input: InternalRow): Any = {
     val k = child.eval(input)
-    Native.avroSlots(k == null, if (k == null) 0L else k.asInstanceOf[Long], profile)
+    Native.avroSlots(k == null, if (k == null) 0L else k.asInstanceOf[Long], profile, memberIdx)
   }
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val k = child.genCode(ctx)
+    val idx = ctx.addReferenceObj("members", memberIdx, "int[]")
     ev.copy(code = code"""
       |${k.code}
       |${CodeGenerator.javaType(dataType)} ${ev.value} =
-      |  graft.functions.Native.avroSlots(${k.isNull}, ${k.value}, $profile);""".stripMargin,
+      |  graft.functions.Native.avroSlots(${k.isNull}, ${k.value}, $profile, $idx);""".stripMargin,
       isNull = FalseLiteral)
   }
   override protected def withNewChildInternal(newChild: Expression): AvroSlotsExpr =

@@ -238,12 +238,14 @@ object Compat {
     * `withLag`, the previous version's `w_all` / `w_flds` (NULL for
     * version 1). ONE shuffle, the subject window. The scans pair the
     * positional arrays by element_at (codegen'd); the set views serve
-    * the diff and latest-version tools.
+    * the diff and latest-version tools. Non-empty `members` builds
+    * only those struct members and `present`.
     */
-  private[graft] def fieldArrays(s: SparkSession, dir: String,
+  private[graft] def fieldArrays(s: SparkSession, dir: String, members: Seq[String] = Nil,
                                  withLag: Boolean = true): DataFrame = {
+    val cut = if (members.isEmpty) "" else (members :+ "present").distinct.map(m => s", '$m'").mkString
     val base = versions(s, dir)
-      .withColumn("flds_all", expr("graft_avro_slots(k)"))
+      .withColumn("flds_all", expr(s"graft_avro_slots(k$cut)"))
       .withColumn("flds", filter(col("flds_all"), fld => fld("present")))
     if (!withLag) base
     else base

@@ -23,7 +23,8 @@ object Intelligence {
     val w = Window.partitionBy(col("subject"))
     // the lag window (w_all) is never built: the latest-version tools
     // diff nothing
-    Compat.fieldArrays(s, dir, withLag = false)
+    Compat.fieldArrays(s, dir, Seq("fname", "ftype", "fnull", "fdefault", "fsyms"),
+        withLag = false)
       .withColumn("maxv", max(col("version")).over(w))
       .filter(col("version") === col("maxv"))
       .select(col("subject"), explode(col("flds")).as("f"))
@@ -145,7 +146,9 @@ object Intelligence {
     // resolution): a renamed slot counts as one removal + one
     // addition, so presence comparisons also require name equality.
     def sameName(i: Int) = r(i)("fname") === wf(i)("fname")
-    Compat.fieldArrays(s, dir)
+    // the diff reads name/type/null/present per slot; the struct's
+    // other members would be built and lagged for nothing
+    Compat.fieldArrays(s, dir, Seq("fname", "ftype", "fnull"))
       .filter(col("version") > 1)
       .select(col("subject"), col("version"),
         cnt(i => r(i)("present") && !(wf(i)("present") && sameName(i))).as("n_added"),
@@ -216,7 +219,7 @@ object Intelligence {
     */
   def evolutionSuggest(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("subject"))
-    val latest = Compat.fieldArrays(s, dir)
+    val latest = Compat.fieldArrays(s, dir, Seq("fname", "ftype", "fnull", "fdefault"))
       .withColumn("maxv", max(col("version")).over(w))
       .filter(col("version") === col("maxv"))
     // current fields, then the fields the latest version dropped
@@ -302,7 +305,7 @@ object Intelligence {
     */
   def compareSubjects(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("subject"))
-    val latestArr = Compat.fieldArrays(s, dir, withLag = false)
+    val latestArr = Compat.fieldArrays(s, dir, Seq("fname", "ftype"), withLag = false)
       .withColumn("maxv", max(col("version")).over(w))
       .filter(col("version") === col("maxv"))
       .select(col("subject"), col("flds"))

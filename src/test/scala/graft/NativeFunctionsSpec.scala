@@ -277,4 +277,18 @@ class NativeFunctionsSpec extends SparkSpec {
     assert(slots(1).isNullAt(2) && !slots(2).getBoolean(8) && !slots(4).getBoolean(8))
     assert(r.getSeq[Int](1) == graft.compat.AvroFields.slots(None).map(graft.compat.AvroFields.profile))
   }
+
+  test("graft_avro_slots with member names builds those members, in the model's order") {
+    Native.register(spark)
+    val df = spark.range(0, 400).toDF().union(spark.range(1).selectExpr("CAST(NULL AS BIGINT) AS id"))
+      .selectExpr("graft_avro_slots(id) AS s", "graft_avro_slots(id, 'present', 'fnull', 'fname') AS c")
+    val st = df.schema("c").dataType.asInstanceOf[org.apache.spark.sql.types.ArrayType]
+      .elementType.asInstanceOf[org.apache.spark.sql.types.StructType]
+    assert(st.fieldNames.toSeq == Seq("fname", "fnull", "present"))
+    assert(st.map(_.nullable) == Seq(false, true, false))
+    val cut = df.selectExpr("transform(s, f -> struct(f.fname, f.fnull, f.present)) <=> " +
+      "transform(c, f -> struct(f.fname, f.fnull, f.present)) AS same")
+    assert(cut.collect().forall(_.getBoolean(0)))
+    intercept[Exception](spark.range(1).selectExpr("graft_avro_slots(id, 'nope')").schema)
+  }
 }
