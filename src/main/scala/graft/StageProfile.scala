@@ -3,7 +3,10 @@ package graft
 /** Per-stage breakdown of where a query's wall time goes (guide §1:
   * measure first, map stages back to operators). For each named query:
   * runs it [[iters]] times with Bench's materialization (toRdd.count),
-  * prints every run's wall and, for the LAST run, one line per stage —
+  * prints every run's wall and its construct / plan / exec split
+  * (building the DataFrame, which includes any jobs an operator runs
+  * while it is built; `executedPlan`; `toRdd.count()`) and, for the
+  * LAST run, one line per stage —
   * task count, summed task run/cpu seconds, stage wall
   * (submission→completion), shuffle read/write bytes — plus the job
   * count. Sequential stage walls that sum to the query wall reveal
@@ -26,18 +29,26 @@ object StageProfile {
 
     names.foreach { n =>
       val fn = SparkEntry.queries(n)
-      def once(): Double = {
+      /** (construct, plan, exec) seconds of one run */
+      def once(): Seq[Double] = {
         val t0 = System.nanoTime()
-        fn(spark, sfDir).queryExecution.toRdd.count()
-        (System.nanoTime() - t0) / 1e9
+        val qe = fn(spark, sfDir).queryExecution
+        val t1 = System.nanoTime()
+        qe.executedPlan
+        val t2 = System.nanoTime()
+        qe.toRdd.count()
+        val t3 = System.nanoTime()
+        Seq(t1 - t0, t2 - t1, t3 - t2).map(_ / 1e9)
       }
-      val walls = (1 to iters).map { i =>
+      val splits = (1 to iters).map { i =>
         val s = if (i == iters) metrics.record(once()) else once()
         spark.catalog.clearCache()
         s
       }
       val rows = metrics.stages.toSeq.sortBy(_._1)
-      println(f"==== $n walls=${walls.map(w => f"$w%.3f").mkString(" ")} jobs=${metrics.jobs} stages=${rows.size}")
+      println(f"==== $n walls=${splits.map(w => f"${w.sum}%.3f").mkString(" ")} " +
+        s"split=${splits.map(_.map(x => f"$x%.3f").mkString("/")).mkString(" ")} " +
+        s"jobs=${metrics.jobs} stages=${rows.size}")
       rows.foreach { case (id, s) =>
         println(f"  stage $id%4d tasks=${s.tasks}%4d wall=${s.wallMs / 1e3}%7.3f task=${s.runMs / 1e3}%8.3f cpu=${s.cpuNs / 1e9}%8.3f sr=${s.srBytes}%10d sw=${s.swBytes}%10d  ${s.name}")
       }

@@ -23,7 +23,7 @@ object Verify {
       spark.catalog.clearCache()
     }
     // reg_similar's oracle enumerates ALL identity-class pairs, but
-    // the Spark side excludes classes larger than graft.similar.dfCap
+    // the Spark side excludes classes larger than its dfCap
     // — parity is only meaningful when nothing was dropped. Surface a
     // loud warning if the guard ever fires on this corpus (the driver
     // treats stderr lines as diagnostics, not failures).

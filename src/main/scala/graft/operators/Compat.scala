@@ -205,17 +205,26 @@ object Compat {
     }.toDF("case_id", "description", "mode", "compatible", "n_messages")
   }
 
-  /** The version order of a subject's registrations: (ts, event_id).
-    * Every window over it shares one sort, that of the row_number
-    * window that defines `version`.
+  /** A registration's payload `k` as `props` carries it (NULL when it
+    * lacks one) — the one input every synthetic schema model derives
+    * from; [[versions]] casts it to bigint.
     */
-  private val versionOrder =
+  private[operators] val payloadK: Column = get_json_object(col("props"), "$.k")
+
+  /** The version order of a subject's registrations: (ts, event_id).
+    * The one version window: every model's `version`, lag and
+    * running history shares its sort, that of the row_number window
+    * that defines `version` in [[versions]].
+    */
+  private[operators] val versionOrder =
     Window.partitionBy(col("subject")).orderBy(col("ts"), col("event_id"))
 
   /** (subject, ts, event_id, k, version): every events row is a
-    * registration for its subject (user_id), in version order.
+    * registration for its subject (user_id), in version order. The
+    * one registration stream: every schema model (Avro, nested paths,
+    * named types, Protobuf) and the registry's version cards read it.
     */
-  private def versions(s: SparkSession, dir: String): DataFrame = {
+  private[operators] def versions(s: SparkSession, dir: String): DataFrame = {
     graft.functions.Native.register(s)
     // spread on the window key: on a single-row-group events file
     // the JSON parse serialized on the one scan task
@@ -228,18 +237,17 @@ object Compat {
       Tables.events(s, dir).select(
         col("user_id").as("subject"), col("ts"), col("event_id"), col("props")),
       col("subject"))
-      .select(col("subject"), col("ts"), col("event_id"),
-        get_json_object(col("props"), "$.k").cast("bigint").as("k"))
+      .select(col("subject"), col("ts"), col("event_id"), payloadK.cast("bigint").as("k"))
       .withColumn("version", row_number().over(versionOrder))
   }
 
   /** [[versions]] plus `flds_all`, the ten positional slot structs
     * of [[AvroFields.slots]], `flds` (the present ones) and, with
-    * `withLag`, the previous version's `w_all` / `w_flds` (NULL for
-    * version 1). ONE shuffle, the subject window. The scans pair the
-    * positional arrays by element_at (codegen'd); the set views serve
-    * the diff and latest-version tools. Non-empty `members` builds
-    * only those struct members and `present`.
+    * `withLag`, the previous version's `w_all` (NULL for version 1).
+    * ONE shuffle, the subject window. The scans pair the positional
+    * arrays through [[slotPairs]]; the set view serves the latest-
+    * version tools. Non-empty `members` builds only those struct
+    * members and `present`.
     */
   private[graft] def fieldArrays(s: SparkSession, dir: String, members: Seq[String] = Nil,
                                  withLag: Boolean = true): DataFrame = {
@@ -248,9 +256,7 @@ object Compat {
       .withColumn("flds_all", expr(s"graft_avro_slots(k$cut)"))
       .withColumn("flds", filter(col("flds_all"), fld => fld("present")))
     if (!withLag) base
-    else base
-      .withColumn("w_all", lag(col("flds_all"), 1).over(versionOrder))
-      .withColumn("w_flds", filter(col("w_all"), fld => fld("present")))
+    else base.withColumn("w_all", lag(col("flds_all"), 1).over(versionOrder))
   }
 
   /** DuckDB mirror of [[fieldArrays]]' relational (subject, version,
@@ -302,23 +308,28 @@ object Compat {
       |  SELECT *, CASE WHEN fname IN ('nick', 'nickname') THEN 'nick' ELSE fname END AS fid
       |  FROM fields0)""".stripMargin
 
-  /** Version N's slots paired positionally with version N-1's: one
-    * row per present slot of the `reader` array (`rf`) with the same
-    * slot of the `writer` array (`wf`). Both arrays share the fixed
-    * nSlots-wide layout, so the reader↔writer field match is
+  /** Version N's slots paired positionally with version N-1's, for
+    * every schema model: one (subject, version, `carry`..., pos, rf,
+    * wf) row per slot of the `reader` array (`rf`) with the same slot
+    * of the `writer` array (`wf`), for version > 1. A model's two
+    * arrays share one fixed layout, so the reader↔writer match is
     * element_at by the posexploded index (codegen'd), not a
-    * filter-by-fname HOF probe. BACKWARD reads (flds_all, w_all);
-    * FORWARD swaps the roles: the OLD version's slot reads the current
-    * version's.
+    * filter-by-key HOF probe. `carry` names per-version columns the
+    * caller's verdict still reads. The callers keep their own row
+    * filter (which slots count); BACKWARD pairs (current, lagged),
+    * FORWARD swaps the roles.
     */
-  private def slotPairs(s: SparkSession, dir: String,
-                        reader: String, writer: String): DataFrame =
-    fieldArrays(s, dir).filter(col("version") > 1)
-      .select(col("subject"), col("version"), col(writer),
-        posexplode(col(reader)).as(Seq("pos", "rf")))
-      .where(col("rf.present"))
-      .select(col("subject"), col("version"), col("rf"),
-        element_at(col(writer), col("pos") + 1).as("wf"))
+  private[operators] def slotPairs(model: DataFrame, reader: String, writer: String,
+                                   carry: String*): DataFrame =
+    model.filter(col("version") > 1)
+      .select((Seq(col("subject"), col("version")) ++ carry.map(col) :+ col(writer) :+
+        posexplode(col(reader)).as(Seq("pos", "rf"))): _*)
+      .withColumn("wf", element_at(col(writer), col("pos") + 1))
+      .drop(writer)
+
+  /** The Avro scans' pairs: the reader's present slots. */
+  private def avroPairs(s: SparkSession, dir: String, reader: String, writer: String): DataFrame =
+    slotPairs(fieldArrays(s, dir), reader, writer).where(col("rf.present"))
 
   /** The avro/checker.go rules on one (reader, writer) slot pair, each
     * as a flag named by its violation class: (:129) a reader field
@@ -354,15 +365,18 @@ object Compat {
         size(array_except(split(w("fsyms"), ","), split(r("fsyms"), ","))) > 0))
   }
 
-  /** One (subject, version) verdict over [[slotPairs]]: the slot count
-    * and how many slots break some rule of [[pairRules]].
+  /** One (subject, version) verdict over [[slotPairs]]: the pair
+    * count and how many pairs break (`violation`).
     */
-  private def stepVerdict(pairs: DataFrame, nName: String, okName: String): DataFrame =
+  private def stepVerdict(pairs: DataFrame, violation: Column,
+                          nName: String, okName: String): DataFrame =
     pairs.groupBy(col("subject"), col("version"))
       .agg(count(lit(1)).as(nName),
-        sum(when(pairRules(col("rf"), col("wf")).map(_._2).reduce(_ || _), 1L)
-          .otherwise(0L)).as("n_violations"))
+        sum(when(violation, 1L).otherwise(0L)).as("n_violations"))
       .withColumn(okName, col("n_violations") === 0)
+
+  /** Some rule of [[pairRules]] fires on the (rf, wf) pair. */
+  private val avroViolation: Column = pairRules(col("rf"), col("wf")).map(_._2).reduce(_ || _)
 
   /** Data-driven BACKWARD compatibility over the whole corpus
     * (checker.go:39 Check iterates a subject's version history): every
@@ -374,7 +388,7 @@ object Compat {
     * subject partition.
     */
   def compatScan(s: SparkSession, dir: String): DataFrame =
-    stepVerdict(slotPairs(s, dir, "flds_all", "w_all"), "n_fields", "compatible")
+    stepVerdict(avroPairs(s, dir, "flds_all", "w_all"), avroViolation, "n_fields", "compatible")
 
   /** One (subject, version, fname, violation) row per fired rule —
     * the classification stated ONCE and shared by [[compatExplain]]
@@ -387,7 +401,7 @@ object Compat {
     // interpreted, and with the rules inlined into it compat_explain
     // took about twice the task CPU at sf0.1.
     val rules = pairRules(col("rf"), col("wf"))
-    slotPairs(s, dir, "flds_all", "w_all")
+    avroPairs(s, dir, "flds_all", "w_all")
       .select(Seq(col("subject"), col("version"), col("rf.fname").as("fname")) ++
         rules.map { case (name, fired) => fired.as(name) }: _*)
       .select(col("subject"), col("version"), col("fname"),
@@ -439,7 +453,7 @@ object Compat {
   def enumDrift(s: SparkSession, dir: String): DataFrame = {
     val r = col("rf")
     val wf = col("wf")
-    slotPairs(s, dir, "flds_all", "w_all")
+    avroPairs(s, dir, "flds_all", "w_all")
       .where(r("ftype") === "enum" && wf("present") && wf("ftype") === "enum" &&
         wf("fname") === r("fname"))
       .select(col("subject"), col("version"), r("fname").as("fname"),
@@ -488,7 +502,7 @@ object Compat {
     * int → reader bigint stays legal).
     */
   def compatForwardScan(s: SparkSession, dir: String): DataFrame =
-    stepVerdict(slotPairs(s, dir, "w_all", "flds_all"), "n_reader_fields", "forward_ok")
+    stepVerdict(avroPairs(s, dir, "w_all", "flds_all"), avroViolation, "n_reader_fields", "forward_ok")
 
   // ---------------------------------------------------------------
   // The two transitive scans and [[compatGate]] read the packed slot
@@ -881,10 +895,6 @@ object Compat {
     *  - attrs{} flips int↔string (breaks BOTH directions).
     */
   private[operators] def pathArrays(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(s, dir).select(
-      col("user_id").as("subject"), col("ts"), col("event_id"),
-      get_json_object(col("props"), "$.k").cast("bigint").as("k"))
-    val w = Window.partitionBy(col("subject")).orderBy(col("ts"), col("event_id"))
     // never NULL: a NULL k leaves a conditional path ABSENT, as the
     // oracle's `WHERE` drops it (see fieldArrays)
     def p(path: String, ptype: Column, pnull: Column, present: Column,
@@ -892,8 +902,7 @@ object Compat {
       struct(lit(path).as("path"), ptype.as("ptype"), pnull.as("pnull"),
         pmask.as("pmask"), coalesce(present, lit(false)).as("present"))
     val geoPresent = col("k") % lit(5) < 3
-    ev
-      .withColumn("version", row_number().over(w))
+    versions(s, dir)
       .withColumn("paths_all", array(
         p("meta", lit("record"), lit(false), lit(true), lit(2048)),
         p("meta.score", when(col("k") % lit(4) < 2, "int").otherwise("bigint"),
@@ -906,7 +915,7 @@ object Compat {
           lit(true), lit(true), when(col("k") % lit(8) < 5, 16).otherwise(32)),
         p("attrs{}", when(col("k") % lit(6) < 3, "int").otherwise("string"),
           lit(true), lit(true), when(col("k") % lit(6) < 3, 1).otherwise(16))))
-      .withColumn("w_paths", lag(col("paths_all"), 1).over(w))
+      .withColumn("w_paths", lag(col("paths_all"), 1).over(versionOrder))
   }
 
   /** DuckDB mirror of [[pathArrays]]' relational (subject, version,
@@ -938,28 +947,19 @@ object Compat {
     * with the same reader/writer rules the flat scan applies per
     * field — the relational re-expression of checkSchemas' recursion
     * (each recursive call IS a path row; array items and map values
-    * are the `[]`/`{}` child paths). Same one-window positional
-    * shape as [[slotPairs]].
+    * are the `[]`/`{}` child paths). The reader's present paths, paired
+    * by [[slotPairs]] and judged by [[stepVerdict]], as the flat scan.
     */
   def nestedScan(s: SparkSession, dir: String): DataFrame = {
-    val versioned = pathArrays(s, dir).filter(col("version") > 1)
-    val perPath = versioned
-      .select(col("subject"), col("version"), col("w_paths"),
-        posexplode(col("paths_all")).as(Seq("pos", "pth")))
-      .where(col("pth.present"))
-      .withColumn("wp", element_at(col("w_paths"), col("pos") + 1))
-    val r = col("pth")
-    val wp = col("wp")
+    val r = col("rf")
+    val wp = col("wf")
     val violation =
       (!wp("present") && !r("pnull")) ||
         (wp("present") &&
           wp("pmask").bitwiseAND(acceptsOf(r("pmask"))) =!= wp("pmask")) ||
         (wp("present") && !r("pnull") && wp("pnull"))
-    perPath
-      .groupBy(col("subject"), col("version"))
-      .agg(count(lit(1)).as("n_paths"),
-        sum(when(violation, 1L).otherwise(0L)).as("n_violations"))
-      .withColumn("nested_ok", col("n_violations") === 0)
+    stepVerdict(slotPairs(pathArrays(s, dir), "paths_all", "w_paths").where(r("present")),
+      violation, "n_paths", "nested_ok")
   }
 
   /** Named-type NAME scan over the corpus: each version carries three
@@ -979,17 +979,13 @@ object Compat {
     * rescue path executes on data, not just in the battery.
     */
   def namedScan(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("subject")).orderBy(col("ts"), col("event_id"))
     val k = col("k")
     val wk = col("w_k")
     def b(c: Column): Column = when(c, 1L).otherwise(0L)
     val recRenamed = (k % 21 < 11) =!= (wk % 21 < 11)
     val rescued = (k % 37 < 19) || (wk % 37 < 19)
-    Tables.events(s, dir)
-      .select(col("user_id").as("subject"), col("ts"), col("event_id"),
-        get_json_object(col("props"), "$.k").cast("bigint").as("k"))
-      .withColumn("version", row_number().over(w))
-      .withColumn("w_k", lag(col("k"), 1).over(w))
+    versions(s, dir)
+      .withColumn("w_k", lag(col("k"), 1).over(versionOrder))
       .filter(col("version") > 1)
       .select(col("subject"), col("version"),
         (b(recRenamed && !rescued) +

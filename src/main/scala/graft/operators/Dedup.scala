@@ -404,8 +404,9 @@ object Dedup {
       .crossJoin(cand.agg(count(lit(1)).as("n_candidates")))
       .crossJoin(hits.agg(count(lit(1)).as("n_hit")))
       .select(col("n_true"), col("n_candidates"), col("n_hit"),
-        (floor(col("n_hit") / col("n_true").cast("double") * 10000 + 0.5) / lit(10000.0))
-          .as("recall"))
+        // NULL with no truth pairs, as the oracle's x / 0.0
+        (floor(try_divide(col("n_hit"), col("n_true").cast("double")) * 10000 + 0.5) /
+          lit(10000.0)).as("recall"))
   }
 
   /** Document-frequency cap of the [[winnow]] and [[substringRuns]]

@@ -21,9 +21,13 @@ import org.apache.spark.sql.functions._
   *    optional property breaks against an open WRITER (the old
   *    producer may have used that name with any type).
   *
-  * Both scans reuse the shared registration stream (one subject
-  * window shuffle; everything past the lag() is row-local array
-  * probing), mirroring the shape proven by [[Compat.compatScan]].
+  * Both models version their registrations on [[Compat.versionOrder]]
+  * and both scans pair version N with N-1 through [[Compat.slotPairs]],
+  * as [[Compat.compatScan]] does. The Protobuf model reads the shared
+  * registration stream, [[Compat.versions]] (one subject-keyed
+  * shuffle; everything past the lag() is row-local array probing);
+  * the JSON Schema model runs its external-$ref as-of pass first, on
+  * its own two-sided source (see [[jsFieldArrays]]).
   */
 object FormatCompat {
 
@@ -70,18 +74,13 @@ object FormatCompat {
     *    could never see).
     */
   private[graft] def pbFieldArrays(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(s, dir).select(
-      col("user_id").as("subject"), col("ts"), col("event_id"),
-      get_json_object(col("props"), "$.k").cast("bigint").as("k"))
-    val w = Window.partitionBy(col("subject")).orderBy(col("ts"), col("event_id"))
     val noOneof = lit(null).cast("string")
     def f(fkey: String, fname: Column, kind: Column, card: Column,
           oneof: Column, present: Column): Column =
       struct(lit(fkey).as("fkey"), fname.as("fname"), kind.as("kind"),
         card.as("card"), oneof.as("oneof"), present.as("present"))
     val addrPresent = col("k") % 4 < 3
-    ev
-      .withColumn("version", row_number().over(w))
+    Compat.versions(s, dir)
       .withColumn("pb_all", array(
         f("1", lit("id"), lit("int64"), lit("optional"), noOneof, lit(true)),
         f("2", when(col("k") % 2 === 0, "name").otherwise("title"),
@@ -113,12 +112,12 @@ object FormatCompat {
             .otherwise("string"),
           lit("optional"), noOneof, lit(true))
       ))
-      .withColumn("w_all", lag(col("pb_all"), 1).over(w))
+      .withColumn("w_all", lag(col("pb_all"), 1).over(Compat.versionOrder))
       // writer payload for the FILE-level surface ([[topSurface]]):
       // message/enum/service presence and method signatures derive
       // row-locally from k, so the previous version's whole surface
       // is one extra lag on the SAME window — no second shuffle.
-      .withColumn("w_k", lag(col("k"), 1).over(w))
+      .withColumn("w_k", lag(col("k"), 1).over(Compat.versionOrder))
       // present-only views for set-shaped consumers (specs); the scan
       // itself pairs slots positionally on the unfiltered arrays
       .withColumn("pb", filter(col("pb_all"), fld => fld("present")))
@@ -253,8 +252,9 @@ object FormatCompat {
     * Renames at the same number are wire-compatible (:270) and
     * reported as `n_renames` — the tally that PROVES number-keyed
     * matching, since the name-keyed Avro model would flag them.
-    * Row-local past the one lag() window: each step explodes the
-    * union of its two versions' field numbers and probes both arrays.
+    * Row-local past the one lag() window: each step pairs its two
+    * versions' field slots ([[Compat.slotPairs]]) and keeps the keys
+    * present on either side.
     *
     * The scan also carries the FILE-level verdict ([[topSurface]]):
     * message removal, service/method removal, method signature and
@@ -266,30 +266,23 @@ object FormatCompat {
     */
   def protoScan(s: SparkSession, dir: String): DataFrame = {
     val tops = topSurface(col("k"), col("w_k"))
-    val versioned = pbFieldArrays(s, dir).filter(col("version") > 1)
-      .withColumns(tops)
-    // Positional slot pairing (same shape as the Avro scans): both
-    // versions share the fixed 12-slot layout, so the reader↔writer
-    // key match is element_at by the posexploded index — codegen'd —
-    // instead of two filter-by-fkey HOF probes per key. Absence is
-    // the slot's present flag, surfaced as NULL kind (what the
-    // rules' IS NULL arms already consume).
-    val perKey = versioned
-      .select((Seq(col("subject"), col("version"), col("w_all")) ++
-        tops.keys.toSeq.sorted.map(col) :+
-        posexplode(col("pb_all")).as(Seq("pos", "rf"))): _*)
-      .withColumn("wfp", element_at(col("w_all"), col("pos") + 1))
-      .where(col("rf.present") || col("wfp.present"))
+    val topNames = tops.keys.toSeq.sorted
+    // every key present on either side counts: absence is the slot's
+    // present flag, surfaced as NULL kind (what the rules' IS NULL
+    // arms already consume)
+    val perKey = Compat.slotPairs(pbFieldArrays(s, dir).withColumns(tops), "pb_all", "w_all",
+        topNames: _*)
+      .where(col("rf.present") || col("wf.present"))
     def side(f: Column): Seq[Column] = Seq(
       when(f("present"), f("fname")), when(f("present"), f("kind")),
       when(f("present"), f("card")), when(f("present"), f("oneof")))
     val Seq(rn, rk, rc, ro) = side(col("rf"))
-    val Seq(wn, wk, wc, wo) = side(col("wfp"))
+    val Seq(wn, wk, wc, wo) = side(col("wf"))
     val probed = perKey.select((Seq(
       col("subject"), col("version"),
       rn.as("r_name"), rk.as("r_kind"), rc.as("r_card"), ro.as("r_oneof"),
       wn.as("w_name"), wk.as("w_kind"), wc.as("w_card"), wo.as("w_oneof")) ++
-      tops.keys.toSeq.sorted.map(col)): _*)
+      topNames.map(col)): _*)
     val bothPresent = col("r_kind").isNotNull && col("w_kind").isNotNull
     val scalarKind = (k: Column) => !k.isin("string", "bytes", "message")
     val violation =
@@ -319,7 +312,7 @@ object FormatCompat {
           sum(when(violation, 1L).otherwise(0L)).as("n_violations")) ++
           // file-level tallies are constant per (subject, version) —
           // max() just re-surfaces them through the aggregate
-          tops.keys.toSeq.sorted.map(n => max(col(n)).as(n))): _*)
+          topNames.map(n => max(col(n)).as(n))): _*)
       .withColumn("proto_ok", col("n_violations") + col("n_msg_removed") +
         col("n_svc_removed") + col("n_method_removed") +
         col("n_method_changed") === 0)
@@ -340,9 +333,6 @@ object FormatCompat {
     * REQUIRED property (checker.go:342).
     */
   private[graft] def jsFieldArrays(s: SparkSession, dir: String): DataFrame = {
-    val ev0 = Tables.events(s, dir).select(
-      col("user_id").as("subject"), col("ts"), col("event_id"),
-      get_json_object(col("props"), "$.k").cast("bigint").as("k"))
     // EXTERNAL $ref resolution (checker.go:133-:155
     // buildExternalRefMap): a property may reference another
     // SUBJECT's registered definition via the references table — the
@@ -358,25 +348,36 @@ object FormatCompat {
     // self-join, no per-pair shuffle: one exchange keyed by the
     // referenced subject, the shape that survives a registry of any
     // size.
-    val xdef = when(col("k") % 25 < 13, "string").otherwise("object")
+    //
+    // Unlike the other models this one does not read [[Compat
+    // .versions]]: the as-of pass is keyed by the partner subject, so
+    // behind the subject-keyed stream it would add an exchange and
+    // lose the subject partitioning the scan's aggregate reads. It
+    // runs first instead, `k` is parsed behind its keyed spread, in
+    // parallel, and the version window (Compat.versionOrder) follows.
+    val ev0 = Tables.events(s, dir).select(
+      col("user_id").as("subject"), col("ts"), col("event_id"), col("props"))
     val ev = {
       val defsSide = ev0.select(col("subject").as("xkey"), col("ts"),
-        col("event_id"), lit("d").as("side"), xdef.as("xdef"),
-        lit(null).cast("bigint").as("rsubject"), lit(null).cast("bigint").as("k"))
+        col("event_id"), lit("d").as("side"), col("props"),
+        lit(null).cast("bigint").as("rsubject"))
       val lookupSide = ev0.select(col("subject").bitwiseXOR(lit(1)).as("xkey"),
-        col("ts"), col("event_id"), lit("q").as("side"),
-        lit(null).cast("string").as("xdef"),
-        col("subject").as("rsubject"), col("k"))
+        col("ts"), col("event_id"), lit("q").as("side"), col("props"),
+        col("subject").as("rsubject"))
       val wx = Window.partitionBy(col("xkey"))
         .orderBy(col("ts"), col("side"), col("event_id"))
         .rowsBetween(Window.unboundedPreceding, 0)
-      defsSide.unionByName(lookupSide)
-        .withColumn("xaddr", last(col("xdef"), ignoreNulls = true).over(wx))
+      val xdef = when(col("side") === "d",
+        when(col("k") % 25 < 13, "string").otherwise("object"))
+      Tables.spread(defsSide.unionByName(lookupSide), col("xkey"))
+        .select(col("xkey"), col("ts"), col("event_id"), col("side"), col("rsubject"),
+          Compat.payloadK.cast("bigint").as("k"))
+        .withColumn("xaddr", last(xdef, ignoreNulls = true).over(wx))
         .where(col("side") === "q")
         .select(col("rsubject").as("subject"), col("ts"), col("event_id"),
           col("k"), col("xaddr"))
     }
-    val w = Window.partitionBy(col("subject")).orderBy(col("ts"), col("event_id"))
+    val w = Compat.versionOrder
     val noEnum = lit(null).cast("string")
     val noBound = lit(null).cast("int")
     val noStr = lit(null).cast("string")
@@ -655,16 +656,11 @@ object FormatCompat {
     * one extra as-of pass described at [[jsFieldArrays]].
     */
   def jsonScan(s: SparkSession, dir: String): DataFrame = {
-    val versioned = jsFieldArrays(s, dir).filter(col("version") > 1)
-    // Positional slot pairing — see [[protoScan]]'s note.
-    val perProp = versioned
-      .select(col("subject"), col("version"), col("open"), col("w_open"),
-        col("defaddr"), col("w_defaddr"), col("xaddr"), col("w_xaddr"),
-        col("minp"), col("maxp"), col("w_minp"), col("w_maxp"),
-        col("jnot"), col("w_jnot"),
-        col("w_all"), posexplode(col("props_all")).as(Seq("pos", "rp")))
-      .withColumn("wp", element_at(col("w_all"), col("pos") + 1))
-      .where(col("rp.present") || col("wp.present"))
+    val schemaLevel = Seq("open", "w_open", "defaddr", "w_defaddr", "xaddr", "w_xaddr",
+      "minp", "maxp", "w_minp", "w_maxp", "jnot", "w_jnot")
+    // every property present on either side counts
+    val perProp = Compat.slotPairs(jsFieldArrays(s, dir), "props_all", "w_all", schemaLevel: _*)
+      .where(col("rf.present") || col("wf.present"))
     def side(f: Column): Seq[Column] = Seq(
       when(f("present"), f("ptype")), when(f("present"), f("preq")),
       when(f("present"), f("penum")), when(f("present"), f("pmin")),
@@ -676,14 +672,11 @@ object FormatCompat {
       when(f("present"), f("pconst")), when(f("present"), f("pdsch")),
       when(f("present"), f("pitems")))
     val Seq(rt, rq, re, rmin, rmax, ra, rd, rtu, ral,
-      rpat, rmul, rmi, rma, run, rco, rds, rit) = side(col("rp"))
+      rpat, rmul, rmi, rma, run, rco, rds, rit) = side(col("rf"))
     val Seq(wt, wq, we, wmin, wmax, wa, wd, wtu, wal,
-      wpat, wmul, wmi, wma, wun, wco, wds, wit) = side(col("wp"))
-    val probed = perProp.select(
-      col("subject"), col("version"), col("open"), col("w_open"),
-      col("defaddr"), col("w_defaddr"), col("xaddr"), col("w_xaddr"),
-      col("minp"), col("maxp"), col("w_minp"), col("w_maxp"),
-      col("jnot"), col("w_jnot"),
+      wpat, wmul, wmi, wma, wun, wco, wds, wit) = side(col("wf"))
+    val probed = perProp.select((Seq(col("subject"), col("version")) ++
+      schemaLevel.map(col) ++ Seq(
       rt.as("r_type"), rq.as("r_req"), re.as("r_enum"),
       rmin.as("r_min"), rmax.as("r_max"), ra.as("r_alts"),
       rd.as("r_dep"), rtu.as("r_tuple"), ral.as("r_all"),
@@ -695,7 +688,7 @@ object FormatCompat {
       wd.as("w_dep"), wtu.as("w_tuple"), wal.as("w_all"),
       wpat.as("w_pat"), wmul.as("w_mul"), wmi.as("w_minit"),
       wma.as("w_maxit"), wun.as("w_uniq"), wco.as("w_const"), wds.as("w_dsch"),
-      wit.as("w_items"))
+      wit.as("w_items"))): _*)
     val both = col("r_type").isNotNull && col("w_type").isNotNull
     def cnt(cond: Column): Column = sum(when(cond, 1L).otherwise(0L))
     // $ref resolution (checker.go:155 resolveAllRefs): replace a

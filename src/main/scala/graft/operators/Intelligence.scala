@@ -46,13 +46,18 @@ object Intelligence {
     * |set| and jaccard = 1.0 exactly for identical sets).
     *
     * Identity-class cap: pair enumeration inside one identity class
-    * is class², so classes larger than graft.similar.dfCap are
+    * is class², so classes larger than [[DfCap]] are
     * excluded from pair generation (a degenerate corpus where
     * thousands of subjects share one schema stays output-bounded);
     * [[similarDropReport]] is the no-silent-cap accounting query.
     */
-  def similarSchemas(s: SparkSession, dir: String): DataFrame = {
-    val cap = s.conf.get("graft.similar.dfCap", "100000").toInt
+  def similarSchemas(s: SparkSession, dir: String): DataFrame = similarSchemasAt(s, dir, DfCap)
+
+  /** The largest identity class [[similarSchemas]] pairs within. */
+  private val DfCap = 100000
+
+  /** [[similarSchemas]] under identity-class cap `cap`. */
+  private[graft] def similarSchemasAt(s: SparkSession, dir: String, cap: Int): DataFrame = {
     val sigs = schemaSigs(s, dir)
     val capped = sigs.join(
       broadcast(sigs.groupBy(col("sig")).agg(count(lit(1)).as("df"))
@@ -72,14 +77,16 @@ object Intelligence {
     * cost negligible next to the pair join it guards. Subjects with a
     * NULL signature form no class: they pair with no one either way.
     */
-  def similarDropReport(s: SparkSession, dir: String): DataFrame = {
-    val cap = s.conf.get("graft.similar.dfCap", "100000").toInt
+  def similarDropReport(s: SparkSession, dir: String): DataFrame =
+    similarDropReportAt(s, dir, DfCap)
+
+  /** [[similarDropReport]] under identity-class cap `cap`. */
+  private[graft] def similarDropReportAt(s: SparkSession, dir: String, cap: Int): DataFrame =
     schemaSigs(s, dir).where(col("sig").isNotNull)
       .groupBy(col("sig")).agg(count(lit(1)).as("df"))
       .agg(sum(when(col("df") > cap, 1L).otherwise(0L)).as("n_dropped_signatures"),
         sum(when(col("df") > cap, col("df")).otherwise(0L)).as("n_dropped_postings"),
         count(lit(1)).as("n_signatures"))
-  }
 
   /** (subject, n, sig): the latest field count and the whole-set
     * signature, md5 of the sorted `fname:ftype:fnull` list. The sig is
@@ -220,6 +227,7 @@ object Intelligence {
   def evolutionSuggest(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("subject"))
     val latest = Compat.fieldArrays(s, dir, Seq("fname", "ftype", "fnull", "fdefault"))
+      .withColumn("w_flds", filter(col("w_all"), fld => fld("present")))
       .withColumn("maxv", max(col("version")).over(w))
       .filter(col("version") === col("maxv"))
     // current fields, then the fields the latest version dropped

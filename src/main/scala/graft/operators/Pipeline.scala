@@ -134,18 +134,19 @@ object Pipeline {
     * windows overlapping by O so no answer span straddles a cut),
     * distinct from [[packSequences]]' concat-then-chunk training
     * packing. Chunk i of a doc covers tokens [i·(C−O), min(i·(C−O)+C,
-    * n)); a doc yields ceil((n−C)/(C−O))+1 chunks (min 1). Sizes come
-    * from `graft.chunk.size`/`graft.chunk.overlap` (default 32/8 —
-    * corpus-scaled; the production shape is 512/64 and changes
-    * nothing structurally). Entirely row-local: the per-doc fan-out
+    * n)); a doc yields ceil((n−C)/(C−O))+1 chunks (min 1). C/O are
+    * 32/8 — corpus-scaled; the production shape is 512/64 and changes
+    * nothing structurally. Entirely row-local: the per-doc fan-out
     * is a bounded sequence() explode (expansion factor ≈ C/(C−O)),
     * then ONE partial-agg groupBy on source. The summary reports the
     * overlap duplication cost (total chunk tokens − corpus tokens) —
     * the storage price a corpus build pays for overlap.
     */
-  def chunkOverlap(s: SparkSession, dir: String): DataFrame = {
-    val c = s.conf.get("graft.chunk.size", "32").toInt
-    val stride = c - s.conf.get("graft.chunk.overlap", "8").toInt
+  def chunkOverlap(s: SparkSession, dir: String): DataFrame = chunkOverlapAt(s, dir, 32, 8)
+
+  /** [[chunkOverlap]] with C = `c` and O = `overlap`. */
+  private[graft] def chunkOverlapAt(s: SparkSession, dir: String, c: Int, overlap: Int): DataFrame = {
+    val stride = c - overlap
     require(stride > 0, "chunk overlap must be smaller than chunk size")
     Tables.documents(s, dir)
       .select(col("source"), col("doc_id"),

@@ -66,15 +66,12 @@ object Registry {
   }
 
   /** GetVersions (registry.go:538): dense version numbering per
-    * subject in registration order.
+    * subject in registration order — the shared version stream,
+    * [[Compat.versions]], with `subject` named back to `user_id`.
     */
-  def versions(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-    Tables.events(s, dir)
-      .withColumn("version", row_number().over(w))
-      .select(col("user_id"), col("event_id"), col("version"))
-  }
+  def versions(s: SparkSession, dir: String): DataFrame =
+    Compat.versions(s, dir)
+      .select(col("subject").as("user_id"), col("event_id"), col("version"))
 
   /** SchemaCountsByType (registry.go:521): groupBy counts over the
     * payload corpus, keyed by declared type (lang stands in).
@@ -883,22 +880,20 @@ object Registry {
   /** Metadata-filtered latest-version lookup (tools_metadata.go:269
     * handleGetSubjectMetadata: with a metadata filter, walk versions
     * newest-first and return the first whose properties match ALL
-    * filter entries). Re-expressed corpus-wide: version numbering in
-    * one window, the filter as a pushed predicate, and the
-    * newest-match via max/max_by — one shuffle, no per-subject walk.
+    * filter entries). Re-expressed corpus-wide: the shared version
+    * stream ([[Compat.versions]]), the filter over it, and the newest
+    * match via max/max_by — one shuffle, no per-subject walk.
     * Subjects with no matching version drop out (the reference
     * errors there). Metadata properties derive deterministically
     * from the payload (`stage` cycles dev/staging/prod with k).
     */
   def metaLatest(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val m = get_json_object(col("props"), "$.k").cast("bigint") % 3
-    Tables.events(s, dir)
-      .withColumn("version", row_number().over(w))
+    val m = col("k") % 3
+    Compat.versions(s, dir)
       .withColumn("stage",
         when(m === 0, "prod").when(m === 1, "staging").otherwise("dev"))
       .filter(col("stage") === "prod")
-      .groupBy(col("user_id").as("subject"))
+      .groupBy(col("subject"))
       .agg(max(col("version")).as("latest_matching"),
         expr("max_by(event_id, version)").as("event_id"))
   }

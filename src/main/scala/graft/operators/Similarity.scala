@@ -305,8 +305,9 @@ object Similarity {
         .agg(count(lit(1)).as("n_hit"))
         .crossJoin(broadcast(truth.agg(count(lit(1)).as("n_true"))))
         .select(lit(stage).as("stage"), col("n_true"), col("n_hit"),
-          (floor(col("n_hit") / col("n_true").cast("double") * 10000 + 0.5) / lit(10000.0))
-            .as("recall3"))
+          // NULL with no truth rows, as the oracle's x / 0.0
+          (floor(try_divide(col("n_hit"), col("n_true").cast("double")) * 10000 + 0.5) /
+            lit(10000.0)).as("recall3"))
     }
     // One round-0 graph for both cards and the descent round (before
     // r9 each card rebuilt the bucket join). The graph card's

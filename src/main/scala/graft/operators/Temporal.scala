@@ -150,23 +150,11 @@ object Temporal {
     * shape stays identical.
     */
   def resampleFfill(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val ev = graft.Tables.events(s, dir)
-    // grid in ONE events pass (r12, guide §2.4): the per-type rollup
-    // carries the global bounds as window min/max over its ≤types
-    // rows — the former distinct + broadcast-aggregate pair scanned
-    // the events twice for the same (types × [t0, t1]) frame.
-    val grid = ev.groupBy(col("event_type"))
-      .agg(min(col("ts")).as("mn"), max(col("ts")).as("mx"))
-      .select(col("event_type"),
-        date_trunc("minute", min(col("mn")).over(Window.partitionBy())).as("t0"),
-        date_trunc("minute", max(col("mx")).over(Window.partitionBy())).as("t1"))
+    val grid = minuteBounds(ev)
       .select(col("event_type"),
         explode(expr("sequence(t0, t1, interval 1 minute)")).as("minute"))
-    val obs = ev
-      .groupBy(col("event_type"), date_trunc("minute", col("ts")).as("minute"))
-      .agg(count(lit(1)).as("n_obs"),
-        (floor(avg(col("value")) * 10000 + 0.5) / lit(10000.0)).as("v_obs"))
+    val obs = minuteObs(ev)
     val w = Window.partitionBy(col("event_type")).orderBy(col("minute"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     grid.join(obs, Seq("event_type", "minute"), "left")
@@ -176,6 +164,29 @@ object Temporal {
         col("n_obs").isNotNull.as("is_observed"),
         col("value_filled"))
   }
+
+  /** (event_type, t0, t1): every series with the corpus-wide minute
+    * bounds, the one span the minute grids of [[resampleFfill]],
+    * [[interpolate]] and their day-partitioned forms cover. One
+    * events pass (r12, guide §2.4): the per-type rollup carries the
+    * global bounds as window min/max over its ≤types rows — a
+    * distinct + broadcast-aggregate pair scanned the events twice for
+    * the same (types × [t0, t1]) frame.
+    */
+  private def minuteBounds(ev: DataFrame): DataFrame =
+    ev.groupBy(col("event_type"))
+      .agg(min(col("ts")).as("mn"), max(col("ts")).as("mx"))
+      .select(col("event_type"),
+        date_trunc("minute", min(col("mn")).over(Window.partitionBy())).as("t0"),
+        date_trunc("minute", max(col("mx")).over(Window.partitionBy())).as("t1"))
+
+  /** (event_type, minute, n_obs, v_obs): the observed minutes of every
+    * series, their count and 4dp mean — the raw stream's one touch.
+    */
+  private def minuteObs(ev: DataFrame): DataFrame =
+    ev.groupBy(col("event_type"), date_trunc("minute", col("ts")).as("minute"))
+      .agg(count(lit(1)).as("n_obs"),
+        (floor(avg(col("value")) * 10000 + 0.5) / lit(10000.0)).as("v_obs"))
 
   /** Linear gap interpolation on the minute grid — the sibling of
     * [[resampleFfill]] for continuous signals (a gauge read every few
@@ -197,19 +208,11 @@ object Temporal {
     * resampler.
     */
   def interpolate(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val ev = graft.Tables.events(s, dir)
-    // one-pass grid — see [[resampleFfill]] (r12, guide §2.4)
-    val grid = ev.groupBy(col("event_type"))
-      .agg(min(col("ts")).as("mn"), max(col("ts")).as("mx"))
-      .select(col("event_type"),
-        date_trunc("minute", min(col("mn")).over(Window.partitionBy())).as("t0"),
-        date_trunc("minute", max(col("mx")).over(Window.partitionBy())).as("t1"))
+    val grid = minuteBounds(ev)
       .select(col("event_type"),
         explode(expr("sequence(t0, t1, interval 1 minute)")).as("minute"))
-    val obs = ev
-      .groupBy(col("event_type"), date_trunc("minute", col("ts")).as("minute"))
-      .agg((floor(avg(col("value")) * 10000 + 0.5) / lit(10000.0)).as("v_obs"))
+    val obs = minuteObs(ev)
     val wb = Window.partitionBy(col("event_type")).orderBy(col("minute"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wf = Window.partitionBy(col("event_type")).orderBy(col("minute").desc)
@@ -256,20 +259,11 @@ object Temporal {
     * minute rollup) as the span-wide form.
     */
   def resampleFfillSpans(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val ev = graft.Tables.events(s, dir)
-    // one-pass day spine — see [[resampleFfill]] (r12, guide §2.4)
-    val daySpine = ev.groupBy(col("event_type"))
-      .agg(min(col("ts")).as("mn"), max(col("ts")).as("mx"))
-      .select(col("event_type"),
-        date_trunc("minute", min(col("mn")).over(Window.partitionBy())).as("t0"),
-        date_trunc("minute", max(col("mx")).over(Window.partitionBy())).as("t1"))
+    val daySpine = minuteBounds(ev)
       .select(col("event_type"), col("t0"), col("t1"),
         explode(expr("sequence(date_trunc('DAY', t0), date_trunc('DAY', t1), interval 1 day)")).as("day"))
-    val obs = ev
-      .groupBy(col("event_type"), date_trunc("minute", col("ts")).as("minute"))
-      .agg(count(lit(1)).as("n_obs"),
-        (floor(avg(col("value")) * 10000 + 0.5) / lit(10000.0)).as("v_obs"))
+    val obs = minuteObs(ev)
     val dayClose = obs
       .groupBy(col("event_type"), date_trunc("day", col("minute")).as("day"))
       .agg(expr("max_by(v_obs, minute)").as("day_close"))
@@ -304,19 +298,11 @@ object Temporal {
     * bounded partitions.
     */
   def interpolateSpans(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val ev = graft.Tables.events(s, dir)
-    // one-pass day spine — see [[resampleFfill]] (r12, guide §2.4)
-    val daySpine = ev.groupBy(col("event_type"))
-      .agg(min(col("ts")).as("mn"), max(col("ts")).as("mx"))
-      .select(col("event_type"),
-        date_trunc("minute", min(col("mn")).over(Window.partitionBy())).as("t0"),
-        date_trunc("minute", max(col("mx")).over(Window.partitionBy())).as("t1"))
+    val daySpine = minuteBounds(ev)
       .select(col("event_type"), col("t0"), col("t1"),
         explode(expr("sequence(date_trunc('DAY', t0), date_trunc('DAY', t1), interval 1 day)")).as("day"))
-    val obs = ev
-      .groupBy(col("event_type"), date_trunc("minute", col("ts")).as("minute"))
-      .agg((floor(avg(col("value")) * 10000 + 0.5) / lit(10000.0)).as("v_obs"))
+    val obs = minuteObs(ev)
     val dayEnds = obs
       .groupBy(col("event_type"), date_trunc("day", col("minute")).as("day"))
       .agg(expr("max_by(named_struct('v', v_obs, 'm', minute), minute)").as("close_s"),

@@ -75,6 +75,14 @@ class DegenerateInputSpec extends SparkSpec {
       x.getAs[Long]("n_true") == 0L && x.isNullAt(x.fieldIndex("exp_recall"))))
   }
 
+  test("the two recall cards report a NULL recall with no truth rows, as the oracle's x / 0.0 does") {
+    for (dir <- Seq(emptyDir, oneRowDir)) {
+      assert(rows("dedup_minhash_recall", dir) == Seq(Row(0L, 0L, 0L, null)), dir)
+      assert(rows("ann_graph_recall", dir).sortBy(_.getString(0)) ==
+        Seq(Row("descent", 0L, 0L, null), Row("graph", 0L, 0L, null)), dir)
+    }
+  }
+
   test("corpus_gopher_gate on an empty corpus reports its six rules with zero documents checked") {
     assert(rows("corpus_gopher_gate").sortBy(_.getString(0)) ==
       Seq("r1_word_count", "r2_dup_ratio", "r3_top_bigram", "r4_entropy", "r5_dup_3gram", "r6_all_rules")

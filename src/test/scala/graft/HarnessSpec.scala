@@ -79,6 +79,29 @@ class HarnessSpec extends SparkSpec {
     assert(occurrences("_ % 29 < 15").map(_._1) == Seq("AvroFields.scala"))
   }
 
+  test("the schema models share one registration stream and one slot pairing") {
+    val models = Set("Compat.scala", "FormatCompat.scala")
+    def in(literal: String) = occurrences(literal).filter(o => models(o._1))
+    // the models' one `$.k` parse is Compat.payloadK, read by
+    // Compat.versions and by the JSON model's as-of source alone
+    assert(in("\"$.k\"") == Seq("Compat.scala" -> 1))
+    assert(occurrences("payloadK").toMap == Map("Compat.scala" -> 2, "FormatCompat.scala" -> 1))
+    // and one version window, Compat.versionOrder
+    assert(in("orderBy(col(\"ts\"), col(\"event_id\"))") == Seq("Compat.scala" -> 1))
+    // the registry's version cards read that stream; its other cards
+    // (fingerprints, rules, statistics) parse `k` on their own scan
+    val registry = Files.readString(Paths.get("src/main/scala/graft/operators/Registry.scala"))
+    for (card <- Seq("versions", "metaLatest")) {
+      val from = registry.indexOf(s"  def $card(")
+      val body = registry.substring(from, registry.indexOf("\n  /**", from))
+      assert(body.contains("Compat.versions(s, dir)"), card)
+      assert(!body.contains("\"$.k\"") && !body.contains("Window"), card)
+    }
+    // Compat.slotPairs is the one positional reader↔writer pairing
+    assert(in("posexplode(") == Seq("Compat.scala" -> 1))
+    assert(occurrences("def slotPairs(") == Seq("Compat.scala" -> 1))
+  }
+
   test("no interpreted n-gram lambda and no array_sort in src/main/scala") {
     // graft_shingles / graft_shingle_md5 build word n-grams; the one
     // index-sequence transform left over a token array is

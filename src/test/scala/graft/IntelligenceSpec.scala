@@ -41,15 +41,12 @@ class IntelligenceSpec extends SparkSpec {
     val baseReport = Intelligence.similarDropReport(spark, similarDir).head()
     assert(baseReport.getAs[Long]("n_dropped_signatures") == 0,
       "default cap must not bite on the test corpus")
-    try {
-      // cap 1: every signature shared by 2+ subjects is excluded, and
-      // threshold-1.0 pairs need ALL signatures shared — none survive
-      spark.conf.set("graft.similar.dfCap", "1")
-      assert(Intelligence.similarSchemas(spark, similarDir).count() == 0)
-      val r = Intelligence.similarDropReport(spark, similarDir).head()
-      assert(r.getAs[Long]("n_dropped_signatures") > 0)
-      assert(r.getAs[Long]("n_dropped_postings") > r.getAs[Long]("n_dropped_signatures"))
-    } finally spark.conf.unset("graft.similar.dfCap")
+    // cap 1: every signature shared by 2+ subjects is excluded, and
+    // threshold-1.0 pairs need ALL signatures shared — none survive
+    assert(Intelligence.similarSchemasAt(spark, similarDir, 1).count() == 0)
+    val r = Intelligence.similarDropReportAt(spark, similarDir, 1).head()
+    assert(r.getAs[Long]("n_dropped_signatures") > 0)
+    assert(r.getAs[Long]("n_dropped_postings") > r.getAs[Long]("n_dropped_signatures"))
     assert(Intelligence.similarSchemas(spark, similarDir).count() == base)
   }
 

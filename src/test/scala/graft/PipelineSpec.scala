@@ -257,18 +257,11 @@ class PipelineSpec extends SparkSpec {
     // multi-chunk docs exist on this corpus (docs up to ~100 tokens vs C=32),
     // so overlap duplication must actually occur
     assert(rows.map(_.getAs[Long]("overlap_tokens")).sum > 0, "expected real overlap")
-    // doubling the chunk size via conf must reduce the chunk count
+    // doubling the chunk size must reduce the chunk count
     val base = rows.map(_.getAs[Long]("n_chunks")).sum
-    try {
-      spark.conf.set("graft.chunk.size", "64")
-      spark.conf.set("graft.chunk.overlap", "16")
-      val bigger = Pipeline.chunkOverlap(spark, sfDir).collect()
-        .map(_.getAs[Long]("n_chunks")).sum
-      assert(bigger < base, s"bigger chunks must mean fewer chunks ($bigger vs $base)")
-    } finally {
-      spark.conf.unset("graft.chunk.size")
-      spark.conf.unset("graft.chunk.overlap")
-    }
+    val bigger = Pipeline.chunkOverlapAt(spark, sfDir, 64, 16).collect()
+      .map(_.getAs[Long]("n_chunks")).sum
+    assert(bigger < base, s"bigger chunks must mean fewer chunks ($bigger vs $base)")
   }
 
   test("mix plan: budget reconciles, rates cap at 1, epochs and shortfall agree") {
